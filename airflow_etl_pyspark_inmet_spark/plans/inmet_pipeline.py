@@ -2,11 +2,18 @@
 
 Replaces the whole reference flow — job_parquet.py (extract/transform),
 dag_inmet.py (orchestration + Snowflake load), and the three analytic
-``sql/create_*.sql`` queries — with one lazy DataFrame program. Stage
+``sql/create_*.sql`` queries — with one DataFrame program. Stage
 boundaries in the reference were process/network boundaries (Airflow ->
 spark-submit -> HDFS -> WebHDFS -> pandas -> Snowflake, SURVEY.md §3);
-here every stage is a DataFrame and the only driver materialization is the
-2-scalar min/max date bound (A1).
+here every stage is a DataFrame, and building them makes no driver round
+trip: the reader collects no header, and the calendar's min/max bounds
+(A1) are an aggregate inside the calendar's own plan.
+
+Written out (``run_pipeline(out_dir=...)``), ``previsoes`` and ``cidades``
+come straight from the CSV scan (``sources.inmet_csv``: one ``binaryFile``
+read per table). The city dim, the daily aggregate, the calendar and the
+monthly KPIs are built from the parquet just written, so each table is
+computed once and the CSV bytes are read twice in all.
 
 Scale notes (100 TB stance):
 - The fact table is the only big thing. It is written partitioned by
@@ -25,13 +32,19 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import (
     date_parts,
-    dayfirst_date,
-    decimal_comma_to_double,
+    dayfirst_date_sql,
+    decimal_comma_sql,
     surrogate_key,
     zero_fill,
 )
 from ..schemas import MEASURE_COLS, MEASURE_RENAMES
-from ..sources.inmet_csv import read_inmet_measurements, read_inmet_stations
+# Both readers stay attributes of this module, where tracing wraps them.
+from ..sources.inmet_csv import (  # noqa: F401
+    measurement_rows,
+    read_inmet_files,
+    read_inmet_measurements,
+    read_inmet_stations,
+)
 
 
 def build_cidades(
@@ -48,68 +61,53 @@ def build_cidades(
     (SURVEY §1.2): cheaper arithmetic, and every downstream agg in this
     engine re-types explicitly anyway."""
     raw = read_inmet_stations(spark, input_glob)
-    lat = decimal_comma_to_double("latitude")
-    lon = decimal_comma_to_double("longitude")
-    alt = decimal_comma_to_double("altitude")
+    lat, lon, alt = (decimal_comma_sql(c) for c in ("latitude", "longitude", "altitude"))
     if decimal_parity:
-        lat = lat.cast("decimal(11,8)")
-        lon = lon.cast("decimal(11,8)")
-        alt = alt.cast("decimal(9,2)")
-    return raw.select(
+        lat = f"CAST({lat} AS DECIMAL(11,8))"
+        lon = f"CAST({lon} AS DECIMAL(11,8))"
+        alt = f"CAST({alt} AS DECIMAL(9,2))"
+    return raw.selectExpr(
         "regiao",
         "uf",
         "estacao",
         "wmo",
-        lat.alias("latitude"),
-        lon.alias("longitude"),
-        alt.alias("altitude"),
-        dayfirst_date("data_fundacao").alias("data_fundacao"),
+        f"{lat} AS latitude",
+        f"{lon} AS longitude",
+        f"{alt} AS altitude",
+        f"{dayfirst_date_sql('data_fundacao')} AS data_fundacao",
         "_src",
-    ).filter(F.col("data_fundacao").isNotNull())
+    ).where("data_fundacao IS NOT NULL")
 
 
-def build_previsoes(
-    spark: SparkSession, input_glob: str, cidades: DataFrame | None = None
-) -> DataFrame:
+def build_previsoes(spark: SparkSession, input_glob: str) -> DataFrame:
     """Hourly fact (job_parquet.py:108-225): 5 measures decimal-comma
     parsed + renamed (F1), date parsed multi-format (F3), null-date rows
-    dropped (P7), measures zero-filled BEFORE any aggregation (F5), station
-    code attached via broadcast join on source file (replaces the per-file
-    ``df['wmo'] = constant`` at job_parquet.py:182-185)."""
-    body = read_inmet_measurements(spark, input_glob)
-    cid = cidades if cidades is not None else build_cidades(spark, input_glob)
-    wmo_by_src = cid.select("_src", "wmo")
-
-    fact = body.select(
-        "_src",
-        dayfirst_date("data").alias("data_medicao"),
-        *[
-            decimal_comma_to_double(raw).alias(canon)
-            for raw, canon in MEASURE_RENAMES.items()
-        ],
-    ).filter(F.col("data_medicao").isNotNull())
-
-    fact = fact.join(F.broadcast(wmo_by_src), "_src").select(
-        "wmo", "data_medicao", *MEASURE_COLS
+    dropped (P7), measures zero-filled BEFORE any aggregation (F5). The
+    station code comes from the measurement's own file row (the reference
+    sets a per-file ``df['wmo'] = constant``, job_parquet.py:182-185). A
+    station that ``build_cidades`` drops (unparseable founding date) takes
+    its measurements with it, so every fact row has a station."""
+    files = read_inmet_files(spark, input_glob).where(
+        f"{dayfirst_date_sql('data_fundacao')} IS NOT NULL"
     )
+    body = measurement_rows(files, ["data", *MEASURE_RENAMES], carry=["wmo"])
+    fact = body.selectExpr(
+        "wmo",
+        f"{dayfirst_date_sql('data')} AS data_medicao",
+        *[f"{decimal_comma_sql(raw)} AS {canon}" for raw, canon in MEASURE_RENAMES.items()],
+    ).where("data_medicao IS NOT NULL")
     return zero_fill(fact, MEASURE_COLS)
 
 
 def build_datas(previsoes: DataFrame) -> DataFrame:
     """Dense daily calendar between global min/max measurement date
-    (job_parquet.py:261-280). One combined min/max aggregation (A1 — the
-    reference runs two separate collect()s), then a fully distributed
-    ``sequence + explode`` replaces pandas ``date_range`` (F12)."""
-    bounds = previsoes.agg(
-        F.min("data_medicao").alias("lo"), F.max("data_medicao").alias("hi")
-    ).first()
-    spark = previsoes.sparkSession
-    cal = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(bounds["lo"]), F.lit(bounds["hi"]), F.expr("interval 1 day")
-            )
-        ).alias("data_medicao")
+    (job_parquet.py:261-280): one combined min/max aggregation (A1 — the
+    reference runs two separate collect()s) feeds a distributed
+    ``sequence + explode`` in the same plan, replacing pandas
+    ``date_range`` (F12). Nothing runs until the calendar is used."""
+    cal = previsoes.selectExpr(
+        "explode(sequence(min(data_medicao), max(data_medicao), interval 1 day))"
+        " AS data_medicao"
     )
     parts = date_parts("data_medicao")
     return cal.select("data_medicao", *[expr.alias(n) for n, expr in parts.items()])
@@ -142,14 +140,19 @@ def fato_agg_previsoes_dia(previsoes: DataFrame, dim_cidade: DataFrame) -> DataF
         F.broadcast(dim_cidade.select("wmo", "cidade_sk")), "wmo", "inner"
     )
     return j.groupBy("wmo", "cidade_sk", "data_medicao").agg(
-        F.min("temperatura_c").alias("temp_min_c"),
-        F.max("temperatura_c").alias("temp_max_c"),
-        F.avg("temperatura_c").alias("temp_avg_c"),
-        F.sum("precipitacao_mm").alias("precip_total_mm"),
-        F.avg("pressao_atm_kpa").alias("pressao_avg_kpa"),
-        F.avg("vento_mps").alias("vento_avg_mps"),
-        F.avg("umidade_porcentagem").alias("umidade_avg_pct"),
-        F.count(F.lit(1)).alias("registros_horarios"),
+        *map(
+            F.expr,
+            [
+                "min(temperatura_c) AS temp_min_c",
+                "max(temperatura_c) AS temp_max_c",
+                "avg(temperatura_c) AS temp_avg_c",
+                "sum(precipitacao_mm) AS precip_total_mm",
+                "avg(pressao_atm_kpa) AS pressao_avg_kpa",
+                "avg(vento_mps) AS vento_avg_mps",
+                "avg(umidade_porcentagem) AS umidade_avg_pct",
+                "count(1) AS registros_horarios",
+            ],
+        )
     )
 
 
@@ -169,10 +172,15 @@ def cidade_kpis_mensal(
         )
     )
     return j.groupBy("cidade_sk", "ano", "mes").agg(
-        F.avg("temp_avg_c").alias("mensal_temp_media"),
-        F.max("temp_max_c").alias("mensal_temp_max"),
-        F.sum("precip_total_mm").alias("mensal_precip_total"),
-        F.count_if(F.col("precip_total_mm") > 0).alias("dias_com_precip"),
+        *map(
+            F.expr,
+            [
+                "avg(temp_avg_c) AS mensal_temp_media",
+                "max(temp_max_c) AS mensal_temp_max",
+                "sum(precip_total_mm) AS mensal_precip_total",
+                "count_if(precip_total_mm > 0) AS dias_com_precip",
+            ],
+        )
     )
 
 
@@ -184,58 +192,71 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full pipeline with the same dependency shape as the reference DAG
     (dag_inmet.py:209-220): ingest -> dims || fact -> daily agg -> monthly
-    KPIs. Returns all six tables; optionally persists them as parquet
-    (fact partitioned by year for downstream partition pruning).
+    KPIs. Returns all six tables.
+
+    Without ``out_dir`` every table is a lazy plan over the CSVs. With
+    ``out_dir`` each table is written as parquet (fact partitioned by year
+    for downstream partition pruning) and read back before the next one is
+    built from it: ``previsoes`` and ``cidades`` are the only tables that
+    scan the CSVs, and the others come from the written parquet, so the
+    text is parsed once per table that needs it and nothing is computed
+    twice. The returned frames read the written files.
 
     Task-level resilience, mirroring the DAG's per-task retry semantics
-    (dag_inmet.py default_args) without Airflow: each persisting stage is
-    an IDEMPOTENT overwrite (mode=overwrite, fixed paths), so a stage
-    that dies mid-write can be re-run — here, up to ``retries`` times —
-    without duplicating or corrupting output; a re-run of the whole
-    pipeline is likewise a no-op-shaped overwrite, the same contract the
-    reference gets from `CREATE OR REPLACE` + write_pandas(overwrite).
-    Table *builds* are lazy plan constructions (no retry needed — they
-    execute inside the write actions)."""
-    cidades = build_cidades(spark, input_glob)
-    previsoes = build_previsoes(spark, input_glob, cidades)
-    datas = build_datas(previsoes)
-    dim_cidade = dim_cidade_atributos(cidades)
-    fato_dia = fato_agg_previsoes_dia(previsoes, dim_cidade)
-    kpis = cidade_kpis_mensal(fato_dia, dim_cidade, datas)
+    (dag_inmet.py default_args) without Airflow: each write is an
+    IDEMPOTENT overwrite (mode=overwrite, fixed paths), so a write that
+    dies midway can be re-run — here, up to ``retries`` times — without
+    duplicating or corrupting output; a re-run of the whole pipeline is
+    likewise a no-op-shaped overwrite, the same contract the reference
+    gets from `CREATE OR REPLACE` + write_pandas(overwrite)."""
 
-    tables = {
-        "cidades": cidades.drop("_src"),
+    def table(name: str, df: DataFrame) -> DataFrame:
+        if not out_dir:
+            return df
+        path = f"{out_dir}/{name}"
+        if name == "previsoes":
+            df = df.withColumn("ano", F.year("data_medicao"))
+            _write(df.write.mode("overwrite").partitionBy("ano"), path, retries)
+            # the schema is pinned: an unpinned read runs an inference job
+            return spark.read.schema(df.schema).parquet(path).drop("ano")
+        _write(df.write.mode("overwrite"), path, retries)
+        return spark.read.schema(df.schema).parquet(path)
+
+    previsoes = table("previsoes", build_previsoes(spark, input_glob))
+    cidades = table("cidades", build_cidades(spark, input_glob).drop("_src"))
+    dim_cidade = table("dim_cidade_atributos", dim_cidade_atributos(cidades))
+    fato_dia = table(
+        "fato_agg_previsoes_dia", fato_agg_previsoes_dia(previsoes, dim_cidade)
+    )
+    datas = table("datas", build_datas(fato_dia))
+    kpis = table("cidade_kpis_mensal", cidade_kpis_mensal(fato_dia, dim_cidade, datas))
+    return {
+        "cidades": cidades,
         "datas": datas,
         "previsoes": previsoes,
         "dim_cidade_atributos": dim_cidade,
         "fato_agg_previsoes_dia": fato_dia,
         "cidade_kpis_mensal": kpis,
     }
-    if out_dir:
-        for name, df in tables.items():
-            w = df.write.mode("overwrite")
-            if name == "previsoes":
-                w = df.withColumn("ano", F.year("data_medicao")).write.mode(
-                    "overwrite"
-                ).partitionBy("ano")
-            from pyspark.errors import AnalysisException, IllegalArgumentException
 
-            last: Exception | None = None
-            for _attempt in range(retries + 1):
-                try:
-                    w.parquet(f"{out_dir}/{name}")
-                    last = None
-                    break
-                except (AnalysisException, IllegalArgumentException):
-                    # deterministic (plan/config) failure: retrying would
-                    # recompute the whole upstream plan just to hit the
-                    # same error — surface immediately
-                    raise
-                except Exception as e:  # transient executor/FS failure
-                    last = e
-            if last is not None:
-                raise RuntimeError(
-                    f"pipeline stage write:{name} failed after "
-                    f"{retries + 1} attempts"
-                ) from last
-    return tables
+
+def _write(writer, path: str, retries: int) -> None:
+    """``writer.parquet(path)``, retried up to ``retries`` times on a
+    transient failure."""
+    from pyspark.errors import AnalysisException, IllegalArgumentException
+
+    last: Exception | None = None
+    for _attempt in range(retries + 1):
+        try:
+            writer.parquet(path)
+            return
+        except (AnalysisException, IllegalArgumentException):
+            # deterministic (plan/config) failure: retrying would
+            # recompute the whole upstream plan just to hit the
+            # same error — surface immediately
+            raise
+        except Exception as e:  # transient executor/FS failure
+            last = e
+    raise RuntimeError(
+        f"pipeline write {path} failed after {retries + 1} attempts"
+    ) from last

@@ -254,8 +254,9 @@ def q7_decimal_comma_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2: build decimal-comma dirty strings from part prices (incl.
     'None' markers) and parse them back with the cleaning kit."""
     p = _t(spark, sf_dir, "part")
-    dirty = F.when(F.col("p_partkey") % 97 == 0, F.lit("None")).otherwise(
-        F.replace(F.col("p_retailprice").cast("string"), F.lit("."), F.lit(","))
+    dirty = (
+        "CASE WHEN p_partkey % 97 = 0 THEN 'None'"
+        " ELSE replace(CAST(p_retailprice AS STRING), '.', ',') END"
     )
     return p.select(
         "p_partkey",
@@ -267,11 +268,11 @@ def q8_dayfirst_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: multi-format date strings (dd/MM/yyyy and yyyy/MM/dd mixed by
     row, plus junk) parsed with the coerce-to-null chain."""
     o = _t(spark, sf_dir, "orders")
-    d = F.to_date("o_orderdate")
     s = (
-        F.when(F.col("o_orderkey") % 3 == 0, F.date_format(d, "dd/MM/yyyy"))
-        .when(F.col("o_orderkey") % 3 == 1, F.date_format(d, "yyyy/MM/dd"))
-        .otherwise(F.lit("not a date"))
+        "CASE o_orderkey % 3"
+        " WHEN 0 THEN date_format(to_date(o_orderdate), 'dd/MM/yyyy')"
+        " WHEN 1 THEN date_format(to_date(o_orderdate), 'yyyy/MM/dd')"
+        " ELSE 'not a date' END"
     )
     return o.select("o_orderkey", dayfirst_date(s).alias("parsed_date"))
 

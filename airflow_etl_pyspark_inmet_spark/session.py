@@ -1,7 +1,9 @@
 """SparkSession factory.
 
-Defaults are tuned for the test rig (local[N], single JVM) but every setting
-is the one you'd want on a real cluster too: AQE for runtime re-planning
+Defaults are sized from the host (local[N] over the CPUs this process may
+use, a driver heap of 1/8 of host memory within 1-4 GiB; ``SPARK_GRAFT_CPUS``
+and ``SPARK_DRIVER_MEM`` override them), and every other setting is the one
+you'd want on a real cluster too: AQE for runtime re-planning
 (coalesce small shuffle partitions, skew-join splitting), UTC session time
 zone so results are oracle-comparable, Arrow for any pandas-UDF exchange.
 
@@ -17,7 +19,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def host_cpus() -> str:
+    """Local cores: ``SPARK_GRAFT_CPUS`` if set, else the CPUs this
+    process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEM`` if set, else 1/8 of the host's
+    memory clamped to 1-4 GiB. A local driver JVM shares the host with
+    its Python workers and other processes; a fixed large heap lets it
+    grow until the host kills something."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        total_mb = int(f.readline().split()[1]) // 1024  # MemTotal, kB
+    return f"{min(4096, max(1024, total_mb // 8))}m"
 
 
 def get_spark(
@@ -32,14 +50,11 @@ def get_spark(
     sort-merge joins to broadcast when the built side turns out small, and
     splits skewed partitions — exactly the behaviors we rely on at scale.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Start AQE shuffles WIDE and let coalescing shrink them to the
@@ -56,7 +71,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

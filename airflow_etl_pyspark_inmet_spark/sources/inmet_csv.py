@@ -1,8 +1,9 @@
 """Distributed reader for INMET dual-section station CSVs.
 
-File format (FIXTURES.md §A): lines 1-8 are ``KEY:;value`` station metadata,
-line 9 is the measurement header, lines 10+ are ``;``-separated hourly rows
-(decimal comma, usually a trailing ``;``).
+File format (FIXTURES.md §A): lines 1-8 are ``KEY:;value`` station metadata
+in ISO-8859-1, line 9 is the measurement header, lines 10+ are
+``;``-separated hourly rows in UTF-8 (decimal comma, usually a trailing
+``;``).
 
 The reference isolates the sections positionally — ``limit(8)`` for metadata
 (job_parquet.py:61-68) and an RDD ``zipWithIndex`` skip for the body
@@ -11,14 +12,21 @@ through ``toPandas``. None of that survives scale: positional tricks assume
 single-partition sequential reads, and the loop serializes all I/O through
 the driver.
 
-This reader is order- and partition-independent: one globbed ``spark.read
-.text`` over all files, sections classified BY PATTERN (metadata lines match
-``key:;``, header lines start with ``Data;``, data lines start with a date),
-metadata pivoted per-file with ``groupBy(file).pivot(key)``, body parsed with
-``from_csv`` against the (per-header-shape) schema, and the station code
-attached by a broadcast join on file name. Scales to any number of files with
-no driver materialization beyond the distinct header strings (one per format
-revision, a handful of bytes).
+This reader makes one ``binaryFile`` scan and keeps one row per file, so a
+file's station attributes sit on the same row as its body lines and no join
+re-attaches them. From the same ``content`` bytes it decodes the metadata
+lines as ISO-8859-1 and the body lines as UTF-8. The body goes through
+``make_valid_utf8``, which replaces a stray invalid byte the way
+``spark.read.text`` does; ``decode(content, 'UTF-8')`` would fail the whole
+scan under ANSI mode. Lines are classified BY PATTERN (metadata lines match
+``key:;``, the header line starts with ``Data;``, everything else non-blank
+is a data line), and each file's own header is sanitized JVM-side, so a data
+cell is picked BY NAME: ``get(split(line, ';'), array_position(names, c) -
+1)``. Files with reordered header revisions parse correctly and nothing is
+collected to the driver; the whole read is one lazy plan.
+
+A file is one row before the body is exploded, so a file must stay under
+2 GB. INMET files hold one station-year each, about 0.5 MB.
 
 Pattern safety: a data line always starts with a date (``2025/01/01;`` or
 ``01/01/2025;``), so it can never match the metadata pattern ``^[^;0-9][^;]*:;``.
@@ -27,78 +35,75 @@ Pattern safety: a data line always starts with a date (``2025/01/01;`` or
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.cleaning import sanitize_name
+from ..functions.cleaning import sanitize_name_sql
+from ..schemas import INMET_BODY_COLUMNS
 
 # Metadata line: non-empty, non-numeric-leading key, then ':;'.
 _META_LINE_RE = r"^[^;0-9][^;]*:;"
 
-# Reference key names -> canonical column names (job_parquet.py:81-82 rename
-# map, applied after ':'-strip + lowercase; we additionally sanitize).
-_META_RENAMES = {"codigo_wmo": "wmo", "data_de_fundacao": "data_fundacao"}
-
-_META_KEYS = [
-    "regiao",
-    "uf",
-    "estacao",
-    "codigo_wmo",
-    "latitude",
-    "longitude",
-    "altitude",
-    "data_de_fundacao",
-]
-
-
-# Lowercase accented chars (Latin-1 Portuguese set) -> ASCII for key
-# sanitization; values keep their accents. Built pairwise so the two
-# translate() arguments can never fall out of alignment.
-_ACCENT_MAP = {
-    "a": "ãâáàä", "e": "éêèë", "i": "íîìï", "o": "õôóòö",
-    "u": "úûùü", "c": "ç", "n": "ñ",
+# Sanitized metadata key -> station column (the reference's rename map,
+# job_parquet.py:81-82, applied after ':'-strip + lowercase).
+_STATION_COLUMNS = {
+    "regiao": "regiao",
+    "uf": "uf",
+    "estacao": "estacao",
+    "codigo_wmo": "wmo",
+    "latitude": "latitude",
+    "longitude": "longitude",
+    "altitude": "altitude",
+    "data_de_fundacao": "data_fundacao",
 }
-_ACCENTS = "".join(v for v in _ACCENT_MAP.values())
-_ASCII = "".join(k * len(v) for k, v in _ACCENT_MAP.items())
 
 
-def _norm_src(col: F.Column) -> F.Column:
-    """Normalize a file URI to a plain path: binaryFile's ``path`` says
-    ``file:/root/x`` while ``input_file_name()`` says ``file:///root/x`` —
-    both must join as ``/root/x``."""
-    return F.regexp_replace(col, r"^[a-zA-Z0-9.+-]+:/+", "/")
+def _pick(values: str, names: str, name: str) -> str:
+    """SQL for the element of ``values`` at the first position of ``name``
+    in ``names``; null when the name is absent or the row is short."""
+    return f"get({values}, array_position({names}, '{name}') - 1)"
 
 
-def _lines(spark: SparkSession, path: str) -> DataFrame:
-    """All lines of all files (UTF-8 — the reference's body encoding,
-    job_parquet.py:131), tagged with their source file."""
-    return (
-        spark.read.text(path)
-        .select(
-            F.col("value"), _norm_src(F.input_file_name()).alias("_src")
-        )
-        .filter(F.length(F.trim(F.col("value"))) > 0)
+def read_inmet_files(spark: SparkSession, path: str) -> DataFrame:
+    """One row per input file: ``_src`` (the file's path), the raw string
+    station columns ``regiao uf estacao wmo latitude longitude altitude
+    data_fundacao``, ``_names`` (the file's sanitized header names) and
+    ``_lines`` (all of its lines, decoded as UTF-8).
+
+    A metadata key is sanitized like a header name, so ``REGIÃO:`` and
+    ``REGIAO:`` both fill ``regiao``; values keep their accents. A key that
+    repeats keeps its first value."""
+    files = spark.read.format("binaryFile").load(path).selectExpr(
+        # binaryFile's ``path`` says file:/data/x; report a plain /data/x
+        r"regexp_replace(path, '^[a-zA-Z0-9.+-]+:/+', '/') AS _src",
+        r"filter(split(decode(content, 'ISO-8859-1'), '\\r?\\n'),"
+        rf" l -> l RLIKE '{_META_LINE_RE}') AS meta",
+        r"split(make_valid_utf8(CAST(content AS STRING)), '\\r?\\n') AS _lines",
+    )
+    key = sanitize_name_sql("regexp_extract(l, '^([^;]*):;', 1)")
+    header = "get(filter(_lines, l -> startswith(l, 'Data;')), 0)"
+    files = files.selectExpr(
+        "_src",
+        f"transform(meta, l -> {key}) AS keys",
+        r"transform(meta, l -> regexp_replace(substring_index(l, ':;', -1), ';+$', '')) AS vals",
+        f"transform(split({header}, ';'), n -> {sanitize_name_sql('n')}) AS _names",
+        "_lines",
+    )
+    return files.selectExpr(
+        "_src",
+        *[f"{_pick('vals', 'keys', k)} AS {c}" for k, c in _STATION_COLUMNS.items()],
+        "_names",
+        "_lines",
     )
 
 
-def _meta_lines(spark: SparkSession, path: str) -> DataFrame:
-    """All lines of all files decoded as ISO-8859-1 — the reference reads
-    the station-metadata section with that charset (job_parquet.py:63)
-    while the body is UTF-8 (:131). ``spark.read.text`` decodes UTF-8
-    only (irreversibly replacing invalid bytes), so the metadata path
-    reads raw bytes per file (``binaryFile``) and decodes JVM-side. One
-    row per file before the explode — INMET stations are one small file
-    each, so file-level parallelism is the scale axis here, same as the
-    text scan."""
-    return (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select(
-            _norm_src(F.col("path")).alias("_src"),
-            F.explode(
-                F.split(F.decode(F.col("content"), "ISO-8859-1"), r"\r?\n")
-            ).alias("value"),
-        )
-        .filter(F.length(F.trim(F.col("value"))) > 0)
+def measurement_rows(files: DataFrame, columns: list[str], carry: list[str]) -> DataFrame:
+    """Explode ``read_inmet_files`` output into one row per data line:
+    the ``carry`` columns of its file, then each of ``columns`` (sanitized
+    header names) as a raw string, empty cells as null."""
+    lines = files.selectExpr(*carry, "_names", "explode(_lines) AS line").where(
+        f"trim(line) != '' AND NOT startswith(line, 'Data;') AND NOT line RLIKE '{_META_LINE_RE}'"
+    )
+    return lines.selectExpr(*carry, "_names", "split(line, ';') AS cells").selectExpr(
+        *carry, *[f"nullif({_pick('cells', '_names', c)}, '') AS `{c}`" for c in columns]
     )
 
 
@@ -107,104 +112,16 @@ def read_inmet_stations(spark: SparkSession, path: str) -> DataFrame:
     ``regiao uf estacao wmo latitude longitude altitude data_fundacao``
     plus ``_src`` (source file) for joining with measurements.
 
-    Replaces P1/S3 (job_parquet.py:57-104) with a distributed
-    ``groupBy(file).pivot(key).agg(first(value))`` — no limit(8), no pandas.
-    Metadata bytes are decoded as ISO-8859-1 (reference parity —
-    job_parquet.py:63); values keep their accents, keys are accent-folded
-    before sanitizing so ``REGIÃO:`` and ``REGIAO:`` pivot to the same
-    ``regiao`` column.
-    """
-    lines = _meta_lines(spark, path)
-    meta = lines.filter(F.col("value").rlike(_META_LINE_RE)).select(
-        "_src",
-        F.regexp_extract("value", r"^([^;]*):;", 1).alias("raw_key"),
-        F.regexp_replace(F.substring_index("value", ":;", -1), ";+$", "").alias("val"),
-    )
-    # Sanitize keys JVM-side with the same rules as sanitize_name, plus
-    # accent folding (the key alphabet is ASCII + ' ()' + Latin-1 accents).
-    meta = meta.withColumn(
-        "key",
-        F.regexp_replace(
-            F.regexp_replace(
-                F.translate(F.lower(F.trim(F.col("raw_key"))), _ACCENTS, _ASCII),
-                r"[^a-z0-9]+",
-                "_",
-            ),
-            r"^_+|_+$",
-            "",
-        ),
-    )
-    pivoted = (
-        meta.groupBy("_src")
-        .pivot("key", _META_KEYS)  # explicit values: skips the distinct-scan job
-        .agg(F.first("val", ignorenulls=True))
-    )
-    for old, new in _META_RENAMES.items():
-        pivoted = pivoted.withColumnRenamed(old, new)
-    return pivoted
+    Replaces P1/S3 (job_parquet.py:57-104). Metadata bytes are decoded as
+    ISO-8859-1 (reference parity — job_parquet.py:63)."""
+    return read_inmet_files(spark, path).select("_src", *_STATION_COLUMNS.values())
 
 
 def read_inmet_measurements(spark: SparkSession, path: str) -> DataFrame:
-    """Hourly measurement rows from every file under ``path``, all columns
-    as raw strings with sanitized header names, plus ``_src``.
+    """Hourly measurement rows from every file under ``path``: ``_src``
+    plus the 19 ``schemas.INMET_BODY_COLUMNS`` as raw strings, picked by
+    header name; a column a file's header lacks reads null.
 
     Replaces S4/S5/P6/F8 (text read + zipWithIndex skip + csv-on-RDD,
-    job_parquet.py:113-135). Strategy: classify lines by pattern, collect the
-    tiny set of DISTINCT header strings (one per INMET format revision), and
-    parse each header-shape group with ``from_csv`` under its own schema.
-    Files with reordered/renamed columns therefore still parse correctly —
-    by name, not position.
-    """
-    lines = _lines(spark, path)
-    is_meta = F.col("value").rlike(_META_LINE_RE)
-    is_header = F.col("value").startswith("Data;")
-
-    headers = [
-        r["value"]
-        for r in lines.filter(is_header).select("value").distinct().collect()
-    ]
-    if not headers:
-        raise ValueError(f"no INMET header line found under {path}")
-
-    # Map each file to its header string (tiny frame: one row per file).
-    file_header = (
-        lines.filter(is_header)
-        .select("_src", F.col("value").alias("_header"))
-        .dropDuplicates(["_src"])
-    )
-
-    body = (
-        lines.filter(~is_meta & ~is_header)
-        .withColumn("value", F.regexp_replace("value", ";+$", ""))  # F8 trailing ';'
-        .join(F.broadcast(file_header), "_src")
-    )
-
-    parsed_parts = []
-    for header in headers:
-        raw_names = [h for h in header.rstrip(";").split(";")]
-        names = _dedupe([sanitize_name(n) for n in raw_names])
-        ddl = ", ".join(f"`{n}` STRING" for n in names)
-        part = (
-            body.filter(F.col("_header") == header)
-            .withColumn("_row", F.from_csv("value", ddl, {"sep": ";"}))
-            .select("_src", "_row.*")
-        )
-        parsed_parts.append(part)
-
-    out = parsed_parts[0]
-    for p in parsed_parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def _dedupe(names: list[str]) -> list[str]:
-    seen: dict[str, int] = {}
-    out = []
-    for n in names:
-        if n in seen:
-            seen[n] += 1
-            out.append(f"{n}_{seen[n]}")
-        else:
-            seen[n] = 0
-            out.append(n)
-    return out
+    job_parquet.py:113-135)."""
+    return measurement_rows(read_inmet_files(spark, path), INMET_BODY_COLUMNS, ["_src"])

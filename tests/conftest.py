@@ -3,10 +3,10 @@ from __future__ import annotations
 import pytest
 
 from airflow_etl_pyspark_inmet_spark.session import get_spark
+from tests.inmet_fixture import write_inmet_fixture
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-INMET_GLOB = "/root/reference/pyspark-stack/spark-apps/data/input/*.csv"
 
 
 @pytest.fixture(scope="session")
@@ -21,5 +21,6 @@ def sf_small():
 
 
 @pytest.fixture(scope="session")
-def inmet_glob():
-    return INMET_GLOB
+def inmet_glob(tmp_path_factory):
+    """Glob of the three station CSVs of ``tests/inmet_fixture.py``."""
+    return write_inmet_fixture(str(tmp_path_factory.mktemp("inmet")))

@@ -1,5 +1,7 @@
-"""Golden end-to-end test of the INMET pipeline on the 3 reference CSVs
-(SURVEY.md §5 item 2) + property checks (FIXTURES.md invariants)."""
+"""Golden end-to-end test of the INMET pipeline on three station CSVs
+built to FIXTURES.md §A (``tests/inmet_fixture.py``, standing in for the
+reference's three files; SURVEY.md §5 item 2) + property checks
+(FIXTURES.md invariants)."""
 
 from __future__ import annotations
 
@@ -284,3 +286,53 @@ def test_pipeline_scales_to_many_files(spark, tmp_path):
     assert len(per) == n_files and all(r["count"] == n_hours for r in per)
     # daily agg: one row per (station, day)
     assert tables["fato_agg_previsoes_dia"].count() == n_files * 2
+
+
+def test_stray_non_utf8_byte_in_body_keeps_rows(spark, tmp_path):
+    """A body line carrying a stray non-UTF-8 byte (0xE7, a Latin-1 ç)
+    in an unused column still parses: the body decode replaces the byte
+    as ``spark.read.text`` does instead of failing the scan (a strict
+    UTF-8 decode raises under ANSI mode), and no row is lost."""
+    from tests.inmet_fixture import write_inmet_fixture
+
+    glob = write_inmet_fixture(str(tmp_path / "csv"))
+    path = sorted((tmp_path / "csv").glob("*.csv"))[0]  # A507, standard header
+    lines = path.read_bytes().split(b"\n")
+    cells = lines[20].split(b";")
+    cells[6] = b"\xe7" + cells[6]  # RADIACAO GLOBAL, not used by the fact
+    lines[20] = b";".join(cells)
+    path.write_bytes(b"\n".join(lines))
+
+    tables = run_pipeline(spark, glob, out_dir=str(tmp_path / "wh"))
+    assert {n: df.count() for n, df in tables.items()} == {
+        "cidades": 3,
+        "datas": 181,
+        "previsoes": 3 * 4344,
+        "dim_cidade_atributos": 3,
+        "fato_agg_previsoes_dia": 3 * 181,
+        "cidade_kpis_mensal": 18,
+    }
+
+
+def test_plan_construction_launches_no_spark_job(spark, inmet_glob):
+    """Building the tables is pure plan construction: no header collect,
+    no min/max round trip for the calendar. Every Spark job starts only
+    when a table is written or read."""
+    from airflow_etl_pyspark_inmet_spark.plans.inmet_pipeline import (
+        build_cidades,
+        build_datas,
+        build_previsoes,
+    )
+
+    sc = spark.sparkContext
+    group = "inmet-plan-construction"
+    sc.setJobGroup(group, "plan construction only")
+    try:
+        build_cidades(spark, inmet_glob)
+        build_datas(build_previsoes(spark, inmet_glob))
+        run_pipeline(spark, inmet_glob, out_dir=None)
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        sc._jsc.clearJobGroup()
+    assert jobs == []

@@ -16,8 +16,10 @@ from airflow_etl_pyspark_inmet_spark.functions.cleaning import (
     dayfirst_date,
     decimal_comma_to_double,
     sanitize_name,
+    sanitize_name_sql,
     surrogate_key,
 )
+from perfbench.gen import INMET_HEADER
 
 _SETTINGS = dict(max_examples=5, deadline=None)
 
@@ -84,6 +86,44 @@ def test_sanitize_name_is_idempotent_and_clean(name):
     assert once == once.lower()
     for ch in once:
         assert ch.isascii() and (ch.isalnum() or ch == "_")
+
+
+def _assert_sanitizer_parity(spark, names: list[str]) -> None:
+    """sanitize_name_sql, run in Spark, equals sanitize_name on every name."""
+    df = spark.createDataFrame(list(enumerate(names)), "i int, n string")
+    got = dict(df.selectExpr("i", f"{sanitize_name_sql('n')} AS s").collect())
+    bad = {
+        names[i]: (s, sanitize_name(names[i]))
+        for i, s in got.items()
+        if s != sanitize_name(names[i])
+    }
+    assert len(got) == len(names) and not bad
+
+
+def test_sanitize_name_sql_matches_python_on_latin1(spark):
+    """The JVM-side header sanitizer equals sanitize_name on every
+    character U+0020-U+00FF (alone, between letters, beside an underscore
+    and a digit) and on the 19 raw INMET header names. NFKD folds ² to 2
+    and ¼ to 14, and deletes what has no ASCII form (ß, ×, µ), so a
+    dropped character must join its neighbours rather than split them."""
+    names = list(INMET_HEADER)
+    for cp in range(0x20, 0x100):
+        c = chr(cp)
+        names += [c, f"a{c}b", f"_{c}1"]
+    _assert_sanitizer_parity(spark, names)
+
+
+@settings(**_SETTINGS)
+@given(
+    st.lists(
+        st.text(st.characters(min_codepoint=0x20, max_codepoint=0xFF), max_size=30),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_sanitize_name_sql_property(spark, names):
+    """Random Latin-1 names sanitize the same in Spark and in Python."""
+    _assert_sanitizer_parity(spark, names)
 
 
 @settings(**_SETTINGS)
