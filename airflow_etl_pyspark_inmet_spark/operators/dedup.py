@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import exploded_ngrams, ngram_hash_sets
-from .util import lineage_checkpoint, lineage_checkpoint_eager
+from .util import lineage_checkpoint, lineage_checkpoint_eager, overlap
 
 
 def dedup_exact(
@@ -750,31 +750,18 @@ def simhash_jaccard_pairs(
     # concurrent driver thread so the two corpus passes overlap instead
     # of serializing. Results identical: both branches are
     # deterministic and share nothing but the input frame.
-    from pyspark import InheritableThread
-
-    holder: dict = {}
-
-    def _sig() -> None:
-        try:
-            holder["df"] = (
-                simhash64(df, id_col, text_col)
-                .withColumnRenamed(id_col, "_id")
-                .transform(lineage_checkpoint_eager)
-            )
-        except BaseException as exc:  # re-raised on the main thread
-            holder["err"] = exc
-
-    th = InheritableThread(target=_sig)
-    th.start()
-    pairs = jaccard_pairs(
-        df, id_col, text_col, ngram, threshold,
-        broadcast_sizes=broadcast_sizes,
-        max_shingle_df=max_shingle_df,
+    sig, pairs = overlap(
+        lambda: (
+            simhash64(df, id_col, text_col)
+            .withColumnRenamed(id_col, "_id")
+            .transform(lineage_checkpoint_eager)
+        ),
+        lambda: jaccard_pairs(
+            df, id_col, text_col, ngram, threshold,
+            broadcast_sizes=broadcast_sizes,
+            max_shingle_df=max_shingle_df,
+        ),
     )
-    th.join()
-    if "err" in holder:
-        raise holder["err"]
-    sig = holder["df"]
     a = sig.toDF("id_a", "sig_a")
     b = sig.toDF("id_b", "sig_b")
     width = 64 // n_bands

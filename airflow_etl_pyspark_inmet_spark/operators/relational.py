@@ -558,24 +558,6 @@ def global_ntile(
     return ranked.withColumn(out_col, bucket.cast("int")).drop("_grank")
 
 
-# Audit hook (scripts/dump_plans.py): the lazy localCheckpoints inside
-# grouped_rank / grouped_running_sum protect their nondeterministic
-# id/partition columns from double computation, but a checkpoint
-# replaces everything upstream with a LogicalRDD — blinding the plan
-# audit (scan counts, pushed filters, AND the lowcard-window detector)
-# to the query's real dataflow. The audit sets util.AUDIT_NO_CHECKPOINT
-# (r16: moved there so ONE flag covers every checkpointing operator —
-# grouped_rank here plus the iterative dedup/graph/nn-descent family)
-# to keep the full lineage visible while it inspects plans; production
-# always checkpoints.
-
-
-def _lineage_checkpoint(df: DataFrame) -> DataFrame:
-    from .util import lineage_checkpoint
-
-    return lineage_checkpoint(df)
-
-
 def grouped_rank(
     df: DataFrame,
     group_cols: list[str],
@@ -630,7 +612,7 @@ def grouped_rank(
     sorted_df = df.repartitionByRange(
         *gcols, *order_exprs
     ).sortWithinPartitions(*gcols, *order_exprs)
-    with_id = _lineage_checkpoint(
+    with_id = lineage_checkpoint(
         sorted_df.select(
             "*",
             F.monotonically_increasing_id().alias("_mid"),
@@ -739,7 +721,7 @@ def grouped_running_sum(
     sorted_df = df.repartitionByRange(
         *gcols, *order_exprs
     ).sortWithinPartitions(*gcols, *order_exprs)
-    with_pid = _lineage_checkpoint(
+    with_pid = lineage_checkpoint(
         sorted_df.withColumn("_spid", F.spark_partition_id())
     )
     counts = with_pid.groupBy("_spid", *group_cols).agg(

@@ -2,34 +2,30 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# AUDIT HOOKS (VERDICT r15 item 3, generalizing the r15 grouped_rank
-# fix): the iterative operators (connected components, label
-# propagation, pagerank, triangles, k-core, BFS/SSSP, NN-Descent) and
-# grouped_rank/grouped_running_sum lineage-truncate with lazy
-# ``localCheckpoint``s so plans don't grow by round — but a checkpoint
-# renders the audited plan as a bare LogicalRDD, hiding every scan,
-# filter, and window upstream of it from scripts/dump_plans.py's
-# operator counts and LOWCARD/cartesian detectors.
+# AUDIT HOOK (scripts/dump_plans.py): the iterative operators (connected
+# components, label propagation, pagerank, triangles, k-core, BFS/SSSP,
+# NN-Descent) and grouped_rank/grouped_running_sum lineage-truncate with
+# lazy ``localCheckpoint``s so plans don't grow by round — but a
+# checkpoint renders the audited plan as a bare LogicalRDD, hiding every
+# scan, filter, and window upstream of it from the dumper's operator
+# counts and LOWCARD/cartesian detectors.
 #
-# Two audit modes, production always checkpoints:
-#
-# - AUDIT_SEGMENTS (the default audit mode): when set to a list, every
-#   checkpoint ALSO records its full-lineage input frame there, and
-#   the audit inspects each recorded segment alongside the main plan —
-#   every scan/exchange/window is visible in exactly one segment, and
-#   because the checkpoints still happen, iterative queries build at
-#   production speed. (r16 measured the alternative: disabling
-#   checkpoints makes CC-embedding composites like d25/c10 recompute
-#   ~3^rounds lineage per eager convergence probe — the audit ran for
-#   15+ minutes before being killed.)
-# - AUDIT_NO_CHECKPOINT: keep full lineage in the MAIN plan (single
-#   frame, no segments). Only sound for non-iterative operators;
-#   retained for targeted --full inspection of single checkpoints.
-AUDIT_NO_CHECKPOINT = False
+# When AUDIT_SEGMENTS is set to a list, every checkpoint ALSO records its
+# full-lineage input frame there, and the audit inspects each recorded
+# segment alongside the main plan — every scan/exchange/window is visible
+# in exactly one segment, and because the checkpoints still happen,
+# iterative queries build at production speed. (r16 measured the
+# alternative: disabling checkpoints makes CC-embedding composites like
+# d25/c10 recompute ~3^rounds lineage per eager convergence probe — the
+# audit ran for 15+ minutes before being killed.)
 AUDIT_SEGMENTS: list | None = None
 
 
@@ -74,7 +70,7 @@ def lineage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     the hot path."""
     if AUDIT_SEGMENTS is not None:
         AUDIT_SEGMENTS.append(df)
-    return df if AUDIT_NO_CHECKPOINT else df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def lineage_checkpoint_eager(df: DataFrame) -> DataFrame:
@@ -115,9 +111,9 @@ def rebalance_if_skewed(df: DataFrame, max_skew: int = 4) -> DataFrame:
     if total == 0 or not counts:
         return df
     if max(counts) > max_skew * max(1, total // target):
-        # lineage_checkpoint, not a bare localCheckpoint: the audit
-        # modes (AUDIT_SEGMENTS / AUDIT_NO_CHECKPOINT) must see and
-        # traverse this barrier like every other one
+        # lineage_checkpoint, not a bare localCheckpoint: the segment
+        # audit (AUDIT_SEGMENTS) must see and traverse this barrier like
+        # every other one
         return lineage_checkpoint(df.repartition(target))
     return df
 
@@ -134,3 +130,37 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def overlap(
+    background: Callable[[], Any], foreground: Callable[[], Any]
+) -> tuple[Any, Any]:
+    """Run ``background`` on a driver thread while ``foreground`` runs on
+    this one; return ``(background(), foreground())``.
+
+    For two independent corpus passes whose blocking driver jobs would
+    otherwise serialize (eager checkpoints, train collects): Spark runs
+    the jobs of both threads concurrently. The thread is an
+    ``InheritableThread``, so its jobs carry the caller's job group and
+    local properties. It is always joined before this returns or raises:
+    a foreground error propagates after the join (even when the
+    background also failed), and a background error is re-raised here
+    when the foreground succeeded.
+    """
+    out: dict = {}
+
+    def _run() -> None:
+        try:
+            out["value"] = background()
+        except BaseException as exc:  # re-raised on the caller's thread
+            out["err"] = exc
+
+    th = InheritableThread(target=_run)
+    th.start()
+    try:
+        fg = foreground()
+    finally:
+        th.join()
+    if "err" in out:
+        raise out["err"]
+    return out["value"], fg

@@ -421,38 +421,22 @@ def s3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     straggler tails). Results are byte-identical: both sides are
     deterministic and independent; the thread only moves WHEN the exact
     checkpoint materializes."""
-    from pyspark import InheritableThread
-
     from ..operators.similarity import (
         ann_with_recall_check,
         cosine_topk,
         ivf_topk,
     )
-    from ..operators.util import lineage_checkpoint_eager
+    from ..operators.util import lineage_checkpoint_eager, overlap
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    holder: dict = {}
-
-    def _exact() -> None:
-        try:
-            holder["df"] = cosine_topk(emb, qs, 10).transform(
-                lineage_checkpoint_eager
-            )
-        except BaseException as exc:  # re-raised on the main thread
-            holder["err"] = exc
-
-    th = InheritableThread(target=_exact)
-    th.start()
-    ann = ivf_topk(emb, qs, k=10, n_cells=16, n_probe=4)
-    th.join()
-    if "err" in holder:
-        raise holder["err"]
-    return ann_with_recall_check(
-        emb, qs, ann, k=10, min_recall=0.5, exact=holder["df"]
+    exact, ann = overlap(
+        lambda: cosine_topk(emb, qs, 10).transform(lineage_checkpoint_eager),
+        lambda: ivf_topk(emb, qs, k=10, n_cells=16, n_probe=4),
     )
+    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.5, exact=exact)
 
 
 def s5_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

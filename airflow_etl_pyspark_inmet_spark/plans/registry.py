@@ -3650,31 +3650,12 @@ FROM rk
 # so the hash match proves the MERGE storage layer's I/U/D semantics.
 ORACLES["c7_snapshot_merge_mv"] = ORACLES["c6_incremental_refresh"]
 
-# Ordering note: the driver's correctness gate hashes only the FIRST 50
-# entries of queries(); it rotates a 50-query window each round. After
-# the r8 window, driver staleness was: 50 r8, ~48 r7/r6, 41 r5,
-# 0 never-checked. Round-9 window, front to back (the VERDICT r8 ask:
-# rotate to the stalest 50):
-#   1. the 4 queries new this round (q110 recursive hierarchy via
-#      pointer doubling, d18 asymmetric containment dedup, g2
-#      bounded-round label propagation, x9 exact token-budget
-#      apportionment);
-#   2. ALL 41 queries whose last driver row is r5 (d6/d9, q36-q70
-#      remnants, s1/s2, the t2-t19 text block, x4) — after this round
-#      nothing in the registry has driver evidence older than r6;
-#   3. 7 of the oldest r6 rows fill the remaining slots.
-# Everything behind the window is green in the r8 judge's independent
-# 191/191 full replica and in this round's local replica run.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # -- 1. new in round 9 ------------------------------------------
     "q110_hierarchy_rollup": R.q110_hierarchy_rollup,
     "d18_containment_pairs": L.d18_containment_pairs,
     "g2_label_propagation": L.g2_label_propagation,
     "x9_token_budget": L.x9_token_budget,
     "c7_snapshot_merge_mv": T.c7_snapshot_merge_mv,
-    # -- 2. the full r5-stale cohort (the VERDICT r8 ask: most of ----
-    #       q34-q69 last driver-checked in r4-r6; nothing behind ----
-    #       this window is older than r6 afterwards ------------------
     "d6_dedup_embedding": L.d6_dedup_embedding,
     "d9_repeated_spans": L.d9_repeated_spans,
     "q36_global_topk": R.q36_global_topk,
@@ -3716,7 +3697,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t8_tfidf_top_terms": L.t8_tfidf_top_terms,
     "t9_decontaminate": L.t9_decontaminate,
     "x4_temperature_weights": L.x4_temperature_weights,
-    # -- 3. oldest r6 rows fill the remaining slots ------------------
     "c3_dedup_funnel_lsh": L.c3_dedup_funnel_lsh,
     "d10_incremental_dedup": L.d10_incremental_dedup,
     "d11_image_dup_groups": L.d11_image_dup_groups,
@@ -3724,7 +3704,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "m10_avi_frames": L.m10_avi_frames,
     "m11_mixed_modality": L.m11_mixed_modality,
     "m12_image_ahash": L.m12_image_ahash,
-    # --- end of the driver 50-entry correctness window --------------
     "s6_ivf_pq_topk": L.s6_ivf_pq_topk,
     "d16_fuzzy_pairs_segmented": L.d16_fuzzy_pairs_segmented,
     "st9_stream_incremental_refresh": L.st9_stream_incremental_refresh,
@@ -4474,72 +4453,6 @@ WHERE s.pkn_avg_micro >= thr.thr_micro
 QUERIES["c8_perplexity_filter"] = L.c8_perplexity_filter
 
 
-# ---- round-10 driver correctness-window rotation ----------------------
-# The driver hashes only the FIRST 50 queries() entries, so the dict is
-# reordered each round to put the stalest evidence first. Round-10
-# window, front to back:
-#   1. all 23 queries with NO driver row yet — everything added during
-#      round 10 (the d19-d24 LSH tier, st10/st11 streaming, g3/g4
-#      graph, s7/s8, t27-t30, x6, m16-m18, q109/q111, c8);
-#   2. 27 of the 46 queries whose last driver row is r6 (the m-family
-#      codecs, the s3/s4 ANN pair, TPC-H q73-q77 block, q01/q34/q51).
-# Remaining r6-stale after this round (19, front of the r11 window):
-# q61-q66, st1-st6, q02/q04-q09.
-_R10_WINDOW = [
-    "d19_dedup_embedding_lsh",
-    "d20_semantic_keeper_lsh",
-    "d21_semantic_clusters_lsh",
-    "d22_dedup_embedding_full",
-    "d23_embedding_delta_dedup",
-    "st10_stream_embedding_dedup",
-    "g3_triangle_count",
-    "t27_ngram_novelty",
-    "q109_weighted_median",
-    "q111_assoc_rules",
-    "t28_heavy_hitters",
-    "x6_dsir_importance",
-    "d24_corpus_overlap",
-    "m16_image_patches",
-    "s7_embedding_gram",
-    "t29_bpe_encode",
-    "st11_stream_gram",
-    "m17_audio_energy",
-    "g4_kcore",
-    "s8_sq8_topk",
-    "m18_audio_autocorr",
-    "t30_kneser_ney",
-    "c8_perplexity_filter",
-    "m10_avi_frames",
-    "m11_mixed_modality",
-    "m12_image_ahash",
-    "m7_wav_stats",
-    "m8_wav_frames",
-    "m9_avi_stats",
-    "t20_bigram_condprob",
-    "s4_label_centroids",
-    "q73_tpch_q3",
-    "q74_tpch_q17",
-    "t21_token_lift",
-    "q75_tpch_q18",
-    "q76_table_diff",
-    "q77_mad_outliers",
-    "q72_sessionize_salted",
-    "s3_ivf_topk",
-    "q71_time_weighted_avg",
-    "m6_resize_png",
-    "t6_normalize",
-    "m1_decode_meta",
-    "m2_frame_sample",
-    "m3_embed_norm",
-    "m4_byte_histogram",
-    "m5_resize",
-    "q01_pricing_summary",
-    "q34_approx_distinct",
-    "q51_approx_quantiles",
-]
-assert len(_R10_WINDOW) == 50 and set(_R10_WINDOW) <= set(QUERIES)
-
-
 # x10 — consistent per-stratum holdout sample: md5 is engine-portable,
 # so the oracle IS the same deterministic draw (no envelope needed).
 ORACLES["x10_stratified_sample"] = """
@@ -4948,9 +4861,6 @@ QUERIES["x13_mmr_diverse_topk"] = L.x13_mmr_diverse_topk
 
 
 
-
-# ---- late round-11 additions (front of the window below,
-# never-checked-first precedent) ---------------------------------------
 
 # s9 — exact integer Lloyd k-means, rounds unrolled (g1/g4/t22 contract).
 # Quantization, distances, argmin tiebreak (dist*16+cid) and the
@@ -5511,82 +5421,6 @@ QUERIES["g7_clustering_coeff"] = L.g7_clustering_coeff
 # recall is measured engine-side against the same exact frame).
 ORACLES["s11_matryoshka_topk"] = ORACLES["s8_sq8_topk"]
 QUERIES["s11_matryoshka_topk"] = L.s11_matryoshka_topk
-
-
-# ---- round-11 driver correctness-window rotation ----------------------
-# Oldest-first (VERDICT r10 item 3), never-checked first (the r10
-# precedent): the 3 queries added this round (x10/t31/t32), then all 19
-# queries whose last driver row is r6 (the q02-q09 relational block,
-# q61-q66 SQL-surface block, st1-st6 streaming suite), then 29 of the
-# 50 r7-stale — the remaining streaming pair st7/st8, the heavy
-# composites c4/c5/c6, the dedup family d3/d4/d7/d8/d12/d15/d17, g1,
-# the multimodal m13-m15, and the text/curation t22/t24/t25.
-# The 18 queries ADDED this round (c9/x12/t33/q112/x10/t31/t32/x11/
-# g5/t34/st12/x13/s9/t35/g6/st13/x15/s10) enter at the front
-# (never-checked first, the r10 precedent); to make room, six
-# r7-stale entries are deferred to the r12 front (m13/t22 were
-# judge-re-verified green on the r10 closing code; m14/m15/t24/t25
-# join them). Remaining r7-stale after this round (37, front of the
-# r12 window): m13, m14, m15, t22, t24, t25, t26, x5/x7/x8, s5,
-# q10/q78/q79, q80-q83, q84-q101 (TPC-H block + profiling), q102.
-# g7/s11/d25/d26/st14/t36/c10/t37 (added after this rotation landed)
-# are never-checked and also enter the r12 front.
-_R11_WINDOW = [
-    "s9_kmeans",
-    "t35_phrase_search",
-    "g6_sssp",
-    "st13_stream_growing_dedup",
-    "x15_kcenter_coreset",
-    "s10_hybrid_rrf",
-    "x13_mmr_diverse_topk",
-    "g5_bfs_distances",
-    "t34_zipf_coverage",
-    "st12_stream_count_min",
-    "c9_compaction_plan",
-    "x12_zorder_layout",
-    "t33_vocab_growth",
-    "q112_zonemap_prune",
-    "x10_stratified_sample",
-    "t31_dup_ratio",
-    "t32_count_min",
-    "x11_pareto_frontier",
-    "q02_daily_supplier_agg",
-    "q04_minmax_bounds",
-    "q05_calendar_dim",
-    "q06_surrogate_dim",
-    "q07_decimal_comma_roundtrip",
-    "q08_dayfirst_dates",
-    "q09_union_by_name",
-    "q61_listagg",
-    "q62_try_arithmetic",
-    "q63_bitmap_distinct",
-    "q64_recursive_cte",
-    "q65_map_type",
-    "q66_array_analytics",
-    "st1_stream_tumbling",
-    "st2_stream_sessions",
-    "st3_stream_stateful",
-    "st4_stream_static_join",
-    "st5_stream_dedup",
-    "st6_stream_stream_join",
-    "st7_stream_ohlc",
-    "st8_stream_daily_uniques",
-    "c4_pretraining_pipeline",
-    "c5_multimodal_pipeline",
-    "c6_incremental_refresh",
-    "d3_dedup_minhash",
-    "d4_dedup_simhash",
-    "d7_segment_dedup",
-    "d8_semantic_keeper",
-    "d12_image_neardup",
-    "d15_fuzzy_name_pairs",
-    "d17_semantic_clusters",
-    "g1_pagerank",
-]
-assert len(_R11_WINDOW) == 50 and set(_R11_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R11_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R11_WINDOW)
-}
 
 
 # s12 — NN-Descent k-NN graph build: deterministic id-modulo bucket
@@ -7084,433 +6918,11 @@ LEFT JOIN xagg x ON x.doc_id = t.doc_id
 QUERIES["d32_substring_excise"] = L.d32_substring_excise
 
 
-# --- r12 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 8 queries never driver-checked (registered after the r11 window
-# landed), then all 37 r7-stale entries, then 5 r8-stale to fill 50.
-# Staleness computed from CORRECTNESS_r{1..11}.json (oldest evidence first).
-# Remaining r8-stale queries are pre-verified locally for r13 (BASELINE.md).
-_R12_WINDOW = [
-    # never driver-checked (judge-verified green in r11; hard signal now)
-    "g7_clustering_coeff",
-    "s11_matryoshka_topk",
-    "d25_semdedup",
-    "d26_semdedup_ivf",
-    "st14_stream_topk",
-    "t36_readability",
-    "c10_dedup_ensemble",
-    "t37_char_entropy",
-    # r7-stale (37)
-    "m13_multimodal_pack",
-    "m14_av_alignment",
-    "m15_keyframes",
-    "t22_bpe_train",
-    "t24_leakage_safe_split",
-    "t25_interp_bigram",
-    "t26_jaccard_search",
-    "x5_curriculum_order",
-    "x7_weighted_sample",
-    "x8_epoch_reshuffle",
-    "s5_pq_topk",
-    "q10_semi_join",
-    "q78_cdc_apply",
-    "q79_ratio_to_report",
-    "q80_ohlc_bars",
-    "q81_basket_pairs",
-    "q82_running_balance_floor",
-    "q83_basket_pairs_capped",
-    "q84_tpch_q6",
-    "q85_tpch_q7",
-    "q86_tpch_q8",
-    "q87_tpch_q10",
-    "q88_tpch_q13",
-    "q89_tpch_q14",
-    "q90_tpch_q15",
-    "q91_tpch_q19",
-    "q92_tpch_q21",
-    "q93_tpch_q22",
-    "q94_tpch_q4",
-    "q95_bloom_semi",
-    "q96_expectations",
-    "q97_interval_merge",
-    "q98_skew_split_join",
-    "q99_pit_scd2_join",
-    "q100_sliding_distinct",
-    "q101_active_intervals",
-    "q102_join_discovery",
-    # new this round, never driver-checked (take the last two fill
-    # slots from r8-stale d5/d16, which are pre-verified locally
-    # instead — BASELINE.md r12 staleness note)
-    "d27_semdedup_scaled",
-    "d28_blocked_neardup_flags",
-    # r8-stale fill (3)
-    "c1_curation_chain",
-    "c2_dedup_funnel",
-    "d2_dedup_jaccard",
-]
-assert len(_R12_WINDOW) == 50 and set(_R12_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R12_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R12_WINDOW)
-}
-
-
-# --- r13 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 14 queries never driver-checked (registered after the r12
-# window landed; all green in the r12 judge's local oracle replay — the hard
-# CORRECTNESS signal lands now), then 36 of the 47 r8-stale entries.
-# The 11 r8-stale queries that don't fit (q42_histogram .. t1_token_stats in
-# registration order) are pre-verified locally for r14 (BASELINE.md "r13
-# staleness floor").
-_R13_WINDOW = [
-    # never driver-checked (14)
-    "s12_nn_descent",
-    "d29_winnow_pairs",
-    "s13_silhouette",
-    "q113_partition_manifest",
-    "st15_stream_manifest",
-    "t38_bm25",
-    "x17_rendezvous_shards",
-    "s14_power_iteration",
-    "c11_prototype_pruning",
-    "c12_lsh_threshold_sweep",
-    "t39_greedy_decode",
-    "s15_late_interaction",
-    "q114_event_transitions",
-    "t40_langid_eval",
-    # r8-stale fill (36 of 47, registration order)
-    "s6_ivf_pq_topk",
-    "d16_fuzzy_pairs_segmented",
-    "st9_stream_incremental_refresh",
-    "q103_tpch_q2",
-    "q104_tpch_q9",
-    "q105_tpch_q11",
-    "q106_tpch_q12",
-    "q107_tpch_q16",
-    "q108_tpch_q20",
-    "q11_anti_join",
-    "q12_topk_per_group",
-    "q13_running_window",
-    "q14_rollup",
-    "q15_cube",
-    "q16_distinct_agg",
-    "q17_pivot",
-    "q18_sessionize",
-    "q19_tumbling_batch",
-    "q20_json_extract",
-    "q21_three_way_join",
-    "q22_filter_project",
-    "q23_zero_fill",
-    "q24_asof_join",
-    "q25_range_join",
-    "q26_percentiles",
-    "q27_lag_lead",
-    "q28_salted_join",
-    "q29_set_ops",
-    "q30_posexplode",
-    "q31_grouping_sets",
-    "q32_rolling_range_window",
-    "q33_correlated_subquery",
-    "q35_regression_per_group",
-    "q39_tpch_q5",
-    "q40_argmax_per_key",
-    "q41_unpivot",
-]
-assert len(_R13_WINDOW) == 50 and set(_R13_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R13_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R13_WINDOW)
-}
-
-
-# --- r14 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 12 queries never driver-checked (the 5 registered after the r13
-# window landed — all green in the r13 judge's local oracle replay — plus
-# the 7 r14-new entries st17/d30/st18/x19/c13/s19/st19; the hard
-# CORRECTNESS signal lands now), then the 11 r8-stale entries that missed
-# the r13 window (pre-verified, "r13 staleness floor"), then 27 of the 50
-# r9-stale entries in registration order. The 23 r9-stale queries that don't
-# fit are pre-verified locally for r15 (BASELINE.md "r14 staleness floor").
-_R14_WINDOW = [
-    # never driver-checked (12; st17/d30/st18/x19/c13/s19/st19
-    # registered after this block first landed)
-    "s16_graph_ann_topk",
-    "s17_filtered_ann",
-    "s18_knn_join",
-    "st16_stream_dedup",
-    "x18_hard_negatives",
-    "st17_stream_band_manifest",
-    "d30_bloom_gated_dedup",
-    "st18_stream_cell_manifest",
-    "x19_semantic_decontam",
-    "c13_bloom_fpr_sweep",
-    "s19_routed_graph_ann",
-    "st19_stream_decontam_census",
-    # r8-stale, missed the r13 window (11)
-    "q42_histogram",
-    "q43_full_outer_join",
-    "q44_array_agg_sorted",
-    "t12_pii_scrub",
-    "t13_pack_sequences",
-    "x1_mixture_sample",
-    "x2_domain_cap",
-    "x3_shard_assign",
-    "q03_monthly_kpis",
-    "d5_dedup_clusters",
-    "t1_token_stats",
-    # r9-stale fill (27 of 50, registration order)
-    "q110_hierarchy_rollup",
-    "d18_containment_pairs",
-    "g2_label_propagation",
-    "x9_token_budget",
-    "c7_snapshot_merge_mv",
-    "d6_dedup_embedding",
-    "d9_repeated_spans",
-    "q36_global_topk",
-    "q37_quality_gate",
-    "q38_ntile_quartiles",
-    "q45_date_spine_gapfill",
-    "q46_scd2_intervals",
-    "q47_upsert_merge",
-    "q48_rank_suite",
-    "q49_forward_fill",
-    "q50_anomaly_vs_climatology",
-    "q53_sketch_rollup",
-    "q54_left_outer_enrich",
-    "q55_variant_json",
-    "q56_grouped_agg_udaf",
-    "q57_group_rank_pandas",
-    "q58_cohort_retention",
-    "q59_session_funnel",
-    "q60_percentile_disc",
-    "q67_column_profile",
-    "q68_skew_report",
-    "q69_incremental_agg",
-]
-assert len(_R14_WINDOW) == 50 and set(_R14_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R14_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R14_WINDOW)
-}
-
-
-# --- r15 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 9 r15-new queries (never driver-checked) and the 3 queries
-# whose implementation was REWRITTEN this round onto grouped_rank (x1, x5,
-# x8 — oracle-identical, but the driver should re-certify the new plans;
-# t11 was also rewritten and rides the stale block below), then all 23
-# r9-stale entries (the r14 staleness floor + q70), then 15 of the 50
-# r10-stale in registration order. The 35 r10-stale that don't fit are
-# pre-verified locally for r16 (BASELINE.md "r15 staleness floor").
-_R15_WINDOW = [
-    # never driver-checked (9)
-    "x20_domain_cap_approx",
-    "s20_embedding_qc",
-    "st21_stream_effective_tokens",
-    "x22_length_grouped_batches",
-    "s21_anisotropy_profile",
-    "c14_training_recipe",
-    "c15_effective_tokens",
-    "q115_histogram_quantiles",
-    "st20_stream_histogram",
-    # rewritten this round — re-certify the grouped_rank plans (3)
-    "x1_mixture_sample",
-    "x5_curriculum_order",
-    "x8_epoch_reshuffle",
-    # r9-stale (23; t11 is also a grouped_rank rewrite)
-    "q70_monthly_kpis_dbl",
-    "s1_cosine_topk",
-    "s2_lsh_topk",
-    "t10_repetition_stats",
-    "t11_stratified_sample",
-    "t14_strip_boilerplate",
-    "t15_vocab_top_terms",
-    "t16_oov_stats",
-    "t17_unigram_logprob",
-    "t18_intra_doc_dedup",
-    "t19_quality_classifier",
-    "t2_quality",
-    "t3_lang_id",
-    "t4_fingerprint",
-    "t5_chunk_docs",
-    "t7_train_split",
-    "t8_tfidf_top_terms",
-    "t9_decontaminate",
-    "x4_temperature_weights",
-    "c3_dedup_funnel_lsh",
-    "d10_incremental_dedup",
-    "d11_image_dup_groups",
-    "d1_dedup_exact",
-    # r10-stale, registration order (15)
-    "m10_avi_frames",
-    "m11_mixed_modality",
-    "m12_image_ahash",
-    "m7_wav_stats",
-    "m8_wav_frames",
-    "m9_avi_stats",
-    "t20_bigram_condprob",
-    "s4_label_centroids",
-    "q73_tpch_q3",
-    "q74_tpch_q17",
-    "t21_token_lift",
-    "q75_tpch_q18",
-    "q76_table_diff",
-    "q77_mad_outliers",
-    "q72_sessionize_salted",
-]
-assert len(_R15_WINDOW) == 50 and set(_R15_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R15_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R15_WINDOW)
-}
-
-
-# --- r16 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 4 r16-new queries (never driver-checked), then the 5 queries
-# whose implementation or oracle CHANGED this round (s20 gained the
-# n_null_elem counter + a new planted fault; q115's total collection
-# moved driver-side; s16/s19 fold the unrouted fallback lazily; q24's
-# asof_join was rewritten to carry the matched timestamp), then the full
-# 35-query r15 staleness floor (BASELINE.md "r15 FINAL consolidated
-# record"), then the first 6 r11-stale entries in registration order.
-# The remaining r11-stale queries are pre-verified locally for r17
-# (BASELINE.md "r16 staleness floor").
-_R16_WINDOW = [
-    # never driver-checked (4)
-    "x23_whole_doc_packing",
-    "s22_quantizer_occupancy",
-    "t41_zipf_profile",
-    "q116_asof_tolerance",
-    # changed this round — re-certify (5)
-    "s20_embedding_qc",
-    "q115_histogram_quantiles",
-    "s16_graph_ann_topk",
-    "s19_routed_graph_ann",
-    "q24_asof_join",
-    # r15 staleness floor (35)
-    "t6_normalize",
-    "m1_decode_meta",
-    "m2_frame_sample",
-    "m3_embed_norm",
-    "m4_byte_histogram",
-    "m5_resize",
-    "q01_pricing_summary",
-    "q34_approx_distinct",
-    "q51_approx_quantiles",
-    "d19_dedup_embedding_lsh",
-    "d20_semantic_keeper_lsh",
-    "d21_semantic_clusters_lsh",
-    "d22_dedup_embedding_full",
-    "d23_embedding_delta_dedup",
-    "st10_stream_embedding_dedup",
-    "g3_triangle_count",
-    "t27_ngram_novelty",
-    "q109_weighted_median",
-    "q111_assoc_rules",
-    "t28_heavy_hitters",
-    "x6_dsir_importance",
-    "d24_corpus_overlap",
-    "m16_image_patches",
-    "s7_embedding_gram",
-    "t29_bpe_encode",
-    "st11_stream_gram",
-    "m17_audio_energy",
-    "g4_kcore",
-    "s8_sq8_topk",
-    "m18_audio_autocorr",
-    "t30_kneser_ney",
-    "c8_perplexity_filter",
-    "m6_resize_png",
-    "q71_time_weighted_avg",
-    "s3_ivf_topk",
-    # r11-stale, registration order (6)
-    "c4_pretraining_pipeline",
-    "d12_image_neardup",
-    "st7_stream_ohlc",
-    "c5_multimodal_pipeline",
-    "g1_pagerank",
-    "d15_fuzzy_name_pairs",
-]
-assert len(_R16_WINDOW) == 50 and set(_R16_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R16_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R16_WINDOW)
-}
-
-
-# --- r16 late registration (after the rotation block, so the window's
-# first 50 are untouched; st22 rides the r17 front) ---
 # st22 — streaming Zipf census: the folded SUM-monoid state equals the
 # one-shot census, so the batch t41 profile SQL is the exact oracle.
 ORACLES["st22_stream_zipf_profile"] = ORACLES["t41_zipf_profile"]
 QUERIES["st22_stream_zipf_profile"] = L.st22_stream_zipf_profile
 
-
-# --- r17 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 3 queries never driver-checked (st22 registered after the
-# r16 window by design — VERDICT r16 item 1 — plus this round's d31/d32),
-# then the 5 queries whose code changed this round (d4's capped candidate
-# generation; d2/d5/d24 ride the restructured jaccard_pairs; x23's NULL
-# coalesce), then 42 of the 44-query r11-stale floor in registration
-# order (d4 double-counts as changed+stale). s10_hybrid_rrf is the ONLY
-# floor leftover — pre-verified at round close (BASELINE.md r17 block).
-_R17_WINDOW = [
-    # never driver-checked (3)
-    "st22_stream_zipf_profile",
-    "d31_substring_dedup",
-    "d32_substring_excise",
-    # changed this round — re-certify (5)
-    "d4_dedup_simhash",
-    "d2_dedup_jaccard",
-    "d5_dedup_clusters",
-    "d24_corpus_overlap",
-    "x23_whole_doc_packing",
-    # r11-stale floor, registration order (42)
-    "q02_daily_supplier_agg",
-    "q04_minmax_bounds",
-    "q05_calendar_dim",
-    "q06_surrogate_dim",
-    "q07_decimal_comma_roundtrip",
-    "q08_dayfirst_dates",
-    "q09_union_by_name",
-    "q65_map_type",
-    "q66_array_analytics",
-    "q64_recursive_cte",
-    "q61_listagg",
-    "q62_try_arithmetic",
-    "q63_bitmap_distinct",
-    "st5_stream_dedup",
-    "st6_stream_stream_join",
-    "d3_dedup_minhash",
-    "st1_stream_tumbling",
-    "st4_stream_static_join",
-    "st3_stream_stateful",
-    "st2_stream_sessions",
-    "d7_segment_dedup",
-    "d8_semantic_keeper",
-    "d17_semantic_clusters",
-    "st8_stream_daily_uniques",
-    "c6_incremental_refresh",
-    "x10_stratified_sample",
-    "t31_dup_ratio",
-    "t32_count_min",
-    "x11_pareto_frontier",
-    "c9_compaction_plan",
-    "x12_zorder_layout",
-    "t33_vocab_growth",
-    "q112_zonemap_prune",
-    "g5_bfs_distances",
-    "t34_zipf_coverage",
-    "st12_stream_count_min",
-    "x13_mmr_diverse_topk",
-    "s9_kmeans",
-    "t35_phrase_search",
-    "g6_sssp",
-    "st13_stream_growing_dedup",
-    "x15_kcenter_coreset",
-]
-assert len(_R17_WINDOW) == 50 and set(_R17_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R17_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R17_WINDOW)
-}
-
-
-# --- r17 late registrations (after the rotation block, so the window's
-# first 50 are untouched; these ride the r18 front) ---
 
 # d33 — incremental substring dedup: delta (odd doc_ids) excised against
 # the base (even doc_ids). A delta occurrence is redundant iff its gram
@@ -7635,79 +7047,3 @@ SELECT CAST(doc_id AS BIGINT) AS keep_doc,
 FROM k WHERE rn = 1 AND n_occ >= 2
 """
 QUERIES["st23_stream_substring_index"] = L.st23_stream_substring_index
-
-
-# --- r18 driver-window rotation (keep this block at the END of the file) ---
-# Front: the 3 r17 late registrations (never driver-checked — d33/d34
-# registered after the r17 window per the st22 convention, st23
-# likewise), then the 3 graph queries whose kernels changed this round
-# (broadcast scoring join, argmax/argpartition assign, partition-
-# balance guard — values unchanged, re-certify anyway), then
-# s10_hybrid_rrf (the last r11-stale entry, pre-verified by the r17
-# full sweep), then 43 of the 48 r12-stale entries in registration
-# order (d2_dedup_jaccard is r12-stale too but already rides the
-# r17 window front as a changed re-cert, so it takes no r18 slot).
-# The remaining r12 leftovers (d2 aside: t36_readability,
-# t37_char_entropy, st14_stream_topk, g7_clustering_coeff) are
-# covered by the r17-close 292/292 sweep (BASELINE.md r17 staleness
-# floor) and lead the r19 floor.
-_R18_WINDOW = [
-    # never driver-checked (3)
-    "d33_delta_substring_dedup",
-    "d34_duplication_profile",
-    "st23_stream_substring_index",
-    # kernels changed this round — re-certify (3)
-    "s12_nn_descent",
-    "s16_graph_ann_topk",
-    "s19_routed_graph_ann",
-    # oldest stale (r11) (1)
-    "s10_hybrid_rrf",
-    # r12-stale floor, registration order (43)
-    "q10_semi_join",
-    "q78_cdc_apply",
-    "q79_ratio_to_report",
-    "q80_ohlc_bars",
-    "q81_basket_pairs",
-    "q82_running_balance_floor",
-    "q83_basket_pairs_capped",
-    "q84_tpch_q6",
-    "q85_tpch_q7",
-    "q86_tpch_q8",
-    "q87_tpch_q10",
-    "q88_tpch_q13",
-    "q89_tpch_q14",
-    "q90_tpch_q15",
-    "q91_tpch_q19",
-    "q92_tpch_q21",
-    "q93_tpch_q22",
-    "q94_tpch_q4",
-    "q95_bloom_semi",
-    "q96_expectations",
-    "q97_interval_merge",
-    "q98_skew_split_join",
-    "q99_pit_scd2_join",
-    "q100_sliding_distinct",
-    "q101_active_intervals",
-    "q102_join_discovery",
-    "c1_curation_chain",
-    "c2_dedup_funnel",
-    "c10_dedup_ensemble",
-    "d25_semdedup",
-    "d26_semdedup_ivf",
-    "d27_semdedup_scaled",
-    "d28_blocked_neardup_flags",
-    "m13_multimodal_pack",
-    "m14_av_alignment",
-    "m15_keyframes",
-    "s5_pq_topk",
-    "s11_matryoshka_topk",
-    "t22_bpe_train",
-    "t24_leakage_safe_split",
-    "t25_interp_bigram",
-    "t26_jaccard_search",
-    "x7_weighted_sample",
-]
-assert len(_R18_WINDOW) == 50 and set(_R18_WINDOW) <= set(QUERIES)
-QUERIES = {k: QUERIES[k] for k in _R18_WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in set(_R18_WINDOW)
-}

@@ -1,12 +1,16 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: physical-plan evidence for every headline query at
+"""Generate PLANS.md: physical-plan evidence for registry queries at
 sf0.1 — the scale-readiness audit in artifact form. For each query we record
 the operator counts that matter at 100 TB (shuffles, broadcast vs sort-merge
 joins, partial/final aggregation, codegen spans, pushed filters / pruned
 read schemas) plus any red flags (cartesian products, nested-loop joins,
 row-at-a-time Python evaluation in the hot path).
 
-Usage: python scripts/dump_plans.py  (writes PLANS.md at the repo root)
+Usage:
+  python scripts/dump_plans.py [query ...]   audit the named queries (default:
+                                             every registry query not skipped)
+                                             and write PLANS.md at the repo root
+  python scripts/dump_plans.py --full QUERY  print one query's formatted plan
 """
 
 from __future__ import annotations
@@ -18,10 +22,13 @@ sys.path.insert(0, ".")
 
 SF_DIR = "/root/testdata/sf0.1"
 
-# streaming queries build/run a query inside; plan inspection targets the
-# batch surface (st9's batch twin c6 IS audited below; st9's per-epoch
-# fold shape is documented in SCALING.md)
-SKIP = {"st1", "st2", "st3", "st4", "st5", "st6", "st7", "st8", "st9"}
+# Name prefixes left out of the default audit. Streaming queries (st*)
+# build/run a query inside; plan inspection targets their batch twins (c6
+# for st9, q115 for st20; the per-epoch fold shapes are documented in
+# SCALING.md). t22 (BPE merge rounds) and t39 (greedy decode) are driver-
+# iterative: their returned frame is a tiny driver-built result and the
+# work runs in per-round jobs at build time, audited via SCALING.md.
+SKIP = ("st", "t22_", "t39_")
 
 
 def _formatted(df) -> str:
@@ -113,11 +120,11 @@ def lowcard_window_flags(
         child = _df_of(node.children().apply(0))
         # GUARD (ADVICE r16): probed subtrees are only COUNTED here —
         # never value-compared and never joined back to the audited
-        # query. That is what makes re-executing them sound under
-        # AUDIT_NO_CHECKPOINT, where nondeterministic
-        # monotonically_increasing_id subtrees recompute with different
-        # id VALUES: row counts and partition-key distinct counts are
-        # invariant to _mid values. If a future audit ever compares
+        # query. That is what makes re-executing them sound: a probed
+        # subtree (a recorded checkpoint segment in particular) with
+        # nondeterministic monotonically_increasing_id columns
+        # recomputes different id VALUES, but row counts and
+        # partition-key distinct counts are invariant to _mid values. If a future audit ever compares
         # probed VALUES (or a window input keys on _mid-derived
         # values whose DISTINCT COUNT varies by placement), cache the
         # probe per input subtree instead of re-deriving it.
@@ -162,10 +169,9 @@ def evidence(plan: str) -> dict[str, object]:
     }
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     from airflow_etl_pyspark_inmet_spark.plans.registry import QUERIES
     from airflow_etl_pyspark_inmet_spark.session import get_spark
-    from bench import HEADLINE
 
     # keep checkpointing operators' lineage visible: their lazy
     # localCheckpoints would otherwise truncate the audited plan to a
@@ -184,7 +190,7 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan evidence (generated by scripts/dump_plans.py)",
         "",
-        f"Headline queries at `{SF_DIR}`, formatted-mode physical plans",
+        f"Registry queries at `{SF_DIR}`, formatted-mode physical plans",
         "summarized to the properties that matter at 100 TB. Full plans:",
         "`python scripts/dump_plans.py --full <query>`.",
         "",
@@ -192,202 +198,7 @@ def main() -> None:
         " read cols/scan | python (row / arrow) | red flags |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
-    # round-5/6 additions audited alongside the (unchanged, baseline-
-    # comparable) 29-query headline set
-    extra = [
-        "q70_monthly_kpis_dbl",
-        "t18_intra_doc_dedup",
-        "x4_temperature_weights",
-        "m6_resize_png",
-        "d9_repeated_spans",
-        "t19_quality_classifier",
-        "c1_curation_chain",
-        "q71_time_weighted_avg",
-        "c2_dedup_funnel",
-        "m7_wav_stats",
-        "m8_wav_frames",
-        "m9_avi_stats",
-        "m10_avi_frames",
-        "c3_dedup_funnel_lsh",
-        "q72_sessionize_salted",
-        "m11_mixed_modality",
-        "d10_incremental_dedup",
-        "t20_bigram_condprob",
-        "s4_label_centroids",
-        "q73_tpch_q3",
-        "q74_tpch_q17",
-        "t21_token_lift",
-        "m12_image_ahash",
-        "q75_tpch_q18",
-        "q76_table_diff",
-        "d11_image_dup_groups",
-        "q77_mad_outliers",
-        "d12_image_neardup",
-        "q78_cdc_apply",
-        "q79_ratio_to_report",
-        "q80_ohlc_bars",
-        "q81_basket_pairs",
-        "q82_running_balance_floor",
-        # round-7 additions (t22 is driver-iterative — its merge table is
-        # a driver-built frame, so plan inspection targets the per-round
-        # jobs, not the final tiny result; audited via its operator shape
-        # in SCALING.md instead)
-        "c4_pretraining_pipeline",
-        "m13_multimodal_pack",
-        "q83_basket_pairs_capped",
-        # round-7 extended TPC-H batch
-        "q84_tpch_q6",
-        "q85_tpch_q7",
-        "q86_tpch_q8",
-        "q87_tpch_q10",
-        "q88_tpch_q13",
-        "q89_tpch_q14",
-        "q90_tpch_q15",
-        "q91_tpch_q19",
-        "q92_tpch_q21",
-        "q93_tpch_q22",
-        "q94_tpch_q4",
-        "q95_bloom_semi",
-        "s5_pq_topk",
-        "m14_av_alignment",
-        "x5_curriculum_order",
-        "t24_leakage_safe_split",
-        "c5_multimodal_pipeline",
-        "q96_expectations",
-        "q97_interval_merge",
-        "g1_pagerank",
-        "q98_skew_split_join",
-        "q99_pit_scd2_join",
-        "t25_interp_bigram",
-        "d15_fuzzy_name_pairs",
-        "x7_weighted_sample",
-        "m15_keyframes",
-        "q100_sliding_distinct",
-        "q101_active_intervals",
-        "c6_incremental_refresh",
-        "q102_join_discovery",
-        "t26_jaccard_search",
-        "x8_epoch_reshuffle",
-        "d17_semantic_clusters",
-        # round-8 additions
-        "s6_ivf_pq_topk",
-        "d16_fuzzy_pairs_segmented",
-        "q103_tpch_q2",
-        "q104_tpch_q9",
-        "q105_tpch_q11",
-        "q106_tpch_q12",
-        "q107_tpch_q16",
-        "q108_tpch_q20",
-        # round-9 additions
-        "q110_hierarchy_rollup",
-        "d18_containment_pairs",
-        "g2_label_propagation",
-        "x9_token_budget",
-        # c7 runs the snapshot write+merge at SF_DIR during inspection
-        # (the audited plan is the final aggregate over the committed
-        # snapshot read)
-        "c7_snapshot_merge_mv",
-        # round-10 additions: the embedding LSH tier (t24 — whose pair
-        # stage switched to the minhash-LSH production tier — is
-        # already audited in the round-7 block above)
-        "d19_dedup_embedding_lsh",
-        "d20_semantic_keeper_lsh",
-        "d22_dedup_embedding_full",
-        "d23_embedding_delta_dedup",
-        # round-10 late additions
-        "g3_triangle_count",
-        "g4_kcore",
-        "s7_embedding_gram",
-        "s8_sq8_topk",
-        "t27_ngram_novelty",
-        "t28_heavy_hitters",
-        "t29_bpe_encode",
-        "t30_kneser_ney",
-        "x6_dsir_importance",
-        "d24_corpus_overlap",
-        "m16_image_patches",
-        "m17_audio_energy",
-        "m18_audio_autocorr",
-        "q109_weighted_median",
-        "q111_assoc_rules",
-        "c8_perplexity_filter",
-        # round-11 additions
-        "x10_stratified_sample",
-        "t31_dup_ratio",
-        "t32_count_min",
-        "x11_pareto_frontier",
-        "c9_compaction_plan",
-        "x12_zorder_layout",
-        "t33_vocab_growth",
-        "q112_zonemap_prune",
-        "g5_bfs_distances",
-        "t34_zipf_coverage",
-        "x13_mmr_diverse_topk",
-        "s9_kmeans",
-        "t35_phrase_search",
-        "g6_sssp",
-        "x15_kcenter_coreset",
-        "s10_hybrid_rrf",
-        "g7_clustering_coeff",
-        "s11_matryoshka_topk",
-        "d25_semdedup",
-        "t36_readability",
-        "d26_semdedup_ivf",
-        "c10_dedup_ensemble",
-        "t37_char_entropy",
-        # round-12 additions
-        "d27_semdedup_scaled",
-        "d28_blocked_neardup_flags",
-        "s12_nn_descent",
-        "d29_winnow_pairs",
-        "s13_silhouette",
-        "q113_partition_manifest",
-        "t38_bm25",
-        "x17_rendezvous_shards",
-        "s14_power_iteration",
-        "c11_prototype_pruning",
-        "c12_lsh_threshold_sweep",
-        "s15_late_interaction",
-        "q114_event_transitions",
-        "t40_langid_eval",
-        # round-13 additions (s16's walk/graph build runs at plan-
-        # construction time behind checkpoints — its audit row shows the
-        # final top-k window, the iterative-query convention)
-        "s16_graph_ann_topk",
-        "s17_filtered_ann",
-        "s18_knn_join",
-        # t39's returned frame is the bounded decoded chain (<= n_steps
-        # literal rows); its census/lookup plans run at build time, so
-        # the audit row is intentionally near-empty — not listed.
-        "x18_hard_negatives",
-        # round-14 additions (st16/st17/st18 are streaming folds — the
-        # per-epoch plan isn't a single auditable frame, the st9
-        # convention; s19 follows the s16 iterative-query convention)
-        "d30_bloom_gated_dedup",
-        "x19_semantic_decontam",
-        "c13_bloom_fpr_sweep",
-        "s19_routed_graph_ann",
-        # round-15 additions (st20 is a streaming fold — the st9
-        # convention; its batch twin q115 IS audited)
-        "x20_domain_cap_approx",
-        "s20_embedding_qc",
-        "c14_training_recipe",
-        "c15_effective_tokens",
-        "q115_histogram_quantiles",
-        "x22_length_grouped_batches",
-        "s21_anisotropy_profile",
-        # round-16 additions (st* excluded by the st9 convention)
-        "x23_whole_doc_packing",
-        "s22_quantizer_occupancy",
-        "t41_zipf_profile",
-        "q116_asof_tolerance",
-        # round-17 additions (st22 excluded by the st9 convention)
-        "d31_substring_dedup",
-        "d32_substring_excise",
-        "d33_delta_substring_dedup",
-        "d34_duplication_profile",
-    ]
-    names = [n for n in HEADLINE + extra if n.split("_")[0] not in SKIP]
+    names = names or [n for n in QUERIES if not n.startswith(SKIP)]
     for name in names:
         # SEGMENT-MODE audit (VERDICT r15 item 3): record every lazy
         # localCheckpoint's full-lineage input while the query builds
@@ -544,4 +355,4 @@ if __name__ == "__main__":
         spark = get_spark(app_name="plans")
         print(_formatted(QUERIES[sys.argv[2]](spark, SF_DIR)))
     else:
-        main()
+        main(sys.argv[1:])

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Deterministic scale-up generator: replicate the sf0.1 testdata K times
-(default 10 -> "sf1") with consistent key offsets, for the standing
-scale-regression gate (`bench.py --scale-check`, VERDICT r9 item 3).
+(default 10 -> "sf1") with consistent key offsets, for scale-regression
+runs and scripts/measure_graph_ann_recall.py (recall on clustered data).
 
 Replication is the same recipe as the round-9 one-off sf1 datapoint
 (BASELINE.md "Round 9"): copy i of each table shifts every key column by

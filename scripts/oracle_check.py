@@ -4,9 +4,8 @@
 compare row count, column names/types (cross-engine type skew), and
 order-insensitive values.
 
-Usage: python scripts/oracle_check.py [--sf 0.001|0.01|0.1] [--window] [query_name ...]
+Usage: python scripts/oracle_check.py [--sf 0.001|0.01|0.1] [query_name ...]
   --sf      scale factor directory (default 0.01, the driver's)
-  --window  only the first 50 queries() entries — the driver's exact gate
 Exit 0 iff all checked queries match.
 """
 
@@ -71,14 +70,10 @@ def main() -> int:
 
     global SF_DIR
     args = sys.argv[1:]
-    window_only = False
     if "--sf" in args:
         i = args.index("--sf")
         SF_DIR = f"/root/testdata/sf{args[i + 1]}"
         del args[i : i + 2]
-    if "--window" in args:
-        window_only = True
-        args.remove("--window")
 
     spark = get_spark(shuffle_partitions=16)
     con = duckdb.connect()
@@ -87,7 +82,7 @@ def main() -> int:
 
     qs = E.queries()
     oracles = E.oracle_sql()
-    names = args or (list(qs)[:50] if window_only else list(qs))
+    names = args or list(qs)
     failures = []
     for name in names:
         t0 = time.time()

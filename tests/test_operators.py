@@ -99,6 +99,85 @@ def test_simhash_jaccard_pairs_equals_exact(docs):
     assert got == exact
 
 
+class _StubFrame:
+    """Stands in for the signature frame: the fault tests patch both
+    corpus passes, so nothing downstream of them may touch Spark."""
+
+    def withColumnRenamed(self, *_):
+        return self
+
+    def transform(self, _):
+        return self
+
+
+def test_simhash_jaccard_pairs_joins_worker_when_main_side_fails(
+    spark, monkeypatch
+):
+    """A main-thread failure must not leave the signature thread running:
+    the worker is joined before the error reaches the caller."""
+    import threading
+
+    from airflow_etl_pyspark_inmet_spark.operators import dedup
+
+    started, release = threading.Event(), threading.Event()
+    workers = []
+
+    def slow_sig(*_):
+        workers.append(threading.current_thread())
+        started.set()
+        release.wait(3)
+        return _StubFrame()
+
+    def failing_pairs(*_, **__):
+        started.wait(5)
+        raise RuntimeError("jaccard tier failed")
+
+    monkeypatch.setattr(dedup, "simhash64", slow_sig)
+    monkeypatch.setattr(dedup, "jaccard_pairs", failing_pairs)
+    try:
+        with pytest.raises(RuntimeError, match="jaccard tier failed"):
+            dedup.simhash_jaccard_pairs(None)
+        assert workers and workers[0] is not threading.current_thread()
+        assert not workers[0].is_alive()
+    finally:
+        release.set()
+
+
+def test_simhash_jaccard_pairs_surfaces_worker_error(spark, monkeypatch):
+    from airflow_etl_pyspark_inmet_spark.operators import dedup
+
+    def failing_sig(*_):
+        raise ValueError("signature pass failed")
+
+    monkeypatch.setattr(dedup, "simhash64", failing_sig)
+    monkeypatch.setattr(dedup, "jaccard_pairs", lambda *_, **__: _StubFrame())
+    with pytest.raises(ValueError, match="signature pass failed"):
+        dedup.simhash_jaccard_pairs(None)
+
+
+def test_overlap_both_sides_fail_raises_foreground_after_join(spark):
+    import threading
+
+    from airflow_etl_pyspark_inmet_spark.operators.util import overlap
+
+    failed = threading.Event()
+    workers = []
+
+    def background():
+        workers.append(threading.current_thread())
+        failed.set()
+        raise ValueError("background")
+
+    def foreground():
+        failed.wait(5)
+        raise RuntimeError("foreground")
+
+    with pytest.raises(RuntimeError, match="foreground"):
+        overlap(background, foreground)
+    assert failed.is_set() and not workers[0].is_alive()
+    assert overlap(lambda: 1, lambda: 2) == (1, 2)
+
+
 def test_simhash_pairs_on_corpus_are_valid(docs):
     ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
     pairs = simhash_pairs(docs, max_hamming=3).collect()
