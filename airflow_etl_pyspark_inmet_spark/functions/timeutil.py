@@ -14,7 +14,9 @@ which keeps the oracle comparison engine-neutral.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
@@ -43,3 +45,21 @@ def utc_timestamps(df: DataFrame) -> DataFrame:
     if not ntz:
         return df
     return df.withColumns({name: ntz_to_utc(name) for name in ntz})
+
+
+def read_nanos_ts(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """Run ``read`` (a batch or streaming parquet read of the events
+    table) and normalize its ``ts`` column to TIMESTAMP.
+
+    events.parquet has stored ts as TIMESTAMP(NANOS) (rejected by Spark's
+    parquet reader) in some testdata versions and TIMESTAMP(MICROS, no UTC
+    adjustment) (read as TIMESTAMP_NTZ) in others. Handle both: read nanos
+    as long and truncate to micros (integer ``div``, never ``/`` — double
+    division loses precision on int64 nanos, matching DuckDB's ns->us
+    truncation), then normalize any NTZ column to naive-as-UTC TIMESTAMP.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if dict(df.dtypes).get("ts") in ("bigint", "long"):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return utc_timestamps(df)

@@ -300,22 +300,6 @@ def range_join_bucketed(
     )
 
 
-def star_daily_agg(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    date_col: str,
-    measures: dict[str, Column],
-) -> DataFrame:
-    """Generalized fato_agg_previsoes_dia (J1+A2): fact x broadcast dim on
-    ``key``, group by (key + dim attrs + day). ``measures`` maps output
-    alias -> aggregate Column."""
-    j = fact.join(F.broadcast(dim), key, "inner")
-    return j.groupBy(key, date_col).agg(
-        *[c.alias(n) for n, c in measures.items()]
-    )
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

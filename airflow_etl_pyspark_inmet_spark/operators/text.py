@@ -88,17 +88,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Array of word n-gram shingles (space-joined), JVM-side via
-    transform+sequence with bracket indexing (0-based array access is
-    ~7x faster than an element_at chain in codegen)."""
-    words = F.split(F.trim(text), "\\s+")
-    k = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(-1)))
-    joined = F.transform(idx, lambda i: _gram_at(words, i, n))
-    return F.when(k >= n, joined).otherwise(F.array().cast("array<string>"))
-
-
 def _gram_at(words: Column, i: Column, n: int) -> Column:
     parts: list[Column] = []
     for j in range(n):
@@ -1844,7 +1833,7 @@ def greedy_decode(
             ).alias("_k")
         )
         .select("w1", F.expr("substring(_k, 11)").alias("nxt"))
-        .localCheckpoint(eager=True)  # n_steps bounded lookups below
+        .transform(lineage_checkpoint_eager)  # n_steps bounded lookups below
     )
     # drop the empty-string token that exploded_ngrams(n=1) emits for
     # empty/whitespace-only docs (the oracle's toks CTE filters those

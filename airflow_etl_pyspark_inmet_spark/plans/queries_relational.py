@@ -21,7 +21,7 @@ from ..functions.cleaning import (
     decimal_comma_to_double,
     surrogate_key,
 )
-from ..functions.timeutil import utc_timestamps
+from ..functions.timeutil import read_nanos_ts, utc_timestamps
 from ..operators.relational import (
     calendar_dim,
     exact_avg,
@@ -38,23 +38,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # whose first op is already a shuffle (window/groupBy) get strictly
     # slower from the extra exchange.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        return _events(spark, sf_dir)
-    return utc_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet has stored ts as TIMESTAMP(NANOS) (rejected by Spark's
-    parquet reader) in some rounds and TIMESTAMP(MICROS, no UTC adjustment)
-    (read as TIMESTAMP_NTZ) in others. Handle both: read nanos as long and
-    truncate to micros (integer `div`, never `/` — double division loses
-    precision on int64 nanos, matching DuckDB's ns->us truncation), then
-    normalize any NTZ column to naive-as-UTC TIMESTAMP."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") in ("bigint", "long"):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return utc_timestamps(df)
+        return read_nanos_ts(spark, lambda: spark.read.parquet(path))
+    return utc_timestamps(spark.read.parquet(path))
 
 
 # --- A2/A1 family: aggregations ---------------------------------------------

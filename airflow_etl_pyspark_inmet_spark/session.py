@@ -86,29 +86,25 @@ def get_spark(
 
 
 def _silence_bounded_window_warning(spark: SparkSession) -> None:
-    """Set the WindowExec logger to ERROR (VERDICT r10 item 6).
+    """Set the WindowExec logger to ERROR.
 
-    The engine has exactly five ``Window.orderBy()``-without-partition
-    sites (mixing.py token-budget ranks, relational.py/text.py top-k
-    ranks, curation.py per-shard offsets, queries_tpch.py day-spine
-    running sum). All operate on BOUNDED frames — top-k limits,
-    per-shard totals, a date spine — audited individually, so
-    WindowExec's "moving all data to a single partition" WARN is noise
-    that spooks operators reading m13/x9-family runs. A constant
-    partition key cannot silence it (Catalyst folds any foldable
-    partition expression back to an empty spec — verified against
-    lit/arith/coalesce forms), so the targeted logger is the remaining
-    lever. Unbounded-window mistakes in NEW code are still caught by
-    the plan audit (scripts/dump_plans.py red-flags + per-query review
-    in PLANS.md), which is the guard that matters at 100 TB — a log
-    line on a 32-thread local run never was.
-
-    Scoped, not unconditional (r11 advice): set
-    ``SPARK_GRAFT_KEEP_WINDOW_WARN=1`` to leave WindowExec at WARN —
-    the runtime signal for unpartitioned-window regressions in new
-    code — e.g. while developing a new operator or auditing plans."""
-    if os.environ.get("SPARK_GRAFT_KEEP_WINDOW_WARN") == "1":
-        return
+    The engine has ten ``Window.orderBy()``-without-partition sites:
+    mixing.py token_budget_allocation and queries_llm.py c14 remainder
+    ranks, relational.py skew_report ranks and histogram_quantiles
+    cumulative counts, text.py vocab_top_terms / zipf_coverage /
+    bm25_topk ranks and vocab_growth decile sums, curation.py
+    pack_counts per-shard offsets, and the queries_tpch.py q101
+    day-spine running sum.
+    All operate on BOUNDED frames — top-k limits, per-shard totals,
+    histogram bins, a date spine — audited individually, so
+    WindowExec's "moving all data to a single partition" WARN is noise.
+    A constant partition key cannot silence it (Catalyst folds any
+    foldable partition expression back to an empty spec — verified
+    against lit/arith/coalesce forms), so the targeted logger is the
+    remaining lever. Unbounded-window mistakes in NEW code are still
+    caught by the plan audit (scripts/dump_plans.py red-flags + per-query
+    review in PLANS.md), which is the guard that matters at 100 TB — a
+    log line on a 32-thread local run never was."""
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -10,31 +10,103 @@ run to completion in complete mode).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.timeutil import utc_timestamps
+from ..functions.timeutil import read_nanos_ts
+from ..operators.util import lineage_checkpoint
+
+
+def _stream_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """readStream over a parquet directory or a single parquet file. The
+    streaming file source requires a directory, so a single file streams
+    its parent dir with a glob filter on the file name."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if path.endswith(".parquet"):
+        path, _, fname = path.rpartition("/")
+        reader = reader.option("pathGlobFilter", fname)
+    return reader.parquet(path)
 
 
 def _read_stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
-    """readStream over the events parquet; the file stores ts as
-    TIMESTAMP(NANOS) which Spark rejects, so read nanos-as-long and
-    truncate to micros (same convention as the batch loader)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
-    # the streaming file source requires a directory: stream the parent
-    # dir with a glob filter when events_dir is a single parquet file
-    if events_dir.endswith(".parquet"):
-        parent, _, fname = events_dir.rpartition("/")
-        reader = spark.readStream.schema(schema).option("pathGlobFilter", fname)
-        stream = reader.parquet(parent)
-    else:
-        stream = spark.readStream.schema(schema).parquet(events_dir)
-    if dict(stream.dtypes).get("ts") in ("bigint", "long"):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return utc_timestamps(stream)
+    """readStream over the events parquet, ``ts`` normalized exactly like
+    the batch loader (:func:`~..functions.timeutil.read_nanos_ts`)."""
+    return read_nanos_ts(spark, lambda: _stream_parquet(spark, events_dir))
+
+
+def _to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming frame ``df`` to completion into a memory sink
+    with output ``mode`` and return the sink table. Default trigger plus
+    ``processAllAvailable``: every file present at start is processed."""
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return df.sparkSession.table(name)
+
+
+def _fold_stream(
+    spark: SparkSession,
+    src: DataFrame,
+    n_files: int,
+    state: dict[str, DataFrame],
+    step: Callable[[dict[str, DataFrame], DataFrame], dict[str, DataFrame]],
+    op: str,
+) -> dict[str, DataFrame]:
+    """The incremental-fold harness of the st9-st23 operators: fold the
+    rows of ``src`` into ``state`` one micro-batch at a time and return
+    the final state.
+
+    ``src`` is spilled to ``n_files`` parquet files and streamed back
+    with ``maxFilesPerTrigger=1`` under ``Trigger.AvailableNow``, so the
+    fold genuinely crosses micro-batches. Each epoch calls
+    ``step(state, batch_df)``, which returns the next state. Every state
+    frame (initial and per epoch) is eagerly lineage-checkpointed, so
+    lineage stays flat across any number of epochs and per-epoch work is
+    O(batch + |state|). Fewer than two epochs raises: the multi-epoch
+    fold is the point of the tier. The spill dir is removed and the
+    query stopped on every exit path.
+    """
+    tmp = tempfile.mkdtemp(prefix=f"{op}_")
+    try:
+        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
+        schema = spark.read.parquet(tmp).schema
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(tmp)
+        )
+        state = {k: lineage_checkpoint(v, eager=True) for k, v in state.items()}
+        epochs = 0
+
+        def fold(batch_df: DataFrame, epoch_id: int) -> None:
+            nonlocal state, epochs
+            state = {
+                k: lineage_checkpoint(v, eager=True)
+                for k, v in step(state, batch_df).items()
+            }
+            epochs += 1
+
+        q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+        if epochs < 2:
+            raise RuntimeError(
+                f"{op} expected >= 2 micro-batches (got {epochs}); the "
+                "multi-epoch fold is the point of the streaming tier."
+            )
+        return state
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def streaming_tumbling_counts(
@@ -69,18 +141,7 @@ def streaming_tumbling_counts(
             "total_value",
         )
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(agg, "complete")
 
 
 def streaming_session_counts(
@@ -104,18 +165,7 @@ def streaming_session_counts(
             "n_events",
         )
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(agg, "complete")
 
 
 def streaming_stateful_counts(
@@ -173,20 +223,9 @@ def streaming_stateful_counts(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        running.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # fold per-batch running rows to the final state per key
     return (
-        spark.table(name)
+        _to_memory(running, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -276,10 +315,9 @@ def streaming_tws_counts(spark: SparkSession, events_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
     # The RocksDB provider is required by transformWithState (and the
     # right provider at scale), but it is a SESSION conf — set it only
-    # around this query's start and restore the prior value so later
+    # around this query's run and restore the prior value so later
     # streaming queries on the shared session keep their own provider.
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     prior = spark.conf.get(provider_key, None)
@@ -289,29 +327,16 @@ def streaming_tws_counts(spark: SparkSession, events_dir: str) -> DataFrame:
         "RocksDBStateStoreProvider",
     )
     try:
-        q = (
-            running.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        out = _to_memory(running, "update")
     finally:
         if prior is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prior)
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.min("first_us").alias("first_us"),
-            F.max("last_us").alias("last_us"),
-        )
+    return out.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.min("first_us").alias("first_us"),
+        F.max("last_us").alias("last_us"),
     )
 
 
@@ -331,18 +356,7 @@ def streaming_static_join_counts(
             "total_value"
         ),
     )
-    name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(agg, "complete")
 
 
 def stream_to_parquet_idempotent(
@@ -406,18 +420,7 @@ def streaming_dedup(
             "value",
         )
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(deduped, "append")
 
 
 def streaming_stream_stream_join(
@@ -467,18 +470,7 @@ def streaming_stream_stream_join(
         F.unix_micros("click_ts").alias("click_us"),
         F.unix_micros("view_ts").alias("view_us"),
     )
-    name = f"stream_ssj2_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(joined, "append")
 
 
 def incremental_ingest_available_now(
@@ -566,18 +558,7 @@ def streaming_ohlc_bars(
             "n_events",
         )
     )
-    name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _to_memory(agg, "complete")
 
 
 def streaming_incremental_refresh(
@@ -614,47 +595,20 @@ def streaming_incremental_refresh(
     MV lives in a Delta table MERGEd per epoch; the per-epoch algebra
     is unchanged.
     """
-    import shutil
-    import tempfile
-
     from ..operators.relational import merge_partial_aggs
 
-    tmp = tempfile.mkdtemp(prefix="st9_deltas_")
-    try:
-        deltas.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = batch_df.groupBy(*keys).agg(
+            *[F.sum(v).cast("bigint").alias(v) for v in vals]
         )
-        state = {"mv": initial_mv.localCheckpoint(eager=True), "epochs": 0}
+        return {
+            "mv": merge_partial_aggs(state["mv"].unionByName(partials), keys, vals)
+        }
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = batch_df.groupBy(*keys).agg(
-                *[F.sum(v).cast("bigint").alias(v) for v in vals]
-            )
-            merged = merge_partial_aggs(
-                state["mv"].unionByName(partials), keys, vals
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                f"streaming_incremental_refresh expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the point "
-                "of the streaming tier."
-            )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _fold_stream(
+        spark, deltas, n_files, {"mv": initial_mv}, step,
+        "streaming_incremental_refresh",
+    )["mv"]
 
 
 def streaming_daily_uniques(
@@ -688,19 +642,8 @@ def streaming_daily_uniques(
             "bm",
         )
     )
-    name = f"stream_uniq_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        _to_memory(agg, "complete")
         .groupBy("day")
         .agg(F.expr("sum(bitmap_count(bm))").alias("n_users"))
     )
@@ -760,14 +703,7 @@ def streaming_embedding_dedup(
         F.col(vec_col).alias("_vb"),
         _norm(F.col(vec_col)).alias("_nb"),
     )
-    schema = spark.read.parquet(emb_path).schema
-    parent, _, fname = emb_path.rpartition("/")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(parent)
-    )
-    delta = stream.filter(F.col(id_col) < delta_max_id)
+    delta = _stream_parquet(spark, emb_path).filter(F.col(id_col) < delta_max_id)
     probe = delta.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_va"),
@@ -781,18 +717,7 @@ def streaming_embedding_dedup(
         .select("id_a", "id_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
-    name = f"stream_embdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).dropDuplicates(["id_a", "id_b"])
+    return _to_memory(scored, "append").dropDuplicates(["id_a", "id_b"])
 
 
 def streaming_growing_lsh_dedup(
@@ -836,95 +761,60 @@ def streaming_growing_lsh_dedup(
     State is index-sized (bands x 16 B/doc + the doc store), per-epoch
     work is O(batch + collisions) — history is never re-signed.
     """
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (
         incremental_lsh_pairs,
         minhash_band_table,
         minhash_lsh_pairs,
     )
 
-    tmp = tempfile.mkdtemp(prefix="st13_docs_")
-    try:
-        src = docs.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(text_col).alias(text_col),
+    src = docs.select(
+        F.col(id_col).cast("bigint").alias(id_col),
+        F.col(text_col).alias(text_col),
+    )
+    empty_docs = src.filter(F.lit(False))
+    state = {
+        "pairs": spark.createDataFrame(
+            [], "id_a bigint, id_b bigint, jaccard double"
+        ),
+        "docs": empty_docs,
+        "bands": minhash_band_table(
+            empty_docs, id_col, text_col, ngram, num_hashes, bands
+        ),
+    }
+
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        batch = lineage_checkpoint(batch_df, eager=True)
+        batch_bands = lineage_checkpoint(
+            minhash_band_table(batch, id_col, text_col, ngram, num_hashes, bands),
+            eager=True,
         )
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+        cross = incremental_lsh_pairs(
+            batch,
+            state["docs"],
+            id_col,
+            text_col,
+            ngram,
+            num_hashes,
+            bands,
+            threshold,
+            corpus_bands=state["bands"],
+        ).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            "jaccard",
         )
-        empty_docs = src.filter(F.lit(False))
-        state = {
-            "docs": empty_docs.localCheckpoint(eager=True),
-            "bands": minhash_band_table(
-                empty_docs, id_col, text_col, ngram, num_hashes, bands
-            ).localCheckpoint(eager=True),
-            "pairs": spark.createDataFrame(
-                [], "id_a bigint, id_b bigint, jaccard double"
-            ).localCheckpoint(eager=True),
-            "epochs": 0,
+        intra = minhash_lsh_pairs(
+            batch, id_col, text_col, ngram, num_hashes, bands, threshold
+        )
+        return {
+            "pairs": state["pairs"].unionByName(cross).unionByName(intra),
+            "docs": state["docs"].unionByName(batch),
+            "bands": state["bands"].unionByName(batch_bands),
         }
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            batch = batch_df.localCheckpoint(eager=True)
-            batch_bands = minhash_band_table(
-                batch, id_col, text_col, ngram, num_hashes, bands
-            ).localCheckpoint(eager=True)
-            cross = incremental_lsh_pairs(
-                batch,
-                state["docs"],
-                id_col,
-                text_col,
-                ngram,
-                num_hashes,
-                bands,
-                threshold,
-                corpus_bands=state["bands"],
-            ).select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-                "jaccard",
-            )
-            intra = minhash_lsh_pairs(
-                batch, id_col, text_col, ngram, num_hashes, bands,
-                threshold,
-            )
-            state["pairs"] = (
-                state["pairs"]
-                .unionByName(cross)
-                .unionByName(intra)
-                .localCheckpoint(eager=True)
-            )
-            state["docs"] = (
-                state["docs"].unionByName(batch).localCheckpoint(eager=True)
-            )
-            state["bands"] = (
-                state["bands"]
-                .unionByName(batch_bands)
-                .localCheckpoint(eager=True)
-            )
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_growing_lsh_dedup expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the growing-state fold is the "
-                "point of the streaming tier."
-            )
-        return state["pairs"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _fold_stream(
+        spark, src, n_files, state, step, "streaming_growing_lsh_dedup"
+    )["pairs"]
 
 
 def streaming_substring_index(
@@ -961,81 +851,52 @@ def streaming_substring_index(
 
     Returns (keep_doc, keep_pos, n_occ), one row per duplicated gram.
     """
-    import shutil
-    import tempfile
-
     from ..operators.dedup import _positional_gram_stream
 
     src = docs.select(
         F.col(id_col).cast("bigint").alias(id_col), F.col(text_col)
     )
-    tmp = tempfile.mkdtemp(prefix="st23_gram_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit(0).cast("bigint").alias("_gh"),
+            F.lit(0).cast("bigint").alias("n_occ"),
+            F.struct(
+                F.lit(0).cast("bigint").alias("_id"),
+                F.lit(0).cast("int").alias("pos"),
+            ).alias("_keep"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit(0).cast("bigint").alias("_gh"),
-                F.lit(0).cast("bigint").alias("n_occ"),
-                F.struct(
-                    F.lit(0).cast("bigint").alias("_id"),
-                    F.lit(0).cast("int").alias("pos"),
-                ).alias("_keep"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"idx": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = (
-                _positional_gram_stream(batch_df, id_col, text_col, n)
-                .groupBy("_gh")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_occ"),
-                    F.min(F.struct("_id", "pos")).alias("_keep"),
-                )
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = (
+            _positional_gram_stream(batch_df, id_col, text_col, n)
+            .groupBy("_gh")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_occ"),
+                F.min(F.struct("_id", "pos")).alias("_keep"),
             )
-            merged = (
-                state["idx"]
-                .unionByName(partials)
-                .groupBy("_gh")
-                .agg(
-                    F.sum("n_occ").cast("bigint").alias("n_occ"),
-                    F.min("_keep").alias("_keep"),
-                )
-            )
-            state["idx"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_substring_index expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        return (
+        merged = (
             state["idx"]
-            .filter(F.col("n_occ") >= 2)
-            .select(
-                F.col("_keep._id").cast("bigint").alias("keep_doc"),
-                F.col("_keep.pos").cast("bigint").alias("keep_pos"),
-                F.col("n_occ"),
+            .unionByName(partials)
+            .groupBy("_gh")
+            .agg(
+                F.sum("n_occ").cast("bigint").alias("n_occ"),
+                F.min("_keep").alias("_keep"),
             )
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return {"idx": merged}
+
+    idx = _fold_stream(
+        spark, src, n_files, {"idx": empty}, step, "streaming_substring_index"
+    )["idx"]
+    return idx.filter(F.col("n_occ") >= 2).select(
+        F.col("_keep._id").cast("bigint").alias("keep_doc"),
+        F.col("_keep.pos").cast("bigint").alias("keep_pos"),
+        F.col("n_occ"),
+    )
 
 
 def streaming_topk_maintenance(
@@ -1065,86 +926,53 @@ def streaming_topk_maintenance(
     the state row set lives in the sink table and the per-epoch
     algebra is unchanged). History is never re-scored: this is the
     serving-side companion to st10/st13's index-side maintenance."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..operators.similarity import cosine_similarity
 
-    tmp = tempfile.mkdtemp(prefix="st14_vecs_")
-    try:
-        src = items.select(
-            F.col(id_col).cast("bigint").alias(id_col), F.col(vec_col)
-        )
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        q = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("_qvec")
-        ).localCheckpoint(eager=True)
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("score").desc(), F.col("item_id").asc()
-        )
+    src = items.select(
+        F.col(id_col).cast("bigint").alias(id_col), F.col(vec_col)
+    )
+    q = lineage_checkpoint(
+        queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec")),
+        eager=True,
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("score").desc(), F.col("item_id").asc()
+    )
 
-        def _truncate(frame: DataFrame) -> DataFrame:
-            return (
-                frame.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= k)
-                .select(query_id_col, "item_id", "score")
-            )
-
-        state = {
-            "topk": spark.createDataFrame(
-                [], f"{query_id_col} bigint, item_id bigint, score double"
-            ).localCheckpoint(eager=True),
-            "epochs": 0,
-        }
-
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            scored = (
-                batch_df.select(
-                    F.col(id_col).alias("item_id"),
-                    F.col(vec_col).alias("_ivec"),
-                )
-                .crossJoin(F.broadcast(q))
-                .filter(F.col("item_id") != F.col(query_id_col))
-                .select(
-                    query_id_col,
-                    "item_id",
-                    cosine_similarity(
-                        F.col("_ivec"), F.col("_qvec")
-                    ).alias("score"),
-                )
-            )
-            state["topk"] = _truncate(
-                state["topk"].unionByName(_truncate(scored))
-            ).localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        sq = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_topk_maintenance expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the incremental refold is the "
-                "point of the streaming tier."
-            )
+    def _truncate(frame: DataFrame) -> DataFrame:
         return (
-            state["topk"]
-            .withColumn("rank", F.row_number().over(w))
-            .select(query_id_col, "item_id", "rank")
+            frame.withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= k)
+            .select(query_id_col, "item_id", "score")
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        scored = (
+            batch_df.select(
+                F.col(id_col).alias("item_id"),
+                F.col(vec_col).alias("_ivec"),
+            )
+            .crossJoin(F.broadcast(q))
+            .filter(F.col("item_id") != F.col(query_id_col))
+            .select(
+                query_id_col,
+                "item_id",
+                cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
+            )
+        )
+        return {"topk": _truncate(state["topk"].unionByName(_truncate(scored)))}
+
+    empty = spark.createDataFrame(
+        [], f"{query_id_col} bigint, item_id bigint, score double"
+    )
+    topk = _fold_stream(
+        spark, src, n_files, {"topk": empty}, step, "streaming_topk_maintenance"
+    )["topk"]
+    return topk.withColumn("rank", F.row_number().over(w)).select(
+        query_id_col, "item_id", "rank"
+    )
 
 
 def streaming_manifest_maintenance(
@@ -1174,72 +1002,45 @@ def streaming_manifest_maintenance(
     lineage flat. Per-epoch work is O(batch + |manifest|); manifest
     state is O(partitions).
     """
-    import shutil
-    import tempfile
-
     from ..operators.relational import partition_manifest, wrap_sum_to_i64
 
     src = rows.select(
         F.col(partition_col).alias("part"), F.col(repr_col).alias("repr")
     )
-    tmp = tempfile.mkdtemp(prefix="st15_manifest_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit("").alias("part"),
+            F.lit(0).cast("bigint").alias("n_rows"),
+            F.lit(0).cast("bigint").alias("hash_sum"),
+            F.lit(0).cast("bigint").alias("hash_xor"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit("").alias("part"),
-                F.lit(0).cast("bigint").alias("n_rows"),
-                F.lit(0).cast("bigint").alias("hash_sum"),
-                F.lit(0).cast("bigint").alias("hash_xor"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = partition_manifest(
-                batch_df, F.col("part"), F.col("repr")
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = partition_manifest(batch_df, F.col("part"), F.col("repr"))
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("part")
+            .agg(
+                F.sum("n_rows").cast("bigint").alias("n_rows"),
+                # partials are already mod-2^64-wrapped bigints; an
+                # exact decimal re-fold + the same wrap is the batch
+                # sum's wrap (mod arithmetic is a homomorphism)
+                wrap_sum_to_i64(
+                    F.sum(F.col("hash_sum").cast("decimal(38,0)"))
+                ).alias("hash_sum"),
+                F.bit_xor("hash_xor").alias("hash_xor"),
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("part")
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    # partials are already mod-2^64-wrapped bigints; an
-                    # exact decimal re-fold + the same wrap is the batch
-                    # sum's wrap (mod arithmetic is a homomorphism)
-                    wrap_sum_to_i64(
-                        F.sum(F.col("hash_sum").cast("decimal(38,0)"))
-                    ).alias("hash_sum"),
-                    F.bit_xor("hash_xor").alias("hash_xor"),
-                )
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                f"streaming_manifest_maintenance expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the point "
-                "of the streaming tier."
-            )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return {"mv": merged}
+
+    return _fold_stream(
+        spark, src, n_files, {"mv": empty}, step,
+        "streaming_manifest_maintenance",
+    )["mv"]
 
 
 def streaming_exact_dedup(
@@ -1271,65 +1072,40 @@ def streaming_exact_dedup(
     Returns (id_col, n_copies): one row per distinct content, id =
     the keeper.
     """
-    import shutil
-    import tempfile
-
     src = rows.select(
         F.col(id_col).cast("bigint").alias("_id"),
         F.md5(F.col(text_col).cast("binary")).alias("_h"),
     )
-    tmp = tempfile.mkdtemp(prefix="st16_dedup_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit("").alias("_h"),
+            F.lit(0).cast("bigint").alias("_id"),
+            F.lit(0).cast("bigint").alias("n_copies"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit("").alias("_h"),
-                F.lit(0).cast("bigint").alias("_id"),
-                F.lit(0).cast("bigint").alias("n_copies"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = batch_df.groupBy("_h").agg(
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = batch_df.groupBy("_h").agg(
+            F.min("_id").alias("_id"),
+            F.count(F.lit(1)).alias("n_copies"),
+        )
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("_h")
+            .agg(
                 F.min("_id").alias("_id"),
-                F.count(F.lit(1)).alias("n_copies"),
+                F.sum("n_copies").cast("bigint").alias("n_copies"),
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("_h")
-                .agg(
-                    F.min("_id").alias("_id"),
-                    F.sum("n_copies").cast("bigint").alias("n_copies"),
-                )
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                f"streaming_exact_dedup expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        return state["mv"].select(F.col("_id").alias(id_col), "n_copies")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return {"mv": merged}
+
+    mv = _fold_stream(
+        spark, src, n_files, {"mv": empty}, step, "streaming_exact_dedup"
+    )["mv"]
+    return mv.select(F.col("_id").alias(id_col), "n_copies")
 
 
 def streaming_band_manifest(
@@ -1371,74 +1147,48 @@ def streaming_band_manifest(
 
     Returns (band, bkey, keeper_id, n_docs).
     """
-    import shutil
-    import tempfile
-
     from ..operators.dedup import portable_minhash_bands
 
     src = rows.select(
         F.col(id_col).cast("bigint").alias("_id"),
         F.col(text_col).alias("_text"),
     )
-    tmp = tempfile.mkdtemp(prefix="st17_bands_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit(0).cast("int").alias("band"),
+            F.lit("").alias("bkey"),
+            F.lit(0).cast("bigint").alias("keeper_id"),
+            F.lit(0).cast("bigint").alias("n_docs"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit(0).cast("int").alias("band"),
-                F.lit("").alias("bkey"),
-                F.lit(0).cast("bigint").alias("keeper_id"),
-                F.lit(0).cast("bigint").alias("n_docs"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = (
-                portable_minhash_bands(
-                    batch_df, "_id", "_text", ngram, num_hashes, bands
-                )
-                .groupBy("band", "bkey")
-                .agg(
-                    F.min("_id").alias("keeper_id"),
-                    F.count(F.lit(1)).alias("n_docs"),
-                )
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = (
+            portable_minhash_bands(
+                batch_df, "_id", "_text", ngram, num_hashes, bands
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("band", "bkey")
-                .agg(
-                    F.min("keeper_id").alias("keeper_id"),
-                    F.sum("n_docs").cast("bigint").alias("n_docs"),
-                )
+            .groupBy("band", "bkey")
+            .agg(
+                F.min("_id").alias("keeper_id"),
+                F.count(F.lit(1)).alias("n_docs"),
             )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_band_manifest expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("band", "bkey")
+            .agg(
+                F.min("keeper_id").alias("keeper_id"),
+                F.sum("n_docs").cast("bigint").alias("n_docs"),
             )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+        return {"mv": merged}
+
+    return _fold_stream(
+        spark, src, n_files, {"mv": empty}, step, "streaming_band_manifest"
+    )["mv"]
 
 
 def streaming_cell_manifest(
@@ -1479,9 +1229,6 @@ def streaming_cell_manifest(
 
     Returns (cell, n_vecs, min_vec_id, mass_q).
     """
-    import shutil
-    import tempfile
-
     from ..operators.similarity import portable_sign_cells
 
     src = rows.select(
@@ -1490,67 +1237,42 @@ def streaming_cell_manifest(
     )
     first = src.select("_vec").first()
     dim = len(first[0]) if first and first[0] is not None else 0
-    tmp = tempfile.mkdtemp(prefix="st18_cells_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit(0).cast("int").alias("cell"),
+            F.lit(0).cast("bigint").alias("n_vecs"),
+            F.lit(0).cast("bigint").alias("min_vec_id"),
+            F.lit(0).cast("bigint").alias("mass_q"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit(0).cast("int").alias("cell"),
-                F.lit(0).cast("bigint").alias("n_vecs"),
-                F.lit(0).cast("bigint").alias("min_vec_id"),
-                F.lit(0).cast("bigint").alias("mass_q"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = (
-                portable_sign_cells(
-                    batch_df, "_id", "_vec", n_planes, scale, dim=dim
-                )
-                .groupBy("cell")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-                    F.min("_id").alias("min_vec_id"),
-                    F.sum("norm_q").cast("bigint").alias("mass_q"),
-                )
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = (
+            portable_sign_cells(batch_df, "_id", "_vec", n_planes, scale, dim=dim)
+            .groupBy("cell")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+                F.min("_id").alias("min_vec_id"),
+                F.sum("norm_q").cast("bigint").alias("mass_q"),
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("cell")
-                .agg(
-                    F.sum("n_vecs").cast("bigint").alias("n_vecs"),
-                    F.min("min_vec_id").alias("min_vec_id"),
-                    F.sum("mass_q").cast("bigint").alias("mass_q"),
-                )
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_cell_manifest expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("cell")
+            .agg(
+                F.sum("n_vecs").cast("bigint").alias("n_vecs"),
+                F.min("min_vec_id").alias("min_vec_id"),
+                F.sum("mass_q").cast("bigint").alias("mass_q"),
             )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+        return {"mv": merged}
+
+    return _fold_stream(
+        spark, src, n_files, {"mv": empty}, step, "streaming_cell_manifest"
+    )["mv"]
 
 
 def streaming_histogram(
@@ -1582,65 +1304,37 @@ def streaming_histogram(
 
     Returns (bin, n_rows, min_value, max_value).
     """
-    import shutil
-    import tempfile
-
     from ..operators.relational import integer_histogram
 
     src = rows.select(F.col(value_col).cast("bigint").alias("_v"))
-    tmp = tempfile.mkdtemp(prefix="st20_hist_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit(0).cast("bigint").alias("bin"),
+            F.lit(0).cast("bigint").alias("n_rows"),
+            F.lit(0).cast("bigint").alias("min_value"),
+            F.lit(0).cast("bigint").alias("max_value"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit(0).cast("bigint").alias("bin"),
-                F.lit(0).cast("bigint").alias("n_rows"),
-                F.lit(0).cast("bigint").alias("min_value"),
-                F.lit(0).cast("bigint").alias("max_value"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = integer_histogram(
-                batch_df, F.col("_v"), n_bins, lo, hi
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = integer_histogram(batch_df, F.col("_v"), n_bins, lo, hi)
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("bin")
+            .agg(
+                F.sum("n_rows").cast("bigint").alias("n_rows"),
+                F.min("min_value").alias("min_value"),
+                F.max("max_value").alias("max_value"),
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("bin")
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    F.min("min_value").alias("min_value"),
-                    F.max("max_value").alias("max_value"),
-                )
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_histogram expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return {"mv": merged}
+
+    return _fold_stream(
+        spark, src, n_files, {"mv": empty}, step, "streaming_histogram"
+    )["mv"]
 
 
 def streaming_effective_tokens(
@@ -1676,9 +1370,6 @@ def streaming_effective_tokens(
 
     Returns (source, n_docs, n_kept, raw_tokens, kept_tokens).
     """
-    import shutil
-    import tempfile
-
     toks = F.size(F.split(F.trim(F.col(text_col)), "\\s+")).cast("bigint")
     src = docs.select(
         F.col(id_col).cast("bigint").alias("_id"),
@@ -1686,110 +1377,82 @@ def streaming_effective_tokens(
         F.md5(F.col(text_col).cast("binary")).alias("_ch"),
         toks.alias("_t"),
     )
-    tmp = tempfile.mkdtemp(prefix="st21_efftok_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    raw0 = (
+        spark.range(0)
+        .select(
+            F.lit("").alias("_src"),
+            F.lit(0).cast("bigint").alias("n_docs"),
+            F.lit(0).cast("bigint").alias("raw_tokens"),
         )
-        raw0 = (
-            spark.range(0)
-            .select(
+        .filter(F.lit(False))
+    )
+    keep0 = (
+        spark.range(0)
+        .select(
+            F.lit("").alias("_ch"),
+            F.struct(
+                F.lit(0).cast("bigint").alias("_id"),
                 F.lit("").alias("_src"),
-                F.lit(0).cast("bigint").alias("n_docs"),
-                F.lit(0).cast("bigint").alias("raw_tokens"),
-            )
-            .filter(F.lit(False))
+            ).alias("_keeper"),
+            F.lit(0).cast("bigint").alias("_tok"),
         )
-        keep0 = (
-            spark.range(0)
-            .select(
-                F.lit("").alias("_ch"),
-                F.struct(
-                    F.lit(0).cast("bigint").alias("_id"),
-                    F.lit("").alias("_src"),
-                ).alias("_keeper"),
-                F.lit(0).cast("bigint").alias("_tok"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {
-            "raw": raw0.localCheckpoint(eager=True),
-            "keep": keep0.localCheckpoint(eager=True),
-            "epochs": 0,
-        }
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            raw_p = batch_df.groupBy("_src").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("_t").cast("bigint").alias("raw_tokens"),
-            )
-            keep_p = batch_df.groupBy("_ch").agg(
-                F.min(F.struct("_id", "_src")).alias("_keeper"),
-                F.any_value("_t").cast("bigint").alias("_tok"),
-            )
-            state["raw"] = (
-                state["raw"]
-                .unionByName(raw_p)
-                .groupBy("_src")
-                .agg(
-                    F.sum("n_docs").cast("bigint").alias("n_docs"),
-                    F.sum("raw_tokens").cast("bigint").alias("raw_tokens"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            state["keep"] = (
-                state["keep"]
-                .unionByName(keep_p)
-                .groupBy("_ch")
-                .agg(
-                    F.min("_keeper").alias("_keeper"),
-                    F.any_value("_tok").alias("_tok"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        raw_p = batch_df.groupBy("_src").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("_t").cast("bigint").alias("raw_tokens"),
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_effective_tokens expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        kept = (
-            state["keep"]
-            .groupBy(F.col("_keeper._src").alias("_src"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-                F.sum("_tok").cast("bigint").alias("kept_tokens"),
-            )
+        keep_p = batch_df.groupBy("_ch").agg(
+            F.min(F.struct("_id", "_src")).alias("_keeper"),
+            F.any_value("_t").cast("bigint").alias("_tok"),
         )
-        return (
+        raw = (
             state["raw"]
-            .join(kept, "_src", "left")
-            .select(
-                F.col("_src").alias(source_col),
-                "n_docs",
-                F.coalesce("n_kept", F.lit(0)).cast("bigint").alias(
-                    "n_kept"
-                ),
-                "raw_tokens",
-                F.coalesce("kept_tokens", F.lit(0))
-                .cast("bigint")
-                .alias("kept_tokens"),
+            .unionByName(raw_p)
+            .groupBy("_src")
+            .agg(
+                F.sum("n_docs").cast("bigint").alias("n_docs"),
+                F.sum("raw_tokens").cast("bigint").alias("raw_tokens"),
             )
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        keep = (
+            state["keep"]
+            .unionByName(keep_p)
+            .groupBy("_ch")
+            .agg(
+                F.min("_keeper").alias("_keeper"),
+                F.any_value("_tok").alias("_tok"),
+            )
+        )
+        return {"raw": raw, "keep": keep}
+
+    state = _fold_stream(
+        spark, src, n_files, {"raw": raw0, "keep": keep0}, step,
+        "streaming_effective_tokens",
+    )
+    kept = (
+        state["keep"]
+        .groupBy(F.col("_keeper._src").alias("_src"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_kept"),
+            F.sum("_tok").cast("bigint").alias("kept_tokens"),
+        )
+    )
+    return (
+        state["raw"]
+        .join(kept, "_src", "left")
+        .select(
+            F.col("_src").alias(source_col),
+            "n_docs",
+            F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
+            "raw_tokens",
+            F.coalesce("kept_tokens", F.lit(0))
+            .cast("bigint")
+            .alias("kept_tokens"),
+        )
+    )
 
 
 def streaming_decontam_census(
@@ -1828,74 +1491,49 @@ def streaming_decontam_census(
 
     Returns (eval_id, n_hits).
     """
-    import shutil
-    import tempfile
-
     from ..operators.similarity import semantic_decontam_pairs
 
     src = train.select(
         F.col(id_col).cast("bigint").alias("_id"),
         F.col(vec_col).alias("_vec"),
     )
-    ev = evalset.select(
-        F.col(id_col).cast("bigint").alias(id_col), F.col(vec_col)
-    ).localCheckpoint(eager=True)  # consumers: every epoch's score pass
-    tmp = tempfile.mkdtemp(prefix="st19_census_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        zero = ev.select(
-            F.col(id_col).alias("eval_id"),
-            F.lit(0).cast("bigint").alias("n_hits"),
-        )
-        state = {"mv": zero.localCheckpoint(eager=True), "epochs": 0}
+    ev = lineage_checkpoint(  # consumers: every epoch's score pass
+        evalset.select(F.col(id_col).cast("bigint").alias(id_col), F.col(vec_col)),
+        eager=True,
+    )
+    zero = ev.select(
+        F.col(id_col).alias("eval_id"),
+        F.lit(0).cast("bigint").alias("n_hits"),
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = (
-                semantic_decontam_pairs(
-                    batch_df.select(
-                        F.col("_id").alias(id_col),
-                        F.col("_vec").alias(vec_col),
-                    ),
-                    ev,
-                    tau_num=tau_num,
-                    band_den=band_den,
-                    scale=scale,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                )
-                .groupBy("eval_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        partials = (
+            semantic_decontam_pairs(
+                batch_df.select(
+                    F.col("_id").alias(id_col),
+                    F.col("_vec").alias(vec_col),
+                ),
+                ev,
+                tau_num=tau_num,
+                band_den=band_den,
+                scale=scale,
+                id_col=id_col,
+                vec_col=vec_col,
             )
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy("eval_id")
-                .agg(F.sum("n_hits").cast("bigint").alias("n_hits"))
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
+            .groupBy("eval_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_decontam_census expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        return state["mv"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        merged = (
+            state["mv"]
+            .unionByName(partials)
+            .groupBy("eval_id")
+            .agg(F.sum("n_hits").cast("bigint").alias("n_hits"))
+        )
+        return {"mv": merged}
+
+    return _fold_stream(
+        spark, src, n_files, {"mv": zero}, step, "streaming_decontam_census"
+    )["mv"]
 
 
 def streaming_zipf_profile(
@@ -1930,55 +1568,29 @@ def streaming_zipf_profile(
     Returns (``group_col``, rank_bucket, n_types, sum_freq, max_freq,
     min_freq) — the t41 schema.
     """
-    import shutil
-    import tempfile
-
     from ..operators.text import zipf_census, zipf_profile_from_census
 
     src = docs.select(F.col(group_col), F.col(text_col))
-    tmp = tempfile.mkdtemp(prefix="st22_zipf_")
-    try:
-        src.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        schema = spark.read.parquet(tmp).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
+    empty = (
+        spark.range(0)
+        .select(
+            F.lit("").alias(group_col),
+            F.lit("").alias("token"),
+            F.lit(0).cast("bigint").alias("freq"),
         )
-        empty = (
-            spark.range(0)
-            .select(
-                F.lit("").alias(group_col),
-                F.lit("").alias("token"),
-                F.lit(0).cast("bigint").alias("freq"),
-            )
-            .filter(F.lit(False))
-        )
-        state = {"mv": empty.localCheckpoint(eager=True), "epochs": 0}
+        .filter(F.lit(False))
+    )
 
-        def fold(batch_df: DataFrame, epoch_id: int) -> None:
-            partials = zipf_census(batch_df, group_col, text_col)
-            merged = (
-                state["mv"]
-                .unionByName(partials)
-                .groupBy(group_col, "token")
-                .agg(F.sum("freq").cast("bigint").alias("freq"))
-            )
-            state["mv"] = merged.localCheckpoint(eager=True)
-            state["epochs"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .trigger(availableNow=True)
-            .start()
+    def step(state: dict, batch_df: DataFrame) -> dict:
+        merged = (
+            state["mv"]
+            .unionByName(zipf_census(batch_df, group_col, text_col))
+            .groupBy(group_col, "token")
+            .agg(F.sum("freq").cast("bigint").alias("freq"))
         )
-        q.awaitTermination()
-        if state["epochs"] < 2:
-            raise RuntimeError(
-                "streaming_zipf_profile expected >= 2 micro-batches "
-                f"(got {state['epochs']}); the multi-epoch fold is the "
-                "point of the streaming tier."
-            )
-        return zipf_profile_from_census(state["mv"], group_col)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return {"mv": merged}
+
+    census = _fold_stream(
+        spark, src, n_files, {"mv": empty}, step, "streaming_zipf_profile"
+    )["mv"]
+    return zipf_profile_from_census(census, group_col)

@@ -3501,7 +3501,24 @@ def test_streaming_topk_maintenance_equals_batch(spark):
     assert len(batch) == 15  # 3 queries x k=5
 
 
-def test_streaming_topk_requires_multiple_epochs(spark):
+def _record_mkdtemp(monkeypatch) -> list[str]:
+    """Patch ``tempfile.mkdtemp`` to record every directory it creates."""
+    import tempfile
+
+    made: list[str] = []
+    real = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    return made
+
+
+def test_streaming_topk_requires_multiple_epochs(spark, monkeypatch):
+    import os
+
     from airflow_etl_pyspark_inmet_spark.streaming.windows import (
         streaming_topk_maintenance,
     )
@@ -3512,8 +3529,29 @@ def test_streaming_topk_requires_multiple_epochs(spark):
     qs = df.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    made = _record_mkdtemp(monkeypatch)
     with _pytest.raises(RuntimeError, match="micro-batches"):
         streaming_topk_maintenance(spark, df, qs, k=3, n_files=1)
+    assert made and not any(os.path.exists(d) for d in made)
+
+
+def test_fold_stream_cleans_up_when_step_raises(spark, monkeypatch):
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from airflow_etl_pyspark_inmet_spark.streaming.windows import _fold_stream
+
+    def step(state, batch_df):
+        raise ValueError("step failed on the first batch")
+
+    made = _record_mkdtemp(monkeypatch)
+    with pytest.raises(StreamingQueryException, match="step failed"):
+        _fold_stream(
+            spark, spark.range(8), 2, {"n": spark.range(0)}, step, "fault_probe"
+        )
+    assert made and not any(os.path.exists(d) for d in made)
+    assert spark.streams.active == []
 
 
 def test_readability_scores_hand_case(spark):

@@ -1,6 +1,7 @@
 """Tooling checks that need no Spark session: every module the scripts
 import must exist, so a script left pointing at a deleted module fails
-here instead of on its next manual run."""
+here instead of on its next manual run; and the package checkpoints
+lineage only through ``operators.util.lineage_checkpoint``."""
 
 from __future__ import annotations
 
@@ -46,3 +47,34 @@ def test_import_walk_sees_nested_imports(tmp_path):
         "    import os.path\n"
     )
     assert imported_modules(src) == {"retired_tool", "os.path"}
+
+
+PACKAGE = ROOT / "airflow_etl_pyspark_inmet_spark"
+
+
+def bare_checkpoints(package: Path) -> list[str]:
+    """``path:line`` of every ``localCheckpoint(`` call in ``package``
+    outside ``operators/util.py``. A bare checkpoint hides its upstream
+    plan from the segment audit (``util.AUDIT_SEGMENTS``); every other
+    module must go through ``util.lineage_checkpoint``."""
+    allowed = package / "operators" / "util.py"
+    return [
+        f"{path.relative_to(package)}:{n}"
+        for path in sorted(package.rglob("*.py"))
+        if path != allowed
+        for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+
+
+def test_every_checkpoint_goes_through_lineage_checkpoint():
+    assert bare_checkpoints(PACKAGE) == []
+
+
+def test_bare_checkpoint_scan_flags_other_modules(tmp_path):
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "operators" / "util.py").write_text(
+        "def lineage_checkpoint(df):\n    return df.localCheckpoint()\n"
+    )
+    (tmp_path / "op.py").write_text("x = df.localCheckpoint(eager=True)\n")
+    assert bare_checkpoints(tmp_path) == ["op.py:1"]
