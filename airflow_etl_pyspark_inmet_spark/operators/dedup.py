@@ -2614,7 +2614,6 @@ def semdedup(
     scale: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigner: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by k-means
     CLUSTER BLOCKING — the third blocking family next to the label
@@ -2633,9 +2632,9 @@ def semdedup(
     Scale design: pair work is sum over clusters of n_c^2, so ``k``
     is the blocking knob — the paper runs k ~ sqrt(N) (50k clusters
     on LAION) so clusters stay bounded. ``k`` is now UNCAPPED: the
-    per-round Lloyd argmin is either the broadcast-literal struct
-    tiebreak (small k, pure codegen) or the Arrow int64 argmin whose
-    cost is flat in k up to thousands of cells (``assigner``, see
+    per-round Lloyd argmin is the broadcast-literal struct tiebreak
+    for k <= 32 (pure codegen) and the Arrow int64 argmin beyond, whose
+    cost is flat in k up to thousands of cells (chosen from k, see
     kmeans_lloyd) — bit-identical either way, so scaling k with N is
     a parameter choice, not a code path change. Everything that
     decides keep/drop is integer (dist_q, ids); only the tau crossing
@@ -2645,7 +2644,7 @@ def semdedup(
 
     assign = kmeans_lloyd(
         df, k=k, n_rounds=n_rounds, scale=scale,
-        id_col=id_col, vec_col=vec_col, assigner=assigner,
+        id_col=id_col, vec_col=vec_col,
     )
     return semdedup_from_assignment(
         df, assign, tau=tau, id_col=id_col, vec_col=vec_col
@@ -2660,10 +2659,10 @@ def semdedup_from_assignment(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The SemDeDup pair/loser algebra over ANY blocking assignment —
-    ``assign`` is (id, cluster, dist_q) from whichever assigner fits
+    ``assign`` is (id, cluster, dist_q) from whichever blocking fits
     the scale: :func:`~.similarity.kmeans_lloyd` at any k (literal or
-    arrow argmin, both oracle-exact), or the IVF trained-centroid
-    assigner (operators.similarity._ivf_train, the s3 machinery)
+    Arrow argmin, both oracle-exact), or IVF trained centroids
+    (operators.similarity._ivf_train, the s3 machinery)
     quantized onto the grid — production k ~ sqrt(N) in the thousands —
     the algebra below is identical either way: intra-cluster pairs,
     cosine >= tau, the member closer to its centroid loses, ties drop
@@ -2725,7 +2724,6 @@ def semdedup_ivf(
     scale: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigner: str = "auto",
 ) -> DataFrame:
     """SemDeDup on the PRODUCTION large-k blocking path: clusters come
     from the IVF coarse quantizer (operators.similarity._ivf_train —
@@ -2750,8 +2748,7 @@ def semdedup_ivf(
         [int(math.floor(x * scale)) for x in row] for row in C.tolist()
     ]
     assign = assign_to_centroids(
-        df, centroids, scale=scale, id_col=id_col, vec_col=vec_col,
-        assigner=assigner,
+        df, centroids, scale=scale, id_col=id_col, vec_col=vec_col
     )
     return semdedup_from_assignment(
         df, assign, tau=tau, id_col=id_col, vec_col=vec_col
@@ -2768,7 +2765,6 @@ def prototype_pruning(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    assigner: str = "auto",
 ):
     """SSL-prototypes data pruning (Sorscher et al., 'Beyond neural
     scaling laws', NeurIPS'22): cluster the corpus, rank every example
@@ -2805,7 +2801,6 @@ def prototype_pruning(
         id_col=id_col,
         vec_col=vec_col,
         dim=dim,
-        assigner=assigner,
     ).transform(lineage_checkpoint)  # consumers: sizes + ranked rows
     sizes = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("_n"))
     w = Window.partitionBy("cluster").orderBy(

@@ -23,7 +23,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from .util import lineage_checkpoint, lineage_checkpoint_eager, rebalance_if_skewed
+from .util import (
+    ensure_parallelism,
+    lineage_checkpoint,
+    lineage_checkpoint_eager,
+    rebalance_if_skewed,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -46,6 +51,49 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _top_k(
+    scored: DataFrame, k: int, query_id_col: str, score: str, rank: str = "rank"
+) -> DataFrame:
+    """The one per-query ranker of the ANN tier: ``row_number`` as
+    ``rank`` over (``score`` desc, ``item_id`` asc) — the tiebreak every
+    oracle replays — kept to ``rank <= k``. Partitioned per query, never
+    global; the rank filter is WindowGroupLimit-eligible."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(score).desc(), F.col("item_id").asc()
+    )
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _exact_refine(
+    vecs: DataFrame,
+    cand: DataFrame,
+    q: DataFrame,
+    k: int,
+    query_id_col: str,
+    ivec: str,
+) -> DataFrame:
+    """Stage 2 of the two-stage tiers: re-rank the (query, item_id)
+    shortlist ``cand`` by the exact cosine of ``vecs[ivec]`` against
+    ``q["_qvec"]``. The shortlist (Q x shortlist rows) and the queries
+    broadcast against the corpus vectors — without the hints the
+    stats-free frames draw a SortMergeJoin that shuffles the whole
+    corpus to re-rank a few hundred rows."""
+    scored = (
+        vecs.join(F.broadcast(cand), "item_id")
+        .join(F.broadcast(q), query_id_col)
+        .select(
+            query_id_col,
+            "item_id",
+            cosine_similarity(F.col(ivec), F.col("_qvec")).alias("score"),
+        )
+    )
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank", "score"
+    )
+
+
 def cosine_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -60,8 +108,6 @@ def cosine_topk(
     BroadcastNestedLoopJoin over the corpus — no shuffle of the corpus,
     one window top-k on (query, score).
     """
-    from .util import ensure_parallelism
-
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).alias("_qvec")
     )
@@ -73,13 +119,8 @@ def cosine_topk(
         "item_id",
         cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank")
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank"
     )
 
 
@@ -154,8 +195,6 @@ def hard_negative_topk(
     """
     import math
 
-    from .util import ensure_parallelism
-
     d2 = band_den * band_den
     # |dot| and n2 are <= dim*maxc^2 =: B; int64 fold needs B <= 2^63-1,
     # the decimal(38,0) comparison needs max(d2, hi^2)*B^2 < 10^38.
@@ -218,13 +257,8 @@ def hard_negative_topk(
         & crossing(lo_num)
         & ~crossing(hi_num)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        banded.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank")
+    return _top_k(banded, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank"
     )
 
 
@@ -340,13 +374,8 @@ def lsh_cosine_topk(
         "item_id",
         cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank", "score"
     )
 
 
@@ -380,12 +409,23 @@ def ann_with_recall_check(
     # driver jobs of their own (e.g. the IVF train collects) can pass a
     # pre-materialized exact frame built on a concurrent driver thread
     # (guide §2.6 overlap) — it must be exactly
-    # cosine_topk(items, queries, k) for the recall contract to hold.
+    # cosine_topk(items, queries, k) for the recall contract to hold:
+    # its columns are checked here (schema only, no job) and a row
+    # ranked beyond k fails the action in the output projection below.
     if exact is None:
         exact = cosine_topk(
             items, queries, k, id_col=id_col, vec_col=vec_col,
             query_id_col=query_id_col,
         ).transform(lineage_checkpoint_eager)
+    else:
+        missing = [
+            c for c in (query_id_col, "item_id", "rank")
+            if c not in exact.columns
+        ]
+        if missing:
+            raise ValueError(
+                f"ann_with_recall_check: exact frame lacks columns {missing}"
+            )
     # the ANN side is Q x k rows — broadcast it (stats-free window
     # output otherwise draws a SortMergeJoin for a 50-row join).
     hits = exact.select(query_id_col, "item_id").join(
@@ -404,7 +444,13 @@ def ann_with_recall_check(
     return exact.join(F.broadcast(per_q), query_id_col).select(
         query_id_col,
         "item_id",
-        "rank",
+        F.when(F.col("rank") <= k, F.col("rank"))
+        .otherwise(
+            F.raise_error(
+                F.lit(f"ann_with_recall_check: exact frame ranks beyond k={k}")
+            )
+        )
+        .alias("rank"),
         (F.col("_recall") >= F.lit(min_recall)).alias("recall_ok"),
     )
 
@@ -579,6 +625,41 @@ def _ivf_train(
     return np.where((N > 0)[:, None], S / np.maximum(N, 1)[:, None], C0)
 
 
+def _corpus_checkpoint(
+    items: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The trained tiers' corpus: the raw ``(item_id, _ivec)`` projection
+    and its balanced, lineage-checkpointed materialization. Training and
+    the encode/assignment pass both read the checkpoint, so the corpus
+    crosses the Arrow boundary from storage once (not once per pass,
+    each re-paying the small-file repartition); the raw projection is
+    the trainers' ``seed_frame``, whose seed limit pushes into the
+    parquet scan instead of materializing the checkpoint's shuffle."""
+    proj = items.select(
+        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
+    )
+    return proj, ensure_parallelism(proj).transform(lineage_checkpoint)
+
+
+def _ivf_route(
+    base: DataFrame,
+    seed_frame: DataFrame,
+    n_cells: int,
+    n_probe: int,
+    vec_col: str,
+) -> tuple[Column, Column]:
+    """The one IVF router: train the coarse quantizer on ``base``
+    (:func:`_ivf_train`), then return its two routing expressions — the
+    home cell of a corpus row's ``_ivec`` and the exploded ``n_probe``
+    nearest cells of a query row's ``vec_col``. Candidates are then one
+    equi-join on the cell id; the (n_cells x dim) centroid matrix rides
+    both UDF closures, so nothing corpus-sized is broadcast."""
+    C = _ivf_train(base, n_cells, seed_frame=seed_frame)
+    home = _assign_udf(C, 1)(F.col("_ivec"))[0]
+    probes = F.explode(_assign_udf(C, n_probe)(F.col(vec_col)))
+    return home, probes
+
+
 def ivf_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -607,26 +688,14 @@ def ivf_topk(
     then touches ~n_probe/n_cells of the data — the same recall/cost dial
     as FAISS IVF-Flat, expressed as one equi-join on cell id.
     """
-    from .util import ensure_parallelism
+    proj, base = _corpus_checkpoint(items, id_col, vec_col)
+    home, probes = _ivf_route(base, proj, n_cells, n_probe, vec_col)
 
-    # Materialize the projected corpus once: the Lloyd pass and the final
-    # assignment both read this checkpoint instead of re-scanning parquet
-    # and re-paying the small-file repartition (previously the corpus went
-    # through the Arrow boundary twice FROM STORAGE, tripling the
-    # Python-worker spin-up rounds that dominate latency variance). The
-    # seed scan reads the RAW projection so its limit pushes into the
-    # parquet scan instead of materializing the checkpoint's shuffle.
-    proj = items.select(
-        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
-    )
-    base = ensure_parallelism(proj).transform(lineage_checkpoint)
-    C1 = _ivf_train(base, n_cells, seed_frame=proj)
-
-    it = base.withColumn("_cell", _assign_udf(C1, 1)(F.col("_ivec"))[0])
+    it = base.withColumn("_cell", home)
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        F.explode(_assign_udf(C1, n_probe)(F.col(vec_col))).alias("_cell"),
+        probes.alias("_cell"),
     )
     cand = (
         it.join(F.broadcast(q), "_cell")
@@ -638,13 +707,8 @@ def ivf_topk(
         "item_id",
         cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank", "score"
     )
 
 
@@ -690,27 +754,23 @@ def filtered_ivf_topk(
     ride :func:`ann_with_recall_check` against the exact FILTERED
     brute-force top-k (emitted rows exact + per-query recall_ok).
     """
-    from .util import ensure_parallelism
-
     proj = items.select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
     )
     # index trains on the FULL corpus (shared across predicates); its
     # pass is single-consumer so it scans storage directly — no
     # checkpoint, which would block the item-stream pushdown below
-    C1 = _ivf_train(ensure_parallelism(proj), n_cells, seed_frame=proj)
+    home, probes = _ivf_route(
+        ensure_parallelism(proj), proj, n_cells, n_probe, vec_col
+    )
     kept = items.filter(predicate.cast("boolean")).select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
     )
-    it = (
-        ensure_parallelism(kept)
-        .withColumn("_cell", _assign_udf(C1, 1)(F.col("_ivec")))
-        .select("item_id", "_ivec", F.col("_cell")[0].alias("_cell"))
-    )
+    it = ensure_parallelism(kept).withColumn("_cell", home)
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        F.explode(_assign_udf(C1, n_probe)(F.col(vec_col))).alias("_cell"),
+        probes.alias("_cell"),
     )
     scored = (
         it.join(F.broadcast(q), "_cell")
@@ -723,13 +783,8 @@ def filtered_ivf_topk(
             ),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank", "score"
     )
 
 
@@ -810,21 +865,16 @@ def knn_join(
     per-left-row recall envelopes via :func:`ann_with_recall_check`
     (the left side plays the query role).
     """
-    from .util import ensure_parallelism
-
-    rp = right.select(
-        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
-    )
-    rbase = ensure_parallelism(rp).transform(lineage_checkpoint)
+    rp, rbase = _corpus_checkpoint(right, id_col, vec_col)
     if n_cells is None:
         # bounded-occupancy cells: the linear-volume production default
         n_cells = max(16, rbase.count() // target_occupancy)
-    C1 = _ivf_train(rbase, n_cells, seed_frame=rp)
-    rt = rbase.withColumn("_cell", _assign_udf(C1, 1)(F.col("_ivec"))[0])
+    home, probes = _ivf_route(rbase, rp, n_cells, n_probe, vec_col)
+    rt = rbase.withColumn("_cell", home)
     lt = left.select(
         F.col(id_col).alias("left_id"),
         F.col(vec_col).alias("_qvec"),
-        F.explode(_assign_udf(C1, n_probe)(F.col(vec_col))).alias("_cell"),
+        probes.alias("_cell"),
     )
 
     # Per-cell Arrow kernel instead of per-pair JVM cosine folds (the
@@ -951,15 +1001,11 @@ def knn_join(
         )
         .filter(~F.col("score").eqNullSafe(float("-inf")))
     )
-    w = Window.partitionBy("left_id").orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
+    merged = scored.groupBy("left_id", "item_id").agg(
+        F.max("score").alias("score")  # a pair can meet in 2 cells
     )
-    return (
-        scored.groupBy("left_id", "item_id")
-        .agg(F.max("score").alias("score"))  # a pair can meet in 2 cells
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("left_id", "item_id", "rank", "score")
+    return _top_k(merged, k, "left_id", "score").select(
+        "left_id", "item_id", "rank", "score"
     )
 
 
@@ -1143,12 +1189,7 @@ def pq_topk(
     the scan; here it scans all codes so the recall contract is purely
     about quantization error.
     """
-    from .util import ensure_parallelism
-
-    proj = items.select(
-        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
-    )
-    base = ensure_parallelism(proj).transform(lineage_checkpoint)
+    proj, base = _corpus_checkpoint(items, id_col, vec_col)
     dim = len(proj.select("_ivec").first()[0])
     if dim % m != 0:
         raise ValueError(
@@ -1178,13 +1219,8 @@ def pq_topk(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
+    return _top_k(scored, k, query_id_col, "score").select(
+        query_id_col, "item_id", "rank", "score"
     )
 
 
@@ -1217,26 +1253,7 @@ def pq_refine_topk(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
     )
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    # The shortlist (Q x shortlist rows) broadcasts against the corpus
-    # vectors — without the hint the stats-free frame drew a SortMergeJoin
-    # that SHUFFLED THE WHOLE CORPUS to re-rank 500 rows.
-    scored = (
-        vecs.join(F.broadcast(cand), "item_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            "item_id",
-            cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
-    )
+    return _exact_refine(vecs, cand, q, k, query_id_col, "_ivec")
 
 
 def sq_refine_topk(
@@ -1266,8 +1283,6 @@ def sq_refine_topk(
     corpus-sized). Per-coordinate quantization error is bounded by
     (max-min)/510, so SQ8 recall sits far above PQ's — the standard
     memory/recall middle tier at 4x (vs 32x) compression."""
-    from .util import ensure_parallelism
-
     proj = items.select(
         F.col(id_col).alias("item_id"),
         F.col(vec_col).cast("array<double>").alias("_ivec"),
@@ -1315,34 +1330,13 @@ def sq_refine_topk(
             ).alias("_adc"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_adc").desc(), F.col("item_id").asc()
-    )
-    cand = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= shortlist)
-        .select(query_id_col, "item_id")
+    cand = _top_k(scored, shortlist, query_id_col, "_adc", "_rk").select(
+        query_id_col, "item_id"
     )
     vecs = items.select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("_fvec")
     )
-    refined = (
-        vecs.join(F.broadcast(cand), "item_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            "item_id",
-            cosine_similarity(F.col("_fvec"), F.col("_qvec")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
-    )
+    return _exact_refine(vecs, cand, q, k, query_id_col, "_fvec")
 
 
 def matryoshka_refine_topk(
@@ -1373,8 +1367,6 @@ def matryoshka_refine_topk(
     stage-2 join moves shortlist x Q rows, never corpus-sized —
     the cheapest ANN tier to operate because there is nothing to
     retrain when the corpus drifts."""
-    from .util import ensure_parallelism
-
     pfx = lambda c: F.slice(c, 1, prefix_dim)  # noqa: E731
     q = queries.select(
         F.col(query_id_col),
@@ -1396,33 +1388,14 @@ def matryoshka_refine_topk(
             cosine_similarity(F.col("_ipfx"), F.col("_qpfx")).alias("_c"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_c").desc(), F.col("item_id").asc()
-    )
-    cand = (
-        coarse.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= shortlist)
-        .select(query_id_col, "item_id")
+    cand = _top_k(coarse, shortlist, query_id_col, "_c", "_rk").select(
+        query_id_col, "item_id"
     )
     vecs = items.select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("_fvec")
     )
-    refined = (
-        vecs.join(F.broadcast(cand), "item_id")
-        .join(F.broadcast(q.select(query_id_col, "_qvec")), query_id_col)
-        .select(
-            query_id_col,
-            "item_id",
-            cosine_similarity(F.col("_fvec"), F.col("_qvec")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
+    return _exact_refine(
+        vecs, cand, q.select(query_id_col, "_qvec"), k, query_id_col, "_fvec"
     )
 
 
@@ -1460,12 +1433,7 @@ def ivf_pq_topk(
     quantization recall (s5's dial); the s6 registry tier pins it
     against the exact oracle like s2/s3/s5.
     """
-    from .util import ensure_parallelism
-
-    proj = items.select(
-        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
-    )
-    base = ensure_parallelism(proj).transform(lineage_checkpoint)
+    proj, base = _corpus_checkpoint(items, id_col, vec_col)
     dim = len(proj.select("_ivec").first()[0])
     if dim % m != 0:
         raise ValueError(
@@ -1473,20 +1441,20 @@ def ivf_pq_topk(
             f"subspaces: dim={dim} is not divisible by m={m}."
         )
     sub = dim // m
-    C_ivf = _ivf_train(base, n_cells, seed_frame=proj)  # (cells, dim)
+    home, probes = _ivf_route(base, proj, n_cells, n_probe, vec_col)
     C_pq = _pq_train(base, m, ks, dim, seed_frame=proj)  # (m, ks, sub)
 
     # One encode pass: cell id + PQ codes side by side; original vectors
     # are NOT carried into the scan (that's the point).
     coded = base.select(
         "item_id",
-        _assign_udf(C_ivf, 1)(F.col("_ivec"))[0].alias("_cell"),
+        home.alias("_cell"),
         _pq_encode_udf(C_pq, m, sub)(F.col("_ivec")).alias("_codes"),
     )
     q = queries.select(
         F.col(query_id_col),
         _pq_lut_udf(C_pq, m, sub)(F.col(vec_col)).alias("_lut"),
-        F.explode(_assign_udf(C_ivf, n_probe)(F.col(vec_col))).alias("_cell"),
+        probes.alias("_cell"),
     )
     shortlisted = (
         coded.join(F.broadcast(q), "_cell")
@@ -1501,36 +1469,12 @@ def ivf_pq_topk(
             ).alias("_adc"),
         )
     )
-    ws = Window.partitionBy(query_id_col).orderBy(
-        F.col("_adc").desc(), F.col("item_id").asc()
+    cand = _top_k(shortlisted, shortlist, query_id_col, "_adc", "_r").select(
+        query_id_col, "item_id"
     )
-    cand = (
-        shortlisted.withColumn("_r", F.row_number().over(ws))
-        .filter(F.col("_r") <= shortlist)
-        .select(query_id_col, "item_id")
-    )
-    # exact refine on the shortlist only: the Q x shortlist candidate
-    # frame BROADCASTS against the corpus checkpoint (without the hint
-    # the stats-free frames drew a SortMergeJoin that shuffled the
-    # whole corpus to re-rank 500 rows).
+    # exact refine on the shortlist only, against the corpus checkpoint
     qv = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-    scored = (
-        base.join(F.broadcast(cand), "item_id")
-        .join(F.broadcast(qv), query_id_col)
-        .select(
-            query_id_col,
-            "item_id",
-            cosine_similarity(F.col("_ivec"), F.col("_qvec")).alias("score"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank", "score")
-    )
+    return _exact_refine(base, cand, qv, k, query_id_col, "_ivec")
 
 
 def embedding_second_moment(
@@ -1569,8 +1513,6 @@ def gram_partials(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     n_vectors) rows with i <= j. Pure integer and associative, so any
     regrouping — another hash-agg, or a streaming foreachBatch fold —
     merges partials into the exact corpus statistic."""
-    from .util import ensure_parallelism
-
     src = ensure_parallelism(df.select(F.col(vec_col).alias("_v")))
 
     def kernel(batches):
@@ -1700,8 +1642,8 @@ def _argmin_struct_key(centroids: list) -> Column:
     dist_q with an IEEE double division). Arbitrary k; both fields
     stay int64/int end-to-end. The k x dim centroid matrix folds into
     the plan as array literals — plan size grows O(k * dim), which is
-    the practical bound on this path (use the arrow assigner beyond
-    a few hundred cells)."""
+    the practical bound on this path; beyond ``_LITERAL_ASSIGN_MAX_K``
+    cells :func:`_assign_frame` takes the Arrow kernel instead."""
     return F.array_min(_dist_struct_array(centroids))
 
 
@@ -1739,22 +1681,29 @@ def _assign_exact_udf(centroids: list):
     can reach the SemDeDup paper's k ~ sqrt(N) (thousands of cells)
     without exploding codegen. All arithmetic is int64 end-to-end
     (|v|^2 - 2 v.c + |c|^2 with an integer matmul) — no float fold,
-    no 2^53 caveat. Returns struct<cluster:int, dist_q:long>."""
+    no 2^53 caveat. Returns struct<cluster:int, dist_q:long,
+    dist2_q:long>: ``dist2_q`` is the min distance to any OTHER
+    centroid, the simplified-silhouette input of
+    :func:`kmeans_silhouette` (int64 max when k = 1)."""
     C = np.asarray(centroids, dtype=np.int64)  # (k, dim)
     c2 = np.einsum("ij,ij->i", C, C)  # (k,) int64
 
-    @F.pandas_udf("struct<cluster:int, dist_q:bigint>")
+    @F.pandas_udf("struct<cluster:int, dist_q:bigint, dist2_q:bigint>")
     def udf(qv: pd.Series) -> pd.DataFrame:
         if len(qv) == 0:
-            return pd.DataFrame({"cluster": [], "dist_q": []})
+            return pd.DataFrame({"cluster": [], "dist_q": [], "dist2_q": []})
         V = np.stack(qv.to_numpy()).astype(np.int64)  # (rows, dim)
         v2 = np.einsum("ij,ij->i", V, V)  # (rows,) int64
         d = v2[:, None] - 2 * (V @ C.T) + c2[None, :]  # (rows, k) int64
+        rows = np.arange(len(v2))
         cid = np.argmin(d, axis=1)  # first occurrence = lowest cid
+        a = d[rows, cid].copy()
+        d[rows, cid] = np.iinfo(np.int64).max
         return pd.DataFrame(
             {
                 "cluster": cid.astype(np.int32),
-                "dist_q": d[np.arange(len(cid)), cid],
+                "dist_q": a,
+                "dist2_q": d.min(axis=1),
             }
         )
 
@@ -1772,7 +1721,6 @@ def kmeans_lloyd(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    assigner: str = "auto",
 ) -> DataFrame:
     """Distributed Lloyd k-means with EXACT integer semantics — the
     oracle-checkable clustering tier next to the float codebook
@@ -1793,15 +1741,15 @@ def kmeans_lloyd(
       whole trajectory is replayable bit for bit (empty clusters keep
       their previous centroid).
 
-    ``assigner`` picks the physical argmin: ``"literal"`` folds the
-    k x dim centroid matrix into the plan as array literals (pure
-    codegen, no Python — best for small k, plan grows O(k * dim));
-    ``"arrow"`` ships the matrix in a pandas-UDF closure
-    (:func:`_assign_exact_udf` — one Arrow pass per round, cost flat
-    in k up to thousands of cells, the SemDeDup paper's k ~ sqrt(N)
-    regime); ``"auto"`` = literal for k <= 32, else arrow. Both paths
-    are exact-integer and interchangeable — the d27 oracle pins the
-    arrow path to the same DuckDB trajectory as the literal tier.
+    ``k`` picks the physical argmin (:func:`_assign_frame`): up to
+    ``_LITERAL_ASSIGN_MAX_K`` = 32 the k x dim centroid matrix folds
+    into the plan as array literals (pure codegen, no Python — plan
+    grows O(k * dim)); beyond it the matrix ships in a pandas-UDF
+    closure (:func:`_assign_exact_udf` — one Arrow pass per round, cost
+    flat in k up to thousands of cells, the SemDeDup paper's k ~
+    sqrt(N) regime). Both paths are exact-integer and interchangeable —
+    the d27 oracle pins the Arrow path to the same DuckDB trajectory as
+    the literal tier.
 
     Scale shape: per round, ONE distributed job — a map-only argmin
     against the k broadcast centroids (no join, no shuffle for
@@ -1821,22 +1769,19 @@ def kmeans_lloyd(
     centroids: (id_col, cluster, dist_q) — ``dist_q`` the exact
     integer squared distance in quanta^2.
     """
-    q, centroids, use_arrow = _lloyd_fit(
-        df, k, n_rounds, scale, id_col, vec_col, dim, assigner
-    )
-    return _assign_frame(q, centroids, use_arrow, id_col).select(
+    q, centroids = _lloyd_fit(df, k, n_rounds, scale, id_col, vec_col, dim)
+    return _assign_frame(q, centroids, id_col).select(
         F.col(id_col).cast("bigint").alias(id_col),
         "cluster",
         "dist_q",
     )
 
 
-def _assign_frame(
-    frame: DataFrame, centroids: list, use_arrow: bool, id_col: str
-) -> DataFrame:
+def _assign_frame(frame: DataFrame, centroids: list, id_col: str) -> DataFrame:
     """One exact-integer argmin pass (the shared Lloyd assignment step):
-    literal struct argmin or the Arrow closure, same bits either way."""
-    if use_arrow:
+    the literal struct argmin up to ``_LITERAL_ASSIGN_MAX_K`` centroids,
+    the Arrow closure beyond — same bits either way."""
+    if len(centroids) > _LITERAL_ASSIGN_MAX_K:
         key = _assign_exact_udf(centroids)(F.col("_qv"))
         return frame.withColumn("_key", key).select(
             id_col,
@@ -1861,15 +1806,11 @@ def _lloyd_fit(
     id_col: str,
     vec_col: str,
     dim: int,
-    assigner: str,
-) -> tuple[DataFrame, list, bool]:
+) -> tuple[DataFrame, list]:
     """The Lloyd training loop shared by :func:`kmeans_lloyd` and
     :func:`kmeans_silhouette`: returns (quantized frame, final integer
-    centroids, use_arrow). Trajectory identical to the historical
-    inline loop bit for bit (the d25/s9 oracles pin it)."""
-    use_arrow = assigner == "arrow" or (
-        assigner == "auto" and k > _LITERAL_ASSIGN_MAX_K
-    )
+    centroids). Trajectory identical to the historical inline loop bit
+    for bit (the d25/s9 oracles pin it)."""
     q = df.select(
         F.col(id_col), _quantize_expr(vec_col, scale).alias("_qv")
     ).transform(lineage_checkpoint)
@@ -1881,7 +1822,7 @@ def _lloyd_fit(
 
     for _ in range(n_rounds):
         sums = (
-            _assign_frame(q, centroids, use_arrow, id_col)
+            _assign_frame(q, centroids, id_col)
             .groupBy("cluster")
             .agg(
                 F.count(F.lit(1)).alias("_n"),
@@ -1904,34 +1845,7 @@ def _lloyd_fit(
         # this floor-div is the same one the oracle replays engine-side.
         centroids = [new.get(c, centroids[c]) for c in range(k)]
 
-    return q, centroids, use_arrow
-
-
-def _assign2_exact_udf(centroids: list):
-    """Arrow variant of the two-distance assignment: (cluster, dist to
-    own centroid, min dist to any OTHER centroid) — the simplified-
-    silhouette inputs, same int64 grid and first-occurrence tiebreak as
-    :func:`_assign_exact_udf`."""
-    C = np.asarray(centroids, dtype=np.int64)  # (k, dim)
-    c2 = np.einsum("ij,ij->i", C, C)  # (k,) int64
-
-    @F.pandas_udf("struct<cluster:int, dist_q:bigint, dist2_q:bigint>")
-    def udf(qv: pd.Series) -> pd.DataFrame:
-        if len(qv) == 0:
-            return pd.DataFrame({"cluster": [], "dist_q": [], "dist2_q": []})
-        V = np.stack(qv.to_numpy()).astype(np.int64)  # (rows, dim)
-        v2 = np.einsum("ij,ij->i", V, V)  # (rows,) int64
-        d = v2[:, None] - 2 * (V @ C.T) + c2[None, :]  # (rows, k) int64
-        rows = np.arange(len(v2))
-        cid = np.argmin(d, axis=1)  # first occurrence = lowest cid
-        a = d[rows, cid].copy()
-        d[rows, cid] = np.iinfo(np.int64).max
-        b = d.min(axis=1)
-        return pd.DataFrame(
-            {"cluster": cid.astype(np.int32), "dist_q": a, "dist2_q": b}
-        )
-
-    return udf
+    return q, centroids
 
 
 def kmeans_silhouette(
@@ -1942,7 +1856,6 @@ def kmeans_silhouette(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    assigner: str = "auto",
 ) -> DataFrame:
     """Per-cluster SIMPLIFIED silhouette over the exact-integer Lloyd
     clustering (:func:`kmeans_lloyd` via the shared :func:`_lloyd_fit`
@@ -1969,11 +1882,9 @@ def kmeans_silhouette(
     """
     if k < 2:
         raise ValueError("silhouette needs k >= 2 (no 'other' centroid at k=1)")
-    q, centroids, use_arrow = _lloyd_fit(
-        df, k, n_rounds, scale, id_col, vec_col, dim, assigner
-    )
-    if use_arrow:
-        key = _assign2_exact_udf(centroids)(F.col("_qv"))
+    q, centroids = _lloyd_fit(df, k, n_rounds, scale, id_col, vec_col, dim)
+    if len(centroids) > _LITERAL_ASSIGN_MAX_K:
+        key = _assign_exact_udf(centroids)(F.col("_qv"))
         two = q.withColumn("_key", key).select(
             F.col("_key.cluster").alias("cluster"),
             F.col("_key.dist_q").alias("_a"),
@@ -2009,7 +1920,6 @@ def assign_to_centroids(
     scale: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigner: str = "auto",
 ) -> DataFrame:
     """Exact-integer argmin assignment of every vector to the nearest
     INTEGER-QUANTIZED centroid — the :func:`kmeans_lloyd` assignment
@@ -2019,31 +1929,16 @@ def assign_to_centroids(
     operators.dedup.semdedup_from_assignment). Same exact semantics as
     kmeans_lloyd's final assignment: vectors are milli-quantized
     ``floor(x * scale)``, squared-Euclidean distances are exact int64,
-    and the argmin tiebreak is lexicographic ``(dist, cid)``.
-    ``assigner``: ``"literal"`` folds centroids into the plan as array
-    literals (map-only codegen, plan grows O(k * dim)); ``"arrow"``
-    ships them in a pandas-UDF closure (:func:`_assign_exact_udf`, k
-    up to thousands — the SemDeDup k ~ sqrt(N) path); ``"auto"`` =
-    literal for k <= 32, else arrow. No join, no shuffle either way.
+    and the argmin tiebreak is lexicographic ``(dist, cid)``. The
+    number of centroids picks the physical argmin as in
+    :func:`kmeans_lloyd` (literal up to ``_LITERAL_ASSIGN_MAX_K``,
+    Arrow beyond). No join, no shuffle either way.
     Returns (id, cluster, dist_q)."""
-    use_arrow = assigner == "arrow" or (
-        assigner == "auto" and len(centroids) > _LITERAL_ASSIGN_MAX_K
-    )
     q = df.select(
         F.col(id_col), _quantize_expr(vec_col, scale).alias("_qv")
     )
-    if use_arrow:
-        key = _assign_exact_udf(centroids)(F.col("_qv"))
-        return q.withColumn("_key", key).select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col("_key.cluster").alias("cluster"),
-            F.col("_key.dist_q").alias("dist_q"),
-        )
-    key = _argmin_struct_key(centroids)
-    return q.withColumn("_key", key).select(
-        F.col(id_col).cast("bigint").alias(id_col),
-        F.col("_key.c").alias("cluster"),
-        F.col("_key.d").alias("dist_q"),
+    return _assign_frame(q, centroids, id_col).select(
+        F.col(id_col).cast("bigint").alias(id_col), "cluster", "dist_q"
     )
 
 
@@ -2661,20 +2556,11 @@ def graph_ann_topk(
             )
         )
 
-    def _beam_cut(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("score").desc(), F.col("item_id").asc()
-        )
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= beam)
-            .drop("_r")
-        )
-
     scored = _score(starts).transform(lineage_checkpoint)
     for _ in range(n_hops):
         cand = (
-            _beam_cut(scored)
+            _top_k(scored, beam, query_id_col, "score", "_r")
+            .drop("_r")
             .select(query_id_col, F.col("item_id").alias("node"))
             .join(edges, "node")
             .select(query_id_col, F.col("nbr").alias("item_id"))
@@ -2687,15 +2573,12 @@ def graph_ann_topk(
         )
         scored = scored.unionAll(_score(cand)).transform(lineage_checkpoint)
 
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.filter(F.col("item_id") != F.col(query_id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "rank")
-    )
+    return _top_k(
+        scored.filter(F.col("item_id") != F.col(query_id_col)),
+        k,
+        query_id_col,
+        "score",
+    ).select(query_id_col, "item_id", "rank")
 
 
 def _power_iteration_direction(
@@ -2887,8 +2770,6 @@ def late_interaction_topk(
 
     Returns (query_id_col, item_id, maxsim_q, rank).
     """
-    from .util import ensure_parallelism
-
     sub = dim // n_sub
     slices = F.transform(
         F.sequence(F.lit(0), F.lit(n_sub - 1)),
@@ -2922,13 +2803,8 @@ def late_interaction_topk(
         .groupBy(query_id_col, "item_id")
         .agg(F.sum("_maxdot").cast("bigint").alias("maxsim_q"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("maxsim_q").desc(), F.col("item_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "item_id", "maxsim_q", "rank")
+    return _top_k(scored, k, query_id_col, "maxsim_q").select(
+        query_id_col, "item_id", "maxsim_q", "rank"
     )
 
 
@@ -3206,12 +3082,7 @@ def graph_ann_routed_topk(
     are engine-specific; production surfaces ride
     :func:`ann_with_recall_check`.
     """
-    from .util import ensure_parallelism
-
-    proj = items.select(
-        F.col(id_col).alias("item_id"), F.col(vec_col).alias("_ivec")
-    )
-    base = ensure_parallelism(proj).transform(lineage_checkpoint)
+    proj, base = _corpus_checkpoint(items, id_col, vec_col)
     n = base.count()
     # layout-skew guard (r17, see nn_descent_knn_graph): the corpus
     # assign + Lloyd kernels below are per-partition Arrow compute —
@@ -3219,21 +3090,16 @@ def graph_ann_routed_topk(
     base = rebalance_if_skewed(base)
     if n_cells is None:
         n_cells = max(16, n // 64)
-    C1 = _ivf_train(base, n_cells, seed_frame=proj)
+    home, probes = _ivf_route(base, proj, n_cells, n_probe, vec_col)
 
-    it_cells = base.withColumn(
-        "_cell", _assign_udf(C1, 1)(F.col("_ivec"))[0]
-    )
+    it_cells = base.withColumn("_cell", home)
     w_cell = Window.partitionBy("_cell").orderBy(F.col("item_id").asc())
     entry_lists = (
         it_cells.withColumn("_r", F.row_number().over(w_cell))
         .filter(F.col("_r") <= per_cell)
         .select("_cell", "item_id")
     )
-    q_cells = queries.select(
-        F.col(query_id_col),
-        F.explode(_assign_udf(C1, n_probe)(F.col(vec_col))).alias("_cell"),
-    )
+    q_cells = queries.select(F.col(query_id_col), probes.alias("_cell"))
     entry_pairs = (
         entry_lists.join(F.broadcast(q_cells), "_cell")
         .select(query_id_col, "item_id")

@@ -38,6 +38,15 @@ from ..operators.text import (
 from .queries_relational import _t
 
 
+def _probe_queries(emb: DataFrame) -> DataFrame:
+    """The ANN tier's probe set: the corpus vectors with ``vec_id < 5``
+    as (query_id, embedding) — the query side the s-family oracles
+    replay."""
+    return emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
 def d1_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: keeper id + copy count per distinct text. The shuffle
     carries (64-bit hash, id), never the document body."""
@@ -114,9 +123,7 @@ def s1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, JVM-side dot products, window top-k. Rank-only output (ids),
     engine-neutral."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     return cosine_topk(emb, queries, k=10)
 
 
@@ -129,9 +136,7 @@ def s2_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_with_recall_check
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     ann = lsh_cosine_topk(
         emb, queries, k=10, dim=64, n_planes=6, n_tables=8
     )
@@ -429,9 +434,7 @@ def s3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.util import lineage_checkpoint_eager, overlap
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     exact, ann = overlap(
         lambda: cosine_topk(emb, qs, 10).transform(lineage_checkpoint_eager),
         lambda: ivf_topk(emb, qs, k=10, n_cells=16, n_probe=4),
@@ -451,9 +454,7 @@ def s5_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_with_recall_check, pq_refine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     ann = pq_refine_topk(emb, qs, k=10, shortlist=100, m=8, ks=16)
     return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.6)
 
@@ -473,9 +474,7 @@ def s6_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_with_recall_check, ivf_pq_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     ann = ivf_pq_topk(
         emb, qs, k=10, n_cells=16, n_probe=4, m=8, ks=16, shortlist=100
     )
@@ -2415,9 +2414,7 @@ def s8_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_with_recall_check, sq_refine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     ann = sq_refine_topk(emb, qs, k=10, shortlist=100)
     return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.7)
 
@@ -2845,9 +2842,7 @@ def s11_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     ann = matryoshka_refine_topk(emb, qs, k=10, prefix_dim=32, shortlist=200)
     return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.5)
 
@@ -2882,9 +2877,7 @@ def st14_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import streaming_topk_maintenance
 
     emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    qs = _probe_queries(emb)
     return streaming_topk_maintenance(spark, emb, qs, k=10)
 
 
@@ -2952,24 +2945,23 @@ def d26_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def d27_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup at the paper's blocking scale — k=64 cells via the
-    Arrow exact-integer assigner (operators.similarity.
-    _assign_exact_udf), the path that stays flat in k up to the
+    """SemDeDup at the paper's blocking scale — k=64 cells, beyond
+    ``_LITERAL_ASSIGN_MAX_K``, so every Lloyd round runs the Arrow
+    exact-integer argmin (operators.similarity._assign_exact_udf),
+    the path that stays flat in k up to the
     k ~ sqrt(N) thousands a 100 TB corpus needs (the old
     broadcast-literal tier packed cid into dist*16 and capped k at
     16, making the pair tier quadratic-per-cluster at scale —
     SCALING.md r11 measured 29x for 10x data at fixed k=8). Same
     bit-exact algebra as d25 (int64 distances, (dist, cid) tiebreak,
     floor-div centroid updates), so the oracle replays the identical
-    64-cell 3-round trajectory in DuckDB — the production assigner is
+    64-cell 3-round trajectory in DuckDB — the production argmin is
     oracle-pinned, not just envelope-checked. Pair work drops by
     ~k/16: blocking cost sum n_c^2 with n_c ~ N/64."""
     from ..operators.dedup import semdedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    return semdedup(
-        emb, k=64, n_rounds=3, tau=0.35, scale=1000, assigner="arrow"
-    )
+    return semdedup(emb, k=64, n_rounds=3, tau=0.35, scale=1000)
 
 
 def d28_blocked_neardup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3301,9 +3293,7 @@ def s15_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import late_interaction_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     return late_interaction_topk(emb, queries, k=10)
 
 
@@ -3352,9 +3342,7 @@ def s16_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
     ann = graph_ann_topk(emb, queries, graph, k=10, beam=16, n_hops=3)
     return ann_with_recall_check(emb, queries, ann, k=10, min_recall=0.5)
@@ -3376,9 +3364,7 @@ def s17_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     pred = F.col("label") % 3 == 0
     ann = filtered_ivf_topk(
         emb, queries, pred, k=10, n_cells=16, n_probe=6
@@ -3469,9 +3455,7 @@ def x18_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import hard_negative_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     return hard_negative_topk(emb, queries, k=5, lo_num=3, hi_num=15)
 
 
@@ -3599,9 +3583,7 @@ def s19_routed_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _probe_queries(emb)
     graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
     ann = graph_ann_routed_topk(emb, queries, graph, k=10)
     return ann_with_recall_check(emb, queries, ann, k=10, min_recall=0.5)

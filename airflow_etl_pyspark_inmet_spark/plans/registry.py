@@ -5114,11 +5114,12 @@ WHERE (SELECT CASE WHEN count(*) BETWEEN 484 AND 528 THEN TRUE
 """
 QUERIES["c10_dedup_ensemble"] = L.c10_dedup_ensemble
 
-# d27 — SemDeDup at the paper's blocking scale: k=64 cells through the
-# Arrow exact-integer assigner (the production k ~ sqrt(N) path, which
-# the old dist*16+cid packing capped at 16 cells). The oracle replays
-# the identical 64-cell 3-round trajectory (pack factor 64) — the
-# large-k assigner is pinned bit for bit, not just envelope-checked.
+# d27 — SemDeDup at the paper's blocking scale: k=64 cells, which the
+# k > _LITERAL_ASSIGN_MAX_K rule routes through the Arrow exact-integer
+# argmin (the production k ~ sqrt(N) path, which the old dist*16+cid
+# packing capped at 16 cells). The oracle replays the identical 64-cell
+# 3-round trajectory (pack factor 64) — the large-k argmin is pinned bit
+# for bit, not just envelope-checked.
 ORACLES["d27_semdedup_scaled"] = _d25_semdedup_sql(64, 3, 64, 1000, 0.35)
 QUERIES["d27_semdedup_scaled"] = L.d27_semdedup_scaled
 

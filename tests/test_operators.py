@@ -3703,26 +3703,40 @@ def test_assign_to_centroids_argmin_and_tiebreak(spark):
     }
 
 
-def test_assign_udf_argpartition_matches_full_sort():
+def test_assign_udf_argpartition_matches_full_sort(spark):
     """r17: the serving assigner's argpartition + n-survivor sort must
-    pick exactly the top-n cells the old full row argsort picked, in
-    the same order, on distinct-score data (the only regime the old
-    unstable sort was deterministic in). Pure-numpy replica of the UDF
-    body — no Spark session needed."""
+    pick exactly the top-n cells a full row argsort of the cosine
+    scores picks, in the same order, on distinct-score data (the only
+    regime an unstable sort is deterministic in). Runs the real
+    ``_assign_udf`` on a Spark frame."""
     import numpy as np
 
+    from airflow_etl_pyspark_inmet_spark.operators.similarity import (
+        _assign_udf,
+    )
+
     rng = np.random.default_rng(7)
+    dim = 6
     for rows, cells, n in [(40, 16, 1), (40, 16, 3), (8, 200, 5), (5, 4, 4)]:
-        sims = rng.standard_normal((rows, cells))
-        ref = np.argsort(-sims, axis=1)[:, :n]
-        if n >= sims.shape[1]:
-            got = np.argsort(-sims, axis=1)
-        else:
-            part = np.argpartition(-sims, n - 1, axis=1)[:, :n]
-            r = np.arange(sims.shape[0])[:, None]
-            order = np.argsort(-sims[r, part], axis=1)
-            got = part[r, order]
-        assert (got[:, :n] == ref).all(), (rows, cells, n)
+        V = rng.standard_normal((rows, dim))
+        C = rng.standard_normal((cells, dim))
+        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        ref = np.argsort(-(Vn @ Cn.T), axis=1)[:, :n]
+        df = spark.createDataFrame(
+            [(i, V[i].tolist()) for i in range(rows)], "i int, v array<double>"
+        )
+        got = np.array(
+            [
+                r["cells"]
+                for r in df.select(
+                    "i", _assign_udf(C, n)(F.col("v")).alias("cells")
+                )
+                .orderBy("i")
+                .collect()
+            ]
+        )
+        assert got.shape == ref.shape and (got == ref).all(), (rows, cells, n)
 
 
 def test_char_entropy_hand_cases(spark):
@@ -3750,13 +3764,22 @@ def test_char_entropy_hand_cases(spark):
     assert got[3]["entropy_nats"] == (4 * nl4) / (4 * 1e6)
 
 
-def test_assign_literal_arrow_equivalence_k64(spark):
+def _arrow_eval_nodes(df) -> int:
+    """ArrowEvalPython nodes in ``df``'s physical plan."""
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "ArrowEvalPython"
+    )
+
+
+def test_assign_literal_arrow_equivalence_k64(spark, monkeypatch):
     """The broadcast-literal struct argmin and the Arrow int64 argmin
     are the SAME function bit for bit — same quantization grid, same
     exact squared distances, same (dist, cid) lexicographic tiebreak —
-    at a k far beyond the old 16-cell packing cap."""
+    at a k far beyond the old 16-cell packing cap. Each path is forced
+    through the ``_LITERAL_ASSIGN_MAX_K`` threshold."""
     import random
 
+    from airflow_etl_pyspark_inmet_spark.operators import similarity
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
         assign_to_centroids,
     )
@@ -3773,29 +3796,25 @@ def test_assign_literal_arrow_equivalence_k64(spark):
         (i, [rng.uniform(-5.0, 5.0) for _ in range(dim)]) for i in range(200)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit = {
-        r["vec_id"]: (r["cluster"], r["dist_q"])
-        for r in assign_to_centroids(
-            df, centroids, scale=1000, assigner="literal"
-        ).collect()
-    }
-    arr = {
-        r["vec_id"]: (r["cluster"], r["dist_q"])
-        for r in assign_to_centroids(
-            df, centroids, scale=1000, assigner="arrow"
-        ).collect()
-    }
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 10**9)
+    lit_df = assign_to_centroids(df, centroids, scale=1000)
+    lit = {r["vec_id"]: (r["cluster"], r["dist_q"]) for r in lit_df.collect()}
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 0)
+    arr_df = assign_to_centroids(df, centroids, scale=1000)
+    arr = {r["vec_id"]: (r["cluster"], r["dist_q"]) for r in arr_df.collect()}
+    assert _arrow_eval_nodes(lit_df) == 0 and _arrow_eval_nodes(arr_df) == 1
     assert lit == arr and len(lit) == 200
     # ties on duplicated centroids resolved toward the lower cid
     assert all(c not in (40, 63) for c, _ in arr.values())
 
 
-def test_kmeans_lloyd_arrow_matches_literal(spark):
+def test_kmeans_lloyd_arrow_matches_literal(spark, monkeypatch):
     """Full Lloyd trajectory equality across assigners: seeds, per-round
     integer centroid updates, and the final assignment agree exactly,
     so the arrow path inherits the literal tier's DuckDB oracle."""
     import random
 
+    from airflow_etl_pyspark_inmet_spark.operators import similarity
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
         kmeans_lloyd,
     )
@@ -3805,16 +3824,18 @@ def test_kmeans_lloyd_arrow_matches_literal(spark):
         (i, [rng.uniform(-2.0, 2.0) for _ in range(6)]) for i in range(120)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 10**9)
     lit = {
         r["vec_id"]: (r["cluster"], r["dist_q"])
         for r in kmeans_lloyd(
-            df, k=10, n_rounds=2, scale=1000, dim=6, assigner="literal"
+            df, k=10, n_rounds=2, scale=1000, dim=6
         ).collect()
     }
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 0)
     arr = {
         r["vec_id"]: (r["cluster"], r["dist_q"])
         for r in kmeans_lloyd(
-            df, k=10, n_rounds=2, scale=1000, dim=6, assigner="arrow"
+            df, k=10, n_rounds=2, scale=1000, dim=6
         ).collect()
     }
     assert lit == arr and len(lit) == 120
@@ -4145,6 +4166,33 @@ def test_corpus_recall_check_catches_broken_blocking(spark):
         sorted((r["query_id"], r["item_id"], r["rank"]) for r in exact.collect())
 
 
+def test_recall_check_rejects_mismatched_exact(spark):
+    """An injected ``exact`` frame must be the k-row exact top-k: one
+    built with k+5 fails the action, one without ``rank`` fails at
+    construction, and the true exact frame passes untouched."""
+    import random
+
+    from airflow_etl_pyspark_inmet_spark.operators.similarity import (
+        ann_with_recall_check,
+    )
+
+    rng = random.Random(23)
+    rows = [(i, [rng.uniform(-3, 3) for _ in range(6)]) for i in range(30)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    k = 5
+    ann = cosine_topk(df, queries, k)
+    ok = ann_with_recall_check(df, queries, ann, k, exact=ann).collect()
+    assert len(ok) == 3 * k and all(r["recall_ok"] for r in ok)
+    wide = cosine_topk(df, queries, k + 5)
+    with pytest.raises(Exception, match="ranks beyond k=5"):
+        ann_with_recall_check(df, queries, ann, k, exact=wide).collect()
+    with pytest.raises(ValueError, match="rank"):
+        ann_with_recall_check(df, queries, ann, k, exact=ann.drop("rank"))
+
+
 def test_hard_negative_band_in_and_out(spark):
     """Band classification on planted geometry: a near-duplicate
     (cos ~1) is EXCLUDED above the ceiling, an in-band vector
@@ -4282,11 +4330,12 @@ def test_winnow_short_doc_empty(spark):
 # --- simplified silhouette (s13) ---------------------------------------------
 
 
-def test_silhouette_separated_vs_merged(spark):
+def test_silhouette_separated_vs_merged(spark, monkeypatch):
     """Two tight, well-separated blobs -> per-point scores near 1000;
     literal and arrow assigners agree bit for bit; k=1 rejected."""
     import pytest as _pytest
 
+    from airflow_etl_pyspark_inmet_spark.operators import similarity
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
         kmeans_silhouette,
     )
@@ -4295,12 +4344,10 @@ def test_silhouette_separated_vs_merged(spark):
         (10 + i, [100.0 + 0.001 * i] * 4) for i in range(4)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit = kmeans_silhouette(
-        df, k=2, n_rounds=3, scale=1000, dim=4, assigner="literal"
-    ).collect()
-    arw = kmeans_silhouette(
-        df, k=2, n_rounds=3, scale=1000, dim=4, assigner="arrow"
-    ).collect()
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 10**9)
+    lit = kmeans_silhouette(df, k=2, n_rounds=3, scale=1000, dim=4).collect()
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 0)
+    arw = kmeans_silhouette(df, k=2, n_rounds=3, scale=1000, dim=4).collect()
     key = lambda r: (r["cluster"], r["n_points"], r["sum_sil_milli"], r["mean_sil_milli"])
     assert sorted(map(key, lit)) == sorted(map(key, arw))
     by_c = {r["cluster"]: r for r in lit}
@@ -4638,12 +4685,13 @@ def test_bm25_length_normalization(spark):
     assert out[1] > out[2] > 0
 
 
-def test_silhouette_literal_arrow_parity_k8(spark):
+def test_silhouette_literal_arrow_parity_k8(spark, monkeypatch):
     """Literal struct-sort and the Arrow two-distance argmin agree bit
     for bit at a non-trivial k on irregular data (the d27 parity
     contract extended to the silhouette's second distance)."""
     import random
 
+    from airflow_etl_pyspark_inmet_spark.operators import similarity
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
         kmeans_silhouette,
     )
@@ -4654,13 +4702,38 @@ def test_silhouette_literal_arrow_parity_k8(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     key = lambda r: (r["cluster"], r["n_points"], r["sum_sil_milli"], r["mean_sil_milli"])
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 10**9)
     lit = sorted(
-        map(key, kmeans_silhouette(df, k=8, n_rounds=3, dim=8, assigner="literal").collect())
+        map(key, kmeans_silhouette(df, k=8, n_rounds=3, dim=8).collect())
     )
+    monkeypatch.setattr(similarity, "_LITERAL_ASSIGN_MAX_K", 0)
     arw = sorted(
-        map(key, kmeans_silhouette(df, k=8, n_rounds=3, dim=8, assigner="arrow").collect())
+        map(key, kmeans_silhouette(df, k=8, n_rounds=3, dim=8).collect())
     )
     assert lit == arw
+
+
+def test_semdedup_k_picks_the_assignment_path(spark, monkeypatch):
+    """d27 runs SemDeDup at k=64, beyond ``_LITERAL_ASSIGN_MAX_K``, so
+    its Lloyd argmin plans an Arrow Python eval node; at k=8 the
+    literal struct argmin plans none. The assignment frame sits behind
+    a lineage checkpoint, so the audit segments are inspected too."""
+    import random
+
+    from airflow_etl_pyspark_inmet_spark.operators import util
+    from airflow_etl_pyspark_inmet_spark.operators.dedup import semdedup
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(80)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def arrow_nodes(k: int) -> int:
+        monkeypatch.setattr(util, "AUDIT_SEGMENTS", [])
+        out = semdedup(df, k=k, n_rounds=1)
+        return sum(map(_arrow_eval_nodes, [out, *util.AUDIT_SEGMENTS]))
+
+    assert arrow_nodes(64) > 0
+    assert arrow_nodes(8) == 0
 
 
 # --- rendezvous sharding (x17) --------------------------------------------------

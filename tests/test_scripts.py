@@ -1,7 +1,8 @@
 """Tooling checks that need no Spark session: every module the scripts
 import must exist, so a script left pointing at a deleted module fails
-here instead of on its next manual run; and the package checkpoints
-lineage only through ``operators.util.lineage_checkpoint``."""
+here instead of on its next manual run; the package checkpoints
+lineage only through ``operators.util.lineage_checkpoint``; and the ANN
+tier ranks and routes in one place each, with no ``assigner`` option."""
 
 from __future__ import annotations
 
@@ -78,3 +79,72 @@ def test_bare_checkpoint_scan_flags_other_modules(tmp_path):
     )
     (tmp_path / "op.py").write_text("x = df.localCheckpoint(eager=True)\n")
     assert bare_checkpoints(tmp_path) == ["op.py:1"]
+
+
+SIMILARITY = PACKAGE / "operators" / "similarity.py"
+
+
+def stray_calls(
+    path: Path, func: str, owner: str, args: list[str] | None = None
+) -> list[int]:
+    """Lines of ``path`` that call ``func`` (with exactly ``args``, as
+    source text, when given) outside the top-level function ``owner``."""
+    tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+    owned = {
+        id(n)
+        for top in tree.body
+        if isinstance(top, ast.FunctionDef) and top.name == owner
+        for n in ast.walk(top)
+    }
+    return sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and id(n) not in owned
+        and ast.unparse(n.func) == func
+        and (args is None or [ast.unparse(a) for a in n.args] == args)
+    )
+
+
+def assigner_params(package: Path) -> list[str]:
+    """``path:line`` of every function in ``package`` that takes an
+    ``assigner`` parameter: the argmin path is chosen from k alone."""
+    return [
+        f"{path.relative_to(package)}:{node.lineno}"
+        for path in sorted(package.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+        and "assigner"
+        in [a.arg for a in node.args.args + node.args.kwonlyargs]
+    ]
+
+
+def test_ann_tier_ranks_and_routes_in_one_place():
+    query_windows = stray_calls(
+        SIMILARITY, "Window.partitionBy", "_top_k", ["query_id_col"]
+    )
+    assert query_windows == [], "rank through similarity._top_k"
+    assert stray_calls(SIMILARITY, "_assign_udf", "_ivf_route") == [], (
+        "route through similarity._ivf_route"
+    )
+
+
+def test_no_function_takes_an_assigner():
+    assert assigner_params(PACKAGE) == []
+
+
+def test_ann_scans_flag_copies(tmp_path):
+    (tmp_path / "sim.py").write_text(
+        "def _top_k(df, query_id_col):\n"
+        "    return Window.partitionBy(query_id_col)\n"
+        "def _ivf_route(C):\n"
+        "    return _assign_udf(C, 1)\n"
+        "def other(query_id_col, C, assigner='auto'):\n"
+        "    w = Window.partitionBy(query_id_col)\n"
+        "    v = Window.partitionBy('node')\n"
+        "    return _assign_udf(C, 2)(w)\n"
+    )
+    sim = tmp_path / "sim.py"
+    assert stray_calls(sim, "Window.partitionBy", "_top_k", ["query_id_col"]) == [6]
+    assert stray_calls(sim, "_assign_udf", "_ivf_route") == [8]
+    assert assigner_params(tmp_path) == ["sim.py:5"]
