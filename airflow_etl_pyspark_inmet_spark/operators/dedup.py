@@ -1,22 +1,28 @@
-"""Deduplication operators for training-data pipelines.
+"""Deduplication operators for training-data pipelines: exact, n-gram
+Jaccard and containment, MinHash and SimHash LSH, embedding near-dup,
+substring excision, Bloom-gated incremental dedup and graph clustering of
+the resulting pairs.
 
-Four tiers, each with a different scale/recall trade-off:
+Each mechanism the family shares is built in one place:
 
-- :func:`dedup_exact` — hash-groupBy on the full text. One shuffle on the
-  (hashed) text; at 100 TB group on ``xxhash64(text)`` so shuffle rows are
-  8 bytes + id, never the document body.
-- :func:`jaccard_pairs` — EXACT n-gram Jaccard via shingle inverted index
-  self-join. Quadratic in the worst case; the candidate join is on the
-  shingle key, so it's only quadratic per posting list. Ground truth for
-  the approximate tiers; at scale you run it only within LSH buckets.
-- :func:`minhash_lsh_pairs` — MinHash signatures + banded LSH bucketing,
-  candidates verified with exact Jaccard. The production near-dup path:
-  shuffle volume is (#docs x #bands) tiny keys, never doc x doc.
-- :func:`simhash64` — 64-bit SimHash signature per doc; near-dups are
-  signature pairs within a Hamming radius, bucketed by band equality.
+- word n-grams: :func:`~.text._word_grams`, behind
+  :func:`~.text.exploded_ngrams`, :func:`~.text.ngram_hash_sets` and
+  :func:`_positional_gram_stream`;
+- per-doc shingle sets: :func:`~.text.ngram_hash_sets`, one row per
+  distinct id (a repeated id gets the union of its rows' sets);
+- MinHash bands: :func:`_shingle_stream` -> :func:`minhash_signatures` ->
+  :func:`_stack_bands`, which also stacks :func:`portable_minhash_bands`;
+- Jaccard scores and bounds: :func:`_jaccard`;
+- the substring keeper: :func:`_gram_census` (count + first occurrence),
+  :func:`_redundant_positions` and the island merge
+  :func:`_excision_spans`;
+- salted engine-portable hashes (portable MinHash, Bloom positions):
+  :func:`_salted_hash60` over :func:`_portable_hash60`;
+- exact int64 Gram tiles (embedding flags, the tau sweep):
+  :func:`_int64_gram_tiles`.
 
-All hashing uses Spark's ``xxhash64`` with distinct integer salts —
-deterministic across runs/partitions, no Python in the hot path.
+Hashes that stay inside Spark are ``xxhash64`` with integer salts; values
+a DuckDB oracle must replay use the md5-prefix :func:`_portable_hash60`.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import exploded_ngrams, ngram_hash_sets
+from .text import _word_grams, exploded_ngrams, ngram_hash_sets
 from .util import lineage_checkpoint, lineage_checkpoint_eager, overlap
 
 
@@ -52,7 +58,8 @@ def dedup_exact(
 def shingle_sets(
     df: DataFrame, id_col: str, text_col: str, ngram: int
 ) -> DataFrame:
-    """(id, shingle) pairs, distinct per doc. The shingle is carried as
+    """(id, shingle) pairs, distinct per doc (a doc id on several rows is
+    one doc: the union of their sets). The shingle is carried as
     its 64-bit xxhash, not the string: set semantics are preserved
     (collision odds ~n²/2⁶⁵) while every downstream shuffle/join moves
     8-byte keys instead of text.
@@ -65,6 +72,14 @@ def shingle_sets(
     rows, one less full-corpus shuffle (guide §2.4)."""
     return ngram_hash_sets(df, id_col, text_col, ngram).select(
         "_id", F.explode("_sh").alias("shingle")
+    )
+
+
+def _jaccard(inter: Column) -> Column:
+    """``inter / (n_a + n_b - inter)`` in double over the ``n_a``/``n_b``
+    set-size columns: every Jaccard score and bound in this module."""
+    return inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter).cast(
+        "double"
     )
 
 
@@ -207,9 +222,7 @@ def jaccard_pairs(
             F.coalesce(F.col("_hn_a"), F.lit(0)),
             F.coalesce(F.col("_hn_b"), F.lit(0)),
         )
-        ub = (F.col("_ic") + m).cast("double") / (
-            F.col("n_a") + F.col("n_b") - F.col("_ic") - m
-        ).cast("double")
+        ub = _jaccard(F.col("_ic") + m)
         kept = (
             ic.join(na, "id_a")
             .join(nb, "id_b")
@@ -231,11 +244,7 @@ def jaccard_pairs(
         inter_full = F.col("_ic") + F.coalesce(F.col("_ih"), F.lit(0))
         j = (
             kept.join(ih, ["id_a", "id_b"], "left")
-            .withColumn(
-                "jaccard",
-                inter_full.cast("double")
-                / (F.col("n_a") + F.col("n_b") - inter_full).cast("double"),
-            )
+            .withColumn("jaccard", _jaccard(inter_full))
             .filter(F.col("jaccard") >= threshold)
         )
         return j.select("id_a", "id_b", "jaccard")
@@ -262,11 +271,7 @@ def jaccard_pairs(
     j = (
         inter.join(na, "id_a")
         .join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
+        .withColumn("jaccard", _jaccard(F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
     )
     return j.select("id_a", "id_b", "jaccard")
@@ -367,6 +372,33 @@ def containment_pairs(
     )
 
 
+def _shingle_stream(
+    df: DataFrame, id_col: str, text_col: str, ngram: int
+) -> DataFrame:
+    """(``_id``, ``shingle``) rows: the xxhash64 of every word n-gram,
+    duplicates kept — the MinHash input and the verify stream."""
+    return exploded_ngrams(df, id_col, text_col, ngram).select(
+        "_id", F.xxhash64("g").alias("shingle")
+    )
+
+
+def _stack_bands(sig: DataFrame, values: list[Column], value: str) -> DataFrame:
+    """(``_id``, ``band``, ``value``) rows, one per band of each ``_id``
+    row of ``sig``; band ``b`` carries ``values[b]``. Every banded LSH
+    table here is stacked by this one explode."""
+    return sig.select(
+        "_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), v.alias(value))
+                    for b, v in enumerate(values)
+                ]
+            )
+        ).alias("bh"),
+    ).select("_id", "bh.band", f"bh.{value}")
+
+
 def minhash_signatures(
     shingles: DataFrame, num_hashes: int
 ) -> DataFrame:
@@ -417,37 +449,9 @@ def minhash_lsh_pairs(
     side. Distinct shingle sets are built only AFTER the candidate-doc
     semi-join prune, inside the verify step.
     """
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    grams = exploded_ngrams(df, id_col, text_col, ngram).select(
-        "_id", F.xxhash64("g").alias("shingle")
-    )
-    sig = minhash_signatures(grams, num_hashes)
-
-    band_cols = [
-        F.xxhash64(*[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
-            f"band_{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select("_id", *band_cols)
-    stacked = (
-        banded.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), F.col(f"band_{b}").alias("h")
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bh"),
-        )
-        .select("_id", "bh.band", "bh.h")
-        .transform(lineage_checkpoint_eager)
-    )
+    stacked = minhash_band_table(
+        df, id_col, text_col, ngram, num_hashes, bands
+    ).transform(lineage_checkpoint_eager)
 
     l = stacked.toDF("id_a", "band", "h")
     r = stacked.toDF("id_b", "band", "h")
@@ -460,7 +464,10 @@ def minhash_lsh_pairs(
     )
 
     return _jaccard_verify(
-        grams, candidates, threshold, broadcast_sizes=broadcast_sizes
+        _shingle_stream(df, id_col, text_col, ngram),
+        candidates,
+        threshold,
+        broadcast_sizes=broadcast_sizes,
     )
 
 
@@ -516,11 +523,7 @@ def _jaccard_verify(
     return (
         inter.join(na, "id_a")
         .join(nb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
+        .withColumn("jaccard", _jaccard(F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -816,6 +819,34 @@ def embedding_cosine_pairs(
     )
 
 
+def _int64_gram_tiles(vecs, scale: int, coef: int, chunk: int = 1024):
+    """Yield ``(lo, hi, G, n2)`` row tiles of one block's exact int64 Gram
+    matrix: vectors quantized onto the d25 grid (``floor(x*scale)``),
+    ``G = Q[lo:hi] @ Q.T`` and ``n2`` every row's squared norm, so only
+    ``chunk x m`` materializes at a time. ``coef`` is the largest factor
+    a caller multiplies ``G*G`` or ``n2*n2`` by; int64-exactness needs
+    ``coef * (dim*maxc^2)^2 <= 2^63-1`` (|G| and |n2| are both
+    ``<= dim*maxc^2``), checked on the actual coordinates, in exact
+    Python ints, before any int64 arithmetic can wrap."""
+    import math
+
+    import numpy as np
+
+    V = np.stack(vecs.to_numpy()).astype(np.float64)
+    Q = np.floor(V * scale).astype(np.int64)
+    if Q.shape[1] * int(np.abs(Q).max(initial=0)) ** 2 > math.isqrt(
+        (2**63 - 1) // coef
+    ):
+        raise ValueError(
+            "dim * max_coord^2 exceeds the int64-exact envelope; "
+            "lower `scale` or widen the kernel"
+        )
+    n2 = np.einsum("ij,ij->i", Q, Q)  # (m,) int64
+    for lo in range(0, len(Q), chunk):
+        hi = min(lo + chunk, len(Q))
+        yield lo, hi, Q[lo:hi] @ Q.T, n2  # (chunk, m) int64
+
+
 def embedding_blocked_neardup_flags(
     df: DataFrame,
     block_col: str = "label",
@@ -853,29 +884,12 @@ def embedding_blocked_neardup_flags(
     import numpy as np
     import pandas as pd
 
-    import math
-
     tn2, td2 = tau_num * tau_num, tau_den * tau_den
-    # int64-exactness needs max(td2,tn2) * (dim*maxc^2)^2 <= 2^63-1
-    # (|G| and |n2| are both <= dim*maxc^2), i.e. dim*maxc^2 bounded by:
-    _n2_bound = math.isqrt((2**63 - 1) // max(td2, tn2))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        Q = np.floor(V * scale).astype(np.int64)  # the d25 grid
-        # assert the ACTUAL dot bound (covers any dim), not coords alone:
-        # exact python ints, before any int64 arithmetic can wrap
-        assert Q.shape[1] * int(np.abs(Q).max(initial=0)) ** 2 <= _n2_bound, (
-            "dim * max_coord^2 exceeds the int64-exact envelope; "
-            "lower `scale` or widen the kernel"
-        )
-        n2 = np.einsum("ij,ij->i", Q, Q)  # (m,) int64
-        m = len(Q)
-        flag = np.zeros(m, dtype=bool)
-        pos = n2 > 0
-        for lo in range(0, m, 1024):
-            hi = min(lo + 1024, m)
-            G = Q[lo:hi] @ Q.T  # (chunk, m) int64
+        flag = np.zeros(len(pdf), dtype=bool)
+        for lo, hi, G, n2 in _int64_gram_tiles(pdf["_v"], scale, max(td2, tn2)):
+            pos = n2 > 0
             ok = (G >= 0) & (
                 td2 * (G * G) >= tn2 * np.outer(n2[lo:hi], n2)
             )
@@ -1206,50 +1220,22 @@ def repeated_spans(
     than checkpointed — at scale the re-scan is cheaper than spilling a
     corpus-sized intermediate.
     """
-    from pyspark.sql import Window
-
-    from .text import _gram_at
-    from .util import ensure_parallelism
-
-    def gram_stream() -> DataFrame:
-        d = ensure_parallelism(
-            df.select(F.col(id_col).alias("_id"), text_col)
-        ).select("_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"))
-        ws = F.col("_ws")
-        idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
-        grams = F.when(
-            F.size(ws) >= n, F.transform(idx, lambda i: _gram_at(ws, i, n))
-        ).otherwise(F.array().cast("array<string>"))
-        return d.select("_id", F.posexplode(grams).alias("pos", "_g")).select(
-            "_id", "pos", F.xxhash64("_g").alias("_gh")
-        )
-
+    stream = _positional_gram_stream(df, id_col, text_col, n)
     dup = (
-        gram_stream()
-        .groupBy("_gh")
+        stream.groupBy("_gh")
         .agg(F.count_distinct("_id").alias("_nd"))
         .filter(F.col("_nd") >= min_docs)
         .select("_gh")
     )
-    hits = gram_stream().join(dup, "_gh").select("_id", "pos")
-    w = Window.partitionBy("_id").orderBy("pos")
-    isl = hits.withColumn(
-        "_new",
-        F.when(
-            F.lag("pos").over(w).isNull()
-            | (F.col("pos") - F.lag("pos").over(w) > n),
-            1,
-        ).otherwise(0),
-    ).withColumn("_isl", F.sum("_new").over(w))
-    spans = isl.groupBy("_id", "_isl").agg(
-        F.min("pos").alias("_s"),
-        (F.max("pos") + n - 1).alias("_e"),
-        F.count(F.lit(1)).alias("_ng"),
-    )
-    per_doc = spans.groupBy("_id").agg(
-        F.sum("_ng").alias("n_dup_grams"),
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum(F.col("_e") - F.col("_s") + 1).alias("n_dup_tokens"),
+    hits = stream.join(dup, "_gh").select("_id", "pos")
+    per_doc = (
+        _excision_spans(hits, "_id", n)
+        .groupBy("_id")
+        .agg(
+            F.sum("span_grams").alias("n_dup_grams"),
+            F.count(F.lit(1)).alias("n_spans"),
+            F.sum("span_tokens").alias("n_dup_tokens"),
+        )
     )
     totals = df.select(
         F.col(id_col).alias("_id"),
@@ -1281,19 +1267,37 @@ def _positional_gram_stream(
     rows. Callers RECOMPUTE this rather than checkpoint it (the
     repeated_spans convention: the stream is corpus-sized — at scale
     the re-scan is cheaper than spilling it)."""
-    from .text import _gram_at
-    from .util import ensure_parallelism
-
-    d = ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), text_col)
-    ).select("_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"))
-    ws = F.col("_ws")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
-    grams = F.when(
-        F.size(ws) >= n, F.transform(idx, lambda i: _gram_at(ws, i, n))
-    ).otherwise(F.array().cast("array<string>"))
+    d, grams = _word_grams(df, id_col, text_col, n)
     return d.select("_id", F.posexplode(grams).alias("pos", "_g")).select(
         "_id", "pos", F.xxhash64("_g").alias("_gh")
+    )
+
+
+def _gram_census(stream: DataFrame) -> DataFrame:
+    """(``_gh``, ``_occ``, ``_keep``) per gram hash of a positional
+    stream: the occurrence count and the keeper, the first occurrence
+    ``min(struct(_id, pos))`` — one hash aggregate with map-side partial
+    combine, shared by the batch, incremental and streaming keepers."""
+    return stream.groupBy("_gh").agg(
+        F.count(F.lit(1)).alias("_occ"),
+        F.min(F.struct("_id", "pos")).alias("_keep"),
+    )
+
+
+def _redundant_positions(stream: DataFrame) -> DataFrame:
+    """(``_id``, ``pos``) of every occurrence of a repeated gram except
+    its keeper: the census filtered to ``_occ >= 2``, joined back on the
+    8-byte hash (the survivors are the small side)."""
+    keepers = _gram_census(stream).filter(F.col("_occ") >= 2).select(
+        "_gh", "_keep"
+    )
+    return (
+        stream.join(keepers, "_gh")
+        .filter(
+            (F.col("_id") != F.col("_keep._id"))
+            | (F.col("pos") != F.col("_keep.pos"))
+        )
+        .select("_id", "pos")
     )
 
 
@@ -1389,28 +1393,7 @@ def exact_substring_dedup(
     span_start + 1. Cutting those ranges and re-joining remaining
     tokens is then a map-only transform.
     """
-    def gram_stream() -> DataFrame:
-        return _positional_gram_stream(df, id_col, text_col, n)
-
-    keepers = (
-        gram_stream()
-        .groupBy("_gh")
-        .agg(
-            F.count(F.lit(1)).alias("_occ"),
-            F.min(F.struct("_id", "pos")).alias("_keep"),
-        )
-        .filter(F.col("_occ") >= 2)
-        .select("_gh", "_keep")
-    )
-    red = (
-        gram_stream()
-        .join(keepers, "_gh")
-        .filter(
-            (F.col("_id") != F.col("_keep._id"))
-            | (F.col("pos") != F.col("_keep.pos"))
-        )
-        .select("_id", "pos")
-    )
+    red = _redundant_positions(_positional_gram_stream(df, id_col, text_col, n))
     return _excision_spans(red, id_col, n)
 
 
@@ -1461,23 +1444,7 @@ def incremental_substring_dedup(
     )
     in_base = dstream.join(base_idx, "_gh", "left_semi").select("_id", "pos")
     fresh = dstream.join(base_idx, "_gh", "left_anti")
-    keepers = (
-        fresh.groupBy("_gh")
-        .agg(
-            F.count(F.lit(1)).alias("_occ"),
-            F.min(F.struct("_id", "pos")).alias("_keep"),
-        )
-        .filter(F.col("_occ") >= 2)
-        .select("_gh", "_keep")
-    )
-    dup_delta = (
-        fresh.join(keepers, "_gh")
-        .filter(
-            (F.col("_id") != F.col("_keep._id"))
-            | (F.col("pos") != F.col("_keep.pos"))
-        )
-        .select("_id", "pos")
-    )
+    dup_delta = _redundant_positions(fresh)
     return _excision_spans(in_base.unionByName(dup_delta), id_col, n)
 
 
@@ -1609,32 +1576,19 @@ def minhash_band_table(
     :func:`minhash_lsh_pairs`, so tables built by either are compatible."""
     assert num_hashes % bands == 0
     rows = num_hashes // bands
-    grams = exploded_ngrams(df, id_col, text_col, ngram).select(
-        "_id", F.xxhash64("g").alias("shingle")
+    sig = minhash_signatures(
+        _shingle_stream(df, id_col, text_col, ngram), num_hashes
     )
-    sig = minhash_signatures(grams, num_hashes)
     band_cols = [
         F.xxhash64(*[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
             f"band_{b}"
         )
         for b in range(bands)
     ]
-    return (
-        sig.select("_id", *band_cols)
-        .select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), F.col(f"band_{b}").alias("h")
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bh"),
-        )
-        .select("_id", "bh.band", "bh.h")
+    return _stack_bands(
+        sig.select("_id", *band_cols),
+        [F.col(f"band_{b}") for b in range(bands)],
+        "h",
     )
 
 
@@ -1662,43 +1616,22 @@ def portable_minhash_bands(
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands
-    grams = exploded_ngrams(df, id_col, text_col, ngram)
-    aggs = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit(f"{k}:"), F.col("g")).cast("binary")
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-        ).alias(f"mh_{k}")
-        for k in range(num_hashes)
-    ]
-    sig = grams.groupBy("_id").agg(*aggs)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh_{b * rows + r}").cast("string")
-                        for r in range(rows)
-                    ],
-                ).cast("binary")
-            ).alias("bkey"),
+    sig = exploded_ngrams(df, id_col, text_col, ngram).groupBy("_id").agg(
+        *[
+            F.min(h).alias(f"mh_{k}")
+            for k, h in enumerate(_salted_hash60(F.col("g"), num_hashes))
+        ]
+    )
+    band_keys = [
+        F.md5(
+            F.concat_ws(
+                ",",
+                *[F.col(f"mh_{b * rows + r}").cast("string") for r in range(rows)],
+            ).cast("binary")
         )
         for b in range(bands)
     ]
-    return sig.select(
-        F.col("_id").alias(id_col),
-        F.explode(F.array(*band_structs)).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    return _stack_bands(sig, band_keys, "bkey").withColumnRenamed("_id", id_col)
 
 
 def incremental_lsh_pairs(
@@ -1751,34 +1684,26 @@ def incremental_lsh_pairs(
     # intersection via one shingle equi-join restricted to candidates.
     cand_a = candidates.select(F.col("id_a").alias("_id")).distinct()
     cand_b = candidates.select(F.col("id_b").alias("_id")).distinct()
-    s_a = (
-        exploded_ngrams(
-            delta.join(
-                F.broadcast(cand_a.withColumnRenamed("_id", id_col)),
-                id_col,
-                "left_semi",
-            ),
+    s_a = _shingle_stream(
+        delta.join(
+            F.broadcast(cand_a.withColumnRenamed("_id", id_col)),
             id_col,
-            text_col,
-            ngram,
-        )
-        .select("_id", F.xxhash64("g").alias("shingle"))
-        .distinct()
-    )
-    s_b = (
-        exploded_ngrams(
-            corpus.join(
-                F.broadcast(cand_b.withColumnRenamed("_id", id_col)),
-                id_col,
-                "left_semi",
-            ),
+            "left_semi",
+        ),
+        id_col,
+        text_col,
+        ngram,
+    ).distinct()
+    s_b = _shingle_stream(
+        corpus.join(
+            F.broadcast(cand_b.withColumnRenamed("_id", id_col)),
             id_col,
-            text_col,
-            ngram,
-        )
-        .select("_id", F.xxhash64("g").alias("shingle"))
-        .distinct()
-    )
+            "left_semi",
+        ),
+        id_col,
+        text_col,
+        ngram,
+    ).distinct()
     sizes_a = s_a.groupBy("_id").agg(F.count(F.lit(1)).alias("n_a"))
     sizes_b = s_b.groupBy("_id").agg(F.count(F.lit(1)).alias("n_b"))
     inter = (
@@ -1791,11 +1716,7 @@ def incremental_lsh_pairs(
     return (
         inter.join(F.broadcast(sizes_a.toDF("id_a", "n_a")), "id_a")
         .join(F.broadcast(sizes_b.toDF("id_b", "n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
+        .withColumn("jaccard", _jaccard(F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -2867,31 +2788,17 @@ def lsh_threshold_sweep(
 
     from .similarity import _quantize_expr
 
-    import math
-
     spark = df.sparkSession
     taus = tuple(int(t) for t in taus)
     td2 = tau_den * tau_den
-    # int64-exactness needs max(td2, max tau^2) * (dim*maxc^2)^2 <= 2^63-1
-    _n2_bound = math.isqrt(
-        (2**63 - 1) // max(td2, max(t * t for t in taus))
-    )
+    coef = max(td2, max(t * t for t in taus))
 
     # exact tier: per-block per-tau crossing histogram, no pair rows
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        Q = np.floor(V * scale).astype(np.int64)  # the d25 grid
-        # actual dot bound (covers any dim), exact python ints
-        assert Q.shape[1] * int(np.abs(Q).max(initial=0)) ** 2 <= _n2_bound, (
-            "dim * max_coord^2 exceeds the int64-exact envelope"
-        )
-        n2 = np.einsum("ij,ij->i", Q, Q)
-        m = len(Q)
-        pos = n2 > 0
+        m = len(pdf)
         counts = dict.fromkeys(taus, 0)
-        for lo in range(0, m, 1024):
-            hi = min(lo + 1024, m)
-            G = Q[lo:hi] @ Q.T  # (chunk, m) int64
+        for lo, hi, G, n2 in _int64_gram_tiles(pdf["_v"], scale, coef):
+            pos = n2 > 0
             lhs = td2 * (G * G)  # <= 8.3e18, in-bounds (the d28 proof)
             outer = np.outer(n2[lo:hi], n2)
             base = (G >= 0) & pos[lo:hi, None] & pos[None, :]
@@ -2998,6 +2905,13 @@ def _portable_hash60(s: Column) -> Column:
     )
 
 
+def _salted_hash60(s: Column, k: int) -> list[Column]:
+    """The ``k`` salted portable hashes ``_portable_hash60(i ':' s)``,
+    ``i in 0..k-1``: the portable MinHash family and, taken ``% m`` over
+    ``md5(text)``, the Bloom bit positions."""
+    return [_portable_hash60(F.concat(F.lit(f"{i}:"), s)) for i in range(k)]
+
+
 def bloom_position_set(
     corpus: DataFrame,
     text_col: str = "text",
@@ -3026,14 +2940,7 @@ def bloom_position_set(
     envelope-checked, the st17 portable-vs-xxhash64 split.
     """
     ch = F.md5(F.col(text_col).cast("binary"))
-    pos = F.explode(
-        F.array(
-            *[
-                _portable_hash60(F.concat(F.lit(f"{i}:"), ch)) % m
-                for i in range(k)
-            ]
-        )
-    ).alias("pos")
+    pos = F.explode(F.array(*[h % m for h in _salted_hash60(ch, k)])).alias("pos")
     return corpus.select(pos).distinct()
 
 
@@ -3124,13 +3031,7 @@ def bloom_gated_dedup(
         id_col,
         "_ch",
         F.explode(
-            F.array(
-                *[
-                    _portable_hash60(F.concat(F.lit(f"{i}:"), F.col("_ch")))
-                    % m
-                    for i in range(k)
-                ]
-            )
+            F.array(*[h % m for h in _salted_hash60(F.col("_ch"), k)])
         ).alias("pos"),
     )
     membership = (
@@ -3198,54 +3099,26 @@ def bloom_fpr_sweep(
     n = corpus.count()
     configs = [(b, max(64, b * n)) for b in bits_list]
     ch = F.md5(F.col(text_col).cast("binary"))
+    # every (config, salt) position of one row, as (bits, pos) structs
+    positions = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(b).alias("bits"), (h % m).alias("pos"))
+                for b, m in configs
+                for h in _salted_hash60(F.col("_ch"), k)
+            ]
+        )
+    ).alias("bp")
 
     bloom = (
         corpus.select(ch.alias("_ch"))
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bits"),
-                            (
-                                _portable_hash60(
-                                    F.concat(F.lit(f"{i}:"), F.col("_ch"))
-                                )
-                                % m
-                            ).alias("pos"),
-                        )
-                        for b, m in configs
-                        for i in range(k)
-                    ]
-                )
-            ).alias("bp")
-        )
+        .select(positions)
         .select("bp.bits", "bp.pos")
         .distinct()
     )
     probes = (
         batch.select(F.col(id_col), ch.alias("_ch"))
-        .select(
-            id_col,
-            "_ch",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bits"),
-                            (
-                                _portable_hash60(
-                                    F.concat(F.lit(f"{i}:"), F.col("_ch"))
-                                )
-                                % m
-                            ).alias("pos"),
-                        )
-                        for b, m in configs
-                        for i in range(k)
-                    ]
-                )
-            ).alias("bp"),
-        )
+        .select(id_col, "_ch", positions)
         .select(id_col, "_ch", "bp.bits", "bp.pos")
     )
     membership = (

@@ -97,53 +97,63 @@ def _gram_at(words: Column, i: Column, n: int) -> Column:
     return F.concat(*parts)
 
 
-def exploded_ngrams(
-    df, id_col: str, text_col: str, n: int
-):
-    """(id, g) rows of word n-grams — the shared fast path for dedup and
-    fingerprinting: split once into a materialized array column, bracket-
-    indexed gram assembly, parallelism ensured for small-file scans."""
+def _word_grams(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    per_gram=lambda g: g,
+    elem: str = "string",
+) -> tuple[DataFrame, Column]:
+    """The one word-n-gram builder: ``(frame, grams)`` where ``frame`` is
+    ``(_id, _ws)`` (``_ws`` = ``split(trim(text))``, materialized once per
+    row, parallelism ensured for small-file scans) and ``grams`` is the
+    guarded array of the doc's n-grams in position order, each passed
+    through ``per_gram`` (``elem`` names its element type).
+    Docs shorter than ``n`` tokens (NULL text included: ``size(split(NULL))``
+    is -1) get an empty array. Callers put ``grams`` straight into their
+    own generator or aggregate over ``frame``."""
     from .util import ensure_parallelism
 
     d = ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
     d = d.select("_id", F.split(F.trim(F.col(text_col)), "\\s+").alias("_ws"))
     ws = F.col("_ws")
     idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
-    grams = F.transform(idx, lambda i: _gram_at(ws, i, n))
-    return d.select(
-        "_id",
-        F.explode(
-            F.when(F.size(ws) >= n, grams).otherwise(F.array().cast("array<string>"))
-        ).alias("g"),
-    )
+    grams = F.when(
+        F.size(ws) >= n, F.transform(idx, lambda i: per_gram(_gram_at(ws, i, n)))
+    ).otherwise(F.array().cast(f"array<{elem}>"))
+    return d, grams
+
+
+def exploded_ngrams(
+    df, id_col: str, text_col: str, n: int
+):
+    """(id, g) rows of word n-grams — the shared fast path for dedup and
+    fingerprinting (built by :func:`_word_grams`)."""
+    d, grams = _word_grams(df, id_col, text_col, n)
+    return d.select("_id", F.explode(grams).alias("g"))
 
 
 def ngram_hash_sets(df, id_col: str, text_col: str, n: int):
     """(_id, _sh) rows with ``_sh`` = the doc's DISTINCT word-n-gram
-    xxhash64 set as an array column. The whole set construction is
-    per-row (split, gram assembly, hash, ``array_distinct``) — MAP-ONLY,
-    no shuffle: the explode + corpus-wide ``distinct`` it replaces paid a
-    full Exchange of every (id, gram-hash) row just to dedup WITHIN each
-    doc (dedup never crosses doc boundaries, so the shuffle bought
-    nothing). Dedup is on the 64-bit hash, identical to the old
-    distinct-AFTER-hash semantics: two grams colliding at ~2^-64 collapse
-    to one set element either way (the shingle_sets contract)."""
-    from .util import ensure_parallelism
+    xxhash64 set as an array column, one row per distinct id. For
+    unique ids the whole set construction is per-row (split, gram
+    assembly, hash, ``array_distinct``) — MAP-ONLY, no shuffle: the
+    explode + corpus-wide ``distinct`` it replaces paid a full Exchange
+    of every (id, gram-hash) row just to dedup WITHIN each doc. Dedup is
+    on the 64-bit hash: two grams colliding at ~2^-64 collapse to one
+    set element (the shingle_sets contract).
 
-    d = ensure_parallelism(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col))
-    )
-    d = d.select("_id", F.split(F.trim(F.col(text_col)), "\\s+").alias("_ws"))
-    ws = F.col("_ws")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
-    hashes = F.transform(idx, lambda i: F.xxhash64(_gram_at(ws, i, n)))
-    return d.select(
-        "_id",
-        F.array_distinct(
-            F.when(F.size(ws) >= n, hashes).otherwise(
-                F.array().cast("array<bigint>")
-            )
-        ).alias("_sh"),
+    A repeated id gets the UNION of its rows' sets — the oracle's
+    ``SELECT DISTINCT doc_id, g`` semantics. One bounded job (any id
+    with two rows?) picks the plan: the map-only one when ids are
+    unique, else the per-row sets merged by a groupBy on ``_id``."""
+    d, hashes = _word_grams(df, id_col, text_col, n, F.xxhash64, "bigint")
+    sets = d.select("_id", F.array_distinct(hashes).alias("_sh"))
+    if df.groupBy(id_col).count().filter(F.col("count") > 1).isEmpty():
+        return sets
+    return sets.groupBy("_id").agg(
+        F.array_distinct(F.flatten(F.collect_list("_sh"))).alias("_sh")
     )
 
 
@@ -1593,21 +1603,8 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    from .util import ensure_parallelism
-
-    d = ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
-    d = d.select("_id", F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"))
-    ws = F.col("_ws")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - k, F.lit(-1)))
-    grams = F.transform(idx, lambda i: _gram_at(ws, i, k))
-    g = d.select(
-        "_id",
-        F.posexplode(
-            F.when(F.size(ws) >= k, grams).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("pos", "g"),
-    )
+    d, grams = _word_grams(df, id_col, text_col, k)
+    g = d.select("_id", F.posexplode(grams).alias("pos", "g"))
     # Sort key: min over the window picks the smallest hash; among equal
     # hashes the smaller (99999999 - pos) suffix wins = the LARGEST pos
     # = rightmost occurrence (robust winnowing's tiebreak).

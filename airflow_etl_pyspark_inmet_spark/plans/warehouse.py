@@ -62,11 +62,7 @@ def _delete_orphan_location(spark: SparkSession, db: str, name: str) -> None:
     (the in-memory catalog forgets tables while their files survive; with
     a persistent metastore this is a no-op). Uses the Hadoop FileSystem
     API so it works on any storage, not just local disk."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    path = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{db}.db/{name}")
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
+    fs, path = _table_fs_and_path(spark, name, db)
     if fs.exists(path):
         fs.delete(path, True)
 
@@ -211,17 +207,15 @@ def save_range_sorted_table(
 def table_size_bytes(spark: SparkSession, name: str, db: str = "analitic") -> int:
     """On-disk byte size of a managed table via the Hadoop FileSystem API
     (works on any storage backend, not just local disk)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    path = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{db}.db/{name}")
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
+    fs, path = _table_fs_and_path(spark, name, db)
     if not fs.exists(path):
         return 0
     return fs.getContentSummary(path).getLength()
 
 
 def _table_fs_and_path(spark: SparkSession, name: str, db: str):
+    """(Hadoop FileSystem, Path) of managed table ``db.name`` under the
+    session's warehouse dir."""
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
     warehouse = spark.conf.get("spark.sql.warehouse.dir")

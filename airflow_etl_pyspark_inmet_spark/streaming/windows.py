@@ -828,12 +828,12 @@ def streaming_substring_index(
     """STREAMING maintenance of the d31/d33 substring-dedup GRAM INDEX
     — live ingest of the asset the incremental mode persists: each
     micro-batch contributes its positional n-gram partials
-    (``dedup._positional_gram_stream`` → per-gram count + min-struct
-    keeper) and the state folds them with SUM + MIN — two commutative
-    monoids over a key computed one row at a time, so the finite-input
-    state is split-invariant and the final index equals the one-shot
-    batch aggregation bit for bit, regardless of arrival order (the
-    st22 fold contract).
+    (``dedup._gram_census`` over ``dedup._positional_gram_stream``:
+    per-gram count + min-struct keeper) and the state folds them with
+    SUM + MIN — two commutative monoids over a key computed one row at
+    a time, so the finite-input state is split-invariant and the final
+    index equals the one-shot batch aggregation bit for bit, regardless
+    of arrival order (the st22 fold contract).
 
     The index is keyed by the gram's 64-bit hash in state, but EMITTED
     keyed by its keeper occurrence (keep_doc, keep_pos) — exactly one
@@ -851,7 +851,7 @@ def streaming_substring_index(
 
     Returns (keep_doc, keep_pos, n_occ), one row per duplicated gram.
     """
-    from ..operators.dedup import _positional_gram_stream
+    from ..operators.dedup import _gram_census, _positional_gram_stream
 
     src = docs.select(
         F.col(id_col).cast("bigint").alias(id_col), F.col(text_col)
@@ -870,14 +870,9 @@ def streaming_substring_index(
     )
 
     def step(state: dict, batch_df: DataFrame) -> dict:
-        partials = (
+        partials = _gram_census(
             _positional_gram_stream(batch_df, id_col, text_col, n)
-            .groupBy("_gh")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_occ"),
-                F.min(F.struct("_id", "pos")).alias("_keep"),
-            )
-        )
+        ).withColumnRenamed("_occ", "n_occ")
         merged = (
             state["idx"]
             .unionByName(partials)

@@ -4248,6 +4248,34 @@ def test_hard_negative_overflow_guard_raises(spark):
         hard_negative_topk(df, queries, k=5).collect()
 
 
+def test_gram_tile_envelope_guard_raises_through_both_callers(spark):
+    """The shared int64 Gram-tile kernel (dedup._int64_gram_tiles)
+    checks its exactness envelope before any int64 product can wrap:
+    a block holding a vector outside it must fail the d28 flags and the
+    c12 tau sweep alike, while the same block scaled inside it runs."""
+    from airflow_etl_pyspark_inmet_spark.operators.dedup import (
+        embedding_blocked_neardup_flags,
+        lsh_threshold_sweep,
+    )
+
+    def block(c):
+        # c = 10 quantizes to 1e4: dim * maxc^2 = 2e8 exceeds the bound
+        # isqrt((2^63 - 1) // 20^2) ~ 1.52e8 of both defaults; c = 1 is in
+        rows = [(0, 0, [c, 0.0]), (1, 0, [1.0, 1.0]), (2, 0, [0.5, 0.2])]
+        return spark.createDataFrame(
+            rows, "vec_id long, label int, embedding array<double>"
+        )
+
+    callers = {
+        "flags": embedding_blocked_neardup_flags,
+        "sweep": lambda df: lsh_threshold_sweep(df, dim=2),
+    }
+    for name, run in callers.items():
+        assert run(block(1.0)).count() > 0, name
+        with pytest.raises(Exception, match="int64-exact envelope"):
+            run(block(10.0)).collect()
+
+
 # --- winnowing (d29) ----------------------------------------------------------
 
 

@@ -966,3 +966,75 @@ def test_zipf_profile_matches_python_replay_property(spark, docs):
         for (lang, b), fs in expect.items()
     )
     assert got == rows2
+
+
+@settings(**_SETTINGS)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            # two words, so rows share 3-grams (of 8 possible) often
+            st.lists(st.sampled_from(["a", "b"]), min_size=2, max_size=9).map(
+                " ".join
+            ),
+        ),
+        min_size=2,
+        max_size=8,
+    ).filter(lambda rows: len({i for i, _ in rows}) < len(rows))
+)
+def test_shingle_family_unions_repeated_ids_like_duckdb_property(spark, rows):
+    """A doc id spread over several rows has ONE shingle set, the union
+    of its rows' sets — the oracle's ``SELECT DISTINCT doc_id, g`` — in
+    shingle_sets, jaccard_pairs (d2's oracle SQL) and containment_pairs,
+    checked against DuckDB on corpora that always repeat an id."""
+    import duckdb
+    import pandas as pd
+
+    from airflow_etl_pyspark_inmet_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+        shingle_sets,
+    )
+    from airflow_etl_pyspark_inmet_spark.plans.registry import (
+        _GRAMS_DISTINCT,
+        ORACLES,
+    )
+
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    sizes = dict(
+        con.sql(
+            f"WITH {_GRAMS_DISTINCT} SELECT doc_id, COUNT(*) FROM grams GROUP BY 1"
+        ).fetchall()
+    )
+    got_sizes = (
+        shingle_sets(df, "doc_id", "text", 3)
+        .groupBy("_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    assert {r["_id"]: r["n"] for r in got_sizes} == sizes
+
+    jaccard = set(con.sql(ORACLES["d2_dedup_jaccard"]).fetchall())
+    assert {tuple(r) for r in jaccard_pairs(df).collect()} == jaccard
+
+    containment = set(
+        con.sql(
+            f"""WITH {_GRAMS_DISTINCT},
+            sizes AS (SELECT doc_id, COUNT(*) n FROM grams GROUP BY 1),
+            inter AS (
+              SELECT a.doc_id id_a, b.doc_id id_b, COUNT(*) c
+              FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
+              GROUP BY 1, 2
+            )
+            SELECT id_a, id_b, c, sa.n, sb.n,
+                   c * 1000000 // sa.n, c * 1000000 // sb.n
+            FROM inter
+            JOIN sizes sa ON sa.doc_id = id_a
+            JOIN sizes sb ON sb.doc_id = id_b"""
+        ).fetchall()
+    )
+    got = containment_pairs(df, threshold_ppm=1).collect()
+    assert {tuple(r) for r in got} == containment
+    con.close()

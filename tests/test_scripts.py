@@ -1,13 +1,15 @@
 """Tooling checks that need no Spark session: every module the scripts
 import must exist, so a script left pointing at a deleted module fails
 here instead of on its next manual run; the package checkpoints
-lineage only through ``operators.util.lineage_checkpoint``; and the ANN
-tier ranks and routes in one place each, with no ``assigner`` option."""
+lineage only through ``operators.util.lineage_checkpoint``; the ANN
+tier ranks and routes in one place each, with no ``assigner`` option;
+and the dedup tier builds each of its shared mechanisms once."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
+import re
 from pathlib import Path
 
 import pytest
@@ -148,3 +150,77 @@ def test_ann_scans_flag_copies(tmp_path):
     assert stray_calls(sim, "Window.partitionBy", "_top_k", ["query_id_col"]) == [6]
     assert stray_calls(sim, "_assign_udf", "_ivf_route") == [8]
     assert assigner_params(tmp_path) == ["sim.py:5"]
+
+
+DEDUP = PACKAGE / "operators" / "dedup.py"
+
+# the helper that owns each dedup-tier mechanism -> (a source pattern
+# only a copy of that mechanism contains, scope under the package)
+DEDUP_TIER_MECHANISMS = {
+    "text._word_grams": ("F.sequence(F.lit(0), F.greatest(F.size(", "operators"),
+    "dedup._stack_bands": ('F.lit(b).alias("band")', "operators/dedup.py"),
+    "dedup._gram_census": ('F.min(F.struct("_id", "pos"))', "."),
+    "dedup._jaccard": ('F.col("n_a") + F.col("n_b") -', "operators/dedup.py"),
+    "dedup._salted_hash60": (
+        '_portable_hash60(F.concat(F.lit(f"{i}:")',
+        "operators/dedup.py",
+    ),
+    "dedup._int64_gram_tiles": ("np.floor(V * scale)", "operators/dedup.py"),
+    "dedup._excision_spans": (
+        'Window.partitionBy("_id").orderBy("pos")',
+        "operators/dedup.py",
+    ),
+}
+
+
+def pattern_copies(root: Path, pattern: str) -> dict[str, int]:
+    """Occurrences of ``pattern`` per ``.py`` file under ``root`` (a file
+    or a directory), ignoring whitespace, so a copy wrapped over several
+    lines still counts."""
+    needle = re.sub(r"\s+", "", pattern)
+    paths = [root] if root.is_file() else sorted(root.rglob("*.py"))
+    counts = {
+        str(path.relative_to(root.parent)): re.sub(
+            r"\s+", "", path.read_text(encoding="utf-8")
+        ).count(needle)
+        for path in paths
+    }
+    return {name: n for name, n in counts.items() if n}
+
+
+@pytest.mark.parametrize("owner", DEDUP_TIER_MECHANISMS)
+def test_dedup_tier_builds_each_mechanism_once(owner):
+    pattern, scope = DEDUP_TIER_MECHANISMS[owner]
+    copies = pattern_copies(PACKAGE / scope, pattern)
+    assert sum(copies.values()) == 1, f"build it through {owner}: {copies}"
+
+
+def test_dedup_tier_hashes_md5_prefixes_in_one_place():
+    assert stray_calls(DEDUP, "F.conv", "_portable_hash60") == [], (
+        "hash through dedup._portable_hash60"
+    )
+
+
+def test_dedup_scans_flag_copies(tmp_path):
+    (tmp_path / "ops").mkdir()
+    (tmp_path / "ops" / "a.py").write_text(
+        "def _portable_hash60(s):\n"
+        "    return F.conv(F.md5(s), 16, 10)\n"
+        "def _jaccard(inter):\n"
+        '    return inter / (F.col("n_a") + F.col("n_b") - inter)\n'
+    )
+    (tmp_path / "ops" / "b.py").write_text(
+        "def ub(ic, m):\n"
+        '    return (ic + m) / (F.col("n_a")\n'
+        '                       + F.col("n_b") - ic - m)\n'
+        "def bands(g):\n"
+        '    return F.min(F.conv(F.substring(F.md5(g), 1, 15), 16, 10))\n'
+    )
+    pattern = 'F.col("n_a") + F.col("n_b") -'
+    assert pattern_copies(tmp_path / "ops", pattern) == {
+        "ops/a.py": 1,
+        "ops/b.py": 1,
+    }
+    assert pattern_copies(tmp_path / "ops" / "a.py", pattern) == {"a.py": 1}
+    assert stray_calls(tmp_path / "ops" / "a.py", "F.conv", "_portable_hash60") == []
+    assert stray_calls(tmp_path / "ops" / "b.py", "F.conv", "_portable_hash60") == [5]
