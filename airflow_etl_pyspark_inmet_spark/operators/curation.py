@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import _words
+
 # RE2- and Java-regex-compatible PII patterns (no backrefs, no lookaround)
 # so the same pattern string runs in Spark (Java util.regex) and in the
 # DuckDB (RE2) oracle.
@@ -48,7 +50,7 @@ def segment_dedup(
     Equality classes are 64-bit hash classes — the same collision trade
     decontaminate() makes (~2e-8 false merges at 1e9 distinct segments).
     """
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = _words(F.col(text_col))
     n_seg = F.ceil(F.size("_ws") / F.lit(seg_words)).cast("int")
     seg_at = lambda i: F.array_join(  # noqa: E731
         F.slice(F.col("_ws"), i * seg_words + 1, seg_words), " "
@@ -121,7 +123,7 @@ def intra_doc_dedup(
     scan bandwidth. Exact outputs (counts + deduped text) so the oracle
     compares bit-for-bit.
     """
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = _words(F.col(text_col))
     n_seg = F.ceil(F.size("_ws") / F.lit(seg_words)).cast("int")
     seg_at = lambda i: F.array_join(  # noqa: E731
         F.slice(F.col("_ws"), i * seg_words + 1, seg_words), " "
@@ -198,9 +200,7 @@ def pack_sequences(
     """
     counts = df.select(
         F.col(id_col),
-        F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-        .cast("bigint")
-        .alias("_n_tok"),
+        F.size(_words(F.col(text_col))).cast("bigint").alias("_n_tok"),
     )
     return pack_counts(
         counts,
@@ -419,7 +419,7 @@ def length_grouped_batches(
             f"length_grouped_batches: batch_size and band_tokens must "
             f"be >= 1, got {batch_size}/{band_tokens}"
         )
-    toks = F.size(F.split(F.trim(F.col(text_col)), "\\s+")).cast("bigint")
+    toks = F.size(_words(F.col(text_col))).cast("bigint")
     base = df.select(
         F.col(id_col),
         toks.alias("_tok"),
@@ -501,9 +501,7 @@ def whole_doc_packing(
     # to [""] so _tok >= 1 always — the class div below can never see
     # zero OR the size(NULL) = -1 sentinel (a NULL text otherwise
     # yields a negative size_class and a garbage bin)
-    toks = F.size(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), "\\s+")
-    ).cast("bigint")
+    toks = F.size(_words(F.coalesce(F.col(text_col), F.lit("")))).cast("bigint")
     base = df.select(F.col(id_col), toks.alias("_tok")).withColumn(
         "size_class",
         F.when(F.col("_tok") > capacity, F.lit(0).cast("bigint")).otherwise(

@@ -10,7 +10,8 @@ Each mechanism the family shares is built in one place:
   :func:`_positional_gram_stream`;
 - per-doc shingle sets: :func:`~.text.ngram_hash_sets`, one row per
   distinct id (a repeated id gets the union of its rows' sets);
-- MinHash bands: :func:`_shingle_stream` -> :func:`minhash_signatures` ->
+- MinHash bands: :func:`~.text._gram_hash_stream` (the ``shingle``
+  stream) -> :func:`minhash_signatures` ->
   :func:`_stack_bands`, which also stacks :func:`portable_minhash_bands`;
 - Jaccard scores and bounds: :func:`_jaccard`;
 - the substring keeper: :func:`_gram_census` (count + first occurrence),
@@ -30,7 +31,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import _word_grams, exploded_ngrams, ngram_hash_sets
+from .text import (
+    _gram_hash_stream,
+    _word_grams,
+    _words,
+    exploded_ngrams,
+    ngram_hash_sets,
+)
 from .util import lineage_checkpoint, lineage_checkpoint_eager, overlap
 
 
@@ -372,16 +379,6 @@ def containment_pairs(
     )
 
 
-def _shingle_stream(
-    df: DataFrame, id_col: str, text_col: str, ngram: int
-) -> DataFrame:
-    """(``_id``, ``shingle``) rows: the xxhash64 of every word n-gram,
-    duplicates kept — the MinHash input and the verify stream."""
-    return exploded_ngrams(df, id_col, text_col, ngram).select(
-        "_id", F.xxhash64("g").alias("shingle")
-    )
-
-
 def _stack_bands(sig: DataFrame, values: list[Column], value: str) -> DataFrame:
     """(``_id``, ``band``, ``value``) rows, one per band of each ``_id``
     row of ``sig``; band ``b`` carries ``values[b]``. Every banded LSH
@@ -464,7 +461,7 @@ def minhash_lsh_pairs(
     )
 
     return _jaccard_verify(
-        _shingle_stream(df, id_col, text_col, ngram),
+        _gram_hash_stream(df, id_col, text_col, ngram, "shingle"),
         candidates,
         threshold,
         broadcast_sizes=broadcast_sizes,
@@ -556,7 +553,7 @@ def simhash64(
     throw. Pre-chunk oversized docs upstream (chunk_documents) if they
     must be deduped.
     """
-    toks = F.split(F.trim(F.col(text_col)), "\\s+")
+    toks = _words(F.col(text_col))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     zero = F.array_repeat(F.lit(0).cast("long"), 16)
 
@@ -1240,7 +1237,7 @@ def repeated_spans(
     totals = df.select(
         F.col(id_col).alias("_id"),
         F.greatest(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+")) - n + 1, F.lit(0)
+            F.size(_words(F.col(text_col))) - n + 1, F.lit(0)
         )
         .cast("bigint")
         .alias("n_grams"),
@@ -1472,9 +1469,7 @@ def duplication_profile(
     per_doc = manifest.groupBy(id_col).agg(
         F.sum("span_tokens").cast("bigint").alias("_dup")
     )
-    toks = F.size(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    ).cast("bigint")
+    toks = F.size(_words(F.coalesce(F.col(text_col), F.lit("")))).cast("bigint")
     prof = (
         df.select(F.col(id_col), toks.alias("_tok"))
         .join(per_doc, id_col, "left")
@@ -1539,7 +1534,7 @@ def apply_substring_excision(
     # -1, which would emit n_tokens = -1 and a NULL kept_md5 while the
     # oracle's len(NULL list) is NULL — the "" doc is 1 whitespace
     # token in both engines
-    ws = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    ws = _words(F.coalesce(F.col(text_col), F.lit("")))
     joined = df.select(F.col(id_col), ws.alias("_ws")).join(
         spans, id_col, "left"
     )
@@ -1577,7 +1572,7 @@ def minhash_band_table(
     assert num_hashes % bands == 0
     rows = num_hashes // bands
     sig = minhash_signatures(
-        _shingle_stream(df, id_col, text_col, ngram), num_hashes
+        _gram_hash_stream(df, id_col, text_col, ngram, "shingle"), num_hashes
     )
     band_cols = [
         F.xxhash64(*[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
@@ -1684,7 +1679,7 @@ def incremental_lsh_pairs(
     # intersection via one shingle equi-join restricted to candidates.
     cand_a = candidates.select(F.col("id_a").alias("_id")).distinct()
     cand_b = candidates.select(F.col("id_b").alias("_id")).distinct()
-    s_a = _shingle_stream(
+    s_a = _gram_hash_stream(
         delta.join(
             F.broadcast(cand_a.withColumnRenamed("_id", id_col)),
             id_col,
@@ -1693,8 +1688,9 @@ def incremental_lsh_pairs(
         id_col,
         text_col,
         ngram,
+        "shingle",
     ).distinct()
-    s_b = _shingle_stream(
+    s_b = _gram_hash_stream(
         corpus.join(
             F.broadcast(cand_b.withColumnRenamed("_id", id_col)),
             id_col,
@@ -1703,6 +1699,7 @@ def incremental_lsh_pairs(
         id_col,
         text_col,
         ngram,
+        "shingle",
     ).distinct()
     sizes_a = s_a.groupBy("_id").agg(F.count(F.lit(1)).alias("n_a"))
     sizes_b = s_b.groupBy("_id").agg(F.count(F.lit(1)).alias("n_b"))
@@ -2285,16 +2282,15 @@ def corpus_shingle_overlap(
     error of 128 permutations is ~1/sqrt(128) ~ 0.09). One row out:
     (n_shingles_a, n_shingles_b, n_intersection, jaccard_ppm,
     est_ok)."""
-    from .text import exploded_ngrams
-
     s = (
-        exploded_ngrams(
+        _gram_hash_stream(
             df.select(corpus_col.alias("_corpus"), F.col(text_col)),
             "_corpus",
             text_col,
             ngram,
+            "shingle",
         )
-        .select(F.col("_id").alias("_in_a"), F.xxhash64("g").alias("shingle"))
+        .withColumnRenamed("_id", "_in_a")
         .distinct()
     )
     member = s.groupBy("shingle").agg(
@@ -2378,11 +2374,7 @@ def cross_doc_dup_ratio(
     Short docs (< ngram tokens) emit n_grams=0 with dup_ppm=0 (ANSI
     div-by-zero guarded).
     """
-    from .text import exploded_ngrams
-
-    grams = exploded_ngrams(df, id_col, text_col, ngram).select(
-        "_id", F.xxhash64("g").alias("gh")
-    )
+    grams = _gram_hash_stream(df, id_col, text_col, ngram, "gh")
     per_doc = grams.groupBy("_id", "gh").agg(
         F.count(F.lit(1)).alias("n_pos")
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from .text import _token_stream, _words
 from .util import lineage_checkpoint
 
 KNUTH = 2654435761  # Knuth's 2^32 / phi multiplier
@@ -258,6 +259,17 @@ def shard_assign(
     )
 
 
+def _difficulty_milli(text: Column) -> Column:
+    """Average word length in exact integer milli-units,
+    ``length(trim(text)) * 1000 div`` its :func:`~.text._words` count:
+    the curriculum's difficulty proxy."""
+    return F.call_function(
+        "div",
+        F.length(F.trim(text)).cast("bigint") * 1000,
+        F.size(_words(text)).cast("bigint"),
+    )
+
+
 def curriculum_order(
     df: DataFrame,
     n_phases: int = 4,
@@ -287,10 +299,7 @@ def curriculum_order(
     from .relational import grouped_rank
     d = df.select(
         F.col(id_col).alias("doc_id"),
-        F.expr(
-            f"cast(length(trim({text_col})) as bigint) * 1000"
-            f" div cast(size(split(trim({text_col}), '\\\\s+')) as bigint)"
-        ).alias("difficulty_milli"),
+        _difficulty_milli(F.col(text_col)).alias("difficulty_milli"),
     )
     qs = [i / n_phases for i in range(1, n_phases)]
     bnd = d.agg(
@@ -422,7 +431,7 @@ def token_budget_allocation(
     if token_count_col is not None:
         toks = F.col(token_count_col).cast("bigint")
     else:
-        toks = F.size(F.split(F.trim(F.col(text_col)), "\\s+")).cast("bigint")
+        toks = F.size(_words(F.col(text_col))).cast("bigint")
     counts = (
         df.select(F.col(strat_col), toks.alias("_t"))
         .groupBy(strat_col)
@@ -511,11 +520,9 @@ def dsir_importance(
     broadcast (T, S, V), one broadcast ratio join back onto the token
     stream, one per-doc sum. No self-joins, no windows over the
     corpus. Returns (doc_id, n_tokens, dsir_score_ppm)."""
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        is_target.alias("_tgt"),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    toks = _token_stream(
+        df, text_col, F.col(id_col).alias("doc_id"), is_target.alias("_tgt")
+    )
     counts = toks.groupBy("token").agg(
         F.count_if(F.col("_tgt")).alias("ct"),
         F.count_if(~F.col("_tgt")).alias("cs"),

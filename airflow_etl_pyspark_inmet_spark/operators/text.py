@@ -1,9 +1,24 @@
 """Text-analysis operators for a large-scale training-data pipeline:
-tokenization stats, quality scoring, language-ID heuristic, document
-fingerprinting. All pure `pyspark.sql.functions` compositions — JVM-side,
-codegen'd, linear per-row work, no shuffles — so they scale to any corpus
-by partition parallelism alone.
+token statistics, quality scoring, language ID, fingerprints, corpus
+censuses, n-gram language models and BPE.
 
+Each mechanism the text tier shares is built in one place:
+
+- the whitespace tokenizer: :func:`_words`, the package's one
+  trim-and-split of raw text;
+- the token stream: :func:`_token_stream`, ``(*keep, token)`` rows of
+  the non-empty tokens;
+- word n-grams: :func:`_word_grams`, behind :func:`exploded_ngrams`
+  and :func:`ngram_hash_sets`;
+- the gram-hash stream: :func:`_gram_hash_stream`, the xxhash64 of every
+  word n-gram;
+- bigrams: :func:`_bigrams` (word pairs) and :func:`_hashed_bigrams`
+  (hashed keys), with the per-doc integer mean :func:`_per_doc_mean`
+  of the bigram LM scores.
+
+Per-row features are map-only Column expressions; censuses, tf-idf,
+BM25 and the LM scores aggregate and join; the Misra-Gries sketch runs
+in ``mapInPandas``; BPE training and greedy decoding loop on the driver.
 Regex patterns are kept to the RE2-compatible subset so the same pattern
 is usable in a DuckDB oracle.
 """
@@ -17,6 +32,16 @@ from .util import lineage_checkpoint, lineage_checkpoint_eager
 # Token pattern, BPE-ish: word pieces, digit runs, or single non-space symbols.
 BPE_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
+# Whitespace as the DuckDB oracles see it. RE2's \s (string_split_regex)
+# is [\t\n\f\r ] — Java's \s also matches \x0b — and DuckDB's trim
+# strips the Unicode Zs set, where Spark's default trim strips U+0020 only.
+WS_RE = "[\\t\\n\\f\\r ]+"
+ZS_CHARS = (
+    " \u00a0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u202f\u205f\u3000"
+)
+
 # tiny marker-word inventories for the language-ID heuristic
 LANG_MARKERS = {
     "en": ["the", "and", "of", "a"],
@@ -26,12 +51,29 @@ LANG_MARKERS = {
 }
 
 
+def _words(text: Column) -> Column:
+    """The one whitespace tokenizer, the oracles'
+    ``string_split_regex(trim(text), '\\s+')``: ``text`` stripped of
+    :data:`ZS_CHARS` at both ends and split on :data:`WS_RE` runs. A
+    leading or trailing tab, newline, form feed or carriage return
+    yields an empty first or last token, and NULL text a NULL array."""
+    return F.split(F.trim(text, F.lit(ZS_CHARS)), WS_RE)
+
+
+def _token_stream(df: DataFrame, text_col: str, *keep: Column | str) -> DataFrame:
+    """``(*keep, token)`` rows, one per non-empty :func:`_words` token
+    of ``text_col``: the token stream every census and scorer reads."""
+    return df.select(
+        *keep, F.explode(_words(F.col(text_col))).alias("token")
+    ).filter(F.col("token") != "")
+
+
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace token count + BPE-ish token count + char count."""
     t = F.col(text_col)
     return df.select(
         *df.columns,
-        F.size(F.split(F.trim(t), "\\s+")).cast("bigint").alias("ws_tokens"),
+        F.size(_words(t)).cast("bigint").alias("ws_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(BPE_TOKEN_RE), 0))
         .cast("bigint")
         .alias("bpe_tokens"),
@@ -48,7 +90,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_chars = F.length(t).cast("double")
     n_alpha = (n_chars - F.length(F.regexp_replace(t, "[a-zA-Z]", ""))).cast("double")
     n_punct = (n_chars - F.length(F.regexp_replace(t, "[.,;:!?]", ""))).cast("double")
-    words = F.split(F.trim(t), "\\s+")
+    words = _words(t)
     n_words = F.size(words).cast("double")
     stop = F.lit(["the", "a", "and", "of", "to", "in", "is"])
     n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop, F.lower(w)))).cast(
@@ -71,7 +113,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     A real pipeline swaps in fastText/CLD3 behind the same column contract;
     the plumbing (pure column expr, no shuffle) is the point here.
     """
-    words = F.split(F.lower(F.col(text_col)), "\\s+")
+    words = F.split(F.lower(F.col(text_col)), WS_RE)
     scores = {
         lang: F.size(F.filter(words, lambda w: F.array_contains(F.lit(ms), w)))
         for lang, ms in LANG_MARKERS.items()
@@ -105,18 +147,18 @@ def _word_grams(
     per_gram=lambda g: g,
     elem: str = "string",
 ) -> tuple[DataFrame, Column]:
-    """The one word-n-gram builder: ``(frame, grams)`` where ``frame`` is
-    ``(_id, _ws)`` (``_ws`` = ``split(trim(text))``, materialized once per
-    row, parallelism ensured for small-file scans) and ``grams`` is the
-    guarded array of the doc's n-grams in position order, each passed
-    through ``per_gram`` (``elem`` names its element type).
-    Docs shorter than ``n`` tokens (NULL text included: ``size(split(NULL))``
+    """The one word-n-gram builder: ``(frame, grams)`` where ``frame``
+    is ``(_id, _ws)`` (``_ws`` = :func:`_words` of the text, materialized
+    once per row, parallelism ensured for small-file scans) and
+    ``grams`` is the guarded array of the doc's n-grams in position
+    order, each passed through ``per_gram`` (``elem`` names its element
+    type). Docs shorter than ``n`` tokens (NULL text included: ``size(split(NULL))``
     is -1) get an empty array. Callers put ``grams`` straight into their
     own generator or aggregate over ``frame``."""
     from .util import ensure_parallelism
 
     d = ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
-    d = d.select("_id", F.split(F.trim(F.col(text_col)), "\\s+").alias("_ws"))
+    d = d.select("_id", _words(F.col(text_col)).alias("_ws"))
     ws = F.col("_ws")
     idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
     grams = F.when(
@@ -132,6 +174,64 @@ def exploded_ngrams(
     fingerprinting (built by :func:`_word_grams`)."""
     d, grams = _word_grams(df, id_col, text_col, n)
     return d.select("_id", F.explode(grams).alias("g"))
+
+
+def _gram_hash_stream(
+    df: DataFrame, id_col: str, text_col: str, n: int, out: str, *keep: Column
+) -> DataFrame:
+    """``(_id, out, *keep)`` rows: ``out`` is the xxhash64 of every word
+    n-gram ``g``, duplicates kept, so grams shuffle as 8-byte keys, never
+    strings; ``keep`` are further Columns over ``g``. The MinHash input,
+    the shingle verify stream and the hashed LM keys."""
+    return exploded_ngrams(df, id_col, text_col, n).select(
+        "_id", F.xxhash64("g").alias(out), *keep
+    )
+
+
+def _bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(_id, g, w1, w2)`` rows: every word bigram ``g`` of a doc, in
+    order, with its first and second word."""
+    w = F.split(F.col("g"), " ")
+    return exploded_ngrams(df, id_col, text_col, 2).select(
+        "_id", "g", w[0].alias("w1"), w[1].alias("w2")
+    )
+
+
+def _hashed_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """:func:`_bigrams` on hashed keys, ``(_id, gh, w1h, w2h)``, behind a
+    lineage checkpoint: the one bigram stream the LM scorers count and
+    join back to."""
+    w = F.split(F.col("g"), " ")
+    return _gram_hash_stream(
+        df,
+        id_col,
+        text_col,
+        2,
+        "gh",
+        F.xxhash64(w[0]).alias("w1h"),
+        F.xxhash64(w[1]).alias("w2h"),
+    ).transform(lineage_checkpoint)
+
+
+def _per_doc_mean(
+    scored: DataFrame, id_col: str, value: str, total: str, mean: str
+) -> DataFrame:
+    """Per doc of ``scored`` (``_id``, ``value``): ``n_bigrams``, the
+    integer sum ``total`` of ``value`` and their integer quotient
+    ``mean`` — the tail of every bigram LM scorer."""
+    return (
+        scored.groupBy("_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum(value).alias(total),
+        )
+        .select(
+            F.col("_id").alias(id_col),
+            "n_bigrams",
+            total,
+            F.expr(f"{total} div n_bigrams").alias(mean),
+        )
+    )
 
 
 def ngram_hash_sets(df, id_col: str, text_col: str, n: int):
@@ -183,7 +283,7 @@ def chunk_documents(
     Pure JVM array ops (split -> sequence of starts -> posexplode ->
     slice -> array_join): per-row fan-out with no UDF and no shuffle;
     chunking 100 TB is a map-only stage."""
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = _words(F.col(text_col))
     n = F.size(ws)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
     out = df.select(
@@ -293,14 +393,10 @@ def decontaminate(
     # probe then move (id, int64) rows, never 8-gram strings. Collisions
     # at 64 bits are negligible at any corpus size that fits a cluster
     # (~2e-8 at 1e9 distinct grams), same trade the MinHash path makes.
-    train_grams = (
-        exploded_ngrams(train, id_col, text_col, ngram)
-        .select("_id", F.xxhash64("g").alias("gh"))
-        .distinct()
-    )
+    train_grams = _gram_hash_stream(train, id_col, text_col, ngram, "gh").distinct()
     eval_grams = (
-        exploded_ngrams(eval_df, id_col, text_col, ngram)
-        .select(F.xxhash64("g").alias("gh"))
+        _gram_hash_stream(eval_df, id_col, text_col, ngram, "gh")
+        .select("gh")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
@@ -371,7 +467,7 @@ def repetition_stats(
     """
     from .util import ensure_parallelism
 
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+    ws = _words(F.col(text_col))
     d = ensure_parallelism(
         df.select(F.col(id_col), ws.alias("_ws"))
     ).select(
@@ -447,10 +543,7 @@ def oov_stats(
     dropped before the probe join, so a vocab frame with repeated tokens
     can't multiply matched rows and inflate n_tokens/n_covered.
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col, F.col(id_col).alias("_id"))
     v = vocab.select("token").distinct().withColumn("_in", F.lit(1))
     out = (
         toks.join(F.broadcast(v), "token", "left")
@@ -493,10 +586,7 @@ def unigram_logprob(
     a shared fixed-point ln derived from integer (cnt, n_total); not done
     because no boundary case has been observed on this corpus.
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col, F.col(id_col).alias("_id"))
     # tf feeds both the frequency table and the scoring join; the
     # checkpoint keeps the corpus token explode+aggregate to one pass.
     # freq (vocab-bounded) likewise feeds the join and the total.
@@ -553,10 +643,7 @@ def classifier_score(
     DuckDB ``//`` truncate toward zero (verified, incl. negatives), so
     the oracle matches bit-for-bit.
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col, F.col(id_col).alias("_id"))
     w = weights.groupBy("token").agg(
         F.sum("weight").cast("bigint").alias("_w")
     )
@@ -600,9 +687,7 @@ def vocab_top_terms(
     """
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col)
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     top = counts.orderBy(F.col("freq").desc(), F.col("token").asc()).limit(k)
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
@@ -639,12 +724,7 @@ def bigram_condprob(
     grams never shuffle as strings). Docs with fewer than two tokens
     have no bigrams and emit no row (documented contract).
     """
-    grams = exploded_ngrams(df, id_col, text_col, 2)
-    big = grams.select(
-        "_id",
-        F.xxhash64("g").alias("gh"),
-        F.xxhash64(F.split(F.col("g"), " ")[0]).alias("w1h"),
-    ).transform(lineage_checkpoint)
+    big = _hashed_bigrams(df, id_col, text_col)
     cnt2 = big.groupBy("gh").agg(F.count(F.lit(1)).alias("c2"))
     cnt1 = big.groupBy("w1h").agg(F.count(F.lit(1)).alias("c1"))
     scored = (
@@ -652,19 +732,7 @@ def bigram_condprob(
         .join(cnt1, "w1h")
         .select("_id", F.expr("c2 * 1000000L div c1").alias("p_micro"))
     )
-    return (
-        scored.groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("p_micro").alias("p_sum_micro"),
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            "n_bigrams",
-            "p_sum_micro",
-            F.expr("p_sum_micro div n_bigrams").alias("p_avg_micro"),
-        )
-    )
+    return _per_doc_mean(scored, id_col, "p_micro", "p_sum_micro", "p_avg_micro")
 
 
 def token_lift(
@@ -692,11 +760,9 @@ def token_lift(
     Plan: one bigram explode, three hash aggregates over
     vocabulary-bounded keys, two broadcast marginal joins, global top-k.
     """
-    grams = exploded_ngrams(df, id_col, text_col, 2)
-    b = grams.select(
-        F.split(F.col("g"), " ")[0].alias("w1"),
-        F.split(F.col("g"), " ")[1].alias("w2"),
-    ).transform(lineage_checkpoint)
+    b = _bigrams(df, id_col, text_col).select("w1", "w2").transform(
+        lineage_checkpoint
+    )
     c12 = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = b.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     c2 = b.groupBy("w2").agg(F.count(F.lit(1)).alias("c2"))
@@ -745,12 +811,7 @@ def _apply_bpe_merge(syms: Column, a: str, b: str) -> Column:
     return F.aggregate(syms, F.array().cast("array<string>"), step)
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
+def bpe_train(df: DataFrame, n_merges: int = 8, text_col: str = "text"):
     """BPE tokenizer TRAINING — the step that builds the vocabulary the
     rest of the text family consumes (t16 OOV, t17/t20 LM scoring, t13
     packing all presuppose a tokenizer): ``n_merges`` rounds of
@@ -773,17 +834,12 @@ def bpe_train(
     truncated with a lazy localCheckpoint so round k does not replay
     rounds 1..k-1."""
     words = (
-        df.select(
-            F.explode(
-                F.split(F.trim(F.col(text_col)), r"\s+")
-            ).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
+        _token_stream(df, text_col)
+        .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     cur = words.select(
-        "w", "cnt", F.split("w", "").alias("syms")
+        "token", "cnt", F.split("token", "").alias("syms")
     ).transform(lineage_checkpoint)
 
     spark = df.sparkSession
@@ -812,7 +868,7 @@ def bpe_train(
         a, b, c = best[0]["l"], best[0]["r"], int(best[0]["c"])
         merges.append((rank, a, b, c))
         cur = cur.select(
-            "w", "cnt", _apply_bpe_merge(F.col("syms"), a, b).alias("syms")
+            "token", "cnt", _apply_bpe_merge(F.col("syms"), a, b).alias("syms")
         ).transform(lineage_checkpoint)
     return spark.createDataFrame(
         merges,
@@ -846,16 +902,12 @@ def interp_bigram_score(
     stream adds one hash agg and a broadcast 1-row total. Docs with
     fewer than two tokens emit no row.
     """
-    grams = exploded_ngrams(df, id_col, text_col, 2)
-    big = grams.select(
-        "_id",
-        F.xxhash64("g").alias("gh"),
-        F.xxhash64(F.split(F.col("g"), " ")[0]).alias("w1h"),
-        F.xxhash64(F.split(F.col("g"), " ")[1]).alias("w2h"),
-    ).transform(lineage_checkpoint)
-    uni = exploded_ngrams(df, id_col, text_col, 1).select(
-        F.xxhash64("g").alias("uh")
-    ).transform(lineage_checkpoint)
+    big = _hashed_bigrams(df, id_col, text_col)
+    uni = (
+        _gram_hash_stream(df, id_col, text_col, 1, "uh")
+        .select("uh")
+        .transform(lineage_checkpoint)
+    )
     cnt2 = big.groupBy("gh").agg(F.count(F.lit(1)).alias("c2"))
     cnt1 = big.groupBy("w1h").agg(F.count(F.lit(1)).alias("c1"))
     cntu = uni.groupBy("uh").agg(F.count(F.lit(1)).alias("cu"))
@@ -873,19 +925,7 @@ def interp_bigram_score(
             ).alias("pi_micro"),
         )
     )
-    return (
-        scored.groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("pi_micro").alias("p_sum_micro"),
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            "n_bigrams",
-            "p_sum_micro",
-            F.expr("p_sum_micro div n_bigrams").alias("p_avg_micro"),
-        )
-    )
+    return _per_doc_mean(scored, id_col, "pi_micro", "p_sum_micro", "p_avg_micro")
 
 
 def kneser_ney_bigram_score(
@@ -919,13 +959,7 @@ def kneser_ney_bigram_score(
     types) — two shuffles over O(distinct bigrams) keys plus the t20
     scoring joins; the type total is a broadcast 1-row aggregate. Docs
     with fewer than two tokens emit no row."""
-    grams = exploded_ngrams(df, id_col, text_col, 2)
-    big = grams.select(
-        "_id",
-        F.xxhash64("g").alias("gh"),
-        F.xxhash64(F.split(F.col("g"), " ")[0]).alias("w1h"),
-        F.xxhash64(F.split(F.col("g"), " ")[1]).alias("w2h"),
-    ).transform(lineage_checkpoint)
+    big = _hashed_bigrams(df, id_col, text_col)
     cnt2 = big.groupBy("gh").agg(F.count(F.lit(1)).alias("c2"))
     cnt1 = big.groupBy("w1h").agg(F.count(F.lit(1)).alias("c1"))
     types = (
@@ -956,18 +990,8 @@ def kneser_ney_bigram_score(
             ).alias("pk_micro"),
         )
     )
-    return (
-        scored.groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("pk_micro").alias("pkn_sum_micro"),
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            "n_bigrams",
-            "pkn_sum_micro",
-            F.expr("pkn_sum_micro div n_bigrams").alias("pkn_avg_micro"),
-        )
+    return _per_doc_mean(
+        scored, id_col, "pk_micro", "pkn_sum_micro", "pkn_avg_micro"
     )
 
 
@@ -976,7 +1000,6 @@ def misra_gries_topk(
     k_counters: int = 256,
     top: int = 20,
     text_col: str = "text",
-    guaranteed_only: bool = False,
 ) -> DataFrame:
     """Heavy hitters via a MERGEABLE bounded-state Misra-Gries sketch —
     the streaming/batched alternative to t15's exact vocabulary census
@@ -998,26 +1021,20 @@ def misra_gries_topk(
     carries only sketch survivors (<= k per batch) and their exact
     counts.
 
-    ``guaranteed_only=True`` restricts the emitted top-``top`` to
-    mg_ok rows. A token with global frequency <= N/k has NO survival
-    guarantee, so without the filter a true top-``top`` row could be
-    absent from the candidate set on an adversarial distribution — a
-    data-dependent hole the flag cannot signal because the row is
-    missing, not marked false. Filtered, the emitted set is PROVABLY
-    the exact top-``top`` of all tokens with freq > N/k (guarantee
-    above gives candidates ⊇ that set; the predicate is evaluated on
-    exact re-counts). The default is False — the historical
-    best-effort surface (rows beyond the guarantee included, flagged
-    mg_ok=false) — so existing callers keep their rows; the t28
-    driver query opts in to the certified tier explicitly (r11
-    advice: flipping the default silently shrank callers' output)."""
+    Only mg_ok rows are emitted. A token with global frequency <= N/k
+    has NO survival guarantee, so a true top-``top`` row below that
+    line could be absent from the candidate set on an adversarial
+    distribution — a data-dependent hole no flag can signal because
+    the row is missing, not marked false. Filtered, the emitted set is
+    PROVABLY the exact top-``top`` of all tokens with freq > N/k (the
+    guarantee above gives candidates ⊇ that set; the predicate is
+    evaluated on exact re-counts). ``mg_ok`` stays in the output, TRUE
+    on every row, as the oracle's per-row certificate."""
     from collections.abc import Iterator as _It
 
     import pandas as pd
 
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col)
 
     k = int(k_counters)
 
@@ -1050,9 +1067,7 @@ def misra_gries_topk(
         "freq",
         (F.col("freq") * F.lit(k) > F.col("_n")).alias("mg_ok"),
     )
-    if guaranteed_only:
-        flagged = flagged.filter(F.col("mg_ok"))
-    return flagged.orderBy(
+    return flagged.filter(F.col("mg_ok")).orderBy(
         F.col("freq").desc(), F.col("token").asc()
     ).limit(top)
 
@@ -1079,31 +1094,22 @@ def bpe_encode_census(
     t22 replay contract)."""
     merges = [
         (r["merge_left"], r["merge_right"])
-        for r in bpe_train(df, n_merges, id_col, text_col)
+        for r in bpe_train(df, n_merges, text_col)
         .orderBy("rank")
         .collect()
     ]
-    words = (
-        df.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    syms = F.split("w", "")
+    words = _token_stream(df, text_col).distinct()
+    syms = F.split("token", "")
     for a, b in merges:
         syms = _apply_bpe_merge(syms, a, b)
     wlen = words.select(
-        "w",
-        F.length("w").cast("bigint").alias("_n_chars"),
+        "token",
+        F.length("token").cast("bigint").alias("_n_chars"),
         F.size(syms).cast("bigint").alias("_n_syms"),
     )
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"),
-    ).filter(F.col("w") != "")
+    toks = _token_stream(df, text_col, F.col(id_col).alias("doc_id"))
     return (
-        toks.join(F.broadcast(wlen), "w")
+        toks.join(F.broadcast(wlen), "token")
         .groupBy("doc_id")
         .agg(
             F.sum("_n_chars").alias("n_chars"),
@@ -1150,9 +1156,7 @@ def count_min_cells(
     additive counts, any partition of this stream (shards,
     micro-batches) folds to the identical sketch — the mergeability
     that makes CMS streamable (st12) and shardable."""
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col)
     return toks.select(
         F.explode(
             F.array(
@@ -1200,12 +1204,7 @@ def count_min_census(
     the broadcast sketch cells to surface est vs truth; ``cms_ok``
     certifies the one-sided bound per row.
     """
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token")
-    ).filter(F.col("token") != "")
-
-    def cell(tok_col, j: int):
-        return _cms_cell(tok_col, j, width)
+    toks = _token_stream(df, text_col)
 
     cells = count_min_cells(df, width, depth, text_col)
     sketch = cells.groupBy("j", "c").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1223,7 +1222,7 @@ def count_min_census(
             F.col("c").alias(f"_c{j}"), F.col("cnt").alias(f"_e{j}")
         )
         q = q.join(
-            F.broadcast(s_j), cell(F.col("token"), j) == F.col(f"_c{j}")
+            F.broadcast(s_j), _cms_cell(F.col("token"), j, width) == F.col(f"_c{j}")
         )
         e_j = F.col(f"_e{j}")
         est = e_j if est is None else F.least(est, e_j)
@@ -1266,7 +1265,7 @@ def vocab_growth(
 
     P = int(n_checkpoints)
     t = F.col(text_col)
-    toks_arr = F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != "")
+    toks_arr = F.filter(_words(t), lambda x: x != "")
     firsts = (
         df.select(
             F.col(id_col).alias("did"),
@@ -1344,9 +1343,7 @@ def zipf_coverage(
     through decimal(38,0) before the exact integer division, so the
     ppm cannot wrap at any corpus size (the x6/t30 contract).
     """
-    toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col)
     cnt = toks.groupBy("token").agg(
         F.count(F.lit(1)).alias("freq")
     ).transform(lineage_checkpoint)  # feeds top-k AND the total
@@ -1417,9 +1414,7 @@ def phrase_occurrences(
     Docs with fewer than ``phrase_len`` tokens produce no postings
     anchors and fall out naturally.
     """
-    toks_arr = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    toks_arr = F.filter(_words(F.col(text_col)), lambda x: x != "")
     base = df.select(F.col(id_col), toks_arr.alias("_toks"))
 
     gram_parts = " , ".join(f"_toks[i + {j}]" for j in range(phrase_len))
@@ -1489,9 +1484,7 @@ def readability_scores(
     any other per-doc feature. Products stay < 2^53 for any document
     under ~10^12 words, far past a single row's practical bound."""
     t = F.col(text_col)
-    words = F.greatest(
-        F.size(F.split(F.trim(t), r"\s+")), F.lit(1)
-    ).cast("bigint")
+    words = F.greatest(F.size(_words(t)), F.lit(1)).cast("bigint")
     sentences = F.greatest(
         F.size(F.regexp_extract_all(t, F.lit(r"[.!?]+"), F.lit(0))),
         F.lit(1),
@@ -1721,31 +1714,25 @@ def bm25_topk(
 
     from .util import ensure_parallelism
 
-    tk = (
-        ensure_parallelism(
-            df.select(F.col(id_col).alias("_id"), F.col(text_col))
-        )
-        .select(
-            "_id",
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-        )
-        .where(F.col("tok") != "")
-        .transform(lineage_checkpoint_eager)  # consumers: dl, census, tf
-    )
+    tk = _token_stream(
+        ensure_parallelism(df.select(F.col(id_col).alias("_id"), F.col(text_col))),
+        text_col,
+        "_id",
+    ).transform(lineage_checkpoint_eager)  # consumers: dl, census, tf
     dl = tk.groupBy("_id").agg(F.count(F.lit(1)).alias("dl"))
     terms = (
-        tk.groupBy("tok")
+        tk.groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("tok"))
+        .orderBy(F.desc("freq"), F.asc("token"))
         .limit(n_terms)
-        .select("tok")
+        .select("token")
     )
     tf = (
-        tk.join(F.broadcast(terms), "tok")
-        .groupBy("_id", "tok")
+        tk.join(F.broadcast(terms), "token")
+        .groupBy("_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df_t"))
+    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df_t"))
     scal = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("_total"),
@@ -1754,7 +1741,7 @@ def bm25_topk(
     )
     scored = (
         tf.join(dl, "_id")
-        .join(F.broadcast(dfreq), "tok")
+        .join(F.broadcast(dfreq), "token")
         .crossJoin(F.broadcast(scal))
         .select(
             "_id",
@@ -1806,12 +1793,8 @@ def greedy_decode(
 
     Returns (step, token), step 0-based.
     """
-    grams = exploded_ngrams(df, id_col, text_col, 2)
     big = (
-        grams.select(
-            F.substring_index("g", " ", 1).alias("w1"),
-            F.substring_index("g", " ", -1).alias("w2"),
-        )
+        _bigrams(df, id_col, text_col)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1832,21 +1815,21 @@ def greedy_decode(
         .select("w1", F.expr("substring(_k, 11)").alias("nxt"))
         .transform(lineage_checkpoint_eager)  # n_steps bounded lookups below
     )
-    # drop the empty-string token that exploded_ngrams(n=1) emits for
-    # empty/whitespace-only docs (the oracle's toks CTE filters those
-    # docs; '' sorts first, so a frequency tie would diverge the seed)
-    uni = exploded_ngrams(df, id_col, text_col, 1).filter(F.col("g") != "")
+    # the seed is the most frequent non-empty token: '' (the one token
+    # of an empty doc, which the oracle's toks CTE drops) would sort
+    # first on a frequency tie
     seed_row = (
-        uni.groupBy("g")
+        _token_stream(df, text_col)
+        .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("g"))
+        .orderBy(F.desc("c"), F.asc("token"))
         .limit(1)
         .collect()
     )
     spark = df.sparkSession
     if not seed_row:
         return spark.createDataFrame([], "step int, token string")
-    cur = seed_row[0]["g"]
+    cur = seed_row[0]["token"]
     path = [(0, cur)]
     for step in range(1, n_steps):
         nxt = best.filter(F.col("w1") == cur).collect()  # bounded: 1 row
@@ -1902,10 +1885,7 @@ def zipf_census(
     because the counters are a SUM monoid: the st22 streaming tier
     folds per-micro-batch censuses into this frame and derives the
     profile at read time."""
-    toks = df.select(
-        F.col(group_col),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("token"),
-    ).filter(F.col("token") != "")
+    toks = _token_stream(df, text_col, F.col(group_col))
     return toks.groupBy(group_col, "token").agg(
         F.count(F.lit(1)).cast("bigint").alias("freq")
     )

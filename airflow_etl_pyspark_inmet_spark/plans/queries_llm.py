@@ -27,6 +27,7 @@ from ..operators.multimodal import (
 )
 from ..operators.similarity import cosine_topk, lsh_cosine_topk
 from ..operators.text import (
+    _words,
     decontaminate,
     fingerprint,
     lang_id,
@@ -302,9 +303,7 @@ def c5_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     text_toks = docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("text_tokens"),
+        F.size(_words(F.col("text"))).cast("bigint").alias("text_tokens"),
     )
     tot = media.join(text_toks, "doc_id").select(
         "doc_id",
@@ -791,7 +790,7 @@ def t18_intra_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle mirrors the construction with list_slice."""
     from ..operators.curation import intra_doc_dedup
 
-    ws = F.split(F.trim(F.col("text")), r"\s+")
+    ws = _words(F.col("text"))
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
@@ -1757,9 +1756,7 @@ def m13_multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     text_toks = docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("text_tokens"),
+        F.size(_words(F.col("text"))).cast("bigint").alias("text_tokens"),
     )
     tot = media.join(text_toks, "doc_id").select(
         "doc_id",
@@ -2261,11 +2258,7 @@ def t28_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import misra_gries_topk
 
     docs = _t(spark, sf_dir, "documents")
-    # certified tier only: the emitted set is provably the exact
-    # top-20 of tokens above N/k (guaranteed_only is opt-in, r11
-    # advice — the operator default stays best-effort)
-    return misra_gries_topk(docs, k_counters=256, top=20,
-                            guaranteed_only=True)
+    return misra_gries_topk(docs, k_counters=256, top=20)
 
 
 def x6_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2529,7 +2522,7 @@ def x11_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import pareto_frontier_2d
 
     docs = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.col("text")), r"\s+")
+    ws = _words(F.col("text"))
     toks = F.filter(ws, lambda t: t != "")
     m = docs.select(
         "doc_id",
@@ -3763,7 +3756,7 @@ def c15_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, one per-source agg; whitespace tokens = the t1 contract."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     ch = F.md5(F.col("text").cast("binary"))
-    toks = F.size(F.split(F.trim(F.col("text")), "\\s+")).cast("bigint")
+    toks = F.size(_words(F.col("text"))).cast("bigint")
     base = docs.select(
         "doc_id", "source", ch.alias("_ch"), toks.alias("_t")
     )
@@ -3791,15 +3784,11 @@ def st20_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-scan min/max — out-of-range clamps to the edge bins, the
     operator's documented re-bin signal). The live tier under the q115
     quantile sketch."""
+    from ..operators.mixing import _difficulty_milli
     from ..streaming.windows import streaming_histogram
 
     docs = _t(spark, sf_dir, "documents")
-    diff = docs.select(
-        F.expr(
-            "cast(length(trim(text)) as bigint) * 1000"
-            " div cast(size(split(trim(text), '\\\\s+')) as bigint)"
-        ).alias("difficulty_milli")
-    )
+    diff = docs.select(_difficulty_milli(F.col("text")).alias("difficulty_milli"))
     return streaming_histogram(
         spark, diff, "difficulty_milli", n_bins=32, lo=0, hi=16000
     )

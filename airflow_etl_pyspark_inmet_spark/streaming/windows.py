@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import read_nanos_ts
+from ..operators.text import _words
 from ..operators.util import lineage_checkpoint
 
 
@@ -1365,7 +1366,7 @@ def streaming_effective_tokens(
 
     Returns (source, n_docs, n_kept, raw_tokens, kept_tokens).
     """
-    toks = F.size(F.split(F.trim(F.col(text_col)), "\\s+")).cast("bigint")
+    toks = F.size(_words(F.col(text_col))).cast("bigint")
     src = docs.select(
         F.col(id_col).cast("bigint").alias("_id"),
         F.col(source_col).alias("_src"),

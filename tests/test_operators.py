@@ -2364,26 +2364,13 @@ def test_misra_gries_survives_planted_heavy_hitter(spark):
 
     rows = [("hot",)] * 50 + [(f"rare{i}",) for i in range(100)]
     docs = spark.createDataFrame(rows, "text string").coalesce(1)
-    # guaranteed_only=True: ONLY the certified tier — the emitted set
-    # is provably exact, rare tokens are excluded even though top=5
-    # has room (below N/k there is no survival guarantee, so emitting
-    # them is data-dependent). Opt-in since r12 (r11 advice: the True
-    # default silently shrank existing callers' output).
-    out = misra_gries_topk(
-        docs, k_counters=8, top=5, guaranteed_only=True
-    ).collect()
+    # ONLY the certified tier is emitted — the set is provably exact,
+    # rare tokens are excluded even though top=5 has room (below N/k
+    # there is no survival guarantee, so emitting them is data-dependent)
+    out = misra_gries_topk(docs, k_counters=8, top=5).collect()
     assert [(r["token"], r["freq"], r["mg_ok"]) for r in out] == [
         ("hot", 50, True)  # 50*8 > 150
     ]
-    # best-effort mode keeps uncertified survivors, flagged false
-    out2 = misra_gries_topk(
-        docs, k_counters=8, top=5, guaranteed_only=False
-    ).collect()
-    by_tok = {r["token"]: r for r in out2}
-    assert by_tok["hot"]["freq"] == 50 and by_tok["hot"]["mg_ok"]
-    for r in out2:
-        if r["token"] != "hot":
-            assert r["freq"] == 1 and not r["mg_ok"]
 
 
 def test_dsir_importance_hand_case(spark):

@@ -1038,3 +1038,68 @@ def test_shingle_family_unions_repeated_ids_like_duckdb_property(spark, rows):
     got = containment_pairs(df, threshold_ppm=1).collect()
     assert {tuple(r) for r in got} == containment
     con.close()
+
+
+# The characters on which Spark's default trim/split and DuckDB's
+# trim/string_split_regex can disagree: the Unicode Zs set (DuckDB's
+# trim strips all of it, Spark's default trim only U+0020) and the
+# ASCII controls around RE2's \s = [\t\n\f\r ] (Java's \s adds \x0b).
+_TOKENIZER_ALPHABET = (
+    "ab\t\n\x0b\x0c\r \u00a0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u202f\u205f\u3000"
+)
+
+
+@settings(**_SETTINGS)
+@given(st.lists(st.text(_TOKENIZER_ALPHABET, max_size=12), min_size=1, max_size=20))
+def test_words_split_like_duckdb_property(spark, texts):
+    """``text._words``, the engine's one tokenizer, returns exactly the
+    oracles' ``string_split_regex(trim(text), '\\s+')`` array for every
+    string over the tokenizer alphabet, NULL and ``""`` included."""
+    import duckdb
+    import pandas as pd
+
+    from airflow_etl_pyspark_inmet_spark.operators.text import _words
+
+    rows = list(enumerate([*texts, None, ""]))
+    df = spark.createDataFrame(rows, "i int, text string")
+    got = {r["i"]: r["w"] for r in df.select("i", _words(F.col("text")).alias("w")).collect()}
+    con = duckdb.connect()
+    con.register("d", pd.DataFrame(rows, columns=["i", "text"]))
+    want = dict(
+        con.sql(r"SELECT i, string_split_regex(trim(text), '\s+') FROM d").fetchall()
+    )
+    con.close()
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
+    st.lists(
+        st.text(_TOKENIZER_ALPHABET, min_size=1, max_size=12),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_oov_stats_matches_oracle_sql_on_unicode_whitespace_property(spark, texts):
+    """t16 — ``oov_stats`` against the corpus's own top-40
+    ``vocab_top_terms`` — equals its registry oracle SQL, run in DuckDB,
+    on corpora over the tokenizer alphabet."""
+    import duckdb
+    import pandas as pd
+
+    from airflow_etl_pyspark_inmet_spark.operators.text import (
+        oov_stats,
+        vocab_top_terms,
+    )
+    from airflow_etl_pyspark_inmet_spark.plans.registry import ORACLES
+
+    rows = list(enumerate(texts))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {tuple(r) for r in oov_stats(docs, vocab_top_terms(docs, k=40)).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = set(con.sql(ORACLES["t16_oov_stats"]).fetchall())
+    con.close()
+    assert got == want

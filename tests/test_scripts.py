@@ -3,7 +3,8 @@ import must exist, so a script left pointing at a deleted module fails
 here instead of on its next manual run; the package checkpoints
 lineage only through ``operators.util.lineage_checkpoint``; the ANN
 tier ranks and routes in one place each, with no ``assigner`` option;
-and the dedup tier builds each of its shared mechanisms once."""
+and the dedup and text tiers build each of their shared mechanisms
+once."""
 
 from __future__ import annotations
 
@@ -154,23 +155,62 @@ def test_ann_scans_flag_copies(tmp_path):
 
 DEDUP = PACKAGE / "operators" / "dedup.py"
 
-# the helper that owns each dedup-tier mechanism -> (a source pattern
-# only a copy of that mechanism contains, scope under the package)
-DEDUP_TIER_MECHANISMS = {
-    "text._word_grams": ("F.sequence(F.lit(0), F.greatest(F.size(", "operators"),
-    "dedup._stack_bands": ('F.lit(b).alias("band")', "operators/dedup.py"),
-    "dedup._gram_census": ('F.min(F.struct("_id", "pos"))', "."),
-    "dedup._jaccard": ('F.col("n_a") + F.col("n_b") -', "operators/dedup.py"),
+# the helper that owns each shared mechanism -> (its tier, a source
+# pattern only a copy of that mechanism contains, scope under the
+# package, the copies allowed in that scope: 0 where the owner reaches
+# the pattern through a lower helper, 2 for the bigram split that both
+# the string and the hashed bigram stream spell out)
+SHARED_MECHANISMS = {
+    "text._word_grams": (
+        "dedup",
+        "F.sequence(F.lit(0), F.greatest(F.size(",
+        "operators",
+        1,
+    ),
+    "dedup._stack_bands": ("dedup", 'F.lit(b).alias("band")', "operators/dedup.py", 1),
+    "dedup._gram_census": ("dedup", 'F.min(F.struct("_id", "pos"))', ".", 1),
+    "dedup._jaccard": (
+        "dedup",
+        'F.col("n_a") + F.col("n_b") -',
+        "operators/dedup.py",
+        1,
+    ),
     "dedup._salted_hash60": (
+        "dedup",
         '_portable_hash60(F.concat(F.lit(f"{i}:")',
         "operators/dedup.py",
+        1,
     ),
-    "dedup._int64_gram_tiles": ("np.floor(V * scale)", "operators/dedup.py"),
+    "dedup._int64_gram_tiles": (
+        "dedup",
+        "np.floor(V * scale)",
+        "operators/dedup.py",
+        1,
+    ),
     "dedup._excision_spans": (
+        "dedup",
         'Window.partitionBy("_id").orderBy("pos")',
         "operators/dedup.py",
+        1,
     ),
+    "text._words": ("text", "F.split(F.trim(", ".", 1),
+    # the tokenizer spelled as SQL text inside F.expr
+    "text._words-sql": ("text", "split(trim(", ".", 0),
+    "text._token_stream": ("text", "F.explode(F.split(F.trim(", ".", 0),
+    "text._gram_hash_stream": ("text", 'F.xxhash64("g")', "operators", 1),
+    "text._bigrams": ("text", 'F.split(F.col("g"), " ")', "operators/text.py", 2),
+    "text._bigrams-substring_index": (
+        "text",
+        'F.substring_index("g"',
+        "operators/text.py",
+        0,
+    ),
+    "text._per_doc_mean": ("text", "div n_bigrams", "operators/text.py", 1),
 }
+
+
+def tier(name: str) -> list[str]:
+    return [owner for owner, m in SHARED_MECHANISMS.items() if m[0] == name]
 
 
 def pattern_copies(root: Path, pattern: str) -> dict[str, int]:
@@ -188,11 +228,20 @@ def pattern_copies(root: Path, pattern: str) -> dict[str, int]:
     return {name: n for name, n in counts.items() if n}
 
 
-@pytest.mark.parametrize("owner", DEDUP_TIER_MECHANISMS)
-def test_dedup_tier_builds_each_mechanism_once(owner):
-    pattern, scope = DEDUP_TIER_MECHANISMS[owner]
+def assert_built_once(owner: str) -> None:
+    _, pattern, scope, allowed = SHARED_MECHANISMS[owner]
     copies = pattern_copies(PACKAGE / scope, pattern)
-    assert sum(copies.values()) == 1, f"build it through {owner}: {copies}"
+    assert sum(copies.values()) == allowed, f"build it through {owner}: {copies}"
+
+
+@pytest.mark.parametrize("owner", tier("dedup"))
+def test_dedup_tier_builds_each_mechanism_once(owner):
+    assert_built_once(owner)
+
+
+@pytest.mark.parametrize("owner", tier("text"))
+def test_text_tier_builds_each_mechanism_once(owner):
+    assert_built_once(owner)
 
 
 def test_dedup_tier_hashes_md5_prefixes_in_one_place():
