@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import _words
+from .text import WS_CHARS, WS_RE, ZS_CHARS, _words
 
 # RE2- and Java-regex-compatible PII patterns (no backrefs, no lookaround)
 # so the same pattern string runs in Spark (Java util.regex) and in the
@@ -276,7 +276,7 @@ def pack_counts(
 
 
 # URL pattern, RE2-compatible: scheme + non-space run.
-URL_RE = "https?://[^\\s]+"
+URL_RE = f"https?://[^{WS_CHARS}]+"
 
 
 def strip_boilerplate(
@@ -305,7 +305,7 @@ def strip_boilerplate(
         n = F.size(F.regexp_extract_all(out, F.lit(pat), 0))
         n_runs = n if n_runs is None else n_runs + n
         out = F.regexp_replace(out, pat, ch)
-    cleaned = F.trim(F.regexp_replace(out, "\\s+", " "))
+    cleaned = F.trim(F.regexp_replace(out, WS_RE, " "), F.lit(ZS_CHARS))
     return df.select(
         F.col(id_col),
         n_urls.cast("bigint").alias("n_urls"),

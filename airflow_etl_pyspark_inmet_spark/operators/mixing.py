@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from .text import _token_stream, _words
+from .text import ZS_CHARS, _token_stream, _words
 from .util import lineage_checkpoint
 
 KNUTH = 2654435761  # Knuth's 2^32 / phi multiplier
@@ -265,7 +265,7 @@ def _difficulty_milli(text: Column) -> Column:
     the curriculum's difficulty proxy."""
     return F.call_function(
         "div",
-        F.length(F.trim(text)).cast("bigint") * 1000,
+        F.length(F.trim(text, F.lit(ZS_CHARS))).cast("bigint") * 1000,
         F.size(_words(text)).cast("bigint"),
     )
 

@@ -29,18 +29,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from .util import lineage_checkpoint, lineage_checkpoint_eager
 
-# Token pattern, BPE-ish: word pieces, digit runs, or single non-space symbols.
-BPE_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
-
 # Whitespace as the DuckDB oracles see it. RE2's \s (string_split_regex)
 # is [\t\n\f\r ] — Java's \s also matches \x0b — and DuckDB's trim
 # strips the Unicode Zs set, where Spark's default trim strips U+0020 only.
-WS_RE = "[\\t\\n\\f\\r ]+"
+# Every whitespace rule uses these in place of Java's \s and F.trim(x).
+WS_CHARS = "\\t\\n\\f\\r "
+WS_RE = f"[{WS_CHARS}]+"
 ZS_CHARS = (
     " \u00a0\u1680"
     + "".join(map(chr, range(0x2000, 0x200B)))
     + "\u202f\u205f\u3000"
 )
+
+# Token pattern, BPE-ish: word pieces, digit runs, or single non-space symbols.
+BPE_TOKEN_RE = f"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9{WS_CHARS}]"
 
 # tiny marker-word inventories for the language-ID heuristic
 LANG_MARKERS = {
@@ -515,10 +517,11 @@ def normalize_text(
     all JVM regexp ops, map-only."""
     cleaned = F.trim(
         F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", ""),
-            r"\s+",
+            F.regexp_replace(F.lower(F.col(text_col)), f"[^a-z0-9{WS_CHARS}]", ""),
+            WS_RE,
             " ",
-        )
+        ),
+        F.lit(ZS_CHARS),
     )
     return df.select(F.col(id_col), cleaned.alias("norm_text"))
 

@@ -188,7 +188,6 @@ def run_pipeline(
     spark: SparkSession,
     input_glob: str,
     out_dir: str | None = None,
-    retries: int = 1,
 ) -> dict[str, DataFrame]:
     """Full pipeline with the same dependency shape as the reference DAG
     (dag_inmet.py:209-220): ingest -> dims || fact -> daily agg -> monthly
@@ -205,10 +204,11 @@ def run_pipeline(
     Task-level resilience, mirroring the DAG's per-task retry semantics
     (dag_inmet.py default_args) without Airflow: each write is an
     IDEMPOTENT overwrite (mode=overwrite, fixed paths), so a write that
-    dies midway can be re-run — here, up to ``retries`` times — without
-    duplicating or corrupting output; a re-run of the whole pipeline is
-    likewise a no-op-shaped overwrite, the same contract the reference
-    gets from `CREATE OR REPLACE` + write_pandas(overwrite)."""
+    dies midway is re-run once (:data:`_WRITE_RETRIES`) without
+    duplicating or corrupting output; a plan or config error
+    (``AnalysisException``) raises at once. A re-run of the whole
+    pipeline is likewise a no-op-shaped overwrite, the same contract
+    the reference gets from `CREATE OR REPLACE` + write_pandas(overwrite)."""
 
     def table(name: str, df: DataFrame) -> DataFrame:
         if not out_dir:
@@ -216,10 +216,10 @@ def run_pipeline(
         path = f"{out_dir}/{name}"
         if name == "previsoes":
             df = df.withColumn("ano", F.year("data_medicao"))
-            _write(df.write.mode("overwrite").partitionBy("ano"), path, retries)
+            _write(df.write.mode("overwrite").partitionBy("ano"), path)
             # the schema is pinned: an unpinned read runs an inference job
             return spark.read.schema(df.schema).parquet(path).drop("ano")
-        _write(df.write.mode("overwrite"), path, retries)
+        _write(df.write.mode("overwrite"), path)
         return spark.read.schema(df.schema).parquet(path)
 
     previsoes = table("previsoes", build_previsoes(spark, input_glob))
@@ -240,13 +240,17 @@ def run_pipeline(
     }
 
 
-def _write(writer, path: str, retries: int) -> None:
-    """``writer.parquet(path)``, retried up to ``retries`` times on a
-    transient failure."""
+# re-runs of a failed table write, the DAG's per-task retry count
+_WRITE_RETRIES = 1
+
+
+def _write(writer, path: str) -> None:
+    """``writer.parquet(path)``, retried up to :data:`_WRITE_RETRIES`
+    times on a transient failure."""
     from pyspark.errors import AnalysisException, IllegalArgumentException
 
     last: Exception | None = None
-    for _attempt in range(retries + 1):
+    for _attempt in range(_WRITE_RETRIES + 1):
         try:
             writer.parquet(path)
             return
@@ -258,5 +262,5 @@ def _write(writer, path: str, retries: int) -> None:
         except Exception as e:  # transient executor/FS failure
             last = e
     raise RuntimeError(
-        f"pipeline write {path} failed after {retries + 1} attempts"
+        f"pipeline write {path} failed after {_WRITE_RETRIES + 1} attempts"
     ) from last

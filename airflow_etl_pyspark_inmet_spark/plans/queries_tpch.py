@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from ..operators.util import lineage_checkpoint
+from ..operators.util import lineage_checkpoint, lineage_checkpoint_eager
 
 from .queries_relational import _t
 
@@ -1269,12 +1269,15 @@ def c7_snapshot_merge_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     update/insert/delete semantics — through the manifest-commit
     storage layer — equal the declarative CDC apply bit for bit.
     The table lands in a fresh temp dir per invocation (idempotent
-    re-runs); sf0.01-scale footprint."""
+    re-runs); the small monthly aggregate is materialized eagerly and
+    the dir removed before returning, so no call leaves files behind."""
+    import shutil
     import tempfile
 
     from .snapshot import snapshot_merge, snapshot_read, snapshot_write
 
-    t = tempfile.mkdtemp(prefix="c7snap") + "/orders"
+    tmp = tempfile.mkdtemp(prefix="c7snap")
+    t = tmp + "/orders"
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -1303,14 +1306,14 @@ def c7_snapshot_merge_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = (
         F.col("o_totalprice").cast("decimal(18,2)") * 100
     ).cast("bigint")
-    return (
+    monthly = lineage_checkpoint_eager(
         applied.groupBy(
             F.year("o_orderdate").cast("int").alias("ano"),
             F.month("o_orderdate").cast("int").alias("mes"),
-        )
-        .agg(
+        ).agg(
             F.sum(cents).alias("price_cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("ano", "mes")
     )
+    shutil.rmtree(tmp)
+    return monthly.orderBy("ano", "mes")

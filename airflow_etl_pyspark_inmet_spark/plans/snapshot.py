@@ -10,17 +10,19 @@ the core of the Iceberg/Delta table format, miniaturized:
 - **Immutable data files.** Every write lands a NEW directory of
   parquet files under ``<table>/data/``; nothing is updated in place.
 - **Manifest-as-commit.** A snapshot is a JSON manifest listing its
-  data files (with per-file partition values). Committing = renaming
-  the finished manifest from a temp name to ``manifests/v-N.json`` —
-  the HDFS/posix rename either fully succeeds or fully fails, and
-  CANNOT overwrite an existing file, so two writers racing on the same
-  version N conflict deterministically: exactly one wins, the loser
-  retries on N+1 (optimistic concurrency — the same protocol Iceberg
-  uses with its catalog swap and Delta with its _delta_log rename).
+  data files (with per-file partition values). Committing = publishing
+  the finished manifest from a temp name at ``manifests/v-N.json`` with
+  a primitive that either fully succeeds or fully fails and CANNOT
+  overwrite an existing file: ``link(2)`` on ``file:``, the
+  no-overwrite rename on HDFS-like stores. Two writers racing on the
+  same version N conflict deterministically: exactly one wins, the
+  loser retries on N+1 (optimistic concurrency — the same protocol
+  Iceberg uses with its catalog swap and Delta with its _delta_log
+  rename).
 - **Readers are snapshot-isolated.** A reader lists the manifests,
   takes the highest committed N (or a requested older one — time
   travel), and reads exactly that file set. In-flight writes are
-  invisible until their rename lands.
+  invisible until their manifest is published.
 - **MERGE is copy-on-write with partition pruning.** Matched rows
   update, source-only rows insert, ``delete_col`` rows delete. With a
   ``partition_col`` the rewrite touches ONLY the partitions present in
@@ -44,15 +46,33 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST_FMT = "v-{n:012d}.json"
 _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path, JVM view) of ``path``: the storage
+    tier's one filesystem handle, for snapshot and catalog tables alike."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+def _data_files(fs, root):
+    """FileStatus of every non-hidden ``.parquet`` file under ``root``
+    (one recursive listing, one round trip per listing page); nothing
+    when ``root`` does not exist. Skips ``_SUCCESS`` and dot-files such
+    as checksums."""
+    if not fs.exists(root):
+        return
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        name = st.getPath().getName()
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            yield st
 
 
 def _write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -85,12 +105,28 @@ def _list_manifest_versions(spark: SparkSession, table: str) -> list[int]:
     return sorted(versions)
 
 
+def _manifest_path(table: str, version: int) -> str:
+    return f"{table}/manifests/{_MANIFEST_FMT.format(n=version)}"
+
+
 def _read_manifest(spark: SparkSession, table: str, version: int) -> dict:
-    return json.loads(
-        _read_text(
-            spark, f"{table}/manifests/{_MANIFEST_FMT.format(n=version)}"
+    return json.loads(_read_text(spark, _manifest_path(table, version)))
+
+
+def _manifest(spark: SparkSession, table: str, version: int | None = None) -> dict:
+    """The committed manifest of ``table`` at ``version`` (the latest
+    when None). Raises FileNotFoundError when the table has no commit
+    or lacks that version."""
+    versions = _list_manifest_versions(spark, table)
+    if not versions:
+        raise FileNotFoundError(f"no committed snapshots at {table}")
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise FileNotFoundError(
+            f"snapshot v{version} of {table} not found (have {versions})"
         )
-    )
+    return _read_manifest(spark, table, version)
 
 
 def _commit_manifest(
@@ -112,12 +148,10 @@ def _commit_manifest(
     fully-written temp file to the final name atomically fails with
     EEXIST when the version is taken, and readers can never observe a
     partially-written manifest (the link exposes completed bytes)."""
-    fs, _, jvm = _fs(spark, table)
     tmp = f"{table}/manifests/.tmp-{uuid.uuid4().hex}"
     _write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    dst_str = f"{table}/manifests/{_MANIFEST_FMT.format(n=version)}"
-    dst = jvm.org.apache.hadoop.fs.Path(dst_str)
+    fs, src, jvm = _fs(spark, tmp)
+    dst = _fs(spark, _manifest_path(table, version))[1]
 
     def _conflict():
         fs.delete(src, False)
@@ -149,9 +183,7 @@ def _commit_manifest(
             _conflict()
 
 
-def _manifest_schema(man: dict):
-    from pyspark.sql.types import StructType
-
+def _manifest_schema(man: dict) -> StructType:
     return StructType.fromJson(json.loads(man["schema_json"]))
 
 
@@ -183,13 +215,8 @@ def _land_data_files(
     writer.save(data_dir)
     fs, root, _ = _fs(spark, data_dir)
     entries: list[dict] = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
+    for st in _data_files(fs, root):
         path = st.getPath().toString()
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
         part = None
         if partition_col is not None:
             seg = st.getPath().getParent().getName()
@@ -255,78 +282,53 @@ def snapshot_read(
     tests) — but the manifest prune additionally skips their driver-
     side listing, the right call when a 10k-partition table serves a
     3-partition query."""
-    versions = _list_manifest_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots at {table}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"snapshot v{version} of {table} not found (have {versions})"
-        )
-    man = _read_manifest(spark, table, version)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(man["schema_json"]))
+    man = _manifest(spark, table, version)
     files = man["files"]
     if partitions is not None:
         if man.get("partition_col") is None:
             raise ValueError(
                 f"{table} is unpartitioned; partitions= is not applicable"
             )
-        # Normalize requested values with the SAME engine-side
-        # CAST(value AS STRING) encoding the manifest stores (Python
-        # str(True) would yield "True" vs the stored "true"; dates,
-        # floats and decimals have similar drift). One bounded local
-        # job over len(partitions) values, mirroring snapshot_merge's
-        # touched-partition collection.
-        want = {_NULL_PART for v in partitions if v is None or v == ""}
-        typed = [v for v in partitions if not (v is None or v == "")]
-        if typed:
-            norm = (
-                spark.createDataFrame(
-                    [(v,) for v in typed],
-                    schema=f"_v {man['partition_type']}",
-                )
-                .select(F.col("_v").cast("string").alias("_p"))
-                .collect()
-            )
-            want |= {r["_p"] for r in norm if r["_p"] is not None}
-        files = [f for f in files if f["partition"] in want]
-    paths = [f["path"] for f in files]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    if man.get("partition_col") is not None:
-        return _read_partitioned_files(
-            spark, files, man["partition_col"], man["partition_type"],
-            schema,
+        # Python str(True) would yield "True" vs the stored "true";
+        # dates, floats and decimals drift too. One bounded local job
+        # over len(partitions) values; '' cannot ride a typed column,
+        # so it enters as the NULL it encodes to.
+        requested = spark.createDataFrame(
+            [(None if v == "" else v,) for v in partitions],
+            schema=f"_v {man['partition_type']}",
         )
-    # reading WITH the manifest schema (not file-inferred) makes mixed
-    # physical schemas safe: files written before a schema-evolving
-    # MERGE simply surface NULL for the later-added columns
-    return spark.read.schema(schema).parquet(*paths)
+        want = {r["_p"] for r in _partition_strings(requested).collect()}
+        files = [f for f in files if f["partition"] in want]
+    return _scan(spark, man, files)
 
 
-def _read_partitioned_files(
-    spark: SparkSession,
-    files: list[dict],
-    pcol: str,
-    ptype: str,
-    schema=None,
-) -> DataFrame:
-    """Read manifest entries with the partition value (encoded in the
-    directory name) reconstructed as a typed column — one literal per
-    partition group, so the value survives round trips with its
-    original type (the dir name alone would stringify it). ``schema``
-    (the manifest's logical schema, partition column included) pins the
-    read so pre-evolution files surface NULL for later-added columns."""
-    from pyspark.sql.types import StructType
+def _partition_strings(values: DataFrame) -> DataFrame:
+    """One-column ``values`` in the manifest's partition encoding, as
+    column ``_p``: the engine's ``CAST(value AS STRING)`` — matching
+    the unescaped dir-name encoding _land_data_files records — never
+    Python str(), whose repr drifts for timestamps and decimals. NULL
+    and '' land in the Hive default partition."""
+    enc = values.select(F.col(values.columns[0]).cast("string").alias("_p"))
+    p = F.col("_p")
+    return enc.select(
+        F.when(p.isNull() | (p == ""), F.lit(_NULL_PART)).otherwise(p).alias("_p")
+    )
 
-    data_schema = None
-    cols = None
-    if schema is not None:
-        data_schema = StructType([f for f in schema.fields if f.name != pcol])
-        cols = [f.name for f in schema.fields]
+
+def _scan(spark: SparkSession, man: dict, files: list[dict]) -> DataFrame:
+    """Read manifest entries ``files`` of manifest ``man`` with its
+    logical schema pinned (not file-inferred), so pre-evolution files
+    surface NULL for later-added columns. A partitioned table's value
+    (encoded in the directory name) comes back as a typed column — one
+    literal per partition group, so it survives round trips with its
+    original type (the dir name alone would stringify it)."""
+    schema = _manifest_schema(man)
+    pcol = man.get("partition_col")
+    if not files:
+        return spark.createDataFrame([], schema)
+    if pcol is None:
+        return spark.read.schema(schema).parquet(*[f["path"] for f in files])
+    data_schema = StructType([f for f in schema.fields if f.name != pcol])
     by_part: dict[str | None, list[str]] = {}
     for f in files:
         by_part.setdefault(f["partition"], []).append(f["path"])
@@ -335,13 +337,13 @@ def _read_partitioned_files(
         val = (
             F.lit(None) if part in (None, _NULL_PART)
             else F.lit(part)
-        ).cast(ptype)
-        reader = spark.read
-        if data_schema is not None:
-            reader = reader.schema(data_schema)
-        d = reader.parquet(*ps).withColumn(pcol, val)
-        if cols is not None:
-            d = d.select(*cols)
+        ).cast(man["partition_type"])
+        d = (
+            spark.read.schema(data_schema)
+            .parquet(*ps)
+            .withColumn(pcol, val)
+            .select(*schema.fieldNames())
+        )
         out = d if out is None else out.unionByName(d)
     return out
 
@@ -375,11 +377,8 @@ def snapshot_merge(
     table size should full-overwrite instead).
     """
     for attempt in range(max_retries + 1):
-        versions = _list_manifest_versions(spark, table)
-        if not versions:
-            raise FileNotFoundError(f"no committed snapshots at {table}")
-        base_version = versions[-1]
-        man = _read_manifest(spark, table, base_version)
+        man = _manifest(spark, table)
+        base_version = man["version"]
         if man.get("partition_col") != partition_col:
             raise ValueError(
                 f"partition_col mismatch: table has "
@@ -391,43 +390,20 @@ def snapshot_merge(
             src_data = source
         src_keys = source.select(*keys).distinct()
 
-        target = None
+        # unpartitioned: the whole table rewrites (documented
+        # degenerate case) — nothing carries over
+        live, carried = man["files"], []
         if partition_col is not None:
-            # Touched set in the SAME normalization the manifest stores
-            # (ADVICE r9): Spark-side CAST(value AS STRING) — matching
-            # the unescaped dir-name encoding _land_data_files records —
-            # never Python str(), whose repr drifts for timestamps /
-            # decimals. NULL and '' land in the Hive default partition.
-            touched = set()
-            for r in (
-                source.select(
-                    F.col(partition_col).cast("string").alias("_p")
-                )
+            touched = {
+                r["_p"]
+                for r in _partition_strings(source.select(partition_col))
                 .distinct()
                 .collect()
-            ):
-                touched.add(
-                    _NULL_PART if r["_p"] in (None, "") else r["_p"]
-                )
+            }
             live = [f for f in man["files"] if f["partition"] in touched]
             carried = [
                 f for f in man["files"] if f["partition"] not in touched
             ]
-            if live:
-                target = _read_partitioned_files(
-                    spark, live, partition_col, man["partition_type"],
-                    _manifest_schema(man),
-                )
-        else:
-            # unpartitioned: the whole table rewrites (documented
-            # degenerate case) — nothing carries over
-            carried = []
-            paths = [f["path"] for f in man["files"]]
-            target = (
-                spark.read.schema(_manifest_schema(man)).parquet(*paths)
-                if paths
-                else None
-            )
 
         # target rows not superseded by the delta (matched rows leave;
         # non-deleted source rows re-enter with their new values).
@@ -438,8 +414,10 @@ def snapshot_merge(
         # carried (untouched-partition) files keep the OLD physical
         # schema; reads stay correct because the parquet reader fills
         # absent columns with null against the manifest schema.
-        if target is not None:
-            keep = target.join(F.broadcast(src_keys), keys, "left_anti")
+        if live:
+            keep = _scan(spark, man, live).join(
+                F.broadcast(src_keys), keys, "left_anti"
+            )
             merged = keep.unionByName(src_data, allowMissingColumns=True)
         else:
             merged = src_data
@@ -475,24 +453,16 @@ def snapshot_vacuum(
     live: set[str] = set()
     for v in keep_versions:
         live.update(f["path"] for f in _read_manifest(spark, table, v)["files"])
-    fs, root, jvm = _fs(spark, f"{table}/data")
+    fs, root, _ = _fs(spark, f"{table}/data")
     deleted: list[str] = []
-    if fs.exists(root):
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            st = it.next()
-            path = st.getPath().toString()
-            if path.endswith(".parquet") and path not in live:
-                fs.delete(st.getPath(), False)
-                deleted.append(path)
+    for st in _data_files(fs, root):
+        path = st.getPath().toString()
+        if path not in live:
+            fs.delete(st.getPath(), False)
+            deleted.append(path)
     for v in versions:
         if v not in keep_versions:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{table}/manifests/{_MANIFEST_FMT.format(n=v)}"
-                ),
-                False,
-            )
+            fs.delete(_fs(spark, _manifest_path(table, v))[1], False)
     return deleted
 
 
@@ -525,12 +495,10 @@ def snapshot_compact(
     path accretes one small file set per MERGE; this is the
     compaction half of that trade (same role as warehouse.compact_table
     for catalog tables)."""
-    versions = _list_manifest_versions(spark, table)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots at {table}")
-    man = _read_manifest(spark, table, versions[-1])
+    man = _manifest(spark, table)
+    version = man["version"] + 1
     pcol = man.get("partition_col")
-    cur = snapshot_read(spark, table)
+    cur = _scan(spark, man, man["files"])
     compacted = (
         cur.repartition(target_files, pcol)
         if pcol is not None
@@ -538,12 +506,9 @@ def snapshot_compact(
     )
     files = _land_data_files(spark, table, compacted, pcol)
     _commit_manifest(
-        spark,
-        table,
-        versions[-1] + 1,
-        {**man, "version": versions[-1] + 1, "files": files},
+        spark, table, version, {**man, "version": version, "files": files}
     )
-    return versions[-1] + 1
+    return version
 
 
 def snapshot_changes(
@@ -623,7 +588,6 @@ def stream_merge_to_snapshot(
     schema_ddl: str,
     delete_col: str | None = None,
     partition_col: str | None = None,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming UPSERT into a snapshot table — the Delta
     streaming-MERGE analog, closing the loop between the streaming
@@ -634,11 +598,13 @@ def stream_merge_to_snapshot(
     checkpoint onto a table whose last committed version reflects
     exactly the epochs that finished — the same
     transactional-sink-plus-checkpoint contract Delta streaming gives.
-    Within-batch key collisions must already be compacted upstream
-    (the snapshot_merge contract). Returns the epoch count."""
+    Each micro-batch takes one source file, so one delta file is one
+    epoch and one version. Within-batch key collisions must already be
+    compacted upstream (the snapshot_merge contract). Returns the epoch
+    count."""
     stream = (
         spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
     epochs = []

@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from ..operators.relational import zorder_value
+from .snapshot import _data_files, _fs
+
 # Typed stage DDL mirroring sql/create_dim_cidades.sql:4-13,
 # create_dim_datas.sql:5-12, create_fato_previsoes.sql:4-12 (Snowflake
 # types mapped to Spark; dates are real DATE end-to-end).
@@ -62,14 +65,18 @@ def _delete_orphan_location(spark: SparkSession, db: str, name: str) -> None:
     (the in-memory catalog forgets tables while their files survive; with
     a persistent metastore this is a no-op). Uses the Hadoop FileSystem
     API so it works on any storage, not just local disk."""
-    fs, path = _table_fs_and_path(spark, name, db)
+    fs, path, _ = _fs(spark, _table_dir(spark, name, db))
     if fs.exists(path):
         fs.delete(path, True)
 
 
-def _drop_table_and_location(spark: SparkSession, db: str, name: str) -> None:
-    """DROP TABLE IF EXISTS + remove any orphaned managed location, so
-    saveAsTable/CTAS never fail with LOCATION_ALREADY_EXISTS."""
+def _clear_table(spark: SparkSession, db: str, name: str) -> None:
+    """Make way for a new ``db.name``: CREATE DATABASE IF NOT EXISTS,
+    DROP TABLE IF EXISTS, and remove any orphaned managed location, so
+    saveAsTable/CTAS never fail with LOCATION_ALREADY_EXISTS. The v1
+    parquet catalog has no atomic REPLACE, so between this call and
+    the write that follows the table is missing."""
+    create_database(spark, db)
     spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
     _delete_orphan_location(spark, db, name)
 
@@ -82,9 +89,7 @@ def save_table(
 ) -> None:
     """S8's warehouse load, Spark-native: managed parquet table, overwrite
     semantics matching CREATE OR REPLACE."""
-    spark = df.sparkSession
-    create_database(spark, db)
-    _drop_table_and_location(spark, db, name)
+    _clear_table(df.sparkSession, db, name)
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -126,8 +131,7 @@ def save_table_jdbc(
 def ctas(spark: SparkSession, name: str, sql: str, db: str = "analitic") -> DataFrame:
     """S10's `CREATE OR REPLACE TABLE ... AS SELECT` (the v1 parquet
     catalog has no atomic REPLACE, so drop-then-create)."""
-    create_database(spark, db)
-    _drop_table_and_location(spark, db, name)
+    _clear_table(spark, db, name)
     spark.sql(f"CREATE TABLE {db}.{name} USING PARQUET AS {sql}")
     return spark.table(f"{db}.{name}")
 
@@ -160,9 +164,7 @@ def save_bucketed_table(
     plan) — the pre-shuffle is paid once at write time, which is the 100
     TB recipe for a fact table joined repeatedly on the same key. Add
     ``sort_cols`` to also skip the sort of a sort-merge join."""
-    spark = df.sparkSession
-    create_database(spark, db)
-    _drop_table_and_location(spark, db, name)
+    _clear_table(df.sparkSession, db, name)
     w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
@@ -193,35 +195,26 @@ def save_range_sorted_table(
     become tight, and any reader filtering on that column skips whole
     files (poor man's Z-order, one dimension). The layout cost is paid
     once at write; every downstream range scan wins."""
-    spark = df.sparkSession
-    create_database(spark, db)
-    _drop_table_and_location(spark, db, name)
-    (
-        df.repartitionByRange(n_files, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .saveAsTable(f"{db}.{name}")
+    save_table(
+        df.repartitionByRange(n_files, sort_col).sortWithinPartitions(sort_col),
+        name,
+        db,
     )
 
 
 def table_size_bytes(spark: SparkSession, name: str, db: str = "analitic") -> int:
     """On-disk byte size of a managed table via the Hadoop FileSystem API
     (works on any storage backend, not just local disk)."""
-    fs, path = _table_fs_and_path(spark, name, db)
+    fs, path, _ = _fs(spark, _table_dir(spark, name, db))
     if not fs.exists(path):
         return 0
     return fs.getContentSummary(path).getLength()
 
 
-def _table_fs_and_path(spark: SparkSession, name: str, db: str):
-    """(Hadoop FileSystem, Path) of managed table ``db.name`` under the
-    session's warehouse dir."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    path = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{db}.db/{name}")
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    return fs, path
+def _table_dir(spark: SparkSession, name: str, db: str) -> str:
+    """Location of managed table ``db.name`` under the session's
+    warehouse dir."""
+    return f"{spark.conf.get('spark.sql.warehouse.dir')}/{db}.db/{name}"
 
 
 def _partition_file_stats(
@@ -231,19 +224,11 @@ def _partition_file_stats(
     listing, where spec is the Hive-style relative dir (``ano=1995`` or
     ``a=1/b=x``; '' for an unpartitioned root). Catalog-scale driver work:
     one round-trip per listing page, never per row."""
-    fs, root = _table_fs_and_path(spark, name, db)
+    fs, root, _ = _fs(spark, _table_dir(spark, name, db))
     stats: dict[str, tuple[int, int]] = {}
-    if not fs.exists(root):
-        return stats
     root_str = root.toUri().getPath()
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        f = it.next()
-        p = f.getPath()
-        base = p.getName()
-        if base.startswith("_") or base.startswith("."):
-            continue  # _SUCCESS, hidden metadata
-        rel = p.getParent().toUri().getPath()[len(root_str):].strip("/")
+    for f in _data_files(fs, root):
+        rel = f.getPath().getParent().toUri().getPath()[len(root_str):].strip("/")
         b, n = stats.get(rel, (0, 0))
         stats[rel] = (b + f.getLen(), n + 1)
     return stats
@@ -256,7 +241,9 @@ def compact_table(
     target_file_bytes: int = 128 << 20,
 ) -> int:
     """Small-file compaction (OPTIMIZE): rewrite the table into
-    ~target_file_bytes files and atomically swap it in via RENAME.
+    ~target_file_bytes files under a temporary name, then drop the
+    original and RENAME the rewrite into its place. The swap is not
+    atomic: between the drop and the rename the table is missing.
     Streaming sinks and per-batch upserts accrete thousands of tiny files;
     at 100 TB the resulting task-per-file scheduling and footer-read
     overhead dominate scans, so periodic compaction to ~128 MB files is
@@ -281,7 +268,7 @@ def compact_table(
         c.name for c in spark.catalog.listColumns(name, db) if c.isPartition
     ]
     tmp = f"{name}__compacting"
-    _drop_table_and_location(spark, db, tmp)
+    _clear_table(spark, db, tmp)
     df = spark.table(tbl)
     if part_cols:
         stats = _partition_file_stats(spark, name, db)
@@ -320,7 +307,7 @@ def compact_table(
         n_files = max(1, math.ceil(size / target_file_bytes))
         w = df.repartition(n_files).write
     w.saveAsTable(f"{db}.{tmp}")
-    _drop_table_and_location(spark, db, name)
+    _clear_table(spark, db, name)
     spark.sql(f"ALTER TABLE {db}.{tmp} RENAME TO {db}.{name}")
     if part_cols:
         # RENAME moves the root location; catalog partition entries still
@@ -355,10 +342,6 @@ def save_zorder_table(
     save_range_sorted_table, same pay-once-at-write economics."""
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    create_database(spark, db)
-    _drop_table_and_location(spark, db, name)
-
     def bucket(col: str) -> "F.Column":
         cuts = _quantile_buckets(df, col, 1 << bits)
         arr = ", ".join(repr(c) for c in cuts)
@@ -366,20 +349,16 @@ def save_zorder_table(
             f"cardinality(filter(array({arr}), b -> b <= {col}))"
         ).cast("long")
 
-    one = F.lit(1).cast("long")
     ba, bb = bucket(col_a), bucket(col_b)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(ba, i).bitwiseAND(one), 2 * i + 1)
-        ).bitwiseOR(F.shiftleft(F.shiftright(bb, i).bitwiseAND(one), 2 * i))
-    (
+    # col_b on the even bits, col_a on the odd ones
+    z = zorder_value(bb, ba, bits)
+    save_table(
         df.withColumn("_z", z)
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .saveAsTable(f"{db}.{name}")
+        .drop("_z"),
+        name,
+        db,
     )
 
 

@@ -336,3 +336,47 @@ def test_plan_construction_launches_no_spark_job(spark, inmet_glob):
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
         sc._jsc.clearJobGroup()
     assert jobs == []
+
+
+class _FlakyWriter:
+    """Stands in for a DataFrameWriter: ``parquet`` raises the queued
+    errors in order, then succeeds."""
+
+    def __init__(self, *errors):
+        self.errors = list(errors)
+        self.calls = 0
+
+    def parquet(self, path):
+        self.calls += 1
+        if self.errors:
+            raise self.errors.pop(0)
+
+
+def test_write_retries_a_transient_failure_once():
+    from airflow_etl_pyspark_inmet_spark.plans.inmet_pipeline import _write
+
+    w = _FlakyWriter(OSError("executor lost"))
+    _write(w, "/out/t")
+    assert w.calls == 2
+
+
+def test_write_raises_analysis_errors_without_retry():
+    from pyspark.errors import AnalysisException
+
+    from airflow_etl_pyspark_inmet_spark.plans.inmet_pipeline import _write
+
+    w = _FlakyWriter(AnalysisException("bad plan"))
+    with pytest.raises(AnalysisException):
+        _write(w, "/out/t")
+    assert w.calls == 1
+
+
+def test_write_gives_up_after_two_failures():
+    from airflow_etl_pyspark_inmet_spark.plans.inmet_pipeline import _write
+
+    last = OSError("second")
+    w = _FlakyWriter(OSError("first"), last, OSError("never raised"))
+    with pytest.raises(RuntimeError, match="/out/t failed after 2 attempts") as e:
+        _write(w, "/out/t")
+    assert e.value.__cause__ is last
+    assert w.calls == 2

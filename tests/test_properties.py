@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -1101,5 +1101,31 @@ def test_oov_stats_matches_oracle_sql_on_unicode_whitespace_property(spark, text
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = set(con.sql(ORACLES["t16_oov_stats"]).fetchall())
+    con.close()
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
+    texts=st.lists(st.text(_TOKENIZER_ALPHABET, max_size=12), min_size=1, max_size=20)
+)
+@example(texts=["a\x0bb c"])
+def test_normalize_text_matches_oracle_sql_property(spark, texts):
+    """t6 — ``normalize_text`` equals its registry oracle SQL, run in
+    DuckDB, on every string over the tokenizer alphabet, NULL and ``""``
+    included. The pinned example is the U+000B probe: Java's ``\\s``
+    keeps it as whitespace (``a b c``), RE2's strips it (``ab c``)."""
+    import duckdb
+    import pandas as pd
+
+    from airflow_etl_pyspark_inmet_spark.operators.text import normalize_text
+    from airflow_etl_pyspark_inmet_spark.plans.registry import ORACLES
+
+    rows = list(enumerate([*texts, None, ""]))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {tuple(r) for r in normalize_text(docs).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = set(con.sql(ORACLES["t6_normalize"]).fetchall())
     con.close()
     assert got == want

@@ -372,6 +372,18 @@ def test_q101_concurrency_invariants(spark):
         assert b.day - a.day == dt.timedelta(days=1)
 
 
+def test_c7_leaves_no_temp_table(spark, tmp_path, monkeypatch):
+    """c7 lands its snapshot table in a temp dir; two calls must leave
+    no ``c7snap*`` dir behind and still return the same result."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = T.c7_snapshot_merge_mv(spark, SF).collect()
+    second = T.c7_snapshot_merge_mv(spark, SF).collect()
+    assert first == second and first
+    assert sorted(p.name for p in tmp_path.glob("c7snap*")) == []
+
+
 def test_c6_incremental_equals_full_recompute(spark):
     """The MV-maintenance theorem on sf0.001: incremental partials ==
     full recompute over the changelog-applied table."""
