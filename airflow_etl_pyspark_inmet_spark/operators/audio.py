@@ -1,8 +1,9 @@
 """REAL audio-column kernels over opaque ``binary`` payloads: WAV/RIFF
 encode, header parse, PCM decode, and frame sampling — all through the
-same Arrow-batched ``mapInPandas`` plumbing as the image path
-(:mod:`.multimodal`), with the stdlib ``wave`` module as the codec (no
-third-party audio library needed, so nothing here is stubbed).
+same Arrow-batched harness as the image path
+(:func:`.multimodal._map_payloads`), with the stdlib ``wave`` module as
+the codec (no third-party audio library needed, so nothing here is
+stubbed).
 
 Mirror of the m6 PNG pattern (reference has no audio path; this is part
 of the training-data-pipeline extension surface): payloads are
@@ -21,12 +22,11 @@ from __future__ import annotations
 
 import io
 import wave
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .multimodal import _encode_payloads, _map_payloads
 
 # Frames per payload cap, and the per-doc sample-rate rule. The rate
 # varies with doc_id so a hash-green run proves the header FIELDS are
@@ -46,7 +46,8 @@ def is_wav(payload: bytes) -> bool:
 
 
 def _encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """16-bit little-endian PCM mono RIFF/WAVE via the stdlib writer."""
+    """16-bit little-endian PCM mono RIFF/WAVE via the stdlib writer
+    (the package's one WAV writer)."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
@@ -56,108 +57,74 @@ def _encode_wav(samples: np.ndarray, rate: int) -> bytes:
     return buf.getvalue()
 
 
-def text_to_wav_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Deterministic WAV per row: frame ``i`` = ``((codepoint_i & 0xFF)
-    - 128) * 256`` over the first :data:`MAX_FRAMES` characters (no
-    padding — the frame count is ``min(len(text), 64)``, so it is a REAL
-    data-dependent quantity the parser must recover from the header).
+def _read_wav(payload: bytes) -> tuple[int, np.ndarray]:
+    """(sample rate, int16 samples) of one 16-bit PCM mono WAV via the
+    stdlib parser — the package's one WAV reader. A zero sample rate is
+    rejected like any other malformed header."""
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        rate = w.getframerate()
+        raw = w.readframes(w.getnframes())
+    if not rate:
+        raise wave.Error("zero sample rate")
+    return rate, np.frombuffer(raw, dtype="<i2")
+
+
+def _wav_bytes(doc_id: int, text: str | None) -> bytes:
+    """The WAV of one row: frame ``i`` = ``((codepoint_i & 0xFF) - 128)
+    * 256`` over the first :data:`MAX_FRAMES` characters, at
+    :func:`_rate_for` ``(doc_id)`` Hz."""
+    vals = [((ord(c) & 0xFF) - 128) * 256 for c in (text or "")[:MAX_FRAMES]]
+    return _encode_wav(np.array(vals, dtype=np.int16), _rate_for(doc_id))
+
+
+def text_to_wav_payload(df: DataFrame) -> DataFrame:
+    """Deterministic WAV per row (:func:`_wav_bytes`): no padding — the
+    frame count is ``min(len(text), 64)``, so it is a REAL
+    data-dependent quantity the parser must recover from the header.
     Sample rate is ``8000 + (doc_id % 4) * 4000`` Hz."""
-    from .util import ensure_parallelism
-
-    src = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["_t"]):
-                vals = [
-                    ((ord(c) & 0xFF) - 128) * 256
-                    for c in (t or "")[:MAX_FRAMES]
-                ]
-                payloads.append(
-                    _encode_wav(np.array(vals, dtype=np.int16), _rate_for(doc_id))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return src.mapInPandas(kernel, "doc_id bigint, payload binary")
+    return _encode_payloads(df, _wav_bytes)
 
 
-def wav_audio_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def _wav_stats(payload: bytes) -> tuple[int, int, int, int]:
+    """(frame count, sample rate, duration in us, PCM sum) of one WAV."""
+    rate, samples = _read_wav(payload)
+    n = len(samples)
+    return n, rate, n * 1_000_000 // rate, int(samples.sum())
+
+
+def wav_audio_stats(df: DataFrame) -> DataFrame:
     """REAL audio metadata + feature extraction: stdlib RIFF parse for
     (frame count, sample rate), integer microsecond duration derived
-    from those header fields, and the exact PCM sample sum from the
-    decoded int16 stream. Raises on non-WAV payloads — this is the
-    strict verification tail (the mixed-modality don't-fail-the-batch
-    policy lives in the dispatching callers, like resize_images)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_frames, rates, durs, sums = [], [], [], []
-            for p in pdf[payload_col]:
-                with wave.open(io.BytesIO(bytes(p)), "rb") as w:
-                    n = w.getnframes()
-                    rate = w.getframerate()
-                    raw = w.readframes(n)
-                samples = np.frombuffer(raw, dtype="<i2")
-                n_frames.append(n)
-                rates.append(rate)
-                durs.append(n * 1_000_000 // rate)
-                sums.append(int(samples.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_frames": n_frames,
-                    "sample_rate": rates,
-                    "duration_us": durs,
-                    "pcm_sum": sums,
-                }
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel,
+    from those fields, and the exact PCM sample sum from the decoded
+    int16 stream. Raises on non-WAV payloads — this is the strict
+    verification tail (the mixed-modality don't-fail-the-batch policy
+    lives in the dispatching callers, like resize_images)."""
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [_wav_stats(p)],
         "doc_id bigint, n_frames bigint, sample_rate int, "
         "duration_us bigint, pcm_sum bigint",
     )
 
 
-def wav_frame_sample(
-    df: DataFrame, every_n: int = 16, payload_col: str = "payload"
-) -> DataFrame:
+def wav_frame_sample(df: DataFrame, every_n: int = 16) -> DataFrame:
     """REAL frame sampler (the explode-shaped video/audio contract that
     :func:`.multimodal.frame_sample_stub` stubs): decode the PCM stream
     and emit one row per sampled frame — (doc_id, frame_idx, sample) for
     frames 0, every_n, 2*every_n, ... Payloads stay on the map side;
     only fixed-width sampled rows come out."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, vals = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                with wave.open(io.BytesIO(bytes(p)), "rb") as w:
-                    raw = w.readframes(w.getnframes())
-                samples = np.frombuffer(raw, dtype="<i2")
-                picked = samples[::every_n]
-                ids.extend([doc_id] * len(picked))
-                idxs.extend(range(0, len(samples), every_n))
-                vals.extend(int(s) for s in picked)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "sample": vals},
-            ).astype({"doc_id": "int64", "frame_idx": "int32", "sample": "int32"})
+    def rows(_, payload: bytes) -> list[tuple[int, int]]:
+        samples = _read_wav(payload)[1]
+        return [(i, int(samples[i])) for i in range(0, len(samples), every_n)]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, frame_idx int, sample int"
+    return _map_payloads(
+        df, "payload", rows, "doc_id bigint, frame_idx int, sample int"
     )
 
 
-def wav_energy_windows(
-    df: DataFrame, win: int = 16, payload_col: str = "payload"
-) -> DataFrame:
+def wav_energy_windows(df: DataFrame, win: int = 16) -> DataFrame:
     """REAL windowed audio-energy features: decode the full PCM stream
     and emit one row per non-overlapping ``win``-frame window with its
     exact integer energy (sum of squared int16 samples) — the
@@ -172,44 +139,21 @@ def wav_energy_windows(
     headroom per 16-frame window, so the energy is exact and an SQL
     oracle replays it from character arithmetic."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, wins, ns, es = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                with wave.open(io.BytesIO(bytes(p)), "rb") as w:
-                    raw = w.readframes(w.getnframes())
-                samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                for wi in range(0, len(samples), win):
-                    chunk = samples[wi : wi + win]
-                    ids.append(doc_id)
-                    wins.append(wi // win)
-                    ns.append(len(chunk))
-                    es.append(int((chunk * chunk).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "win_idx": wins,
-                    "n_frames": ns,
-                    "energy": es,
-                },
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "win_idx": "int32",
-                    "n_frames": "int32",
-                    "energy": "int64",
-                }
-            )
+    def rows(_, payload: bytes) -> list[tuple[int, int, int]]:
+        samples = _read_wav(payload)[1].astype(np.int64)
+        chunks = [samples[i : i + win] for i in range(0, len(samples), win)]
+        return [(k, len(c), int((c * c).sum())) for k, c in enumerate(chunks)]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, win_idx int, n_frames int, energy bigint"
+    return _map_payloads(
+        df,
+        "payload",
+        rows,
+        "doc_id bigint, win_idx int, n_frames int, energy bigint",
     )
 
 
 def wav_autocorr(
-    df: DataFrame,
-    lags: tuple[int, ...] = (1, 2, 4, 8),
-    payload_col: str = "payload",
+    df: DataFrame, lags: tuple[int, ...] = (1, 2, 4, 8)
 ) -> DataFrame:
     """REAL lag-autocorrelation features over the decoded PCM stream:
     for each requested lag L emit ``sum_i s[i] * s[i+L]`` as an exact
@@ -223,40 +167,22 @@ def wav_autocorr(
     the map side; products of int16 samples are <= 2^30 and at most 63
     are summed, so the statistic is exact in int64 and an SQL oracle
     replays it from character arithmetic."""
-    lag_list = list(lags)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ls, ns, acs = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                with wave.open(io.BytesIO(bytes(p)), "rb") as w:
-                    raw = w.readframes(w.getnframes())
-                samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                for lag in lag_list:
-                    n = max(len(samples) - lag, 0)
-                    ids.append(doc_id)
-                    ls.append(lag)
-                    ns.append(n)
-                    # slice with [:n], NOT [:-lag]: at lag=0 the
-                    # latter is samples[:-0] == empty, silently
-                    # reporting autocorr=0 for the signal's energy
-                    # (r10 advice)
-                    acs.append(
-                        int((samples[:n] * samples[lag:]).sum())
-                        if n > 0
-                        else 0
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "lag": ls, "n_terms": ns, "autocorr": acs}
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "lag": "int32",
-                    "n_terms": "int32",
-                    "autocorr": "int64",
-                }
-            )
+    def rows(_, payload: bytes) -> list[tuple[int, int, int]]:
+        samples = _read_wav(payload)[1].astype(np.int64)
+        out = []
+        for lag in lags:
+            n = max(len(samples) - lag, 0)
+            # slice with [:n], NOT [:-lag]: at lag=0 the latter is
+            # samples[:-0] == empty, silently reporting autocorr=0 for
+            # the signal's energy
+            ac = int((samples[:n] * samples[lag:]).sum()) if n > 0 else 0
+            out.append((lag, n, ac))
+        return out
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, lag int, n_terms int, autocorr bigint"
+    return _map_payloads(
+        df,
+        "payload",
+        rows,
+        "doc_id bigint, lag int, n_terms int, autocorr bigint",
     )

@@ -1,11 +1,11 @@
 """REAL video-column kernels: a minimal uncompressed AVI (RIFF) codec —
 pure ``struct`` + numpy, no third-party video library — with the same
-Arrow-batched ``mapInPandas`` plumbing as the image (:mod:`.png`) and
-audio (:mod:`.audio`) paths. This closes the last stub modality: the
-container format is written and parsed for real (RIFF chunk walk,
-``avih`` main header, ``strh``/``strf`` stream headers, ``movi`` frame
-chunks, bottom-up 24-bit DIB rows), per the public AVI/RIFF and
-BITMAPINFOHEADER layouts.
+Arrow-batched harness (:func:`.multimodal._map_payloads`) as the image
+(:mod:`.png`) and audio (:mod:`.audio`) paths. This closes the last stub
+modality: the container format is written and parsed for real (RIFF
+chunk walk, ``avih`` main header, ``strh``/``strf`` stream headers,
+``movi`` frame chunks, bottom-up 24-bit DIB rows), per the public
+AVI/RIFF and BITMAPINFOHEADER layouts.
 
 The m9/m10 pattern mirrors m6 (PNG) and m7/m8 (WAV): payloads are
 manufactured from the text corpus by pure character arithmetic, so every
@@ -21,12 +21,11 @@ metadata/feature rows leave the kernel.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .multimodal import _encode_payloads, _map_payloads
 
 SIDE = 8  # frame is SIDE x SIDE gray pixels (stored as 24-bit BGR)
 FRAME_CHARS = SIDE * SIDE
@@ -189,91 +188,53 @@ def avi_decode(payload: bytes) -> tuple[int, int, int, list[np.ndarray]]:
     return width, height, usec, out
 
 
-def text_to_avi_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Deterministic AVI per row: frame ``f`` holds the codepoints (&
-    0xFF) of characters ``[f*64, (f+1)*64)`` as an 8x8 gray raster
-    (zero-padded only inside the LAST partial frame), up to 4 frames —
-    so the frame count is ``ceil(min(len, 256) / 64)``, a real
-    data-dependent quantity. Frame rate is ``5 + doc_id % 4`` fps."""
-    from .util import ensure_parallelism
-
-    src = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    )
-    cap = FRAME_CHARS * MAX_FRAMES
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["_t"]):
-                s = (t or "")[:cap]
-                n_frames = (len(s) + FRAME_CHARS - 1) // FRAME_CHARS
-                vals = [ord(c) & 0xFF for c in s]
-                vals += [0] * (n_frames * FRAME_CHARS - len(vals))
-                frames = np.array(vals, dtype=np.uint8).reshape(
-                    n_frames, SIDE, SIDE
-                )
-                payloads.append(avi_encode(frames, _fps_for(doc_id)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return src.mapInPandas(kernel, "doc_id bigint, payload binary")
+def _avi_bytes(doc_id: int, text: str | None) -> bytes:
+    """The AVI of one row: frame ``f`` holds the codepoints (& 0xFF) of
+    characters ``[f*64, (f+1)*64)`` as an 8x8 gray raster (zero-padded
+    only inside the LAST partial frame), up to :data:`MAX_FRAMES`
+    frames, at :func:`_fps_for` ``(doc_id)`` fps."""
+    s = (text or "")[: FRAME_CHARS * MAX_FRAMES]
+    n_frames = (len(s) + FRAME_CHARS - 1) // FRAME_CHARS
+    vals = [ord(c) & 0xFF for c in s]
+    vals += [0] * (n_frames * FRAME_CHARS - len(vals))
+    frames = np.array(vals, dtype=np.uint8).reshape(n_frames, SIDE, SIDE)
+    return avi_encode(frames, _fps_for(doc_id))
 
 
-def avi_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def text_to_avi_payload(df: DataFrame) -> DataFrame:
+    """Deterministic AVI per row (:func:`_avi_bytes`): the frame count
+    is ``ceil(min(len, 256) / 64)``, a real data-dependent quantity.
+    Frame rate is ``5 + doc_id % 4`` fps."""
+    return _encode_payloads(df, _avi_bytes)
+
+
+def _avi_stats(payload: bytes) -> tuple[int, int, int, int, int]:
+    """(width, height, usec per frame, frame count, all-frame pixel sum)
+    of one decoded AVI."""
+    w, h, usec, frames = avi_decode(payload)
+    return w, h, usec, len(frames), sum(int(f.sum()) for f in frames)
+
+
+def avi_stats(df: DataFrame) -> DataFrame:
     """REAL video metadata + feature extraction: container parse for
     (width, height, usec-per-frame, frame count) plus the exact pixel
     sum over all decoded frames."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, us_, ns, sums = [], [], [], [], []
-            for p in pdf[payload_col]:
-                w, h, usec, frames = avi_decode(bytes(p))
-                ws.append(w)
-                hs.append(h)
-                us_.append(usec)
-                ns.append(len(frames))
-                sums.append(int(sum(int(f.sum()) for f in frames)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "usec_per_frame": us_,
-                    "n_frames": ns,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel,
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [_avi_stats(p)],
         "doc_id bigint, width int, height int, usec_per_frame bigint, "
         "n_frames int, pixel_sum bigint",
     )
 
 
-def avi_frame_sums(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def avi_frame_sums(df: DataFrame) -> DataFrame:
     """REAL per-frame feature extraction (the keyframe-iteration shape):
     one row per decoded frame with its exact pixel sum — proves the
     movi chunk segmentation, not just the aggregate."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sums = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                _, _, _, frames = avi_decode(bytes(p))
-                for i, f in enumerate(frames):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    sums.append(int(f.sum()))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_sum": sums},
-            ).astype(
-                {"doc_id": "int64", "frame_idx": "int32", "frame_sum": "int64"}
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, frame_idx int, frame_sum bigint"
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [(i, int(f.sum())) for i, f in enumerate(avi_decode(p)[3])],
+        "doc_id bigint, frame_idx int, frame_sum bigint",
     )

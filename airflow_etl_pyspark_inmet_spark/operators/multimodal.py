@@ -1,13 +1,15 @@
 """Multimodal column plumbing: treat image/audio/video payloads as opaque
 ``binary`` columns with typed metadata, processed in Arrow-batched
-``mapInPandas`` stages.
+``mapInPandas`` stages. Every kernel of the tier (here, in :mod:`.audio`
+and in :mod:`.avi`) runs through one harness, :func:`_map_payloads`, and
+is written as a per-row function.
 
 Kernel tiers, chosen per payload at runtime:
 
-1. REAL PNG path — payloads carrying the PNG magic are decoded with PIL
-   when importable, else the pure stdlib+numpy codec in
-   :mod:`.png` (8-bit gray/RGB/RGBA, the normalized-corpus subset).
-   Exercised end-to-end in tests on generated PNGs.
+1. REAL PNG path — payloads carrying the PNG magic are decoded by the
+   stdlib+numpy codec in :mod:`.png` (8-bit gray/RGB/RGBA, the
+   normalized-corpus subset). Exercised end-to-end in tests on
+   generated PNGs.
 2. STUB path — non-image payloads (e.g. the testdata's UTF-8 text blobs)
    get deterministic pseudo-metadata/pseudo-resize so the Spark plumbing
    (schema contract, Arrow batch iteration, binary round-trip, partition
@@ -24,31 +26,87 @@ mixed-corpus fallback for undecodable payloads.
 from __future__ import annotations
 
 import struct
+import wave
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from .util import lineage_checkpoint
 
 from . import png as _png
-
-try:  # preferred real codec when the environment provides it
-    from PIL import Image as _PILImage  # noqa: N812
-except ImportError:  # pure-numpy fallback (this sandbox)
-    _PILImage = None
+from .util import ensure_parallelism, lineage_checkpoint
 
 DECODE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, width int, height int, format string"
 )
 
+# DDL type -> the pandas dtype its output column is built with, so every
+# kernel, and every empty batch, hands Arrow the schema's own widths
+_PANDAS_DTYPES = {
+    "bigint": "int64",
+    "int": "int32",
+    "string": "object",
+    "binary": "object",
+}
 
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+# What the three codecs raise on a malformed payload: png_decode
+# (ValueError, zlib.error), the stdlib WAV reader (wave.Error, and
+# EOFError for a truncated chunk header), avi_decode (ValueError), and
+# struct.error for a short fixed-size field. The mixed-corpus operators
+# degrade these to a fallback row; any other error is a bug and fails
+# the batch.
+_CODEC_ERRORS = (ValueError, zlib.error, struct.error, wave.Error, EOFError)
+
+
+def _map_payloads(
+    df: DataFrame,
+    in_col: str,
+    row_fn: Callable[[int, object], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The tier's one ``mapInPandas``: ``row_fn(doc_id, value)`` returns
+    the output rows, without their leading ``doc_id``, for one
+    ``(doc_id, in_col)`` input row — one row for a stats kernel, n for
+    an explode-shaped one. Payloads stay on the map side; only the
+    ``schema`` rows leave it."""
+    fields = [f.split() for f in schema.split(",")]
+    names = [name for name, _ in fields]
+    dtypes = {name: _PANDAS_DTYPES[ddl] for name, ddl in fields}
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (doc_id, *row)
+                for doc_id, value in zip(pdf["doc_id"], pdf[in_col])
+                for row in row_fn(doc_id, value)
+            ]
+            yield pd.DataFrame(rows, columns=names).astype(dtypes)
+
+    return df.select("doc_id", in_col).mapInPandas(kernel, schema)
+
+
+def _encode_payloads(
+    df: DataFrame, encode: Callable[[int, str | None], bytes]
+) -> DataFrame:
+    """``(doc_id, payload)`` with ``payload = encode(doc_id, text)``: the
+    shared shape of the builders that manufacture media from the text
+    corpus, spread over the cluster's cores first (the encoders are the
+    CPU-bound stage)."""
+    return _map_payloads(
+        ensure_parallelism(df.select("doc_id", "text")),
+        "text",
+        lambda doc_id, text: [(encode(doc_id, text),)],
+        "doc_id bigint, payload binary",
+    )
+
+
+def with_binary_payload(df: DataFrame) -> DataFrame:
     """Attach a fake binary payload column (UTF-8 bytes of the text) —
     stands in for an image/audio blob column in the testdata, which has
     no true binary column."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int, str]:
@@ -71,31 +129,15 @@ def _decode_one(payload: bytes) -> tuple[int, int, int, str]:
     return _fake_decode(payload)
 
 
-def decode_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched decode: mapInPandas over (id, payload) partitions.
-
-    Each batch is a pandas DataFrame; the kernel is vectorized per batch
-    (python-side, but amortized over thousands of rows per Arrow batch).
-    Output: typed metadata per blob.
-    """
-    from .util import ensure_parallelism
-
-    src = ensure_parallelism(df.select(F.col(id_col).alias("doc_id"), "payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = pdf["payload"].map(_decode_one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": meta.map(lambda m: m[0]),
-                    "width": meta.map(lambda m: m[1]),
-                    "height": meta.map(lambda m: m[2]),
-                    "format": meta.map(lambda m: m[3]),
-                }
-            )
-
-    return src.mapInPandas(kernel, DECODE_SCHEMA)
+def decode_metadata(df: DataFrame) -> DataFrame:
+    """Arrow-batched decode: mapInPandas over (doc_id, payload)
+    partitions. Output: typed metadata per blob."""
+    return _map_payloads(
+        ensure_parallelism(df.select("doc_id", "payload")),
+        "payload",
+        lambda _, p: [_decode_one(p)],
+        DECODE_SCHEMA,
+    )
 
 
 def frame_sample_stub(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -118,59 +160,40 @@ def frame_sample_stub(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     )
 
 
-def extract_byte_histogram(
-    df: DataFrame, id_col: str = "doc_id", buckets: int = 16
-) -> DataFrame:
+def extract_byte_histogram(df: DataFrame, buckets: int = 16) -> DataFrame:
     """Feature extraction over binary payloads: bucketed byte histogram
-    (numpy bincount per Arrow batch) exploded to (id, bucket, n) rows.
+    (numpy bincount per payload) exploded to (doc_id, bucket, n) rows.
     Unlike the decode stub this is a REAL feature computation — byte
     histograms are a standard cheap signal for format sniffing and
     corruption detection — and it is exactly oracle-checkable. The same
     mapInPandas contract carries a CNN embedding or MFCC extractor at
     scale: payloads never shuffle; only (id, small-feature) rows do."""
-    import numpy as np
 
-    from .util import ensure_parallelism
+    def rows(_, payload: bytes) -> list[tuple[int, int]]:
+        counts = np.bincount(
+            np.frombuffer(payload, dtype=np.uint8) % buckets, minlength=buckets
+        )
+        nz = np.nonzero(counts)[0]
+        return list(zip(nz.tolist(), counts[nz].tolist()))
 
-    src = ensure_parallelism(df.select(F.col(id_col).alias("doc_id"), "payload"))
+    return _map_payloads(
+        ensure_parallelism(df.select("doc_id", "payload")),
+        "payload",
+        rows,
+        "doc_id bigint, bucket int, n bigint",
+    )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bks, ns = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(payload, dtype=np.uint8) % buckets
-                counts = np.bincount(arr, minlength=buckets)
-                nz = np.nonzero(counts)[0]
-                ids.extend([doc_id] * len(nz))
-                bks.extend(nz.tolist())
-                ns.extend(counts[nz].tolist())
-            yield pd.DataFrame(
-                {"doc_id": ids, "bucket": bks, "n": ns},
-            ).astype({"doc_id": "int64", "bucket": "int32", "n": "int64"})
 
-    return src.mapInPandas(kernel, "doc_id bigint, bucket int, n bigint")
+def _tile(payload: bytes, n: int) -> bytes:
+    """The STUB resize payload: ``payload`` repeated, cut to ``n`` bytes."""
+    return bytes((payload * (n // max(len(payload), 1) + 1))[:n])
 
 
 def _resize_png(payload: bytes, target_w: int, target_h: int) -> bytes:
     """REAL resize kernel for one PNG blob: decode -> nearest-neighbor
-    resample -> re-encode. PIL when importable (NEAREST, to match the
-    fallback's pixel-center math); else the pure-numpy codec. Raises
-    ValueError on PNGs outside the supported subset — the caller decides
-    the fallback policy. The supported-mode set is pinned to the 8-bit
-    gray/LA/RGB/RGBA subset of the numpy codec so PIL and fallback
-    environments classify every payload identically (a palette or 16-bit
-    PNG stubs in BOTH, instead of silently decoding under PIL only)."""
-    if _PILImage is not None:
-        import io
-
-        import numpy as np
-
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            if im.mode not in ("L", "LA", "RGB", "RGBA"):
-                raise ValueError(f"unsupported PNG mode {im.mode}")
-            arr = np.asarray(im)
-        out = _png.resize_nearest(arr, target_w, target_h)
-        return _png.png_encode(out)
+    resample -> re-encode through the :mod:`.png` codec. Raises on PNGs
+    outside its 8-bit gray/LA/RGB/RGBA subset — the caller decides the
+    fallback policy."""
     arr = _png.png_decode(payload)
     return _png.png_encode(_png.resize_nearest(arr, target_w, target_h))
 
@@ -187,103 +210,57 @@ def resize_images(
     corpus where only some blobs are decodable images."""
     stub_len = target_w * target_h // 8
 
-    def one(payload: bytes) -> tuple[bytes, str]:
+    def rows(_, payload: bytes) -> list[tuple[int, int, bytes, str]]:
         if _png.is_png(payload):
             try:
-                return _resize_png(payload, target_w, target_h), "png"
-            # ValueError: outside the supported subset; zlib/struct
-            # errors: magic-valid but malformed stream (corrupt IDAT /
-            # truncated chunk) — all stub, per the mixed-modality
-            # "don't fail the batch" contract.
-            except (ValueError, zlib.error, struct.error):
+                resized = _resize_png(payload, target_w, target_h)
+                return [(target_w, target_h, resized, "png")]
+            except _CODEC_ERRORS:  # magic-valid but undecodable: stub
                 pass
-        return (
-            bytes((payload * (stub_len // max(len(payload), 1) + 1))[:stub_len]),
-            "stub",
-        )
+        return [(target_w, target_h, _tile(payload, stub_len), "stub")]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "resized": [p[0] for p in pairs],
-                    "kernel": [p[1] for p in pairs],
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel,
+    return _map_payloads(
+        df,
+        "payload",
+        rows,
         "doc_id bigint, width int, height int, resized binary, kernel string",
     )
 
 
-def text_to_png_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    side: int = 8,
-) -> DataFrame:
-    """Deterministic grayscale PNG per row: pixel (y, x) = codepoint of
-    the text's character ``y*side + x`` masked to a byte, zero-padded
-    past the end. This manufactures REAL image payloads from the text
-    testdata so the real codec path is exercisable (and, because the
-    pixel rule is pure character arithmetic, an SQL oracle can predict
-    pixel-level results of downstream image ops without being able to
-    produce PNG bytes)."""
-    import numpy as np
-
-    from .util import ensure_parallelism
-
-    n = side * side
-    src = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["_t"]:
-                vals = [ord(c) & 0xFF for c in (t or "")[:n]]
-                vals += [0] * (n - len(vals))
-                arr = np.array(vals, dtype=np.uint8).reshape(side, side)
-                payloads.append(_png.png_encode(arr))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return src.mapInPandas(kernel, "doc_id bigint, payload binary")
+def _png_bytes(text: str | None) -> bytes:
+    """The 8x8 gray PNG of one text: pixel (y, x) = codepoint of
+    character ``8*y + x`` masked to a byte, zero-padded past the end."""
+    vals = [ord(c) & 0xFF for c in (text or "")[:64]]
+    vals += [0] * (64 - len(vals))
+    return _png.png_encode(np.array(vals, dtype=np.uint8).reshape(8, 8))
 
 
-def png_pixel_stats(
-    df: DataFrame, payload_col: str = "resized"
-) -> DataFrame:
-    """Decode PNG payloads and emit exact pixel statistics — the
-    verification tail of the real-codec chain (encode -> resize ->
-    decode must reproduce the pixels the resample math predicts)."""
-    import numpy as np
+def text_to_png_payload(df: DataFrame) -> DataFrame:
+    """Deterministic 8x8 grayscale PNG per row (:func:`_png_bytes`).
+    This manufactures REAL image payloads from the text testdata so the
+    real codec path is exercisable (and, because the pixel rule is pure
+    character arithmetic, an SQL oracle can predict pixel-level results
+    of downstream image ops without being able to produce PNG bytes)."""
+    return _encode_payloads(df, lambda _, text: _png_bytes(text))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums = [], [], []
-            for p in pdf[payload_col]:
-                arr = _png.png_decode(bytes(p))
-                h, w = arr.shape[:2]
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(arr.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": sums,
-                }
-            )
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, width int, height int, pixel_sum bigint"
+def _png_stats(payload: bytes) -> tuple[int, int, int]:
+    """(width, height, pixel sum) of one decoded PNG."""
+    arr = _png.png_decode(payload)
+    h, w = arr.shape[:2]
+    return w, h, int(arr.sum())
+
+
+def png_pixel_stats(df: DataFrame) -> DataFrame:
+    """Decode the ``resized`` PNG payloads and emit exact pixel
+    statistics — the verification tail of the real-codec chain (encode
+    -> resize -> decode must reproduce the pixels the resample math
+    predicts)."""
+    return _map_payloads(
+        df,
+        "resized",
+        lambda _, p: [_png_stats(p)],
+        "doc_id bigint, width int, height int, pixel_sum bigint",
     )
 
 
@@ -297,148 +274,88 @@ def resize_stub(
     binary-column round-trip: Arrow handles bytes in both directions, and
     the resized blob column is writable/joinable like any other."""
     out_len = target_w * target_h // 8
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                bytes((p * (out_len // max(len(p), 1) + 1))[:out_len])
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "resized": resized,
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, "doc_id bigint, width int, height int, resized binary"
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [(target_w, target_h, _tile(p, out_len))],
+        "doc_id bigint, width int, height int, resized binary",
     )
 
 
-def mixed_modality_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def mixed_modality_payload(df: DataFrame) -> DataFrame:
     """Manufacture a MIXED-modality corpus: one binary column whose rows
     are real PNG (doc_id % 3 == 0), real WAV (== 1), or real AVI (== 2)
-    payloads, each generated from the row's text by the same character
-    arithmetic as the single-modality builders (m6/m7/m9) — the input
-    shape of a production multimodal table, where one column carries
-    whatever bytes arrived."""
-    import numpy as np
+    payloads, each generated from the row's text by the single-modality
+    builders' own encoders (m6/m7/m9) — the input shape of a production
+    multimodal table, where one column carries whatever bytes arrived."""
+    from .audio import _wav_bytes
+    from .avi import _avi_bytes
 
-    from .audio import MAX_FRAMES as _WAV_MAX
-    from .audio import _encode_wav, _rate_for
-    from .avi import FRAME_CHARS, MAX_FRAMES, SIDE, _fps_for, avi_encode
-    from .util import ensure_parallelism
-
-    src = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
+    encoders = (lambda _, text: _png_bytes(text), _wav_bytes, _avi_bytes)
+    return _encode_payloads(
+        df, lambda doc_id, text: encoders[doc_id % 3](doc_id, text)
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["_t"]):
-                s = t or ""
-                mod = doc_id % 3
-                if mod == 0:  # PNG: first 64 codepoints as 8x8 gray
-                    vals = [ord(c) & 0xFF for c in s[:64]]
-                    vals += [0] * (64 - len(vals))
-                    arr = np.array(vals, dtype=np.uint8).reshape(8, 8)
-                    payloads.append(_png.png_encode(arr))
-                elif mod == 1:  # WAV: m7's encoder rule
-                    vals = [
-                        ((ord(c) & 0xFF) - 128) * 256 for c in s[:_WAV_MAX]
-                    ]
-                    payloads.append(
-                        _encode_wav(
-                            np.array(vals, dtype=np.int16), _rate_for(doc_id)
-                        )
-                    )
-                else:  # AVI: m9's encoder rule
-                    cut = s[: FRAME_CHARS * MAX_FRAMES]
-                    n_frames = (len(cut) + FRAME_CHARS - 1) // FRAME_CHARS
-                    vals = [ord(c) & 0xFF for c in cut]
-                    vals += [0] * (n_frames * FRAME_CHARS - len(vals))
-                    frames = np.array(vals, dtype=np.uint8).reshape(
-                        n_frames, SIDE, SIDE
-                    )
-                    payloads.append(avi_encode(frames, _fps_for(doc_id)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return src.mapInPandas(kernel, "doc_id bigint, payload binary")
+def _decode_any(payload: bytes) -> tuple[str, int, int, int]:
+    """One payload's unified row ``(modality, dim_a, dim_b,
+    content_sum)``, decoded by the codec its magic number names through
+    the strict kernels' own per-payload functions. A recognized magic
+    with an undecodable body, like an unrecognized payload, degrades to
+    ``('unknown', 0, byte length, 0)`` instead of failing the batch;
+    errors outside :data:`_CODEC_ERRORS` propagate."""
+    from .audio import _wav_stats, is_wav
+    from .avi import _avi_stats, is_avi
+
+    try:
+        if _png.is_png(payload):
+            return ("png", *_png_stats(payload))
+        if is_wav(payload):
+            n, rate, _, pcm_sum = _wav_stats(payload)
+            return "wav", n, rate, pcm_sum
+        if is_avi(payload):
+            _, _, usec, n, pixel_sum = _avi_stats(payload)
+            return "avi", n, usec, pixel_sum
+    except _CODEC_ERRORS:
+        pass
+    return "unknown", 0, len(payload), 0
 
 
-def decode_any_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def decode_any_metadata(df: DataFrame) -> DataFrame:
     """Magic-number DISPATCH over a mixed binary column — the operator a
     real multimodal pipeline runs first: classify each payload (PNG /
-    WAV / AVI / unknown) and run the matching REAL decoder. Output is a
-    unified schema: (modality, dim_a, dim_b, content_sum) where the
-    dims/sum are format-specific but all fully decoded —
+    WAV / AVI / unknown) and run the matching REAL decoder
+    (:func:`_decode_any`). Output is a unified schema: (modality, dim_a,
+    dim_b, content_sum) where the dims/sum are format-specific but all
+    fully decoded —
 
       png: width, height, pixel sum of the decoded raster
       wav: frame count, sample rate (header), PCM sample sum
       avi: frame count, usec-per-frame (header), all-frame pixel sum
       unknown payloads pass through as ('unknown', 0, byte length, 0)
       instead of failing the batch (the mixed-corpus contract)."""
-    import io as _io
-    import wave as _wave
-
-    import numpy as np
-
-    from .audio import is_wav
-    from .avi import avi_decode, is_avi
-
-    def one(p: bytes) -> tuple[str, int, int, int]:
-        # Per-payload guard: a recognized magic with a malformed body must
-        # degrade to the 'unknown' row, not fail the whole Arrow batch —
-        # the mixed-corpus contract promised in the docstring.
-        try:
-            if _png.is_png(p):
-                arr = _png.png_decode(p)
-                h, w = arr.shape[:2]
-                return "png", w, h, int(arr.sum())
-            if is_wav(p):
-                with _wave.open(_io.BytesIO(p), "rb") as wv:
-                    n = wv.getnframes()
-                    rate = wv.getframerate()
-                    raw = wv.readframes(n)
-                return "wav", n, rate, int(
-                    np.frombuffer(raw, dtype="<i2").sum()
-                )
-            if is_avi(p):
-                _, _, usec, frames = avi_decode(p)
-                return "avi", len(frames), usec, int(
-                    sum(int(f.sum()) for f in frames)
-                )
-        except Exception:
-            pass
-        return "unknown", 0, len(p), 0
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [one(bytes(p)) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": [m[0] for m in metas],
-                    "dim_a": [m[1] for m in metas],
-                    "dim_b": [m[2] for m in metas],
-                    "content_sum": [m[3] for m in metas],
-                }
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel,
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [_decode_any(p)],
         "doc_id bigint, modality string, dim_a bigint, dim_b bigint, "
         "content_sum bigint",
     )
 
 
-def image_ahash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def _ahash(payload: bytes) -> tuple[int, int]:
+    """(ahash_lo, ahash_hi) of one 8x8 PNG; see :func:`image_ahash`."""
+    flat = _png.png_decode(payload).astype(np.int64).flatten()
+    n = flat.size
+    if n != 64:  # the documented 8x8 contract — anything else would
+        # silently hash a prefix of the raster
+        raise ValueError(f"image_ahash requires an 8x8 raster (64 px), got {n}")
+    bits = (flat * n > int(flat.sum())).astype(np.uint64)
+    shifts = np.arange(32, dtype=np.uint64)
+    return int((bits[:32] << shifts).sum()), int((bits[32:] << shifts).sum())
+
+
+def image_ahash(df: DataFrame) -> DataFrame:
     """REAL perceptual average-hash (aHash) over decoded images — the
     standard cheap image-dedup/near-dup signal: decode the PNG, compare
     every pixel against the image mean, pack the 64 bits (row-major) of
@@ -448,33 +365,11 @@ def image_ahash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     non-negative) so no engine's signed-64 edge can bite. Raises on
     non-PNG payloads and on rasters that are not exactly 8x8 = 64 px
     (strict verification tail, like png_pixel_stats)."""
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            los, his = [], []
-            for p in pdf[payload_col]:
-                arr = _png.png_decode(bytes(p))
-                flat = arr.astype(np.int64).flatten()
-                n = flat.size
-                if n != 64:  # the documented 8x8 contract — anything else
-                    # would silently hash a prefix of the raster
-                    raise ValueError(
-                        f"image_ahash requires an 8x8 raster (64 px), got {n}"
-                    )
-                s = int(flat.sum())
-                bits = (flat * n > s).astype(np.uint64)
-                shifts = np.arange(32, dtype=np.uint64)
-                lo = int((bits[:32] << shifts).sum())
-                hi = int((bits[32:64] << shifts).sum())
-                los.append(lo)
-                his.append(hi)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ahash_lo": los, "ahash_hi": his}
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel, "doc_id bigint, ahash_lo bigint, ahash_hi bigint"
+    return _map_payloads(
+        df,
+        "payload",
+        lambda _, p: [_ahash(p)],
+        "doc_id bigint, ahash_lo bigint, ahash_hi bigint",
     )
 
 
@@ -525,9 +420,7 @@ def ahash_neardup_pairs(
     )
 
 
-def png_patchify(
-    df: DataFrame, payload_col: str = "payload", patch: int = 4
-) -> DataFrame:
+def png_patchify(df: DataFrame, patch: int = 4) -> DataFrame:
     """ViT-style PATCH EXTRACTION over REAL decoded PNGs: decode each
     payload (the genuine inflate/un-filter kernel in operators.png) and
     emit one row per non-overlapping ``patch`` x ``patch`` block with
@@ -542,35 +435,20 @@ def png_patchify(
     payload pixels are pure character arithmetic, an SQL oracle can
     predict every patch sum — a hash match certifies decode + spatial
     windowing bit-exactly."""
-    import numpy as np
-
     p = int(patch)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, prs, pcs, sums = [], [], [], []
-            for i, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                arr = _png.png_decode(bytes(raw)).astype(np.int64)
-                h, w = arr.shape[:2]
-                for pr in range(h // p):
-                    for pc in range(w // p):
-                        blk = arr[
-                            pr * p : (pr + 1) * p, pc * p : (pc + 1) * p
-                        ]
-                        ids.append(i)
-                        prs.append(pr)
-                        pcs.append(pc)
-                        sums.append(int(blk.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "patch_row": prs,
-                    "patch_col": pcs,
-                    "patch_sum": sums,
-                }
-            )
+    def rows(_, payload: bytes) -> list[tuple[int, int, int]]:
+        arr = _png.png_decode(payload).astype(np.int64)
+        h, w = arr.shape[:2]
+        return [
+            (pr, pc, int(arr[pr * p : (pr + 1) * p, pc * p : (pc + 1) * p].sum()))
+            for pr in range(h // p)
+            for pc in range(w // p)
+        ]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel,
+    return _map_payloads(
+        df,
+        "payload",
+        rows,
         "doc_id bigint, patch_row int, patch_col int, patch_sum bigint",
     )

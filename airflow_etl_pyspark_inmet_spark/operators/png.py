@@ -1,17 +1,16 @@
 """Minimal real PNG codec (pure stdlib zlib/struct + numpy).
 
-The sandbox has no PIL/libav, but PNG is simple enough to implement from
-the public spec (RFC 2083): chunks are (length, type, data, crc); pixels
-live in IDAT as zlib-compressed scanlines, each prefixed with a filter
-byte (0=None 1=Sub 2=Up 3=Average 4=Paeth). This module supports the
+PNG is simple enough to implement from the public spec (RFC 2083):
+chunks are (length, type, data, crc); pixels live in IDAT as
+zlib-compressed scanlines, each prefixed with a filter byte (0=None
+1=Sub 2=Up 3=Average 4=Paeth). This module supports the
 common web subset — 8-bit depth, color types 0 (gray), 2 (RGB), 4
 (gray+alpha), 6 (RGBA), no interlacing — which is exactly what a
 training-data image pipeline normalizes to anyway.
 
-This gives the multimodal operators a REAL kernel that runs here: decode
--> numpy array -> resize -> encode, all deterministic. PIL is preferred
-when importable (faster C unfiltering, full format coverage); these
-functions are the fallback and the ground truth for the unit tests.
+This is the multimodal operators' one PNG codec: decode -> numpy array
+-> resize -> encode, all deterministic, and the ground truth for the
+unit tests.
 """
 
 from __future__ import annotations

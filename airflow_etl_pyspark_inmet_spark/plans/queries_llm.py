@@ -8,7 +8,7 @@ oracle SQL lives in plans.registry.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..operators.util import lineage_checkpoint
 
@@ -263,6 +263,22 @@ def g1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(100)
 
 
+def _media_tokens() -> Column:
+    """``media_tokens`` of one decode_any_metadata row, from its decoded
+    dims: image ceil(w/2) * ceil(h/2) patches, audio one token per 16
+    PCM frames, video 16 patches per 8x8 frame."""
+    return (
+        F.when(
+            F.col("modality") == "png",
+            F.expr("((dim_a + 1) div 2) * ((dim_b + 1) div 2)"),
+        )
+        .when(F.col("modality") == "wav", F.expr("(dim_a + 15) div 16"))
+        .otherwise(F.expr("dim_a * 16"))
+        .cast("bigint")
+        .alias("media_tokens")
+    )
+
+
 def c5_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MULTIMODAL flagship composition — c4's text-pipeline proof
     repeated for the mixed-media path: real codec decode (m11's
@@ -289,17 +305,7 @@ def c5_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("exact_copies"),
     )
     media = survivors.select(
-        "doc_id",
-        "modality",
-        "exact_copies",
-        F.when(
-            F.col("modality") == "png",
-            F.expr("((dim_a + 1) div 2) * ((dim_b + 1) div 2)"),
-        )
-        .when(F.col("modality") == "wav", F.expr("(dim_a + 15) div 16"))
-        .otherwise(F.expr("dim_a * 16"))
-        .cast("bigint")
-        .alias("media_tokens"),
+        "doc_id", "modality", "exact_copies", _media_tokens()
     )
     text_toks = docs.select(
         "doc_id",
@@ -1275,7 +1281,7 @@ def m6_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    payloads = text_to_png_payload(docs, side=8)
+    payloads = text_to_png_payload(docs)
     resized = resize_images(payloads, target_w=4, target_h=4)
     return png_pixel_stats(resized).select(
         "doc_id", "width", "height", "pixel_sum"
@@ -1496,7 +1502,7 @@ def m12_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import image_ahash, text_to_png_payload
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return image_ahash(text_to_png_payload(docs, side=8)).select(
+    return image_ahash(text_to_png_payload(docs)).select(
         "doc_id", "ahash_lo", "ahash_hi"
     )
 
@@ -1510,7 +1516,7 @@ def d11_image_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import image_ahash, text_to_png_payload
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    h = image_ahash(text_to_png_payload(docs, side=8))
+    h = image_ahash(text_to_png_payload(docs))
     return (
         h.groupBy("ahash_hi", "ahash_lo")
         .agg(
@@ -1536,7 +1542,7 @@ def d12_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    h = image_ahash(text_to_png_payload(docs, side=8))
+    h = image_ahash(text_to_png_payload(docs))
     return ahash_neardup_pairs(h, max_hamming=3)
 
 
@@ -1742,18 +1748,7 @@ def m13_multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     meta = decode_any_metadata(mixed_modality_payload(docs))
-    media = meta.select(
-        "doc_id",
-        "modality",
-        F.when(
-            F.col("modality") == "png",
-            F.expr("((dim_a + 1) div 2) * ((dim_b + 1) div 2)"),
-        )
-        .when(F.col("modality") == "wav", F.expr("(dim_a + 15) div 16"))
-        .otherwise(F.expr("dim_a * 16"))  # avi: 16 patches / 8x8 frame
-        .cast("bigint")
-        .alias("media_tokens"),
-    )
+    media = meta.select("doc_id", "modality", _media_tokens())
     text_toks = docs.select(
         "doc_id",
         F.size(_words(F.col("text"))).cast("bigint").alias("text_tokens"),
@@ -2301,7 +2296,7 @@ def m16_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import png_patchify, text_to_png_payload
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return png_patchify(text_to_png_payload(docs, side=8), patch=4)
+    return png_patchify(text_to_png_payload(docs), patch=4)
 
 
 def s7_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:

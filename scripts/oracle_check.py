@@ -64,6 +64,51 @@ def type_mismatches(sdf, con, sql) -> list[str]:
     return out
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def oracle_diff(sdf, srows, con, sql) -> list[str]:
+    """How Spark's collected ``srows`` of ``sdf`` differ from the DuckDB
+    result of ``sql`` on ``con``: column names, cross-engine type
+    shapes, row count, then order-insensitive values. Empty when they
+    agree; a DuckDB error propagates."""
+    ores = con.execute(sql)
+    ocols = [d[0] for d in ores.description]
+    orows = ores.fetchall()
+
+    scols = sdf.columns
+    msgs = []
+    if sorted(scols) != sorted(ocols):
+        msgs.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
+    else:
+        tmis = type_mismatches(sdf, con, sql)
+        if tmis:
+            msgs.append("type skew: " + "; ".join(tmis))
+    if len(srows) != len(orows):
+        msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if not msgs:
+        order = sorted(scols)
+        sset = sorted(
+            tuple(canon(r[scols.index(c)]) for c in order) for r in srows
+        )
+        oset = sorted(
+            tuple(canon(r[ocols.index(c)]) for c in order) for r in orows
+        )
+        if sset != oset:
+            ndiff = sum(1 for a, b in zip(sset, oset) if a != b)
+            msgs.append(f"values differ in {ndiff}/{len(sset)} sorted rows")
+            for a, b in zip(sset, oset):
+                if a != b:
+                    msgs.append(f"  first diff:\n   spark : {a}\n   oracle: {b}")
+                    break
+    return msgs
+
+
 def main() -> int:
     import __spark_entry__ as E
     from airflow_etl_pyspark_inmet_spark.session import get_spark
@@ -76,9 +121,7 @@ def main() -> int:
         del args[i : i + 2]
 
     spark = get_spark(shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect(SF_DIR)
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -98,39 +141,11 @@ def main() -> int:
                   f"[{time.time()-t0:.1f}s]")
             continue
         try:
-            ores = con.execute(oracles[name])
-            ocols = [d[0] for d in ores.description]
-            orows = ores.fetchall()
+            msgs = oracle_diff(sdf, srows, con, oracles[name])
         except Exception as ex:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {type(ex).__name__}: {str(ex)[:300]}")
             continue
-
-        scols = sdf.columns
-        msgs = []
-        if sorted(scols) != sorted(ocols):
-            msgs.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            tmis = type_mismatches(sdf, con, oracles[name])
-            if tmis:
-                msgs.append("type skew: " + "; ".join(tmis))
-        if len(srows) != len(orows):
-            msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if not msgs:
-            order = sorted(scols)
-            sset = sorted(
-                tuple(canon(r[scols.index(c)]) for c in order) for r in srows
-            )
-            oset = sorted(
-                tuple(canon(r[ocols.index(c)]) for c in order) for r in orows
-            )
-            if sset != oset:
-                ndiff = sum(1 for a, b in zip(sset, oset) if a != b)
-                msgs.append(f"values differ in {ndiff}/{len(sset)} sorted rows")
-                for a, b in zip(sset, oset):
-                    if a != b:
-                        msgs.append(f"  first diff:\n   spark : {a}\n   oracle: {b}")
-                        break
         if msgs:
             failures.append(name)
             print(f"FAIL {name}: " + "; ".join(msgs[:3]))

@@ -1,7 +1,6 @@
 """Real multimodal kernel tests: the pure stdlib+numpy PNG codec and the
 PNG-aware decode/resize operators, exercised end-to-end through Spark on
-generated PNGs (no PIL needed; PIL is preferred automatically when the
-environment has it)."""
+generated PNGs."""
 
 from __future__ import annotations
 
@@ -188,5 +187,5 @@ def test_image_ahash_hand_computed(spark):
     )
 
     df = spark.createDataFrame([(5, "AB")], "doc_id long, text string")
-    r = image_ahash(text_to_png_payload(df, side=8)).collect()[0]
+    r = image_ahash(text_to_png_payload(df)).collect()[0]
     assert (r["ahash_lo"], r["ahash_hi"]) == (0b11, 0)

@@ -2443,7 +2443,7 @@ def test_png_patchify_matches_numpy(spark):
         [(7, text)], "doc_id bigint, text string"
     )
     out = png_patchify(
-        text_to_png_payload(docs, side=8), patch=4
+        text_to_png_payload(docs), patch=4
     ).collect()
     vals = [ord(c) & 0xFF for c in text[:64]] + [0] * (64 - min(64, len(text)))
     arr = np.array(vals, dtype=np.int64).reshape(8, 8)

@@ -3,8 +3,9 @@ import must exist, so a script left pointing at a deleted module fails
 here instead of on its next manual run; the package checkpoints
 lineage only through ``operators.util.lineage_checkpoint``; the ANN
 tier ranks and routes in one place each, with no ``assigner`` option;
-and the dedup, text and storage tiers build each of their shared
-mechanisms once."""
+the dedup, text, storage and multimodal tiers build each of their
+shared mechanisms once; and no multimodal kernel takes a column-name
+option."""
 
 from __future__ import annotations
 
@@ -109,16 +110,19 @@ def stray_calls(
     )
 
 
-def assigner_params(package: Path) -> list[str]:
-    """``path:line`` of every function in ``package`` that takes an
-    ``assigner`` parameter: the argmin path is chosen from k alone."""
+def param_sites(root: Path, param: str) -> list[str]:
+    """``path:line`` of every function under ``root`` (a file or a
+    directory) that takes a ``param`` parameter: the ANN argmin path is
+    chosen from k alone (no ``assigner``), and the multimodal tier reads
+    fixed column names (no ``id_col``, ``text_col`` or ``payload_col``)."""
+    base = root.parent if root.is_file() else root
+    paths = [root] if root.is_file() else sorted(root.rglob("*.py"))
     return [
-        f"{path.relative_to(package)}:{node.lineno}"
-        for path in sorted(package.rglob("*.py"))
+        f"{path.relative_to(base)}:{node.lineno}"
+        for path in paths
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
-        and "assigner"
-        in [a.arg for a in node.args.args + node.args.kwonlyargs]
+        and param in [a.arg for a in node.args.args + node.args.kwonlyargs]
     ]
 
 
@@ -133,7 +137,7 @@ def test_ann_tier_ranks_and_routes_in_one_place():
 
 
 def test_no_function_takes_an_assigner():
-    assert assigner_params(PACKAGE) == []
+    assert param_sites(PACKAGE, "assigner") == []
 
 
 def test_ann_scans_flag_copies(tmp_path):
@@ -150,18 +154,27 @@ def test_ann_scans_flag_copies(tmp_path):
     sim = tmp_path / "sim.py"
     assert stray_calls(sim, "Window.partitionBy", "_top_k", ["query_id_col"]) == [6]
     assert stray_calls(sim, "_assign_udf", "_ivf_route") == [8]
-    assert assigner_params(tmp_path) == ["sim.py:5"]
+    assert param_sites(tmp_path, "assigner") == ["sim.py:5"]
+    assert param_sites(sim, "query_id_col") == ["sim.py:1", "sim.py:5"]
 
 
 DEDUP = PACKAGE / "operators" / "dedup.py"
 
+# the multimodal tier's kernel modules
+MEDIA_KERNELS = (
+    "operators/audio.py",
+    "operators/avi.py",
+    "operators/multimodal.py",
+)
+
 # the helper that owns each shared mechanism -> (its tier, a source
 # pattern only a copy of that mechanism contains, scope under the
-# package, the copies allowed in that scope: 0 where the owner reaches
-# the pattern through a lower helper, 2 for the bigram split that both
-# the string and the hashed bigram stream spell out[, a file under the
-# package left out of the count: the registry's oracle SQL is the
-# reference the engine is compared against, not a copy])
+# package (one path or a tuple of them), the copies allowed in that
+# scope: 0 where the owner reaches the pattern through a lower helper,
+# 2 for the bigram split that both the string and the hashed bigram
+# stream spell out[, a file under the package left out of the count:
+# the registry's oracle SQL is the reference the engine is compared
+# against, not a copy])
 SHARED_MECHANISMS = {
     "text._word_grams": (
         "dedup",
@@ -243,6 +256,39 @@ SHARED_MECHANISMS = {
         1,
         "plans/registry.py",
     ),
+    "multimodal._map_payloads": (
+        "multimodal",
+        ".mapInPandas(",
+        MEDIA_KERNELS,
+        1,
+    ),
+    # one writer (_encode_wav) and one reader
+    "audio._read_wav": ("multimodal", "wave.open(", ".", 2),
+    # the text-to-byte rule, once in each modality's encoder:
+    # _png_bytes, audio._wav_bytes and avi._avi_bytes
+    "multimodal._png_bytes": ("multimodal", "ord(c) & 0xFF", "operators", 3),
+    "multimodal._tile": (
+        "multimodal",
+        "// max(len(",
+        "operators/multimodal.py",
+        1,
+    ),
+    "queries_llm._media_tokens": (
+        "multimodal",
+        "((dim_a + 1) div 2)",
+        "plans",
+        1,
+        "plans/registry.py",
+    ),
+    # the mixed-corpus operators catch exactly these codec errors
+    "multimodal._CODEC_ERRORS": (
+        "multimodal",
+        "except Exception",
+        MEDIA_KERNELS + ("operators/png.py",),
+        0,
+    ),
+    # the stdlib+numpy codec in operators/png.py is the one PNG codec
+    "png.png_decode": ("multimodal", "_PILImage", ".", 0),
 }
 
 
@@ -267,9 +313,11 @@ def pattern_copies(root: Path, pattern: str) -> dict[str, int]:
 
 def assert_built_once(owner: str) -> None:
     _, pattern, scope, allowed, *skip = SHARED_MECHANISMS[owner]
-    root = PACKAGE / scope
+    scopes = (scope,) if isinstance(scope, str) else scope
+    roots = [PACKAGE / s for s in scopes]
     copies = {
         name: n
+        for root in roots
         for name, n in pattern_copies(root, pattern).items()
         if root.parent / name not in [PACKAGE / s for s in skip]
     }
@@ -289,6 +337,21 @@ def test_text_tier_builds_each_mechanism_once(owner):
 @pytest.mark.parametrize("owner", tier("storage"))
 def test_storage_tier_builds_each_mechanism_once(owner):
     assert_built_once(owner)
+
+
+@pytest.mark.parametrize("owner", tier("multimodal"))
+def test_multimodal_tier_builds_each_mechanism_once(owner):
+    assert_built_once(owner)
+
+
+@pytest.mark.parametrize("param", ["id_col", "text_col", "payload_col"])
+def test_no_multimodal_kernel_takes_a_column_name(param):
+    sites = [
+        site
+        for scope in MEDIA_KERNELS + ("operators/png.py",)
+        for site in param_sites(PACKAGE / scope, param)
+    ]
+    assert sites == [], "the tier reads fixed input column names"
 
 
 def test_dedup_tier_hashes_md5_prefixes_in_one_place():

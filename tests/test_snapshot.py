@@ -138,16 +138,16 @@ def test_snapshot_vacuum_reclaims_only_dead_files(spark, tmp_path):
     assert _rows(snapshot_read(spark, t)) == expect_latest
 
 
-def test_snapshot_mv_maintenance_equals_full_recompute(spark, sf_small):
+def test_snapshot_mv_maintenance_equals_full_recompute(
+    spark, sf_small, tmp_path
+):
     """The c6 theorem through the SINK: maintain a monthly-revenue MV
     snapshot table with a CDC merge and compare against a from-scratch
     recompute over the changed base."""
     orders = spark.read.parquet(f"{sf_small}/orders.parquet").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    import tempfile
-
-    t = tempfile.mkdtemp(prefix="mvsnap") + "/mv"
+    t = str(tmp_path / "mv")
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
     mv = orders.groupBy(
         F.year("o_orderdate").alias("ano"), F.month("o_orderdate").alias("mes")
@@ -358,14 +358,14 @@ def test_snapshot_changes_across_schema_evolution(spark, tmp_path):
     assert got == {1: (11, "x", "update"), 3: (30, "y", "insert")}
 
 
-def test_inmet_pipeline_is_deterministic_via_snapshot_cdf(spark, inmet_glob):
+def test_inmet_pipeline_is_deterministic_via_snapshot_cdf(
+    spark, inmet_glob, tmp_path
+):
     """Versioned warehouse loads prove pipeline determinism: running
     the full reference pipeline twice and landing `cidade_kpis_mensal`
     as two snapshot versions yields an EMPTY change feed — the
     reproducibility contract a production warehouse wants from its
     loader, verified through the transactional sink."""
-    import tempfile
-
     from airflow_etl_pyspark_inmet_spark.plans.inmet_pipeline import (
         run_pipeline,
     )
@@ -374,7 +374,7 @@ def test_inmet_pipeline_is_deterministic_via_snapshot_cdf(spark, inmet_glob):
         snapshot_write,
     )
 
-    t = tempfile.mkdtemp(prefix="inmetsnap") + "/kpis"
+    t = str(tmp_path / "kpis")
     for _ in range(2):
         tables = run_pipeline(spark, inmet_glob)
         snapshot_write(spark, t, tables["cidade_kpis_mensal"])
