@@ -20,7 +20,11 @@ Each mechanism the family shares is built in one place:
 - salted engine-portable hashes (portable MinHash, Bloom positions):
   :func:`_salted_hash60` over :func:`_portable_hash60`;
 - exact int64 Gram tiles (embedding flags, the tau sweep):
-  :func:`_int64_gram_tiles`.
+  :func:`_int64_gram_tiles`;
+- embedding-cosine pairs: :func:`~.similarity._cos_side` sides scored by
+  :func:`~.similarity._pair_cosine` (a zero-norm vector never pairs);
+- cluster labels: :func:`_cluster_labels` over
+  :func:`connected_components` (a node in no pair keeps its own id).
 
 Hashes that stay inside Spark are ``xxhash64`` with integer salts; values
 a DuckDB oracle must replay use the md5-prefix :func:`_portable_hash60`.
@@ -780,11 +784,7 @@ def simhash_jaccard_pairs(
 
 
 def embedding_cosine_pairs(
-    df: DataFrame,
-    block_col: str,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, block_col: str, threshold: float
 ) -> DataFrame:
     """Semantic (embedding-cosine) near-dup pairs within blocks.
 
@@ -795,23 +795,16 @@ def embedding_cosine_pairs(
     role so the result stays exactly oracle-able. Norms are computed once
     per row BEFORE the join (each pair then costs one dot product, not
     three), and the scoring is a JVM-side aggregate fold — no Python, no
-    broadcast of the corpus.
+    broadcast of the corpus. A zero-norm vector never pairs.
     """
-    from .similarity import _dot, _norm
+    from .similarity import _cos_side, _pair_cosine
 
-    e = df.select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.col(vec_col).alias("_vec"),
-        _norm(F.col(vec_col)).alias("_nrm"),
-    )
-    a = e.toDF("id_a", "_blk", "_va", "_na")
-    b = e.toDF("id_b", "_blk", "_vb", "_nb")
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    blk = F.col(block_col).alias("_blk")
     return (
-        a.join(b, "_blk")
+        _cos_side(df, "a", blk)
+        .join(_cos_side(df, "b", blk), "_blk")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+        .select("id_a", "id_b", _pair_cosine().alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -980,7 +973,7 @@ def embedding_lsh_pairs(
     """
     import math
 
-    from .similarity import _dot, _norm, sign_lsh_bucket_udf
+    from .similarity import _cos_side, _pair_cosine, sign_lsh_bucket_udf
 
     base_side = index_df if index_df is not None else df
     if n_planes is None:
@@ -1028,35 +1021,20 @@ def embedding_lsh_pairs(
         n_part = max(32, min(4096, est_cand // 4_000_000))
         cand = cand.repartition(n_part, "id_a", "id_b")
     cand = cand.dropDuplicates(["id_a", "id_b"])
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    vb = base_side.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    cols = {"id_col": id_col, "vec_col": vec_col}
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+        cand.join(_cos_side(df, "a", **cols), "id_a")
+        .join(_cos_side(base_side, "b", **cols), "id_b")
+        .select("id_a", "id_b", _pair_cosine().alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over an undirected pair list → (node, component)
-    with component = min node id reachable. This is the dedup *clustering*
-    step: near-dup pairs (from jaccard/minhash/simhash) become groups with
-    one canonical keeper per group.
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Connected components over an undirected ``(id_a, id_b)`` pair list
+    → (node, component) with component = min node id reachable. This is
+    the dedup *clustering* step: near-dup pairs (from jaccard/minhash/
+    simhash) become groups with one canonical keeper per group.
 
     Distributed min-label propagation with pointer jumping: every
     iteration (a) takes the min neighbor label through the symmetrized
@@ -1073,9 +1051,9 @@ def connected_components(
     ``localCheckpoint`` truncates lineage so plans don't grow by round.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
         .transform(lineage_checkpoint_eager)
@@ -1146,39 +1124,39 @@ def connected_components(
     return labels.select(F.col("node"), F.col("comp"))
 
 
+def _cluster_labels(nodes: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """The one cluster labeller: every row of ``nodes`` plus its
+    ``cluster_id``, the :func:`connected_components` label of its
+    ``id_col`` over the ``(id_a, id_b)`` ``pairs``. A left join onto the
+    components, so a node in no pair is a singleton cluster labelled
+    with its own id."""
+    comp = connected_components(pairs)
+    return nodes.join(comp, F.col(id_col) == F.col("node"), "left").select(
+        *nodes.columns,
+        F.coalesce(F.col("comp"), F.col(id_col)).alias("cluster_id"),
+    )
+
+
 def semantic_dedup_keepers(
-    df: DataFrame,
-    block_col: str,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, block_col: str, threshold: float
 ) -> DataFrame:
     """SemDeDup-style semantic dedup *selection*: embedding-cosine
     near-dup pairs within blocks -> connected components -> one canonical
     keeper (min id) per semantic cluster. Emits every row of the corpus:
 
-        id | cluster_id | is_keeper
+        vec_id | cluster_id | is_keeper
 
     so a curation pipeline drops ``NOT is_keeper`` rows to deduplicate
     semantically. Builds on ``embedding_cosine_pairs`` (blocked equi-join
-    — linear in block size) and ``connected_components`` (min-label
+    — linear in block size) and ``_cluster_labels`` (min-label
     propagation, O(cluster diameter) rounds); singleton documents keep
-    themselves via the left join, so the output is a total partition of
-    the corpus, not just the paired subset.
+    themselves, so the output is a total partition of the corpus, not
+    just the paired subset.
     """
-    pairs = embedding_cosine_pairs(
-        df, block_col, threshold, id_col=id_col, vec_col=vec_col
+    pairs = embedding_cosine_pairs(df, block_col, threshold)
+    return _cluster_labels(df.select("vec_id"), pairs, "vec_id").withColumn(
+        "is_keeper", F.col("vec_id") == F.col("cluster_id")
     )
-    comps = connected_components(pairs).withColumnRenamed("node", "_cc_id")
-    out = (
-        df.select(F.col(id_col))
-        .join(comps, F.col(id_col) == F.col("_cc_id"), "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("comp"), F.col(id_col)).alias("cluster_id"),
-        )
-    )
-    return out.withColumn("is_keeper", F.col(id_col) == F.col("cluster_id"))
 
 
 def repeated_spans(
@@ -2579,31 +2557,20 @@ def semdedup_from_assignment(
     quantized onto the grid — production k ~ sqrt(N) in the thousands —
     the algebra below is identical either way: intra-cluster pairs,
     cosine >= tau, the member closer to its centroid loses, ties drop
-    the smaller id, a vector is dropped if it loses any pair."""
-    from .similarity import _dot, _norm
+    the smaller id, a vector is dropped if it loses any pair. A
+    zero-norm vector never pairs, so it is never dropped."""
+    from .similarity import _cos_side, _pair_cosine
 
     assign = assign.transform(lineage_checkpoint)
-    e = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        _norm(F.col(vec_col)).alias("_nrm"),
-    ).filter(F.col("_nrm") > 0)
-    # zero-norm vectors have an undefined cosine: they can never pair
-    # (so never drop) and, under ANSI mode, would otherwise throw
-    # DIVIDE_BY_ZERO inside the join condition — found by the
-    # hypothesis pair/loser property.
+    cols = {"id_col": id_col, "vec_col": vec_col}
     fa = assign.toDF("id_a", "cluster", "dist_a")
     fb = assign.toDF("id_b", "cluster", "dist_b")
     pairs = (
         fa.join(fb, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
-        .join(e.toDF("id_a", "_va", "_na"), "id_a")
-        .join(e.toDF("id_b", "_vb", "_nb"), "id_b")
-        .filter(
-            _dot(F.col("_va"), F.col("_vb"))
-            / (F.col("_na") * F.col("_nb"))
-            >= F.lit(tau)
-        )
+        .join(_cos_side(df, "a", **cols), "id_a")
+        .join(_cos_side(df, "b", **cols), "id_b")
+        .filter(_pair_cosine() >= F.lit(tau))
     )
     losers = pairs.select(
         F.when(

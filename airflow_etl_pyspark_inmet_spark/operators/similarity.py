@@ -15,9 +15,22 @@ Two tiers:
 
 Scores are computed in double; ranking output (ids + rank) is
 deterministic as long as no two scores tie exactly.
+
+The near-dup verification tier builds each shared mechanism in one place:
+
+- the cosine division: :func:`_cosine` (NULL when a norm is zero), behind
+  :func:`cosine_similarity` and :func:`_pair_cosine`, which scores a pair
+  joined from two :func:`_cos_side` projections (norm computed once per
+  row) — the embedding near-dup pairs of ``dedup`` and ``streaming``;
+- the recall envelope: :func:`_recall_envelope` (hits over truth in
+  integer tenths), behind :func:`ann_with_recall_check`,
+  :func:`ann_with_corpus_recall_check` and the d19–d23, d26 and st10
+  harnesses.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -27,6 +40,7 @@ from .util import (
     ensure_parallelism,
     lineage_checkpoint,
     lineage_checkpoint_eager,
+    overlap,
     rebalance_if_skewed,
 )
 
@@ -47,8 +61,42 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The one cosine division: ``dot(a, b) / (na * nb)`` for norms
+    ``na``, ``nb``. A zero norm makes the cosine undefined: the score is
+    NULL (DuckDB's ``x / 0``), so the pair never passes a threshold
+    filter and ranks after every scored item, where a bare division
+    raises DIVIDE_BY_ZERO under ANSI mode."""
+    return _dot(a, b) / F.nullif(na * nb, F.lit(0.0))
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _cosine(a, b, _norm(a), _norm(b))
+
+
+def _cos_side(
+    df: DataFrame,
+    side: str,
+    *keep: Column,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """One side of a pair-cosine join: ``(id_<side>, _v<side>,
+    _n<side>, *keep)``, the norm computed once per row before the join,
+    so each pair costs one dot product, not three. Score the joined
+    pair with :func:`_pair_cosine`."""
+    return df.select(
+        F.col(id_col).alias(f"id_{side}"),
+        F.col(vec_col).alias(f"_v{side}"),
+        _norm(F.col(vec_col)).alias(f"_n{side}"),
+        *keep,
+    )
+
+
+def _pair_cosine() -> Column:
+    """The cosine of a pair joined from an ``a`` and a ``b``
+    :func:`_cos_side`."""
+    return _cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
 
 
 def _top_k(
@@ -379,16 +427,54 @@ def lsh_cosine_topk(
     )
 
 
+def _recall_envelope(
+    truth: DataFrame,
+    approx: DataFrame,
+    keys: list[str],
+    min_recall: float,
+    flag: str = "recall_ok",
+    per: str | None = None,
+    broadcast: bool = False,
+    rows: DataFrame | None = None,
+) -> DataFrame:
+    """The one recall envelope of the verification tier: the share of
+    ``truth``'s ``keys`` rows that ``approx`` also holds, against
+    ``min_recall``, as boolean ``flag`` on every row of ``rows``
+    (default: ``truth``) — one value per ``per`` group, or one over the
+    whole truth set. The comparison is in integer tenths,
+    ``hits * 10 >= total * tenths``, so an empty truth set passes.
+    ``broadcast`` hints the approx side (a Q x k ANN frame); ``approx``
+    must not repeat a key."""
+    tenths = round(min_recall * 10)
+    if abs(tenths - min_recall * 10) > 1e-9:
+        raise ValueError(f"min_recall={min_recall} is not a whole tenth")
+    marked = approx.select(*keys).withColumn("_hit", F.lit(1))
+    hits = truth.select(*keys).join(
+        F.broadcast(marked) if broadcast else marked, keys, "left"
+    )
+    stats = (hits.groupBy(per) if per else hits).agg(
+        F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("_hit"),
+        F.count(F.lit(1)).alias("_tot"),
+    )
+    ok = stats.select(
+        *([per] if per else []),
+        (
+            F.coalesce(F.col("_hit"), F.lit(0)) * 10
+            >= F.col("_tot") * tenths
+        ).alias(flag),
+    )
+    rows = truth if rows is None else rows
+    if per:
+        return rows.join(F.broadcast(ok), per)
+    return rows.crossJoin(F.broadcast(ok))
+
+
 def ann_with_recall_check(
     items: DataFrame,
     queries: DataFrame,
-    ann: DataFrame,
+    ann: Callable[[], DataFrame],
     k: int,
     min_recall: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """Oracle-checkable validation harness for an ANN tier.
 
@@ -401,57 +487,23 @@ def ann_with_recall_check(
     scores ~0). The oracle emits the same exact top-k and literal TRUE.
     Production calls the ANN operator alone; this tier pins its recall
     contract to ground truth in the driver gate.
+
+    ``ann`` builds the ANN side. The exact top-k materializes eagerly on
+    a driver thread while ``ann()`` runs on this one (``util.overlap``),
+    so an ANN build with blocking driver jobs of its own (the IVF train
+    collects) overlaps the exact corpus pass. The exact frame is
+    checkpointed because it feeds both the recall aggregate and the
+    output; it is Q x k rows, as is the broadcast ANN side.
     """
-    # The exact frame feeds BOTH the recall aggregate and the output join;
-    # without a checkpoint the brute-force corpus scan + window would run
-    # twice in the physical plan. The checkpointed frame is Q x k rows.
-    # ``exact`` (r18): callers that build the ANN tier with blocking
-    # driver jobs of their own (e.g. the IVF train collects) can pass a
-    # pre-materialized exact frame built on a concurrent driver thread
-    # (guide §2.6 overlap) — it must be exactly
-    # cosine_topk(items, queries, k) for the recall contract to hold:
-    # its columns are checked here (schema only, no job) and a row
-    # ranked beyond k fails the action in the output projection below.
-    if exact is None:
-        exact = cosine_topk(
-            items, queries, k, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col,
-        ).transform(lineage_checkpoint_eager)
-    else:
-        missing = [
-            c for c in (query_id_col, "item_id", "rank")
-            if c not in exact.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"ann_with_recall_check: exact frame lacks columns {missing}"
-            )
-    # the ANN side is Q x k rows — broadcast it (stats-free window
-    # output otherwise draws a SortMergeJoin for a 50-row join).
-    hits = exact.select(query_id_col, "item_id").join(
-        F.broadcast(
-            ann.select(query_id_col, "item_id").withColumn("_hit", F.lit(1))
+    exact, approx = overlap(
+        lambda: cosine_topk(items, queries, k).transform(
+            lineage_checkpoint_eager
         ),
-        [query_id_col, "item_id"],
-        "left",
+        ann,
     )
-    per_q = hits.groupBy(query_id_col).agg(
-        (
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            / F.count(F.lit(1))
-        ).alias("_recall")
-    )
-    return exact.join(F.broadcast(per_q), query_id_col).select(
-        query_id_col,
-        "item_id",
-        F.when(F.col("rank") <= k, F.col("rank"))
-        .otherwise(
-            F.raise_error(
-                F.lit(f"ann_with_recall_check: exact frame ranks beyond k={k}")
-            )
-        )
-        .alias("rank"),
-        (F.col("_recall") >= F.lit(min_recall)).alias("recall_ok"),
+    return _recall_envelope(
+        exact, approx, ["query_id", "item_id"], min_recall,
+        per="query_id", broadcast=True,
     )
 
 
@@ -461,9 +513,6 @@ def ann_with_corpus_recall_check(
     ann: DataFrame,
     k: int,
     min_recall: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """:func:`ann_with_recall_check` with a CORPUS-level envelope — for
     surfaces whose query side is itself corpus-sized (the kNN-join
@@ -484,27 +533,10 @@ def ann_with_corpus_recall_check(
     ADVICE: the hint would hit the broadcast limit before the exact
     tier ran out of road); the hit join shuffles on the pair key.
     Production calls the ANN operator alone."""
-    exact = cosine_topk(
-        items, queries, k, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col,
-    ).transform(lineage_checkpoint_eager)  # consumers: recall agg + output
-    hits = exact.select(query_id_col, "item_id").join(
-        ann.select(query_id_col, "item_id").withColumn("_hit", F.lit(1)),
-        [query_id_col, "item_id"],
-        "left",
-    )
-    overall = hits.agg(
-        (
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            / F.count(F.lit(1))
-        ).alias("_recall")
-    )
-    return exact.crossJoin(F.broadcast(overall)).select(
-        query_id_col,
-        "item_id",
-        "rank",
-        (F.col("_recall") >= F.lit(min_recall)).alias("recall_ok"),
-    )
+    exact = cosine_topk(items, queries, k).transform(
+        lineage_checkpoint_eager
+    )  # consumers: recall agg + output
+    return _recall_envelope(exact, ann, ["query_id", "item_id"], min_recall)
 
 
 def _assign_udf(centroids: np.ndarray, n: int):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..operators.util import lineage_checkpoint
 
 from ..operators.dedup import (
+    _cluster_labels,
     dedup_exact,
     jaccard_pairs,
     minhash_lsh_pairs,
@@ -25,7 +26,13 @@ from ..operators.multimodal import (
     resize_stub,
     with_binary_payload,
 )
-from ..operators.similarity import cosine_topk, lsh_cosine_topk
+from ..operators.similarity import (
+    _cos_side,
+    _pair_cosine,
+    _recall_envelope,
+    cosine_topk,
+    lsh_cosine_topk,
+)
 from ..operators.text import (
     _words,
     decontaminate,
@@ -138,10 +145,15 @@ def s2_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = _probe_queries(emb)
-    ann = lsh_cosine_topk(
-        emb, queries, k=10, dim=64, n_planes=6, n_tables=8
+    return ann_with_recall_check(
+        emb,
+        queries,
+        lambda: lsh_cosine_topk(
+            emb, queries, k=10, dim=64, n_planes=6, n_tables=8
+        ),
+        k=10,
+        min_recall=0.5,
     )
-    return ann_with_recall_check(emb, queries, ann, k=10, min_recall=0.5)
 
 
 def m1_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,26 +437,23 @@ def s3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of the IVF build, but the IVF train runs two blocking
     driver collects (seeds, Lloyd merge) before the recall harness ever
     constructs — serialized, the query's driver-job chain was 15 jobs
-    deep. The exact tier's eager materialization now runs on a
-    concurrent driver thread while the train collects run on this one,
-    so the two corpus passes overlap (back-filling the train jobs'
-    straggler tails). Results are byte-identical: both sides are
+    deep. ann_with_recall_check takes the IVF side as a builder and
+    runs the exact tier's eager materialization on a concurrent driver
+    thread while the train collects run on this one, so the two corpus
+    passes overlap (back-filling the train jobs' straggler tails). Results are byte-identical: both sides are
     deterministic and independent; the thread only moves WHEN the exact
     checkpoint materializes."""
-    from ..operators.similarity import (
-        ann_with_recall_check,
-        cosine_topk,
-        ivf_topk,
-    )
-    from ..operators.util import lineage_checkpoint_eager, overlap
+    from ..operators.similarity import ann_with_recall_check, ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = _probe_queries(emb)
-    exact, ann = overlap(
-        lambda: cosine_topk(emb, qs, 10).transform(lineage_checkpoint_eager),
+    return ann_with_recall_check(
+        emb,
+        qs,
         lambda: ivf_topk(emb, qs, k=10, n_cells=16, n_probe=4),
+        k=10,
+        min_recall=0.5,
     )
-    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.5, exact=exact)
 
 
 def s5_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,8 +469,13 @@ def s5_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = _probe_queries(emb)
-    ann = pq_refine_topk(emb, qs, k=10, shortlist=100, m=8, ks=16)
-    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.6)
+    return ann_with_recall_check(
+        emb,
+        qs,
+        lambda: pq_refine_topk(emb, qs, k=10, shortlist=100, m=8, ks=16),
+        k=10,
+        min_recall=0.6,
+    )
 
 
 def s6_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,10 +494,15 @@ def s6_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = _probe_queries(emb)
-    ann = ivf_pq_topk(
-        emb, qs, k=10, n_cells=16, n_probe=4, m=8, ks=16, shortlist=100
+    return ann_with_recall_check(
+        emb,
+        qs,
+        lambda: ivf_pq_topk(
+            emb, qs, k=10, n_cells=16, n_probe=4, m=8, ks=16, shortlist=100
+        ),
+        k=10,
+        min_recall=0.4,
     )
-    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.4)
 
 
 def st3_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,24 +888,13 @@ def d17_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, composing the similarity and clustering families. Since
     r10 the label blocking is the ground-truth harness tier; the
     production variant on corpus-scaled LSH buckets is d21."""
-    from ..operators.dedup import (
-        connected_components,
-        embedding_cosine_pairs,
-    )
+    from ..operators.dedup import embedding_cosine_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = embedding_cosine_pairs(emb, block_col="label", threshold=0.35)
-    comp = connected_components(
-        pairs.select(F.col("id_a"), F.col("id_b"))
-    )
-    base = emb.select("vec_id", "label")
-    cluster = F.coalesce(F.col("comp"), F.col("vec_id")).cast("bigint")
-    return base.join(comp, base.vec_id == comp.node, "left").select(
-        "vec_id",
-        "label",
-        cluster.alias("cluster_id"),
-        (cluster == F.col("vec_id")).alias("is_canonical"),
-    )
+    return _cluster_labels(
+        emb.select("vec_id", "label"), pairs, "vec_id"
+    ).withColumn("is_canonical", F.col("cluster_id") == F.col("vec_id"))
 
 
 def t26_jaccard_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,21 +1117,16 @@ def t24_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clusters (hence splits) match row for row. Scale shape:
     banded-signature candidate join, O(log diameter) CC rounds,
     map-only assign — nothing broadcast, nothing quadratic."""
-    from ..operators.dedup import connected_components, minhash_lsh_pairs
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    d = docs.join(comp, docs.doc_id == comp.node, "left")
-    cluster = F.coalesce(F.col("comp"), F.col("doc_id")).cast("bigint")
-    bucket = F.pmod(cluster, F.lit(100))
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
+    bucket = F.pmod(F.col("cluster_id"), F.lit(100))
     split = (
         F.when(bucket < 80, F.lit("train"))
         .when(bucket < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    return d.select(
-        "doc_id", cluster.alias("cluster_id"), split.alias("split")
+    return _cluster_labels(docs.select("doc_id"), pairs, "doc_id").select(
+        "doc_id", "cluster_id", split.alias("split")
     )
 
 
@@ -1169,12 +1172,15 @@ def c2_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-copy count, cluster id, and canonical flag — the row set a
     curation pipeline feeds to training. Oracle nests the same four
     stages (recursive CTE for the closure, d5's pattern)."""
-    from ..operators.dedup import (
-        connected_components,
-        dedup_exact,
-        jaccard_pairs,
-    )
+    return _dedup_funnel(spark, sf_dir, jaccard_pairs)
 
+
+def _dedup_funnel(spark: SparkSession, sf_dir: str, near_dup_pairs) -> DataFrame:
+    """c2's and c3's funnel around the near-dup pair stage
+    ``near_dup_pairs(keepers, ngram=3, threshold=0.5,
+    broadcast_sizes=True)``: plant exact duplicates, keep min-id per
+    identical text, cluster the keepers' near-dup pairs, flag one
+    canonical doc per cluster."""
     raw = _t(spark, sf_dir, "documents").select("doc_id", "text")
     donor = raw.select(
         (F.col("doc_id") + 1).alias("doc_id"),
@@ -1200,20 +1206,12 @@ def c2_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "doc_id",
     )
-    pairs = jaccard_pairs(keepers, ngram=3, threshold=0.5, broadcast_sizes=True)
-    comps = connected_components(pairs)
-    return (
-        keepers.select("doc_id", "exact_copies")
-        .join(comps, F.col("doc_id") == F.col("node"), "left")
-        .select(
-            "doc_id",
-            F.col("exact_copies").cast("bigint").alias("exact_copies"),
-            F.coalesce(F.col("comp"), F.col("doc_id"))
-            .cast("bigint")
-            .alias("cluster_id"),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+    pairs = near_dup_pairs(
+        keepers, ngram=3, threshold=0.5, broadcast_sizes=True
     )
+    return _cluster_labels(
+        keepers.select("doc_id", "exact_copies"), pairs, "doc_id"
+    ).withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
 
 
 def c1_curation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1332,53 +1330,7 @@ def c3_dedup_funnel_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole funnel's output matches row for row. A hash-green run is
     therefore evidence the production path (bucketed candidates, linear
     in docs) produces the exact funnel, not an approximation of it."""
-    from ..operators.dedup import (
-        connected_components,
-        dedup_exact,
-        minhash_lsh_pairs,
-    )
-
-    raw = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    donor = raw.select(
-        (F.col("doc_id") + 1).alias("doc_id"),
-        F.col("text").alias("_donor_text"),
-    )
-    base = (
-        raw.join(donor, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(
-                (F.col("doc_id") % 7 == 0),
-                F.coalesce(F.col("_donor_text"), F.col("text")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-    )
-    groups = dedup_exact(base)
-    keepers = base.join(
-        groups.select(
-            F.col("keep_id").alias("doc_id"),
-            F.col("n_copies").alias("exact_copies"),
-        ),
-        "doc_id",
-    )
-    pairs = minhash_lsh_pairs(
-        keepers, ngram=3, threshold=0.5, broadcast_sizes=True
-    )
-    comps = connected_components(pairs)
-    return (
-        keepers.select("doc_id", "exact_copies")
-        .join(comps, F.col("doc_id") == F.col("node"), "left")
-        .select(
-            "doc_id",
-            F.col("exact_copies").cast("bigint").alias("exact_copies"),
-            F.coalesce(F.col("comp"), F.col("doc_id"))
-            .cast("bigint")
-            .alias("cluster_id"),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-    )
+    return _dedup_funnel(spark, sf_dir, minhash_lsh_pairs)
 
 
 def m9_avi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1573,11 +1525,6 @@ def c4_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     run would write intermediate parquet — so the funnel above it runs
     once, not once per downstream consumer (4 consume it)."""
     from ..operators.curation import pack_sequences, pii_scrub
-    from ..operators.dedup import (
-        connected_components,
-        dedup_exact,
-        minhash_lsh_pairs,
-    )
     from ..operators.mixing import shard_assign, temperature_weights
     from ..operators.text import (
         classifier_score,
@@ -1605,16 +1552,8 @@ def c4_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         keepers, ngram=3, threshold=0.5, broadcast_sizes=True
     )
-    comps = connected_components(pairs)
-    canon = (
-        keepers.join(comps, F.col("doc_id") == F.col("node"), "left")
-        .select(
-            "doc_id",
-            "text",
-            "exact_copies",
-            F.coalesce(F.col("comp"), F.col("doc_id")).alias("cluster_id"),
-        )
-        .filter(F.col("doc_id") == F.col("cluster_id"))
+    canon = _cluster_labels(keepers, pairs, "doc_id").filter(
+        F.col("doc_id") == F.col("cluster_id")
     )
     # 4. decontaminate: %23 docs are the eval benchmark; canonical
     # training docs overlapping them >= 5% are dropped. Docs too short
@@ -1911,16 +1850,7 @@ def d19_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = embedding_cosine_pairs(
         emb, block_col="label", threshold=0.35
     ).transform(lineage_checkpoint)
-    hit = exact.join(
-        lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    )
-    stats = exact.agg(F.count(F.lit(1)).alias("_tot")).crossJoin(
-        hit.agg(F.count(F.lit(1)).alias("_hit"))
-    )
-    flag = stats.select(
-        (F.col("_hit") * 10 >= F.col("_tot") * 6).alias("recall_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
+    return _recall_envelope(exact, lsh, ["id_a", "id_b"], 0.6)
 
 
 def d20_semantic_keeper_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1934,32 +1864,25 @@ def d20_semantic_keeper_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clusterings coincide). The same-label restriction keeps the
     comparison universe equal to the ground-truth tier's; production
     drops it and clusters the full LSH pair set."""
-    from ..operators.dedup import connected_components, semantic_dedup_keepers
+    from ..operators.dedup import semantic_dedup_keepers
 
     emb, _, same = _lsh_pairs_same_label(spark, sf_dir)
     exact = semantic_dedup_keepers(
         emb, block_col="label", threshold=0.35
     ).transform(lineage_checkpoint)
-    comp = connected_components(same.select("id_a", "id_b"))
-    lshk = (
-        emb.select("vec_id")
-        .join(comp, F.col("vec_id") == F.col("node"), "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("comp"), F.col("vec_id")).alias("_lsh_cluster"),
-        )
+    return _cluster_agreement(emb, exact, same)
+
+
+def _cluster_agreement(
+    emb: DataFrame, exact: DataFrame, same: DataFrame
+) -> DataFrame:
+    """d20's and d21's envelope: the ``exact`` rows plus ``agree_ok``,
+    whether at least 0.8 of the exact ``(vec_id, cluster_id)`` rows
+    recur when the same-label LSH pairs ``same`` are clustered."""
+    lsh = _cluster_labels(emb.select("vec_id"), same, "vec_id")
+    return _recall_envelope(
+        exact, lsh, ["vec_id", "cluster_id"], 0.8, flag="agree_ok"
     )
-    both = exact.join(lshk, "vec_id")
-    stats = both.agg(
-        F.count(F.lit(1)).alias("_tot"),
-        F.count_if(F.col("cluster_id") == F.col("_lsh_cluster")).alias(
-            "_same"
-        ),
-    )
-    flag = stats.select(
-        (F.col("_same") * 10 >= F.col("_tot") * 8).alias("agree_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
 
 
 def d21_semantic_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1968,48 +1891,9 @@ def d21_semantic_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the d17 cluster/canonical output shape — exact label-blocked
     clusters as the deterministic rows + agree_ok envelope on the
     LSH-derived clustering (gated 0.8; measured 1.0 at sf0.01)."""
-    from ..operators.dedup import (
-        connected_components,
-        embedding_cosine_pairs,
-    )
-
     emb, _, same = _lsh_pairs_same_label(spark, sf_dir)
-    pairs = embedding_cosine_pairs(emb, block_col="label", threshold=0.35)
-    comp = connected_components(pairs.select("id_a", "id_b"))
-    base = emb.select("vec_id", "label")
-    cluster = F.coalesce(F.col("comp"), F.col("vec_id")).cast("bigint")
-    exact = (
-        base.join(comp, base.vec_id == comp.node, "left")
-        .select(
-            "vec_id",
-            "label",
-            cluster.alias("cluster_id"),
-            (cluster == F.col("vec_id")).alias("is_canonical"),
-        )
-        .transform(lineage_checkpoint)
-    )
-    lcomp = connected_components(same.select("id_a", "id_b")).toDF(
-        "_lnode", "_lcomp"
-    )
-    lshk = (
-        emb.select("vec_id")
-        .join(lcomp, F.col("vec_id") == F.col("_lnode"), "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("_lcomp"), F.col("vec_id")).alias("_lsh_cluster"),
-        )
-    )
-    both = exact.join(lshk, "vec_id")
-    stats = both.agg(
-        F.count(F.lit(1)).alias("_tot"),
-        F.count_if(F.col("cluster_id") == F.col("_lsh_cluster")).alias(
-            "_same"
-        ),
-    )
-    flag = stats.select(
-        (F.col("_same") * 10 >= F.col("_tot") * 8).alias("agree_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
+    exact = d17_semantic_clusters(spark, sf_dir).transform(lineage_checkpoint)
+    return _cluster_agreement(emb, exact, same)
 
 
 def d22_dedup_embedding_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2025,34 +1909,15 @@ def d22_dedup_embedding_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured LSH recall vs full truth: 1.0 at sf0.01, 0.915 at sf0.1;
     envelope 0.6."""
     from ..operators.dedup import embedding_lsh_pairs
-    from ..operators.similarity import _dot, _norm
 
     emb = _t(spark, sf_dir, "embeddings")
     lsh = embedding_lsh_pairs(emb, threshold=0.35, dim=64).transform(lineage_checkpoint)
-    v = emb.select(
-        F.col("vec_id"),
-        F.col("embedding").alias("_v"),
-        _norm(F.col("embedding")).alias("_n"),
+    exact = _exact_pairs(
+        _cos_side(emb, "a").join(
+            F.broadcast(_cos_side(emb, "b")), F.col("id_a") < F.col("id_b")
+        )
     )
-    a = v.toDF("id_a", "_va", "_na")
-    b = v.toDF("id_b", "_vb", "_nb")
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    exact = (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.35)
-        .transform(lineage_checkpoint)
-    )
-    hit = exact.join(
-        lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    )
-    stats = exact.agg(F.count(F.lit(1)).alias("_tot")).crossJoin(
-        hit.agg(F.count(F.lit(1)).alias("_hit"))
-    )
-    flag = stats.select(
-        (F.col("_hit") * 10 >= F.col("_tot") * 6).alias("recall_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
+    return _recall_envelope(exact, lsh, ["id_a", "id_b"], 0.6)
 
 
 def d23_embedding_delta_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,7 +1932,6 @@ def d23_embedding_delta_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-row delta, exact cosine fold) + recall_ok of the LSH tier vs
     that truth (envelope 0.6; measured 1.0 at sf0.01)."""
     from ..operators.dedup import embedding_lsh_pairs
-    from ..operators.similarity import _dot, _norm
 
     emb = _t(spark, sf_dir, "embeddings")
     delta = emb.filter(F.col("vec_id") < 50)
@@ -2075,33 +1939,26 @@ def d23_embedding_delta_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = embedding_lsh_pairs(
         delta, threshold=0.35, dim=64, index_df=corpus
     ).transform(lineage_checkpoint)
-    a = delta.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("_va"),
-        _norm(F.col("embedding")).alias("_na"),
-    )
-    b = corpus.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("_vb"),
-        _norm(F.col("embedding")).alias("_nb"),
-    )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    exact = (
-        b.crossJoin(F.broadcast(a))
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+    return _recall_envelope(_delta_truth(emb), lsh, ["id_a", "id_b"], 0.6)
+
+
+def _exact_pairs(pairs: DataFrame) -> DataFrame:
+    """The cosine >= 0.35 rows of ``pairs``, a join of two
+    :func:`~..operators.similarity._cos_side` frames, checkpointed: the
+    exact truth of the d22, d23 and st10 envelopes."""
+    return (
+        pairs.select("id_a", "id_b", _pair_cosine().alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.35)
         .transform(lineage_checkpoint)
     )
-    hit = exact.join(
-        lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    )
-    stats = exact.agg(F.count(F.lit(1)).alias("_tot")).crossJoin(
-        hit.agg(F.count(F.lit(1)).alias("_hit"))
-    )
-    flag = stats.select(
-        (F.col("_hit") * 10 >= F.col("_tot") * 6).alias("recall_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
+
+
+def _delta_truth(emb: DataFrame) -> DataFrame:
+    """d23's and st10's truth: the exact pairs of the 50-row delta
+    (``vec_id < 50``, broadcast) against the rest of the corpus."""
+    corpus = _cos_side(emb.filter(F.col("vec_id") >= 50), "b")
+    delta = _cos_side(emb.filter(F.col("vec_id") < 50), "a")
+    return _exact_pairs(corpus.crossJoin(F.broadcast(delta)))
 
 
 def st10_stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2114,47 +1971,18 @@ def st10_stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness contract and oracle are exactly d23's: the deterministic
     exact delta-x-corpus truth + recall_ok of the streamed tier
     (envelope 0.6; measured 1.0 at sf0.01)."""
-    from ..operators.similarity import _dot, _norm
     from ..streaming.windows import streaming_embedding_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 50)
     lsh = streaming_embedding_dedup(
         spark,
         f"{sf_dir}/embeddings.parquet",
-        corpus,
+        emb.filter(F.col("vec_id") >= 50),
         threshold=0.35,
         dim=64,
         delta_max_id=50,
     ).transform(lineage_checkpoint)
-    delta = emb.filter(F.col("vec_id") < 50)
-    a = delta.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("_va"),
-        _norm(F.col("embedding")).alias("_na"),
-    )
-    b = corpus.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("_vb"),
-        _norm(F.col("embedding")).alias("_nb"),
-    )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    exact = (
-        b.crossJoin(F.broadcast(a))
-        .select("id_a", "id_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.35)
-        .transform(lineage_checkpoint)
-    )
-    hit = exact.join(
-        lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    )
-    stats = exact.agg(F.count(F.lit(1)).alias("_tot")).crossJoin(
-        hit.agg(F.count(F.lit(1)).alias("_hit"))
-    )
-    flag = stats.select(
-        (F.col("_hit") * 10 >= F.col("_tot") * 6).alias("recall_ok")
-    )
-    return exact.crossJoin(F.broadcast(flag))
+    return _recall_envelope(_delta_truth(emb), lsh, ["id_a", "id_b"], 0.6)
 
 
 def _capped_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2403,8 +2231,13 @@ def s8_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = _probe_queries(emb)
-    ann = sq_refine_topk(emb, qs, k=10, shortlist=100)
-    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.7)
+    return ann_with_recall_check(
+        emb,
+        qs,
+        lambda: sq_refine_topk(emb, qs, k=10, shortlist=100),
+        k=10,
+        min_recall=0.7,
+    )
 
 
 def m18_audio_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2831,8 +2664,15 @@ def s11_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = _probe_queries(emb)
-    ann = matryoshka_refine_topk(emb, qs, k=10, prefix_dim=32, shortlist=200)
-    return ann_with_recall_check(emb, qs, ann, k=10, min_recall=0.5)
+    return ann_with_recall_check(
+        emb,
+        qs,
+        lambda: matryoshka_refine_topk(
+            emb, qs, k=10, prefix_dim=32, shortlist=200
+        ),
+        k=10,
+        min_recall=0.5,
+    )
 
 
 def d25_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2905,31 +2745,16 @@ def d26_semdedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, k=8, n_rounds=3, tau=0.35, scale=1000
     ).transform(lineage_checkpoint)
     ivf = semdedup_ivf(emb, n_cells=8, tau=0.35, scale=1000)
-    ex_drops = exact.filter(F.col("dropped")).select("vec_id")
-    iv_drops = ivf.filter(F.col("dropped")).select(
-        F.col("vec_id").alias("_iv_id")
+    # an empty exact-drop set passes: duplicate-free corpora keep the gate
+    return _recall_envelope(
+        exact.filter(F.col("dropped")),
+        ivf.filter(F.col("dropped")),
+        ["vec_id"],
+        0.4,
+        flag="blocking_recall_ok",
+        broadcast=True,
+        rows=exact,
     )
-    recall = (
-        ex_drops.join(
-            F.broadcast(iv_drops),
-            ex_drops["vec_id"] == F.col("_iv_id"),
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("_n_exact"),
-            (
-                F.count("_iv_id") / F.greatest(F.count(F.lit(1)), F.lit(1))
-            ).alias("_recall"),
-        )
-        # empty exact-drop set => recall is vacuously perfect (0/1 would
-        # otherwise fail the gate on duplicate-free corpora)
-        .select(
-            (
-                (F.col("_n_exact") == 0) | (F.col("_recall") >= F.lit(0.4))
-            ).alias("blocking_recall_ok")
-        )
-    )
-    return exact.crossJoin(F.broadcast(recall))
 
 
 def d27_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3331,8 +3156,10 @@ def s16_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = _probe_queries(emb)
-    graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
-    ann = graph_ann_topk(emb, queries, graph, k=10, beam=16, n_hops=3)
+    def ann() -> DataFrame:
+        graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
+        return graph_ann_topk(emb, queries, graph, k=10, beam=16, n_hops=3)
+
     return ann_with_recall_check(emb, queries, ann, k=10, min_recall=0.5)
 
 
@@ -3354,11 +3181,14 @@ def s17_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = _probe_queries(emb)
     pred = F.col("label") % 3 == 0
-    ann = filtered_ivf_topk(
-        emb, queries, pred, k=10, n_cells=16, n_probe=6
-    )
     return ann_with_recall_check(
-        emb.filter(pred), queries, ann, k=10, min_recall=0.5
+        emb.filter(pred),
+        queries,
+        lambda: filtered_ivf_topk(
+            emb, queries, pred, k=10, n_cells=16, n_probe=6
+        ),
+        k=10,
+        min_recall=0.5,
     )
 
 
@@ -3572,8 +3402,10 @@ def s19_routed_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = _probe_queries(emb)
-    graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
-    ann = graph_ann_routed_topk(emb, queries, graph, k=10)
+    def ann() -> DataFrame:
+        graph = nn_descent_knn_graph(emb, k=8, n_rounds=3, scale=1000)
+        return graph_ann_routed_topk(emb, queries, graph, k=10)
+
     return ann_with_recall_check(emb, queries, ann, k=10, min_recall=0.5)
 
 

@@ -683,7 +683,11 @@ def streaming_embedding_dedup(
     """
     import math
 
-    from ..operators.similarity import _dot, _norm, sign_lsh_bucket_udf
+    from ..operators.similarity import (
+        _cos_side,
+        _pair_cosine,
+        sign_lsh_bucket_udf,
+    )
 
     if n_planes is None:
         n = corpus.count()
@@ -699,23 +703,18 @@ def streaming_embedding_dedup(
         F.col(id_col).alias("id_b"),
         F.explode(base_udf(F.col(vec_col))).alias("_bkt"),
     )
-    vb = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
+    cols = {"id_col": id_col, "vec_col": vec_col}
     delta = _stream_parquet(spark, emb_path).filter(F.col(id_col) < delta_max_id)
-    probe = delta.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        _norm(F.col(vec_col)).alias("_na"),
+    probe = _cos_side(
+        delta,
+        "a",
         F.explode(probe_udf(F.col(vec_col))).alias("_bkt"),
+        **cols,
     )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     scored = (
         probe.join(base, "_bkt")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+        .join(_cos_side(corpus, "b", **cols), "id_b")
+        .select("id_a", "id_b", _pair_cosine().alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
     return _to_memory(scored, "append").dropDuplicates(["id_a", "id_b"])

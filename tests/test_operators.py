@@ -4154,9 +4154,9 @@ def test_corpus_recall_check_catches_broken_blocking(spark):
 
 
 def test_recall_check_rejects_mismatched_exact(spark):
-    """An injected ``exact`` frame must be the k-row exact top-k: one
-    built with k+5 fails the action, one without ``rank`` fails at
-    construction, and the true exact frame passes untouched."""
+    """The harness builds its own exact top-k (no frame is injected): an
+    ANN side that IS the exact top-k gives k rows per query, every one
+    ``recall_ok``."""
     import random
 
     from airflow_etl_pyspark_inmet_spark.operators.similarity import (
@@ -4171,13 +4171,42 @@ def test_recall_check_rejects_mismatched_exact(spark):
     )
     k = 5
     ann = cosine_topk(df, queries, k)
-    ok = ann_with_recall_check(df, queries, ann, k, exact=ann).collect()
+    ok = ann_with_recall_check(df, queries, lambda: ann, k).collect()
     assert len(ok) == 3 * k and all(r["recall_ok"] for r in ok)
-    wide = cosine_topk(df, queries, k + 5)
-    with pytest.raises(Exception, match="ranks beyond k=5"):
-        ann_with_recall_check(df, queries, ann, k, exact=wide).collect()
-    with pytest.raises(ValueError, match="rank"):
-        ann_with_recall_check(df, queries, ann, k, exact=ann.drop("rank"))
+
+
+def test_recall_envelope_compares_integer_tenths(spark):
+    """hits * 10 >= truth * tenths, per group or over the whole truth
+    set: 3 of 5 passes 0.6, 1 of 5 fails it, 4 of 10 passes 0.4 exactly;
+    an empty truth set passes; a threshold between tenths is refused."""
+    from airflow_etl_pyspark_inmet_spark.operators.similarity import (
+        _recall_envelope,
+    )
+
+    keys = ["query_id", "item_id"]
+    truth = spark.createDataFrame(
+        [(q, i) for q in (0, 1) for i in range(5)], "query_id long, item_id long"
+    )
+    approx = spark.createDataFrame(
+        [(0, 0), (0, 1), (0, 2), (1, 0), (1, 9)], "query_id long, item_id long"
+    )
+    per = _recall_envelope(truth, approx, keys, 0.6, per="query_id").collect()
+    assert len(per) == 10
+    assert {(r["query_id"], r["recall_ok"]) for r in per} == {(0, True), (1, False)}
+
+    def overall(min_recall, **kw):
+        return [
+            r["ok"]
+            for r in _recall_envelope(
+                kw.pop("truth", truth), approx, keys, min_recall, flag="ok", **kw
+            ).collect()
+        ]
+
+    assert overall(0.4) == [True] * 10
+    assert overall(0.5) == [False] * 10
+    assert overall(0.9, truth=truth.limit(0), rows=truth) == [True] * 10
+    with pytest.raises(ValueError, match="whole tenth"):
+        _recall_envelope(truth, approx, keys, 0.55)
 
 
 def test_hard_negative_band_in_and_out(spark):

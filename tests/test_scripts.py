@@ -110,11 +110,12 @@ def stray_calls(
     )
 
 
-def param_sites(root: Path, param: str) -> list[str]:
+def param_sites(root: Path, param: str, func: str | None = None) -> list[str]:
     """``path:line`` of every function under ``root`` (a file or a
-    directory) that takes a ``param`` parameter: the ANN argmin path is
-    chosen from k alone (no ``assigner``), and the multimodal tier reads
-    fixed column names (no ``id_col``, ``text_col`` or ``payload_col``)."""
+    directory), or only those named ``func``, that takes a ``param``
+    parameter: the ANN argmin path is chosen from k alone (no
+    ``assigner``), and the multimodal tier reads fixed column names (no
+    ``id_col``, ``text_col`` or ``payload_col``)."""
     base = root.parent if root.is_file() else root
     paths = [root] if root.is_file() else sorted(root.rglob("*.py"))
     return [
@@ -123,6 +124,7 @@ def param_sites(root: Path, param: str) -> list[str]:
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
         and param in [a.arg for a in node.args.args + node.args.kwonlyargs]
+        and func in (None, getattr(node, "name", None))
     ]
 
 
@@ -156,6 +158,7 @@ def test_ann_scans_flag_copies(tmp_path):
     assert stray_calls(sim, "_assign_udf", "_ivf_route") == [8]
     assert param_sites(tmp_path, "assigner") == ["sim.py:5"]
     assert param_sites(sim, "query_id_col") == ["sim.py:1", "sim.py:5"]
+    assert param_sites(sim, "query_id_col", "other") == ["sim.py:5"]
 
 
 DEDUP = PACKAGE / "operators" / "dedup.py"
@@ -289,6 +292,18 @@ SHARED_MECHANISMS = {
     ),
     # the stdlib+numpy codec in operators/png.py is the one PNG codec
     "png.png_decode": ("multimodal", "_PILImage", ".", 0),
+    # the cosine of a pair joined from two _cos_side frames
+    "similarity._pair_cosine": ("verify", 'F.col("_va"), F.col("_vb")', ".", 1),
+    # a singleton keeps its own id as its cluster label
+    "dedup._cluster_labels": ("verify", 'coalesce(F.col("comp"),', ".", 1),
+    # the integer-tenths recall comparison and its hit count
+    "similarity._recall_envelope": ("verify", '* 10 >= F.col("_tot")', ".", 1),
+    "similarity._recall_envelope-hits": (
+        "verify",
+        'F.sum(F.coalesce(F.col("_hit"), F.lit(0)))',
+        ".",
+        1,
+    ),
 }
 
 
@@ -342,6 +357,40 @@ def test_storage_tier_builds_each_mechanism_once(owner):
 @pytest.mark.parametrize("owner", tier("multimodal"))
 def test_multimodal_tier_builds_each_mechanism_once(owner):
     assert_built_once(owner)
+
+
+@pytest.mark.parametrize("owner", tier("verify"))
+def test_verify_tier_builds_each_mechanism_once(owner):
+    assert_built_once(owner)
+
+
+# options of the near-dup verification tier that no caller set away from
+# the default: the tier reads fixed column names, and the recall harness
+# builds its own exact side
+REMOVED_OPTIONS = [
+    ("operators/dedup.py", "connected_components", "a_col"),
+    ("operators/dedup.py", "connected_components", "b_col"),
+    ("operators/dedup.py", "embedding_cosine_pairs", "id_col"),
+    ("operators/dedup.py", "embedding_cosine_pairs", "vec_col"),
+    ("operators/dedup.py", "semantic_dedup_keepers", "id_col"),
+    ("operators/dedup.py", "semantic_dedup_keepers", "vec_col"),
+    ("operators/similarity.py", "ann_with_recall_check", "id_col"),
+    ("operators/similarity.py", "ann_with_recall_check", "vec_col"),
+    ("operators/similarity.py", "ann_with_recall_check", "query_id_col"),
+    ("operators/similarity.py", "ann_with_recall_check", "exact"),
+    ("operators/similarity.py", "ann_with_corpus_recall_check", "id_col"),
+    ("operators/similarity.py", "ann_with_corpus_recall_check", "vec_col"),
+    ("operators/similarity.py", "ann_with_corpus_recall_check", "query_id_col"),
+]
+
+
+@pytest.mark.parametrize(
+    "path, func, param",
+    REMOVED_OPTIONS,
+    ids=[f"{func}-{param}" for _, func, param in REMOVED_OPTIONS],
+)
+def test_verify_tier_takes_no_unused_option(path, func, param):
+    assert param_sites(PACKAGE / path, param, func) == []
 
 
 @pytest.mark.parametrize("param", ["id_col", "text_col", "payload_col"])
