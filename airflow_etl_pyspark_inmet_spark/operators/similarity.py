@@ -443,8 +443,8 @@ def _recall_envelope(
     (default: ``truth``) — one value per ``per`` group, or one over the
     whole truth set. The comparison is in integer tenths,
     ``hits * 10 >= total * tenths``, so an empty truth set passes.
-    ``broadcast`` hints the approx side (a Q x k ANN frame); ``approx``
-    must not repeat a key."""
+    ``broadcast`` hints a small approx side (a Q x k ANN frame, a drop
+    set); ``approx`` must not repeat a key."""
     tenths = round(min_recall * 10)
     if abs(tenths - min_recall * 10) > 1e-9:
         raise ValueError(f"min_recall={min_recall} is not a whole tenth")
