@@ -440,9 +440,10 @@ def s3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deep. ann_with_recall_check takes the IVF side as a builder and
     runs the exact tier's eager materialization on a concurrent driver
     thread while the train collects run on this one, so the two corpus
-    passes overlap (back-filling the train jobs' straggler tails). Results are byte-identical: both sides are
-    deterministic and independent; the thread only moves WHEN the exact
-    checkpoint materializes."""
+    passes overlap (back-filling the train jobs' straggler tails).
+    Results are byte-identical: both sides are deterministic and
+    independent; the thread only moves WHEN the exact checkpoint
+    materializes."""
     from ..operators.similarity import ann_with_recall_check, ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
